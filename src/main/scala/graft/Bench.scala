@@ -124,13 +124,22 @@ object Bench {
     // exactly that truncation) — 3 decimals halve the line length and
     // lose nothing a benchmark reader cares about
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // a JSON string literal: query names are internal identifiers today,
+    // but a quote, backslash or control character in one must not break
+    // the trailing JSON line that readers parse
+    def jstr(k: String): String = "\"" + k.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    } + "\""
     // NaN (a query that failed every pass) is not valid JSON — such
     // queries leave the timings map and surface in a "failed" array, and
     // the total only sums real timings
     val (failed, timed) = results.partition(_._2.isNaN)
-    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val qs = timed.map { case (k, v) => jstr(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
-    val fq = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val fq = failed.map(r => jstr(r._1)).mkString("[", ",", "]")
     val total = timed.map(_._2).sum
     // Full per-query map as a REPO ARTIFACT (bench_full.json): the
     // driver's stdout capture is a bounded tail, so at 160+ queries the
@@ -140,7 +149,7 @@ object Bench {
     // matter. Written best-effort: a read-only cwd must not fail the
     // bench itself.
     val ranked = timed.sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => jstr(k) + ":" + f3(v) }.mkString("{", ",", "}")
     // STATE-READ microbench: the CDC/MV queries above time sync+read
     // together, but what a 100× scale-up actually stresses is the READ
     // path alone (epoch collapse, bucket-probe pruning, incremental
@@ -427,13 +436,13 @@ object Bench {
     val calJson = s"""{"probe":"sum_id_sq_mod_20m","reps":5,""" +
       s""""pre":${f3OrNull(calPre)},"post":${f3OrNull(calPost)}}"""
     val boundsJson = bounds.map(_._2).mkString("{", ",", "}")
-    val srJson = stateReads.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val srJson = stateReads.map { case (k, v) => jstr(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
-    val sr10Json = stateReads10x.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val sr10Json = stateReads10x.map { case (k, v) => jstr(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
-    val irJson = indexReads.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val irJson = indexReads.map { case (k, v) => jstr(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
-    val ir10Json = indexReads10x.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val ir10Json = indexReads10x.map { case (k, v) => jstr(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
     // Only an UNFILTERED run may overwrite the artifact: a local filtered
     // iteration (`sbt "runMain graft.Bench some_query"`) would otherwise
@@ -484,7 +493,7 @@ object Bench {
       var full = false
       while (!full && it.hasNext) {
         val (k, v) = it.next()
-        val entry = (if (n == 0) "" else ",") + "\"" + k + "\":" + f3(v)
+        val entry = (if (n == 0) "" else ",") + jstr(k) + ":" + f3(v)
         if (sb.length + entry.length <= budget) { sb ++= entry; n += 1 }
         else full = true
       }

@@ -125,8 +125,8 @@ object Replication {
     * deltas are folded into one baseline epoch so the read-time collapse
     * never scans an unbounded epoch list. Returns the pass's
     * [[SyncProgress]]; rows/epochs come free from StreamingQueryProgress,
-    * lastSeq from a 1-row per-batch aggregate inside the pass — never a
-    * scan of the accumulated state.
+    * lastSeq from observations on the writes each micro-batch already
+    * makes — never a scan of the accumulated state.
     *
     * `fromSeq` is the reference's `--position`: start applying strictly
     * AFTER the given sequence number — consumed-but-skipped events count

@@ -214,9 +214,13 @@ object StreamingOps {
     * CPU in the multi-PK collapse — with pure codegen'd struct
     * construction. Grouping/join behavior is identical: rows group on
     * (table, encoded key), and struct comparison treats the padded
-    * NULLs exactly as grouping treated the JSON encode. `schema`
-    * supplies the padded fields' types (both sides of a join must
-    * build the same struct type). */
+    * NULLs exactly as grouping treated the JSON encode. FLOAT/DOUBLE
+    * key columns are the one deliberate difference: struct grouping
+    * and join keys normalize floating point, so -0.0 folds into 0.0
+    * and every NaN into one NaN (the old JSON strings kept them apart)
+    * — the same equality Spark applies to a bare float grouping key.
+    * `schema` supplies the padded fields' types (both sides of a join
+    * must build the same struct type). */
   private def tableKeyStruct(keyFor: Map[String, Seq[String]],
       schema: org.apache.spark.sql.types.StructType): Column = {
     val allKeys = keyFor.values.flatten.toSeq.distinct.sorted
@@ -1150,60 +1154,95 @@ object StreamingOps {
     * appends deltas to a ReplacingMergeTree-style table and lets the A8
     * collapse run at read/merge time.
     */
-  /** Shared ingest scaffold: play the change stream opened by `source`
-    * as micro-batches into `apply`, then return (rowsApplied,
-    * dataBatches). The transport is a [[CdcSource]] plug — the file
-    * impl in the harness, MemoryStream in StreamingSpec, Kafka+Debezium
-    * in production — the apply machinery never changes. Progress is
-    * free: StreamingQueryProgress already carries per-batch input row
-    * counts — no extra job runs on the timed path. (The buffer is
-    * bounded — spark.sql.streaming.numRecentProgressUpdates, default
-    * 100 — plenty for the harness's ≤4-wave passes; a long-lived
-    * production stream would consume a StreamingQueryListener instead.) */
-  /** Fold a frame's max(`seq`) into a running horizon — the ONE
-    * trackSeq position-bookkeeping primitive shared by the CDC passes
-    * and both MV passes (one 1-row aggregate per call; the contract
-    * notes live on runCdcPassSource). */
-  private def foldMaxSeq(df: DataFrame, into: Option[Long]): Option[Long] = {
-    val r = df.agg(max(col("seq"))).collect()(0)
-    if (r.isNullAt(0)) into
-    else Some(into.fold(r.getLong(0))(math.max(_, r.getLong(0))))
+  /** POSITION HORIZON of a set of rows — the trackSeq bookkeeping
+    * primitive shared by the CDC passes and the MV passes: row count,
+    * max(`seq`), and the newest event time as epoch micros. The time
+    * horizon feeds the `Seconds_Behind_Master` analogue
+    * ([[readLagMarks]]). A horizon is never an action of its own: it is
+    * OBSERVED on a write the batch makes anyway ([[observeHorizon]]),
+    * and the raw-batch horizons share ONE aggregate ([[horizons]]). */
+  private final case class Horizon(rows: Long, seq: Option[Long],
+      ts: Option[Long])
+
+  /** Per-row event time as epoch micros. None for a pre-decoded NUMERIC
+    * envelope: the unit is unknowable here (a seconds-unit feed
+    * recorded as-is would read 10^6 off in the µs-based lag math), so
+    * the time horizon stays UNRECORDED — seq tracking is unaffected and
+    * secondsBehindSource honestly reports None instead of a silently
+    * wrong number. */
+  private def tsMicros(schema: org.apache.spark.sql.types.StructType)
+      : Option[Column] = schema("ts").dataType match {
+    case org.apache.spark.sql.types.TimestampType =>
+      Some(unix_micros(col("ts")))
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      // sessions here run UTC (build.sbt forks with UTC), so the
+      // NTZ→TZ cast is the identity mapping onto epoch micros
+      Some(unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)))
+    case _ => None
   }
 
-  /** [[foldMaxSeq]] plus the event-TIME horizon in the SAME 1-row
-    * aggregate (zero extra jobs): max seq and max `ts` (as epoch
-    * micros), each max-merged into its accumulator. The ts horizon
-    * feeds the `Seconds_Behind_Master` analogue ([[readLagMarks]]) —
-    * the wall-clock gap between what the source last stamped and what
-    * the destination last resolved. */
-  private def foldMaxSeqTs(df: DataFrame, intoSeq: Option[Long],
-      intoTs: Option[Long]): (Option[Long], Option[Long]) = {
-    val tsCol = df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.TimestampType =>
-        Some(unix_micros(max(col("ts"))))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // sessions here run UTC (build.sbt forks with UTC), so the
-        // NTZ→TZ cast is the identity mapping onto epoch micros
-        Some(unix_micros(max(col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampType)))
-      case _ =>
-        // pre-decoded NUMERIC envelope: the unit is unknowable here
-        // (a seconds-unit feed recorded as-is would read 10^6 off in
-        // the µs-based lag math) — leave the time horizon UNRECORDED;
-        // seq tracking is unaffected and secondsBehindSource honestly
-        // reports None instead of a silently wrong number
-        None
+  /** The three aggregate columns of one [[Horizon]] over the rows
+    * matching `where`, decoded by [[horizonAt]]. */
+  private def horizonAggs(schema: org.apache.spark.sql.types.StructType,
+      where: Column, i: Int): Seq[Column] = Seq(
+    count(when(where, lit(1))).as(s"h${i}_n"),
+    max(when(where, col("seq"))).as(s"h${i}_seq"),
+    max(when(where, tsMicros(schema)
+      .getOrElse(lit(null).cast(org.apache.spark.sql.types.LongType))))
+      .as(s"h${i}_ts"))
+
+  private def horizonAt(r: Row, i: Int): Horizon = {
+    def opt(j: Int) = if (r.isNullAt(j)) None else Some(r.getLong(j))
+    Horizon(r.getLong(3 * i), opt(3 * i + 1), opt(3 * i + 2))
+  }
+
+  /** One [[Horizon]] per predicate over `df`, all in ONE aggregate. */
+  private def horizons(df: DataFrame, wheres: Seq[Column]): Seq[Horizon] = {
+    val aggs = wheres.zipWithIndex.flatMap { case (w, i) =>
+      horizonAggs(df.schema, w, i) }
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    wheres.indices.map(horizonAt(r, _))
+  }
+
+  /** Attach a fresh per-batch [[org.apache.spark.sql.Observation]] of
+    * `df`'s [[Horizon]]; the returned reader blocks until the metrics
+    * arrive. PLACEMENT: the observed frame must feed a write the batch
+    * makes anyway, outside any persist()ed subplan (a cached subplan's
+    * metrics fire only when the cache builds), and the reader runs only
+    * after that write returns. The wait is bounded, so a misplaced
+    * observation fails the batch instead of hanging it. */
+  private def observeHorizon(df: DataFrame): (DataFrame, () => Horizon) =
+    observeAggs(df, horizonAggs(df.schema, lit(true), 0), horizonAt(_, 0))
+
+  private def observeHorizonIf(on: Boolean, df: DataFrame)
+      : (DataFrame, Option[() => Horizon]) =
+    if (!on) (df, None)
+    else { val (o, h) = observeHorizon(df); (o, Some(h)) }
+
+  private def observeAggs[T](df: DataFrame, aggs: Seq[Column],
+      decode: Row => T): (DataFrame, () => T) = {
+    val obs = org.apache.spark.sql.Observation()
+    (df.observe(obs, aggs.head, aggs.tail: _*), () => decode(
+      scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(10, "min"))))
+  }
+
+  /** Running position of one trackSeq pass: the APPLIED horizon (events
+    * resolved into state, or resolved without applying — commit
+    * markers, heartbeats, position-skipped, filter-excluded and
+    * quarantined events) and the SEEN horizon (the raw stream), each
+    * max-merged across batches. */
+  private final class PassPosition {
+    var applied = Option.empty[Long]
+    var appliedTs = Option.empty[Long]
+    var seen = Option.empty[Long]
+    var seenTs = Option.empty[Long]
+    private def mx(a: Option[Long], b: Option[Long]) = (a.toSeq ++ b).maxOption
+    def resolve(h: Horizon): Unit = {
+      applied = mx(applied, h.seq); appliedTs = mx(appliedTs, h.ts)
     }
-    tsCol match {
-      case None =>
-        (foldMaxSeq(df, intoSeq), intoTs)
-      case Some(tc) =>
-        val r = df.agg(max(col("seq")), tc).collect()(0)
-        val s2 = if (r.isNullAt(0)) intoSeq
-          else Some(intoSeq.fold(r.getLong(0))(math.max(_, r.getLong(0))))
-        val t2 = if (r.isNullAt(1)) intoTs
-          else Some(intoTs.fold(r.getLong(1))(math.max(_, r.getLong(1))))
-        (s2, t2)
+    def see(h: Horizon): Unit = {
+      seen = mx(seen, h.seq); seenTs = mx(seenTs, h.ts)
     }
   }
 
@@ -1284,6 +1323,16 @@ object StreamingOps {
     withConfs(s, "spark.sql.shuffle.partitions" -> sized)(body)
   }
 
+  /** Shared ingest scaffold: play the change stream opened by `source`
+    * as micro-batches into `apply`, then return (rowsApplied,
+    * dataBatches). The transport is a [[CdcSource]] plug — the file
+    * impl in the harness, MemoryStream in StreamingSpec, Kafka+Debezium
+    * in production — the apply machinery never changes. Progress is
+    * free: StreamingQueryProgress already carries per-batch input row
+    * counts — no extra job runs on the timed path. (The buffer is
+    * bounded — spark.sql.streaming.numRecentProgressUpdates, default
+    * 100 — plenty for the harness's ≤4-wave passes; a long-lived
+    * production stream would consume a StreamingQueryListener instead.) */
   private def runSourcePass(s: SparkSession, source: CdcSource, ckpt: String)(
       apply: (Dataset[Row], Long) => Unit): (Long, Long) = {
     val query = withNoIdleBatch(s) {
@@ -1303,19 +1352,32 @@ object StreamingOps {
   }
 
   /** `trackSeq` additionally reports the newest `seq` applied BY THIS
-    * PASS (one tiny 1-row aggregate per batch — only the Replication
-    * facade turns it on; the benchmarked queries never pay it). A batch
-    * consumed by more than one action inside foreachBatch MUST be
-    * persisted first: each extra action otherwise re-reads the file
-    * source, which both doubles the work and inflates the source's
-    * numInputRows metric (observed: rowsApplied exactly 2x).
+    * PASS (only the Replication facade turns it on; the benchmarked
+    * queries never pay it). The bookkeeping is OBSERVED, never an action
+    * of its own: the applied horizon and row count are an
+    * [[org.apache.spark.sql.Observation]] on the epoch delta write; the
+    * pending tail, the heartbeat cap, and — when the gate sees the raw
+    * batch — the seen and commit-marker horizons are observations on
+    * the txn gate's carry write. Only a pass that drops or folds raw
+    * events outside a gate (start position, heartbeats, row filter,
+    * strict gate, partial images) adds ONE combined aggregate over the
+    * pinned raw batch. A txn-gated micro-batch therefore runs two
+    * actions (carry write, delta write), an ungated one just the delta
+    * write. A batch consumed by more than one action inside
+    * foreachBatch MUST be persisted first: each extra action otherwise
+    * re-reads the file source, which both doubles the work and inflates
+    * the source's numInputRows metric (observed: rowsApplied exactly
+    * 2x).
     *
     * `startAfterSeq` is the reference's explicit-position start
     * (`--position`/GTID): events at or below the position are consumed
     * from the stream (rowsApplied still reports consumption) but never
-    * applied to state, epochs left fully below the position write no
-    * delta at all, and the returned epoch count is the number of deltas
-    * actually WRITTEN (not batches consumed).
+    * applied to state, epochs left fully below the position keep no
+    * delta at all (a batch whose observed applied row count is zero —
+    * skipped, held pending, filtered, heartbeat-only, or quarantined —
+    * drops the delta it just wrote; a replay rewrites and re-drops it),
+    * and the returned epoch count is the number of deltas actually KEPT
+    * (not batches consumed).
     *
     * `txnCol` turns on TRANSACTION-BOUNDARY apply (the GTID/XID
     * analogue): events carry a transaction id in the named column and a
@@ -1503,18 +1565,28 @@ object StreamingOps {
     ensureHistoryMode(state, keepHistory)
     applyTruncateDdl(state, truncateAtSeq)
     applyDefaultDdl(state, defaultCols, stateSchema)
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
-    // event-TIME horizons, folded in the same 1-row aggregates as the
-    // seq horizons (foldMaxSeqTs) — the Seconds_Behind_Master record
-    var appliedTs = Option.empty[Long]
-    var srcTs = Option.empty[Long]
+    val pos = new PassPosition
     var written = 0L
-    // a batch consumed by >1 action must be pinned (see the note above);
-    // the position and row filters add an isEmpty probe, so they pin too
-    val multiAction = trackSeq || startAfterSeq.isDefined ||
-      txnCol.isDefined || rowFilter.isDefined ||
-      partialImageCol.isDefined || heartbeats || strictBefore.isDefined
+    // the last batch's uncommitted tail, observed on its carry write
+    var pending = Option.empty[Long]
+    // a batch that may apply nothing (every event position-skipped,
+    // held pending, filtered, a heartbeat, or quarantined) writes its
+    // delta and DROPS it when the observed row count is zero — no
+    // emptiness probe; a replay rewrites and re-drops identically
+    val mayApplyNothing = startAfterSeq.isDefined || txnCol.isDefined ||
+      rowFilter.isDefined || heartbeats || strictBefore.isDefined
+    // the seen horizon equals the applied one unless something between
+    // the raw batch and the delta drops, holds, or folds events. A txn
+    // gate fed the raw batch observes it on its carry write; otherwise
+    // ONE combined aggregate over the pinned raw batch computes it
+    val rawAtGate = txnCol.isDefined && startAfterSeq.isEmpty && !heartbeats
+    val rawAgg = trackSeq && !rawAtGate &&
+      (mayApplyNothing || partialImageCol.isDefined)
+    // a batch consumed by >1 action must be pinned (see the note above):
+    // the raw aggregate, and the prior-image probes of completion and
+    // the strict gate, each read the batch beside the delta write
+    val multiAction = rawAgg || partialImageCol.isDefined ||
+      strictBefore.isDefined
     val (rows, _) = runSourcePass(s, source, ckpt) { (batch, epochId) =>
       if (multiAction) batch.persist()
       var txnFull = Option.empty[DataFrame] // txn path's extra pin
@@ -1533,24 +1605,28 @@ object StreamingOps {
         // gate (a heartbeat belongs to no transaction).
         val positioned = if (!heartbeats) positioned0
           else positioned0.filter(col("op") =!= "H")
-        val gatedTxn = txnCol match {
-          case None => positioned.toDF()
-          case Some(tc) =>
-            // replay-deterministic input: this batch plus the pending
-            // snapshot of the newest epoch BELOW this one (never this
-            // epoch's own — a crashed attempt must re-read what its
-            // first attempt read)
-            val (ready, full) = txnGate(s, positioned.toDF(), tc, state, epochId)
-            txnFull = Some(full)
-            ready
-        }
+        // replay-deterministic input: this batch plus the pending
+        // snapshot of the newest epoch BELOW this one (never this
+        // epoch's own — a crashed attempt must re-read what its first
+        // attempt read)
+        val gate = txnCol.map(tc =>
+          txnGate(s, positioned.toDF(), tc, state, epochId))
+        gate.foreach { g => txnFull = Some(g.full); pending = Some(g.pendingRows) }
+        val gatedTxn = gate.fold(positioned.toDF())(_.ready)
+        // the RESOLVED-but-not-applied horizon of filter-excluded or
+        // quarantined events: observed on the delta write just ahead of
+        // the row filter / admitted filter (see its placement below)
+        var resolvedObs = Option.empty[() => Horizon]
+        def observeResolved(df: DataFrame): DataFrame =
+          if (!trackSeq) df
+          else { val (o, h) = observeHorizon(df); resolvedObs = Some(h); o }
         // MINIMAL row images complete BEFORE filters/masks/computed
         // columns, so every later stage sees FULL rows — a row filter
         // or computed column referencing an unchanged column must see
         // its carried value, never a partial event's NULL
-        // pinned: the completed frame feeds the seq fold, the isEmpty
-        // probe, and the epoch write — without the cache each action
-        // re-runs the prior-state read and the completion shuffle
+        // pinned: the completed frame feeds the prior-image probe and
+        // the epoch write — without the cache each action re-runs the
+        // prior-state read and the completion shuffle
         val completed = partialImageCol match {
           case None => gatedTxn
           case Some(cc) =>
@@ -1561,19 +1637,36 @@ object StreamingOps {
         }
         // STRICT BEFORE-IMAGE gate after completion (full rows), before
         // filters/masks — a conflict is a property of the source chain
-        // vs the destination, not of what this replica chooses to ship
+        // vs the destination, not of what this replica chooses to ship.
+        // Quarantined conflicts are resolved the batch they verdict:
+        // they will never apply (the operator reads them in the DLQ),
+        // so the applied position advances past them — the observation
+        // wraps the verdicted frame ahead of the admitted filter
         val checked = strictBefore match {
           case None => completed
           case Some((pc, bc)) =>
             val (admitted, pin) = gateBeforeImages(s, state, epochId,
-              completed, keyCols, pc, bc, conflictDlq.get)
+              completed, keyCols, pc, bc, conflictDlq.get,
+              observe = observeResolved)
             strictPinned = Some(pin)
             admitted
         }
         // single-table row filter + masks (the multi pass's per-table
-        // forms): one codegen'd filter, one select — deletes bypass
-        val filtered = rowFilter.fold(checked)(p =>
-          checked.filter(col("op") === "D" || expr(p)))
+        // forms): one codegen'd filter, one select — deletes bypass.
+        // Filter-excluded events are resolved too: the predicate says
+        // they will never apply, which is configuration, not lag — their
+        // horizon is the pre-filter frame's. A completed frame is pinned
+        // and collapses per key (its ts horizon is the winners', not the
+        // events'), so there the ready events take one aggregate instead
+        val filtered = rowFilter.fold(checked) { p =>
+          val pre =
+            if (partialImageCol.isEmpty) observeResolved(checked)
+            else {
+              if (trackSeq) pos.resolve(horizons(gatedTxn, Seq(lit(true))).head)
+              checked
+            }
+          pre.filter(col("op") === "D" || expr(p))
+        }
         val masked =
           if (maskCols.isEmpty) filtered
           else filtered.select(filtered.columns.toSeq.map { c =>
@@ -1583,72 +1676,62 @@ object StreamingOps {
           }: _*)
         // computed columns AFTER masks (privacy: a computed value must
         // not leak a masked source column) — scan-local, codegen'd
-        val applied = computedCols.foldLeft(masked) {
+        val applied0 = computedCols.foldLeft(masked) {
           case (df, (n, e)) => df.withColumn(n, expr(e))
         }
+        // the applied horizon (and the row count that decides whether
+        // the delta stays) rides on the delta write itself
+        val (applied, appliedObs) =
+          observeHorizonIf(trackSeq || mayApplyNothing, applied0)
+        // default: fold the batch to per-key winners before writing —
+        // the delta then costs O(keys touched), not O(events), and
+        // the read-side collapse is unchanged. keepHistory skips the
+        // fold (events land verbatim) so as-of reads keep EVENT
+        // granularity — the retention trade a time-traveling replica
+        // opts into, exactly like retaining binlogs.
+        val epochDir = s"$state/epoch=$epochId"
+        bucketed(
+          if (keepHistory || partialImageCol.isDefined) envelope(applied)
+          else collapse(envelope(applied), keyCols), keyCols)
+          .write.mode("overwrite").parquet(epochDir)
+        val appliedH = appliedObs.map(_())
+        if (mayApplyNothing && appliedH.exists(_.rows == 0L))
+          StateFs.deleteRecursive(epochDir)
+        else written += 1
         if (trackSeq) {
-          def fold(df: DataFrame): Unit = {
-            val (s2, t2) = foldMaxSeqTs(df, maxSeq, appliedTs)
-            maxSeq = s2; appliedTs = t2
+          appliedH.foreach(pos.resolve)
+          resolvedObs.foreach(h => pos.resolve(h()))
+          if (rawAtGate) gate.foreach { g =>
+            // commit markers resolve the batch they arrive: their txn's
+            // events are applied by this batch (in-batch or carried)
+            pos.see(g.input); pos.resolve(g.markers)
+          } else if (!rawAgg) appliedH.foreach(pos.see)
+          else {
+            // the applied POSITION also advances through RESOLVED raw
+            // events that never reach state: commit markers (see above),
+            // events the start position covers (applied by definition),
+            // and heartbeats (the source declares itself caught up) —
+            // without them a caught-up destination reads a permanent
+            // phantom lag. A heartbeat must never advance the position
+            // past HELD events: under the txn gate only heartbeats below
+            // the oldest still-pending event resolve — position
+            // integrity must not TRUST the connector's ordering, or a
+            // fresh resume would skip the held transaction. The SEEN
+            // horizon reads the raw batch — before the position skip,
+            // the txn gate, and the row filter — so replication lag
+            // stays visible while events are held. One aggregate
+            // computes both.
+            val resolvedRaw = Seq(
+              txnCol.map(_ => col("op") === "C"),
+              if (!heartbeats) None
+              else Some(gate.flatMap(_.pendingMinSeq).fold(col("op") === "H")(
+                m => col("op") === "H" && col("seq") < m)),
+              startAfterSeq.map(p => col("seq") <= p)).flatten
+            val hs = horizons(batch.toDF(),
+              lit(true) +: resolvedRaw.reduceOption(_ || _).toSeq)
+            pos.see(hs.head)
+            hs.tail.foreach(pos.resolve)
           }
-          fold(applied)
-          // the applied POSITION also advances through RESOLVED events
-          // that never reach state: a commit marker is resolved the
-          // batch it arrives (its txn's events are guaranteed applied by
-          // this batch — in-batch or carried pending), and events the
-          // start position covers are applied by definition. Without
-          // this fold a caught-up destination would read a permanent
-          // phantom lag of one trailing marker.
-          txnCol.foreach(_ => fold(batch.filter(col("op") === "C")))
-          if (heartbeats) {
-            // a heartbeat must never advance the applied position past
-            // HELD events: under the txn gate, only heartbeats below
-            // the oldest still-pending event fold (a faithful binlog
-            // cannot interleave a keep-alive ahead of events it already
-            // shipped — but position integrity must not TRUST the
-            // connector's ordering; a phantom caught-up here would make
-            // a fresh resume skip the held transaction). One 1-row min
-            // over the just-written pending snapshot, only when both
-            // gates are on.
-            val hb = batch.filter(col("op") === "H")
-            val capped =
-              if (txnCol.isEmpty) hb
-              else latestPendingBelow(state, Long.MaxValue) match {
-                case None => hb
-                case Some(p) =>
-                  val r = s.read.parquet(p).agg(min(col("seq"))).collect()(0)
-                  if (r.isNullAt(0)) hb
-                  else hb.filter(col("seq") < r.getLong(0))
-              }
-            fold(capped)
-          }
-          startAfterSeq.foreach(p => fold(batch.filter(col("seq") <= p)))
-          // filter-excluded events are resolved too: the predicate says
-          // they will never apply, which is configuration, not lag
-          rowFilter.foreach(_ => fold(gatedTxn))
-          // quarantined conflicts are resolved the batch they verdict:
-          // they will never apply (the operator reads them in the DLQ),
-          // so the applied position advances past them
-          strictBefore.foreach(_ => fold(completed))
-          // the SEEN horizon reads the raw batch — before the position
-          // skip, the txn gate, and the row filter — so the applied-vs-
-          // seen gap (replication lag) is visible while events are held
-          val (ss, st) = foldMaxSeqTs(batch.toDF(), srcMaxSeq, srcTs)
-          srcMaxSeq = ss; srcTs = st
-        }
-        if ((startAfterSeq.isEmpty && txnCol.isEmpty && rowFilter.isEmpty &&
-            !heartbeats && strictBefore.isEmpty) || !applied.isEmpty) {
-          // default: fold the batch to per-key winners before writing —
-          // the delta then costs O(keys touched), not O(events), and
-          // the read-side collapse is unchanged. keepHistory skips the
-          // fold (events land verbatim) so as-of reads keep EVENT
-          // granularity — the retention trade a time-traveling replica
-          // opts into, exactly like retaining binlogs.
-          bucketed(
-            if (keepHistory || partialImageCol.isDefined) envelope(applied)
-            else collapse(envelope(applied), keyCols), keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          written += 1
         }
       } finally {
         txnFull.foreach(_.unpersist())
@@ -1660,18 +1743,32 @@ object StreamingOps {
     // persist the time horizons with the state they describe — read by
     // replicaStatus as secondsBehindSource (monotone max-merge, so a
     // re-run pass can only confirm progress, never regress it)
-    if (trackSeq) writeLagMarks(state, appliedTs, srcTs)
-    (rows, written, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
+    if (trackSeq) writeLagMarks(state, pos.appliedTs, pos.seenTs)
+    // a pass that ran no batch wrote no carry: read the standing tail
+    (rows, written, pos.applied,
+      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
-  /** Size of the uncommitted pending tail after a txn-gated pass (one
-    * count over the newest — tiny — snapshot; never the state itself).
-    * 0 when gating is off or nothing is pending. */
+  /** Size of the uncommitted pending tail of a txn-gated dir (one count
+    * over the newest — tiny — snapshot; never the state itself). 0 when
+    * gating is off or nothing is pending. Read by replicaStatus and by
+    * a pass that ran no batch; a batch observes its own carry write. */
   private[graft] def pendingCount(s: SparkSession, root: String,
       txnCol: Option[String]): Long =
     if (txnCol.isEmpty) 0L
     else latestPendingBelow(root, Long.MaxValue)
       .map(p => s.read.parquet(p).count()).getOrElse(0L)
+
+  /** [[txnGate]]'s result: the READY events (txn column consumed), the
+    * pinned union the caller unpersists after its actions, the new
+    * uncommitted tail's size and oldest seq, and the horizons of the
+    * gate's INPUT batch — all of it and its commit markers. Everything
+    * but the frames is observed on the carry write, so neither the
+    * pass's pendingRows, nor the heartbeat cap, nor the raw-batch
+    * horizons cost an action of their own. */
+  private final case class Gated(ready: DataFrame, full: DataFrame,
+      pendingRows: Long, pendingMinSeq: Option[Long],
+      input: Horizon, markers: Horizon)
 
   /** The ONE transaction commit gate (shared by the single-table and
     * multi-table passes — the correctness-critical ready/carry split
@@ -1680,23 +1777,36 @@ object StreamingOps {
     * uncommitted tail for this epoch, prune dead snapshots, and return
     * the READY events with the txn column consumed. */
   private def txnGate(s: SparkSession, batch: DataFrame, tc: String,
-      pendRoot: String, epochId: Long): (DataFrame, DataFrame) = {
+      pendRoot: String, epochId: Long): Gated = {
+    // `__in` tags the batch's own rows, so the input horizons observed
+    // on the union exclude the carried-in pending events
     val full = latestPendingBelow(pendRoot, epochId)
-      .map(p => batch.unionByName(
-        s.read.parquet(p), allowMissingColumns = true))
-      .getOrElse(batch)
+      .map(p => batch.withColumn("__in", lit(true)).unionByName(
+        s.read.parquet(p).withColumn("__in", lit(false)),
+        allowMissingColumns = true))
+      .getOrElse(batch.withColumn("__in", lit(true)))
       .persist()
     val committed = full.filter(col("op") === "C")
       .select(col(tc).as("__ctxn")).distinct()
-    val events = full.filter(col("op") =!= "C")
-    val carry = events.join(broadcast(committed),
-      col(tc) === col("__ctxn"), "left_anti")
+    def events(df: DataFrame) = df.filter(col("op") =!= "C")
+    val (observed, input) = observeAggs(full,
+      horizonAggs(full.schema, col("__in"), 0) ++
+        horizonAggs(full.schema, col("__in") && col("op") === "C", 1),
+      r => (horizonAt(r, 0), horizonAt(r, 1)))
+    val (carry, tail) = observeAggs(
+      events(observed).join(broadcast(committed),
+        col(tc) === col("__ctxn"), "left_anti").drop("__in"),
+      Seq(count(lit(1)).as("n"), min(col("seq")).as("min_seq")),
+      r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
     carry.write.mode("overwrite")
       .parquet(s"$pendRoot/_pending/epoch=$epochId")
     prunePendingBelow(pendRoot, epochId - 1)
-    val ready = events.join(broadcast(committed), col(tc) === col("__ctxn"),
-      "left_semi").drop(tc)
-    (ready, full) // full is pinned; the caller unpersists after its actions
+    val ready = events(full).join(broadcast(committed),
+      col(tc) === col("__ctxn"), "left_semi").drop(tc, "__in")
+    val (pendingRows, pendingMinSeq) = tail()
+    val (in, markers) = input()
+    // full is pinned; the caller unpersists after its actions
+    Gated(ready, full, pendingRows, pendingMinSeq, in, markers)
   }
 
   /** Newest pending-tail snapshot strictly below `epochId` (txn-gated
@@ -1954,7 +2064,9 @@ object StreamingOps {
       applyTruncateDdl(stateDirs(t), Some(sq)) }
     stateDirs.values.foreach(applyDefaultDdl(_, defaultCols, stateSchema))
     val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-    var srcMaxSeq = Option.empty[Long]
+    val pos = new PassPosition
+    // the last batch's topology-level uncommitted tail (carry write)
+    var pending = Option.empty[Long]
     // staging lives WITH the checkpoint, not in a local tmp dir: the
     // ckpt and the state dirs share a durable filesystem in production,
     // so every staged `table=` subdir renames into its state dir as a
@@ -1970,11 +2082,6 @@ object StreamingOps {
       var partialPinned = Option.empty[DataFrame]
       var strictPinned = Option.empty[DataFrame]
       try {
-        if (trackSourceSeq) {
-          // SEEN horizon over the raw topology batch — ahead of the txn
-          // gate, so lag stays visible while a transaction is pending
-          srcMaxSeq = foldMaxSeq(batch.toDF(), srcMaxSeq)
-        }
         // routing first: one scan-local codegen'd CASE renames source
         // table names to destinations, so the gate's pending tail and
         // every per-table step below speak destination names only
@@ -1989,10 +2096,17 @@ object StreamingOps {
           case Some(tc) =>
             // one shared commit gate for the whole topology (the same
             // ready/carry split as runCdcPass, pending rooted at ckpt)
-            val (ready, full) = txnGate(s, entry, tc, ckpt, epochId)
-            txnFull = Some(full)
-            ready
+            val g = txnGate(s, entry, tc, ckpt, epochId)
+            txnFull = Some(g.full)
+            pending = Some(g.pendingRows)
+            // the gate observes its raw input on the carry write
+            if (trackSourceSeq) pos.see(g.input)
+            g.ready
         }
+        // SEEN horizon over the raw topology batch — ahead of the txn
+        // gate, so lag stays visible while a transaction is pending
+        if (trackSourceSeq && txnCol.isEmpty)
+          pos.see(horizons(batch.toDF(), Seq(lit(true))).head)
         // MINIMAL row images complete BEFORE the per-table filters and
         // masks, against each table's OWN prior state — every later
         // stage sees FULL rows (the single-table pass's rule, applied
@@ -2111,7 +2225,7 @@ object StreamingOps {
         batch.unpersist(); ()
       }
     }
-    (acc.toMap, pendingCount(s, ckpt, txnCol), srcMaxSeq)
+    (acc.toMap, pending.getOrElse(pendingCount(s, ckpt, txnCol)), pos.seen)
   }
 
   /** Compact all existing `epoch=` delta dirs into ONE baseline epoch
@@ -2766,8 +2880,8 @@ object StreamingOps {
     * the DLQ write and the admitted read share one computation). */
   private def gateBeforeImages(s: SparkSession, state: String,
       epochId: Long, batch: DataFrame, keyCols: Seq[String],
-      checkCol: String, beforeCol: String,
-      dlqDir: String): (DataFrame, DataFrame) = {
+      checkCol: String, beforeCol: String, dlqDir: String,
+      observe: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     val t = batch.schema(checkCol).dataType
     val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
     val withPrior =
@@ -2783,7 +2897,7 @@ object StreamingOps {
         batch.join(prior, keyCols, "left")
       }
     verdictBeforeImages(withPrior, keyCols.map(col), t, checkCol,
-      beforeCol, dlqDir, epochId, extraDrop = Seq.empty)
+      beforeCol, dlqDir, epochId, extraDrop = Seq.empty, observe)
   }
 
   /** The one verdict core both gates share (single-table and fan-out
@@ -2791,12 +2905,15 @@ object StreamingOps {
     * chain expected values, the conflict test, suffix quarantine, the
     * DLQ write (skipped when the batch has no conflicts — a healthy
     * stream must not accrete one empty epoch dir per trigger), and the
-    * admitted filter. Returns (admitted, the pinned frame the caller
-    * unpersists). */
+    * admitted filter. `observe` wraps the pinned frame BEFORE the
+    * admitted filter, so an observation there sees every verdicted
+    * event yet fires on the caller's write. Returns (admitted, the
+    * pinned frame the caller unpersists). */
   private def verdictBeforeImages(withPrior: DataFrame, pk: Seq[Column],
       t: org.apache.spark.sql.types.DataType, checkCol: String,
       beforeCol: String, dlqDir: String, epochId: Long,
-      extraDrop: Seq[String]): (DataFrame, DataFrame) = {
+      extraDrop: Seq[String],
+      observe: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(pk: _*).orderBy(col("seq"))
     // an event's AFTER image for chaining: a delete resets to NULL
@@ -2827,7 +2944,7 @@ object StreamingOps {
       conflicts.write.mode("overwrite").parquet(s"$dlqDir/epoch=$epochId")
       writeDlqCount(dlqDir, epochId, conflicts.count())
     }
-    val admitted = pinned
+    val admitted = observe(pinned)
       .filter(col("_cseq").isNull || col("seq") < col("_cseq"))
       .drop((book :+ beforeCol): _*)
     (admitted, pinned)
@@ -3469,9 +3586,9 @@ object StreamingOps {
     // position bookkeeping, same contract as runCdcPass's trackSeq: the
     // applied horizon advances through applied events AND resolved commit
     // markers; the seen horizon reads the raw batch so txn-held events
-    // surface as lag, not as silence
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
+    // surface as lag, not as silence ([[mvPosition]])
+    val pos = new PassPosition
+    var pending = Option.empty[Long]
     val (rows, epochs) = runSourcePass(s, source, ckpt) {
       (batch, epochId) =>
         // pin the batch: the old-image semi-join's broadcast subtree is
@@ -3484,26 +3601,18 @@ object StreamingOps {
         // root) holds uncommitted events back from the images, so a
         // straddling txn's rows enter the view only in the epoch its
         // commit marker arrives, atomically with the table itself
-        var txnFull = Option.empty[DataFrame]
-        val ready = txnCol match {
-          case None => bdf
-          case Some(tc) =>
-            val (r, f) = txnGate(s, bdf, tc, state, epochId)
-            txnFull = Some(f)
-            r.drop(tc)
-        }
-        if (trackSeq) {
-          maxSeq = foldMaxSeq(ready, maxSeq)
-          txnCol.foreach(_ =>
-            maxSeq = foldMaxSeq(bdf.filter(col("op") === "C"), maxSeq))
-          srcMaxSeq = foldMaxSeq(bdf, srcMaxSeq)
-        }
+        val gate = txnCol.map(tc => txnGate(s, bdf, tc, state, epochId))
+        gate.foreach(g => pending = Some(g.pendingRows))
+        val ready = gate.fold(bdf)(_.ready)
         val images = mvImages(s, state, epochId, ready, keyCols)
           .persist()
         try {
           // the destination table's own delta — same fold as runCdcPass
-          bucketed(mvView(images, "bwin", keyCols), keyCols)
+          val (bwin, applied) =
+            observeHorizonIf(trackSeq, mvView(images, "bwin", keyCols))
+          bucketed(bwin, keyCols)
             .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
+          applied.foreach(h => mvPosition(pos, gate, h()))
           // delta as ONE signed aggregate: +f(new image) − f(old image)
           // per touched key, exploded from the images frame — no second
           // shuffle, no two-sided join. `enrich` is the JOIN-MV hook
@@ -3536,11 +3645,28 @@ object StreamingOps {
           StateFs.epochIds(mv).filter(_ < epochId - 1)
             .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
         } finally {
-          images.unpersist(); txnFull.foreach(_.unpersist())
+          images.unpersist(); gate.foreach(_.full.unpersist())
           bdf.unpersist(); ()
         }
     }
-    (rows, epochs, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
+    (rows, epochs, pos.applied,
+      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
+  }
+
+  /** The MV passes' trackSeq step, after the `bwin` delta write: the
+    * applied horizon is that write's observed max(seq) — each touched
+    * key's batch winner carries the key's newest ready seq, so it equals
+    * the max over the ready events. Without a txn gate the ready events
+    * ARE the raw batch, so the seen horizon is the same number; a gated
+    * pass reads the seen horizon and the resolved commit markers off
+    * the gate's carry-write observation. */
+  private def mvPosition(pos: PassPosition, gate: Option[Gated],
+      applied: Horizon): Unit = {
+    pos.resolve(applied)
+    gate match {
+      case None => pos.see(applied)
+      case Some(g) => pos.see(g.input); pos.resolve(g.markers)
+    }
   }
 
   /** Seed a destination state dir + SUM MV from an existing SNAPSHOT
@@ -3776,33 +3902,25 @@ object StreamingOps {
     def fillSnapDefaults(df: DataFrame): DataFrame =
       applyDdlGates(state, df)
     // position bookkeeping — see the sum pass's trackSeq note
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
+    val pos = new PassPosition
+    var pending = Option.empty[Long]
     val (rows, epochs) = runSourcePass(s, source, ckpt) {
       (batch, epochId) =>
         // pin the batch (see the sum pass's note on the semi-join's
         // broadcast subtree re-scanning the source)
         val bdf = batch.toDF().persist()
         // transaction gate, same contract as the sum pass's
-        var txnFull = Option.empty[DataFrame]
-        val ready = txnCol match {
-          case None => bdf
-          case Some(tc) =>
-            val (r, f) = txnGate(s, bdf, tc, state, epochId)
-            txnFull = Some(f)
-            r.drop(tc)
-        }
-        if (trackSeq) {
-          maxSeq = foldMaxSeq(ready, maxSeq)
-          txnCol.foreach(_ =>
-            maxSeq = foldMaxSeq(bdf.filter(col("op") === "C"), maxSeq))
-          srcMaxSeq = foldMaxSeq(bdf, srcMaxSeq)
-        }
+        val gate = txnCol.map(tc => txnGate(s, bdf, tc, state, epochId))
+        gate.foreach(g => pending = Some(g.pendingRows))
+        val ready = gate.fold(bdf)(_.ready)
         val images = mvImages(s, state, epochId, ready, keyCols)
           .persist()
         try {
-          bucketed(mvView(images, "bwin", keyCols), keyCols)
+          val (bwin, applied) =
+            observeHorizonIf(trackSeq, mvView(images, "bwin", keyCols))
+          bucketed(bwin, keyCols)
             .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
+          applied.foreach(h => mvPosition(pos, gate, h()))
           val alive = (df: DataFrame) => df.filter(col("op") =!= "D")
           val newA = alive(mvView(images, "new", keyCols))
           // dirty groups: a handful per batch (≤ 2×|batch| values,
@@ -3875,11 +3993,12 @@ object StreamingOps {
           StateFs.epochIds(mv).filter(_ < epochId - 1)
             .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
         } finally {
-          images.unpersist(); txnFull.foreach(_.unpersist())
+          images.unpersist(); gate.foreach(_.full.unpersist())
           bdf.unpersist(); ()
         }
     }
-    (rows, epochs, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
+    (rows, epochs, pos.applied,
+      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
   /** Read-time collapse of all epoch deltas into the latest state (A8

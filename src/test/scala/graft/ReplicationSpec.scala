@@ -394,6 +394,9 @@ class ReplicationSpec extends SparkTestBase {
     // caught-up signal), so lag reads 0
     assert(prog.lastSeq.contains(100L), s"lastSeq=${prog.lastSeq}")
     assert(prog.lag == 0L)
+    // …and so does the time horizon: applied and seen marks coincide
+    val (appliedTs, seenTs) = StreamingOps.readLagMarks(s"$base/state")
+    assert(appliedTs.isDefined && appliedTs == seenTs)
     // the heartbeat-only batch wrote NO delta epoch
     assert(prog.epochs == 1, s"epochs=${prog.epochs}")
   }
@@ -1264,6 +1267,10 @@ class ReplicationSpec extends SparkTestBase {
     assert(p1.sourceMaxSeq.contains(4L), s"seen horizon: $p1")
     assert(p1.lastSeq.contains(2L) && p1.lag == 2L,
       s"an uncommitted tail must read as positive lag: $p1")
+    // the time-lag marks carry the same two horizons as event times
+    def us(sq: Long) = Some((1700000000L + sq) * 1000000L)
+    assert(graft.streaming.StreamingOps.readLagMarks(s"$base/state") ==
+      ((us(2), us(4))))
     // wave 1: txn 99 finally commits — the held events apply, the
     // applied position catches the horizon, lag drains to 0
     graft.streaming.StreamingOps.writeWave(txnDf(Seq(
@@ -1271,10 +1278,234 @@ class ReplicationSpec extends SparkTestBase {
     val p2 = Replication.incrementalSync(spark, schema, s"$base/in",
       s"$base/ckpt", s"$base/state", txnCol = Some("txn"))
     assert(p2.lag == 0L && p2.pendingRows == 0L, s"lag must drain: $p2")
+    assert(graft.streaming.StreamingOps.readLagMarks(s"$base/state") ==
+      ((us(5), us(5))))
     // caught-up idle pass: nothing seen, nothing applied, lag 0
     val p3 = Replication.incrementalSync(spark, schema, s"$base/in",
       s"$base/ckpt", s"$base/state", txnCol = Some("txn"))
     assert(p3.sourceMaxSeq.isEmpty && p3.lag == 0L)
+  }
+
+  /** SQL executions a streaming micro-batch runs INSIDE its foreachBatch
+    * body, grouped by the micro-batch's root execution id (an action
+    * nested in the batch carries the batch's id as its root). Listener
+    * events arrive asynchronously: [[drain]] runs a marked action and
+    * waits until the listener has seen it, so everything before it has
+    * been delivered. */
+  private final class BatchActions
+      extends org.apache.spark.scheduler.SparkListener {
+    // (execution id, root execution id, description, plan root node)
+    private val starts = new java.util.concurrent
+      .ConcurrentLinkedQueue[(Long, Long, String, String)]()
+    override def onOtherEvent(
+        e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        // an adaptive plan's root says nothing; name its first child
+        val p = s.sparkPlanInfo
+        val node = p.children.headOption.filter(_ =>
+          p.nodeName == "AdaptiveSparkPlan").fold(p.nodeName)(_.nodeName)
+        starts.add((s.executionId, s.rootExecutionId.getOrElse(s.executionId),
+          s.description, node))
+      case _ =>
+    }
+    def drain(): Unit = {
+      val mark = s"drain-${java.util.UUID.randomUUID()}"
+      spark.sparkContext.setJobDescription(mark)
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      import scala.jdk.CollectionConverters._
+      while (!starts.asScala.exists(_._3 == mark)) {
+        assert(System.nanoTime() < deadline, "listener bus did not drain")
+        Thread.sleep(20)
+      }
+    }
+    def clear(): Unit = starts.clear()
+    /** root execution → plan root nodes of the executions nested in it */
+    def nested: Map[Long, Seq[String]] = {
+      import scala.jdk.CollectionConverters._
+      starts.asScala.toSeq.filter { case (id, root, _, _) => id != root }
+        .groupBy(_._2).map { case (r, es) => r -> es.map(_._4) }
+    }
+  }
+
+  /** Actions inside the ONE micro-batch of `sync`: the sync must run
+    * exactly one micro-batch with nested actions. */
+  private def batchActions(sync: => Unit): Seq[String] = {
+    val l = new BatchActions
+    spark.sparkContext.addSparkListener(l)
+    try {
+      l.drain(); l.clear()
+      sync
+      l.drain()
+      val batches = l.nested
+      assert(batches.size == 1, s"expected one micro-batch: $batches")
+      batches.head._2
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("action-count guard: a txn-gated trackSeq micro-batch runs at most " +
+      "carry write + delta write + 1 action; the view sync adds only its " +
+      "view write and touched-bucket probe") {
+    // position and lag bookkeeping ride on the writes each batch already
+    // makes (observations), so a future fold that quietly adds an action
+    // per batch back fails here
+    val schema = txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 1))).schema
+    val seed = txnDf(Seq(
+      TxnEv("I", 1, 1, 10.0, "O", 10), TxnEv("I", 2, 2, 20.0, "O", 10),
+      TxnEv("C", 3, -1, 0.0, null, 10), TxnEv("I", 4, 3, 30.0, "O", 99)))
+    // the measured batch reads a pending snapshot, commits the held txn,
+    // updates an applied key and leaves a new txn pending
+    val wave = txnDf(Seq(
+      TxnEv("U", 5, 1, 11.0, "P", 11), TxnEv("C", 6, -1, 0.0, null, 99),
+      TxnEv("C", 7, -1, 0.0, null, 11), TxnEv("I", 8, 4, 40.0, "O", 12)))
+    val carryWrite = 1; val deltaWrite = 1
+    val base = tmp()
+    graft.streaming.StreamingOps.writeWave(seed, s"$base/in", 0)
+    Replication.incrementalSync(spark, schema, s"$base/in", s"$base/ckpt",
+      s"$base/state", txnCol = Some("txn"))
+    graft.streaming.StreamingOps.writeWave(wave, s"$base/in", 1)
+    var prog = Option.empty[Replication.SyncProgress]
+    val cdc = batchActions {
+      prog = Some(Replication.incrementalSync(spark, schema, s"$base/in",
+        s"$base/ckpt", s"$base/state", txnCol = Some("txn")))
+    }
+    info(s"tracked txn micro-batch: ${cdc.size} actions $cdc")
+    assert(cdc.size <= carryWrite + deltaWrite + 1,
+      s"${cdc.size} actions in one tracked txn micro-batch: $cdc")
+    assert(prog.contains(Replication.SyncProgress(4L, 1L, Some(7L), 1L,
+      Some(8L))), s"bookkeeping: $prog")
+    // the view sync: the same gate and delta, plus the view's own write
+    // and the old-image lookup's touched-bucket probe
+    val viewWrite = 1; val touchedProbe = 1
+    val vb = tmp()
+    graft.streaming.StreamingOps.writeWave(seed, s"$vb/in", 0)
+    Replication.incrementalSyncWithView(spark, schema, s"$vb/in",
+      s"$vb/ckpt", s"$vb/state", s"$vb/mv", txnCol = Some("txn"))
+    graft.streaming.StreamingOps.writeWave(wave, s"$vb/in", 1)
+    var vprog = Option.empty[Replication.SyncProgress]
+    val mv = batchActions {
+      vprog = Some(Replication.incrementalSyncWithView(spark, schema,
+        s"$vb/in", s"$vb/ckpt", s"$vb/state", s"$vb/mv",
+        txnCol = Some("txn"))._1)
+    }
+    info(s"tracked view micro-batch: ${mv.size} actions $mv")
+    assert(mv.size <= carryWrite + deltaWrite + viewWrite + touchedProbe + 1,
+      s"${mv.size} actions in one tracked view micro-batch: $mv")
+    assert(vprog == prog, s"view bookkeeping: $vprog")
+  }
+
+  test("position bookkeeping per branch: SyncProgress and lag marks equal " +
+      "hand-computed values, all-held batches keep no delta, a replay " +
+      "re-derives them") {
+    import graft.streaming.{StateFs, StreamingOps}
+    // every fixture stamps ts = t0 + seq seconds, so a seq horizon's lag
+    // mark is that seq's ts in epoch micros
+    def us(sq: Long): Long = (1700000000L + sq) * 1000000L
+    def ev(op: String, sq: Long, k: Long, price: Double, txn: Long) =
+      TxnEv(op, sq, k, price, if (op == "C" || op == "H") null else "O", txn)
+    def marker(sq: Long, txn: Long) = ev("C", sq, -1, 0.0, txn)
+    def hb(sq: Long) = ev("H", sq, -1, 0.0, 0)
+    def check(base: String, p: Replication.SyncProgress, rows: Long,
+        epochs: Long, lastSeq: Option[Long], pending: Long,
+        seen: Option[Long], deltas: Seq[Long], lag: (Option[Long], Option[Long])) = {
+      assert(p == Replication.SyncProgress(rows, epochs, lastSeq, pending, seen),
+        s"progress under $base")
+      assert(StreamingOps.readLagMarks(s"$base/state") ==
+        ((lag._1.map(us), lag._2.map(us))), s"lag marks under $base")
+      assert(StateFs.epochIds(s"$base/state").sorted == deltas,
+        s"delta epochs under $base")
+    }
+    def waves(base: String, from: Int, ws: org.apache.spark.sql.DataFrame*) =
+      ws.zipWithIndex.foreach { case (w, i) =>
+        StreamingOps.writeWave(w, s"$base/in", from + i) }
+    val txnSchema = txnDf(Seq(ev("I", 1, 1, 1.0, 1))).schema
+    def plain(evs: TxnEv*) = txnDf(evs).drop("txn")
+
+    // COMMIT MARKERS + an ALL-HELD batch + its REPLAY: txn 1's events
+    // arrive without their marker — nothing applies, no delta survives,
+    // the seen horizon still moves
+    val cm = tmp()
+    def cmSync() = Replication.incrementalSync(spark, txnSchema,
+      s"$cm/in", s"$cm/ckpt", s"$cm/state", txnCol = Some("txn"))
+    waves(cm, 0, txnDf(Seq(ev("I", 1, 1, 10.0, 1), ev("I", 2, 2, 20.0, 1))))
+    check(cm, cmSync(), 2, 0, None, 2, Some(2), Nil, (None, Some(2L)))
+    // at-least-once replay of that epoch: drop its commit record, so the
+    // restarted query re-runs batch 0 against the same pending input
+    Seq("0", ".0.crc").foreach(f => StateFs.deleteRecursive(s"$cm/ckpt/commits/$f"))
+    check(cm, cmSync(), 2, 0, None, 2, Some(2), Nil, (None, Some(2L)))
+    // the marker arrives with a new txn that stays pending: the applied
+    // position advances THROUGH the marker (seq 3), not to the held 4
+    waves(cm, 1, txnDf(Seq(marker(3, 1), ev("I", 4, 3, 30.0, 2))))
+    check(cm, cmSync(), 2, 1, Some(3), 1, Some(4), Seq(1L), (Some(3L), Some(4L)))
+
+    // HEARTBEATS CAPPED under a pending txn: a keep-alive at or above the
+    // oldest held event (seq 3) must not advance the applied position;
+    // a heartbeat-only batch keeps no delta
+    val hbb = tmp()
+    def hbSync() = Replication.incrementalSync(spark, txnSchema,
+      s"$hbb/in", s"$hbb/ckpt", s"$hbb/state", txnCol = Some("txn"),
+      heartbeats = true)
+    waves(hbb, 0,
+      txnDf(Seq(ev("I", 1, 1, 10.0, 1), marker(2, 1), ev("I", 3, 2, 20.0, 2),
+        hb(4))),
+      txnDf(Seq(hb(5))))
+    check(hbb, hbSync(), 5, 1, Some(2), 1, Some(5), Seq(0L), (Some(2L), Some(5L)))
+    // the held txn commits: nothing is pending, the trailing heartbeat
+    // resolves uncapped
+    waves(hbb, 2, txnDf(Seq(marker(6, 2), hb(7))))
+    check(hbb, hbSync(), 2, 1, Some(7), 0, Some(7), Seq(0L, 2L),
+      (Some(7L), Some(7L)))
+
+    // START POSITION: a batch wholly at or below it keeps no delta yet
+    // resolves through it; the next batch applies past it
+    val sa = tmp()
+    def saSync() = Replication.incrementalSync(spark, plain(ev("I", 1, 1, 1.0, 0)).schema,
+      s"$sa/in", s"$sa/ckpt", s"$sa/state", fromSeq = Some(2L))
+    waves(sa, 0, plain(ev("I", 1, 1, 10.0, 0), ev("I", 2, 2, 20.0, 0)))
+    check(sa, saSync(), 2, 0, Some(2), 0, Some(2), Nil, (Some(2L), Some(2L)))
+    waves(sa, 1, plain(ev("I", 3, 3, 30.0, 0), ev("U", 4, 1, 11.0, 0)))
+    check(sa, saSync(), 2, 1, Some(4), 0, Some(4), Seq(1L), (Some(4L), Some(4L)))
+
+    // ROW FILTER: excluded events resolve (configuration, not lag); a
+    // batch the filter excludes entirely keeps no delta
+    val rf = tmp()
+    waves(rf, 0,
+      plain(ev("I", 1, 1, 5.0, 0), ev("I", 2, 2, 20.0, 0)),
+      plain(ev("I", 3, 3, 1.0, 0)))
+    check(rf, Replication.incrementalSync(spark, plain(ev("I", 1, 1, 1.0, 0)).schema,
+      s"$rf/in", s"$rf/ckpt", s"$rf/state", rowFilter = Some("price > 10")),
+      3, 1, Some(3), 0, Some(3), Seq(0L), (Some(3L), Some(3L)))
+    // row filter under the txn gate: only COMMITTED events resolve; the
+    // one committed event is excluded, so no delta survives
+    val rft = tmp()
+    waves(rft, 0, txnDf(Seq(ev("I", 1, 1, 5.0, 1), ev("I", 2, 2, 20.0, 2),
+      marker(3, 1))))
+    check(rft, Replication.incrementalSync(spark, txnSchema, s"$rft/in",
+      s"$rft/ckpt", s"$rft/state", txnCol = Some("txn"),
+      rowFilter = Some("price > 10")),
+      3, 0, Some(3), 1, Some(3), Nil, (Some(3L), Some(3L)))
+
+    // STRICT BEFORE-IMAGE gate: a quarantined conflict resolves the batch
+    // it verdicts; an all-conflict batch keeps no delta
+    val sb = tmp()
+    def strictFrame(rows: Seq[(String, Long, Long, java.lang.Double,
+        java.lang.Double)]) =
+      spark.createDataFrame(rows.map { case (op, sq, k, p, b) =>
+        (op, sq, k, p, "O", b) })
+        .toDF("op", "seq", "okey", "price", "status", "before_price")
+        .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+        .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
+          col("status"), col("before_price"))
+    waves(sb, 0,
+      strictFrame(Seq(("I", 1L, 1L, 10.0, null), ("I", 2L, 2L, 20.0, null))),
+      strictFrame(Seq(("U", 3L, 1L, 11.0, 99.0))))
+    check(sb, Replication.incrementalSync(spark, strictFrame(Nil).schema,
+      s"$sb/in", s"$sb/ckpt", s"$sb/state",
+      strictBefore = Some(("price", "before_price")),
+      conflictDlq = Some(s"$sb/dlq")),
+      3, 1, Some(3), 0, Some(3), Seq(0L), (Some(3L), Some(3L)))
+    assert(spark.read.parquet(s"$sb/dlq").select("seq").collect()
+      .map(_.getLong(0)).toSeq == Seq(3L))
   }
 
   test("multi-table lag: the topology seen horizon reads against each table's applied position") {
