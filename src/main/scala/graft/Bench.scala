@@ -160,106 +160,69 @@ object Bench {
     // drowned by trigger fixed costs. Best-effort like the warmup.
     // gated like the artifact write it feeds: a filtered local
     // iteration would otherwise pay the state build + three reads for a
-    // result nothing consumes
-    val stateReads: Seq[(String, Double)] = if (filt.nonEmpty) Seq.empty
-    else try {
-      import org.apache.spark.sql.functions.col
-      val log = Tables.cdcLog(spark, sfDir)
-      val rtmp = TmpDirs.create("bench_stateread")
-      graft.streaming.StreamingOps.writeWave(
-        log.filter(col("seq") === 1), s"$rtmp/in", 0)
-      graft.streaming.StreamingOps.writeWave(
-        log.filter(col("seq") > 1), s"$rtmp/in", 1)
-      graft.streaming.StreamingOps.runCdcPass(spark, log.schema,
-        s"$rtmp/in", s"$rtmp/ckpt", s"$rtmp/state")
-      graft.streaming.StreamingOps.compactState(spark, s"$rtmp/state")
-      // MIN-OF-3 like the calibration probe and the index probes: these
-      // reads are pure (no index append), and a single-shot timing at
-      // the post-fork-fix magnitudes (~0.1-0.3 s) is mostly first-read
-      // noise — the flatness RATIO gate needs the probe's floor, not
-      // its first-touch cost (measurement fix, noted in
-      // OPTIMIZATION_r21.md).
-      def t1(name: String)(body: => Unit): (String, Double) = {
-        name -> (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          body
-          (System.nanoTime() - t0) / 1e9
-        }.min
+    // result nothing consumes.
+    // CROSS-SCALE evidence (`factor` = 10): the same three reads over a
+    // 10×-LARGER synthetic state (the log replicated under disjoint key
+    // ranges, built OUTSIDE the timers, compacted to the same
+    // steady-state shape). The "survives 100×" claim, measured: the
+    // bucket-probe and changes-poll timings must grow SUBLINEARLY vs the
+    // full collapse — they read pruned row groups / the changed tail,
+    // not the table.
+    def stateReadsAt(factor: Int): Seq[(String, Double)] =
+      if (filt.nonEmpty) Seq.empty
+      else try {
+        import org.apache.spark.sql.functions.{col, explode, lit}
+        val log = Tables.cdcLog(spark, sfDir)
+        val rep = if (factor == 1) log else log
+          .withColumn("_r", explode(lit((0 until factor).toArray)))
+          .withColumn("okey", col("okey") + col("_r").cast("long") * 10000000L)
+          .drop("_r")
+          .select(log.columns.map(col).toSeq: _*)
+        val suffix = if (factor == 1) "" else s"${factor}x"
+        val rtmp = TmpDirs.create(s"bench_stateread$suffix")
+        graft.streaming.StreamingOps.writeWave(
+          rep.filter(col("seq") === 1), s"$rtmp/in", 0)
+        graft.streaming.StreamingOps.writeWave(
+          rep.filter(col("seq") > 1), s"$rtmp/in", 1)
+        graft.streaming.StreamingOps.runCdcPass(spark,
+          graft.sources.FileCdcSource(log.schema, s"$rtmp/in"),
+          s"$rtmp/ckpt", s"$rtmp/state")
+        graft.streaming.StreamingOps.compactState(spark, s"$rtmp/state")
+        // MIN-OF-3 like the calibration probe and the index probes: these
+        // reads are pure (no index append), and a single-shot timing at
+        // the post-fork-fix magnitudes (~0.1-0.3 s) is mostly first-read
+        // noise — the flatness RATIO gate needs the probe's floor, not
+        // its first-touch cost (measurement fix, noted in
+        // OPTIMIZATION_r21.md).
+        def t1(name: String)(body: => Unit): (String, Double) = {
+          name -> (1 to 3).map { _ =>
+            val t0 = System.nanoTime()
+            body
+            (System.nanoTime() - t0) / 1e9
+          }.min
+        }
+        Seq(
+          t1("latest") {
+            graft.streaming.StreamingOps
+              .readLatestState(spark, s"$rtmp/state").count(); ()
+          },
+          t1("latest_bucket_probe") {
+            graft.streaming.StreamingOps.readLatestState(spark,
+              s"$rtmp/state", buckets = Some(Seq(0L, 1L))).count(); ()
+          },
+          t1("changes_since") {
+            graft.streaming.StreamingOps.readStateChanges(spark,
+              s"$rtmp/state", sinceSeq = 1L).count(); ()
+          })
+      } catch {
+        case e: Throwable =>
+          val tag = if (factor == 1) "" else s"-${factor}X"
+          System.err.println(s"BENCH STATE-READ$tag FAIL: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+          Seq.empty
       }
-      Seq(
-        t1("latest") {
-          graft.streaming.StreamingOps
-            .readLatestState(spark, s"$rtmp/state").count(); ()
-        },
-        t1("latest_bucket_probe") {
-          graft.streaming.StreamingOps.readLatestState(spark,
-            s"$rtmp/state", buckets = Some(Seq(0L, 1L))).count(); ()
-        },
-        t1("changes_since") {
-          graft.streaming.StreamingOps.readStateChanges(spark,
-            s"$rtmp/state", sinceSeq = 1L).count(); ()
-        })
-    } catch {
-      case e: Throwable =>
-        System.err.println(
-          s"BENCH STATE-READ FAIL: ${e.getClass.getName}: ${e.getMessage}")
-        Seq.empty
-    }
-    // CROSS-SCALE evidence: the same three reads over a 10×-LARGER
-    // synthetic state (the log replicated under disjoint key ranges,
-    // built OUTSIDE the timers, compacted to the same steady-state
-    // shape). The "survives 100×" claim, measured: the bucket-probe and
-    // changes-poll timings must grow SUBLINEARLY vs the full collapse —
-    // they read pruned row groups / the changed tail, not the table.
-    val stateReads10x: Seq[(String, Double)] = if (filt.nonEmpty) Seq.empty
-    else try {
-      import org.apache.spark.sql.functions.{col, explode, lit}
-      val log = Tables.cdcLog(spark, sfDir)
-      val rep = log
-        .withColumn("_r", explode(lit((0 until 10).toArray)))
-        .withColumn("okey", col("okey") + col("_r").cast("long") * 10000000L)
-        .drop("_r")
-        .select(log.columns.map(col).toSeq: _*)
-      val rtmp = TmpDirs.create("bench_stateread10x")
-      graft.streaming.StreamingOps.writeWave(
-        rep.filter(col("seq") === 1), s"$rtmp/in", 0)
-      graft.streaming.StreamingOps.writeWave(
-        rep.filter(col("seq") > 1), s"$rtmp/in", 1)
-      graft.streaming.StreamingOps.runCdcPass(spark, log.schema,
-        s"$rtmp/in", s"$rtmp/ckpt", s"$rtmp/state")
-      graft.streaming.StreamingOps.compactState(spark, s"$rtmp/state")
-      // MIN-OF-3 like the calibration probe and the index probes: these
-      // reads are pure (no index append), and a single-shot timing at
-      // the post-fork-fix magnitudes (~0.1-0.3 s) is mostly first-read
-      // noise — the flatness RATIO gate needs the probe's floor, not
-      // its first-touch cost (measurement fix, noted in
-      // OPTIMIZATION_r21.md).
-      def t1(name: String)(body: => Unit): (String, Double) = {
-        name -> (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          body
-          (System.nanoTime() - t0) / 1e9
-        }.min
-      }
-      Seq(
-        t1("latest") {
-          graft.streaming.StreamingOps
-            .readLatestState(spark, s"$rtmp/state").count(); ()
-        },
-        t1("latest_bucket_probe") {
-          graft.streaming.StreamingOps.readLatestState(spark,
-            s"$rtmp/state", buckets = Some(Seq(0L, 1L))).count(); ()
-        },
-        t1("changes_since") {
-          graft.streaming.StreamingOps.readStateChanges(spark,
-            s"$rtmp/state", sinceSeq = 1L).count(); ()
-        })
-    } catch {
-      case e: Throwable =>
-        System.err.println(
-          s"BENCH STATE-READ-10X FAIL: ${e.getClass.getName}: ${e.getMessage}")
-        Seq.empty
-    }
+    val stateReads = stateReadsAt(1)
+    val stateReads10x = stateReadsAt(10)
     // LLM-INDEX scaling evidence — the dedup-side analogue of the
     // state-read pair above: the incremental-ingest claim is O(batch)
     // work against a persisted index whose only O(index) cost is a

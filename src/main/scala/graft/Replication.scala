@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.TableSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -279,25 +279,24 @@ object Replication {
         }
         (cfg.renameCols, cfg.truncateAtSeq, cfg.defaultCols, cfg.dropCols)
       }
-    val (rows, epochs, lastSeq, pending, srcMax) =
-      streaming.StreamingOps.runCdcPass(
-        spark, schema, inDir, ckptDir, stateDir, trackSeq = true,
-        startAfterSeq = fromSeq, txnCol = txnCol, renameCols = renames2,
-        truncateAtSeq = truncate2, defaultCols = defaults2,
-        rowFilter = rowFilter, maskCols = maskCols, keyCols = keyCols,
-        dropCols = drops2, keepHistory = keepHistory,
-        computedCols = computedCols, partialImageCol = partialImageCol,
-        heartbeats = heartbeats, strictBefore = strictBefore,
-        conflictDlq = conflictDlq)
+    val progress = streaming.StreamingOps.runCdcPass(spark,
+      sources.FileCdcSource(schema, inDir), ckptDir, stateDir, trackSeq = true,
+      startAfterSeq = fromSeq, txnCol = txnCol, renameCols = renames2,
+      truncateAtSeq = truncate2, defaultCols = defaults2,
+      rowFilter = rowFilter, maskCols = maskCols, keyCols = keyCols,
+      dropCols = drops2, keepHistory = keepHistory,
+      computedCols = computedCols, partialImageCol = partialImageCol,
+      heartbeats = heartbeats, strictBefore = strictBefore,
+      conflictDlq = conflictDlq)
     if (deltaCount(stateDir) > compactEvery)
       streaming.StreamingOps.compactState(spark, stateDir, tombstoneGc)
     // the connector reported this pass's horizon under its own dialect:
     // persist token → applied seq so a later `--position` resume decodes
     // offline ([[PositionCatalog]]); a no-rows pass records nothing (its
     // horizon is whatever the previous pass already recorded)
-    for (t <- positionToken; sq <- lastSeq)
+    for (t <- positionToken; sq <- progress.lastSeq)
       PositionCatalog.record(ckptDir, t, sq)
-    SyncProgress(rows, epochs, lastSeq, pending, srcMax)
+    progress
   }
 
   /** Incremental sync that ALSO keeps an aggregate VIEW in step — the
@@ -334,17 +333,16 @@ object Replication {
       "a custom measure is sum-mode surface — the min/max view is fixed " +
         "to price (declare an arbitrary view via runMvRecomputePass)")
     val src = sources.FileCdcSource(schema, inDir)
-    val (rows, epochs, lastSeq, pending, srcMax) =
-      if (minMax) streaming.StreamingOps.runMvMinMaxPassSource(spark, src,
+    val progress =
+      if (minMax) streaming.StreamingOps.runMvMinMaxPass(spark, src,
         ckptDir, stateDir, s"$mvDir/_snap", mvDir, keyCols, groupCol,
         txnCol = txnCol, trackSeq = true,
         renameCols = renameCols, defaultCols = defaultCols)
-      else streaming.StreamingOps.runMvSumPassSource(spark, src,
+      else streaming.StreamingOps.runMvSumPass(spark, src,
         ckptDir, stateDir, mvDir, keyCols, groupCol, enrich,
         txnCol = txnCol, trackSeq = true, measureCol = measureCol,
         renameCols = renameCols, defaultCols = defaultCols)
-    (SyncProgress(rows, epochs, lastSeq, pending, srcMax),
-      streaming.StreamingOps.readMv(spark, mvDir))
+    (progress, streaming.StreamingOps.readMv(spark, mvDir))
   }
 
   /** One-call operational readout of a replica state dir — the SHOW
@@ -978,7 +976,7 @@ object Replication {
     * tables whose PKs differ — a header table keyed by order id next
     * to a lines table keyed by (order id, line no) — and the single
     * fan-out job collapses each table under its own key (see
-    * StreamingOps.runCdcPassMultiSource). */
+    * StreamingOps.runCdcPassMulti). */
   /** `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
     * [[incrementalSync]]'s: the gap's QueryEvents fold through
     * [[streaming.DdlSql.foldTopology]] scoped to the replicated set —
@@ -1063,29 +1061,24 @@ object Replication {
         }
         (cfg.renameCols, truncates, cfg.defaultCols, cfg.dropCols)
       }
-    val (stats, pending, srcMax) = streaming.StreamingOps.runCdcPassMulti(
-      spark, schema, inDir, ckptDir, stateDirs, txnCol, renames2, truncate2,
-      defaults2, rowFilters, maskCols, keyCols, trackSourceSeq = true,
-      keyColsByTable = keyColsByTable, dropCols = drops2,
-      keepHistory = keepHistory)
+    val progress = streaming.StreamingOps.runCdcPassMulti(spark,
+      sources.FileCdcSource(schema, inDir), ckptDir, stateDirs, txnCol,
+      renames2, truncate2, defaults2, rowFilters, maskCols, keyCols,
+      trackSourceSeq = true, keyColsByTable = keyColsByTable,
+      dropCols = drops2, keepHistory = keepHistory)
     // the topology shares ONE binlog, so its position catalog entry is
     // topology-level: the newest seq any table applied (the binlog is
     // applied up to there; a table absent from this pass's waves simply
     // had no events below it)
     for (tk <- positionToken;
-         mx <- stats.values.map(_._3).maxOption)
+         mx <- progress.values.flatMap(_.lastSeq).maxOption)
       PositionCatalog.record(ckptDir, tk, mx)
-    stateDirs.map { case (t, dir) =>
-      if (deltaCount(dir) > compactEvery)
-        streaming.StreamingOps.compactState(spark, dir, tombstoneGc,
-          // the topology-level pending tail, not the (absent) per-table
-          // one, must hold down each table's purge floor
-          pendingRoot = if (txnCol.isDefined) Some(ckptDir) else None)
-      t -> stats.get(t)
-        .map { case (rows, epochs, mx) =>
-          SyncProgress(rows, epochs, Some(mx), pending, srcMax) }
-        .getOrElse(SyncProgress(0L, 0L, None, pending, srcMax))
-    }
+    for (dir <- stateDirs.values if deltaCount(dir) > compactEvery)
+      streaming.StreamingOps.compactState(spark, dir, tombstoneGc,
+        // the topology-level pending tail, not the (absent) per-table
+        // one, must hold down each table's purge floor
+        pendingRoot = if (txnCol.isDefined) Some(ckptDir) else None)
+    progress
   }
 
   /** The reference tool's full replication config surface: which source
@@ -1469,11 +1462,18 @@ object Replication {
     * correction seq clears the topology's uncommitted tail. */
   def repairSync(spark: SparkSession, src: DataFrame, stateDir: String,
       keyCols: Seq[String] = Seq("okey"),
-      pendingRoot: Option[String] = None): RepairReport = {
-    val (i, u, d) = streaming.StreamingOps.repairState(spark, src, stateDir,
-      keyCols, pendingRoot)
-    RepairReport(i, u, d)
-  }
+      pendingRoot: Option[String] = None): RepairReport =
+    repairOne(spark, src, stateDir, keyCols, pendingRoot, None, None)
+
+  /** [[repairSyncMulti]]'s one-table topology: the table is named by its
+    * state dir, and its pending tail defaults to that dir's own. */
+  private def repairOne(spark: SparkSession, src: DataFrame,
+      stateDir: String, keyCols: Seq[String], pendingRoot: Option[String],
+      restrict: Option[Column], restrictBuckets: Option[Seq[Long]])
+      : RepairReport =
+    streaming.StreamingOps.repairState(spark, Map(stateDir -> src),
+      Map(stateDir -> stateDir), keyCols, pendingRoot.orElse(Some(stateDir)),
+      restrict = restrict, restrictBuckets = restrictBuckets)(stateDir)
 
   /** One key-hash chunk's verdict from [[consistencyCheckChunked]]. */
   final case class ChunkReport(chunk: Long, nSrc: Long, nDst: Long,
@@ -1544,11 +1544,8 @@ object Replication {
       if (nChunks <= B && B % nChunks == 0)
         Some((0L until B).filter(b => dirtyChunks.contains(b % nChunks)).toSeq)
       else None
-    val (i, u, d) = streaming.StreamingOps.repairState(spark, src, stateDir,
-      keyCols, pendingRoot,
-      restrict = Some(chunkOf(keyCols, nChunks).isin(dirtyChunks: _*)),
-      restrictBuckets = buckets)
-    RepairReport(i, u, d)
+    repairOne(spark, src, stateDir, keyCols, pendingRoot,
+      Some(chunkOf(keyCols, nChunks).isin(dirtyChunks: _*)), buckets)
   }
 
   /** Topology-level repair for a multi-table sync
@@ -1570,9 +1567,8 @@ object Replication {
       pendingRoot: Option[String] = None,
       keyColsByTable: Map[String, Seq[String]] = Map.empty)
       : Map[String, RepairReport] =
-    streaming.StreamingOps.repairStateMulti(spark, srcByTable, stateDirs,
+    streaming.StreamingOps.repairState(spark, srcByTable, stateDirs,
       keyCols, pendingRoot, keyColsByTable)
-      .map { case (t, (i, u, d)) => t -> RepairReport(i, u, d) }
 
   /** Outcome of a source↔destination consistency check (§3.1 #3). */
   final case class ConsistencyReport(nSrc: Long, nDst: Long,

@@ -64,7 +64,7 @@ final case class BinlogTextCdcSource(dir: String,
   * carries N tables' interleaved row events (the reference's actual
   * topology), each block dispatching on its verb line's table under
   * [[BinlogText.parseMulti]]'s rules — the natural feed for
-  * `runCdcPassMultiSource`'s per-table fan-out. */
+  * `runCdcPassMulti`'s per-table fan-out. */
 final case class BinlogTextMultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],
     ignoreTables: Set[String] = Set.empty,
@@ -146,7 +146,7 @@ final case class BinlogSocketCdcSource(dir: String,
   * dir carries N tables' interleaved row events, each dispatching on
   * the table name its TABLE_MAP carries on the wire under
   * [[BinlogBinary.parseMulti]]'s rules — the natural raw-bytes feed
-  * for `runCdcPassMultiSource`'s per-table fan-out. */
+  * for `runCdcPassMulti`'s per-table fan-out. */
 final case class BinlogBinaryMultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],
     ignoreTables: Set[String] = Set.empty,
@@ -190,7 +190,7 @@ final case class BinlogBase64CdcSource(dir: String,
 
 /** [[BinlogBase64CdcSource]] for a MULTI-TABLE non-verbose dump: one
   * tailed dir, N tables dispatched on the TABLE_MAP names the base64
-  * payloads carry on the wire — `runCdcPassMultiSource`'s fan-out
+  * payloads carry on the wire — `runCdcPassMulti`'s fan-out
   * from the default mysqlbinlog output. */
 final case class BinlogBase64MultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.UUID
 
 import graft.Tables
+import graft.Replication.{RepairReport, SyncProgress}
 import graft.Tables.{dec2, D2}
 import graft.sources.{CdcSource, EpochParquetSink, FileCdcSource}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
@@ -209,18 +210,15 @@ object StreamingOps {
     * ONE struct over the union of the tables' key columns, each field
     * nulled for rows whose table's key does not include it (one
     * table's key column is another's ordinary payload — the padding
-    * keeps the two roles straight per row). Replaces the previous
-    * `to_json` CASE — Jackson serialization per row, measured as real
-    * CPU in the multi-PK collapse — with pure codegen'd struct
-    * construction. Grouping/join behavior is identical: rows group on
-    * (table, encoded key), and struct comparison treats the padded
-    * NULLs exactly as grouping treated the JSON encode. FLOAT/DOUBLE
-    * key columns are the one deliberate difference: struct grouping
-    * and join keys normalize floating point, so -0.0 folds into 0.0
-    * and every NaN into one NaN (the old JSON strings kept them apart)
-    * — the same equality Spark applies to a bare float grouping key.
-    * `schema` supplies the padded fields' types (both sides of a join
-    * must build the same struct type). */
+    * keeps the two roles straight per row). Pure codegen'd struct
+    * construction: a per-row JSON string encode measured as real CPU in
+    * the multi-PK collapse. Rows group and join on (table, encoded key),
+    * and struct comparison treats the padded NULLs as equal. FLOAT/DOUBLE
+    * key columns normalize: struct grouping and join keys fold -0.0 into
+    * 0.0 and every NaN into one NaN — the same equality Spark applies
+    * to a bare float grouping key. For one table the struct is the
+    * plain key struct. `schema` supplies the padded fields' types (both
+    * sides of a join must build the same struct type). */
   private def tableKeyStruct(keyFor: Map[String, Seq[String]],
       schema: org.apache.spark.sql.types.StructType): Column = {
     val allKeys = keyFor.values.flatten.toSeq.distinct.sorted
@@ -232,18 +230,19 @@ object StreamingOps {
     }: _*)
   }
 
-  /** [[tableKeyStruct]] for a frame holding ONE table's rows (the
-    * per-table prior-image reads): same field set, same types, the
-    * non-key fields padded NULL unconditionally. */
-  private def tableKeyStructFor(keyFor: Map[String, Seq[String]],
-      t: String,
-      schema: org.apache.spark.sql.types.StructType): Column = {
-    val allKeys = keyFor.values.flatten.toSeq.distinct.sorted
-    struct(allKeys.map { c =>
-      (if (keyFor(t).contains(c)) col(c)
-       else lit(null).cast(schema(c).dataType)).as(c)
-    }: _*)
-  }
+  /** Each row's state bucket under ITS table's key definition (one
+    * scan-local CASE on `table`) — the topology form of [[bucketOf]]. */
+  private def tableBucket(keyFor: Map[String, Seq[String]]): Column =
+    keyFor.foldLeft(lit(null).cast(org.apache.spark.sql.types.LongType)) {
+      case (acc, (t, ks)) =>
+        when(col("table") === t, bucketOf(ks)).otherwise(acc)
+    }
+
+  /** The single-table pass's one table in the topology helpers
+    * ([[completePartialImages]], [[gateBeforeImages]]): the pass tags its
+    * batch `table = OneTable`, and the tag drops before anything is
+    * written. For one table [[tableKeyStruct]] is the plain key struct. */
+  private val OneTable = "_"
 
   /** Materialize the bucket column on a state epoch write. Deliberately
     * NO per-write sort: a per-trigger delta is a handful of small files
@@ -722,7 +721,7 @@ object StreamingOps {
     writeWave(env, in, 0)
     val dirs = Map("t_even" -> s"$tmp/state_even",
       "t_odd" -> s"$tmp/state_odd")
-    runCdcPassMulti(s, env.schema, in, s"$tmp/ckpt", dirs)
+    runCdcPassMulti(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", dirs)
     dirs.toSeq.sortBy(_._1).map { case (t, d) =>
       readLatestState(s, d).withColumn("tbl", lit(t))
     }.reduce(_.unionByName(_))
@@ -757,7 +756,7 @@ object StreamingOps {
     render(v1, cols1, s"$tmp/binlog1")
     val env1 = parse(s"$tmp/binlog1", cols1)
     writeWave(env1, in, 0)
-    runCdcPass(s, env1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(env1.schema, in), s"$tmp/ckpt", s"$tmp/state")
     // rotation 2: DDL statements at position 1, then evolved rows
     val cols2: BCols = Seq(
       "okey" -> LongType, "price" -> DoubleType,
@@ -777,7 +776,7 @@ object StreamingOps {
       tableFilter = Some("orders"))
     val env2 = parse(s"$tmp/binlog2", cols2)
     writeWave(env2, in, 1)
-    runCdcPass(s, env2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+    runCdcPass(s, FileCdcSource(env2.schema, in), s"$tmp/ckpt", s"$tmp/state",
       renameCols = cfg.renameCols, defaultCols = cfg.defaultCols,
       dropCols = cfg.dropCols, truncateAtSeq = cfg.truncateAtSeq)
     readLatestState(s, s"$tmp/state")
@@ -816,7 +815,7 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
     // the S17 closure: the DDL generated from the REPLICATED table's
     // published schema must map every exercised type correctly
     val payload = org.apache.spark.sql.types.StructType(
@@ -848,7 +847,7 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
     val payload = org.apache.spark.sql.types.StructType(
       readStateSchema(s"$tmp/state").get.fields
         .filterNot(f => Seq("op", "seq").contains(f.name)))
@@ -900,7 +899,7 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
     val payload = org.apache.spark.sql.types.StructType(
       readStateSchema(s"$tmp/state").get.fields
         .filterNot(f => Seq("op", "seq").contains(f.name)))
@@ -938,7 +937,7 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
     readLatestState(s, s"$tmp/state")
       .select(col("okey"), col("op"), col("price"), col("status"),
         col("ts"), col("name"))
@@ -975,7 +974,7 @@ object StreamingOps {
     val envTxn = parseTxn(s"$tmp/binlog")
     val in = s"$tmp/in"
     writeWave(envTxn, in, 0)
-    runCdcPass(s, envTxn.schema, in, s"$tmp/ckpt", s"$tmp/state",
+    runCdcPass(s, FileCdcSource(envTxn.schema, in), s"$tmp/ckpt", s"$tmp/state",
       txnCol = Some("txn"))
     readLatestState(s, s"$tmp/state")
       .select(col("okey"), col("op"), col("price"), col("status"),
@@ -1351,6 +1350,111 @@ object StreamingOps {
     (rows, epochs)
   }
 
+  /** The pre-stream step both CDC passes share: refuse a malformed
+    * declaration by name, then settle every state dir's DDL metadata
+    * BEFORE the stream starts. `topology` keeps the multi-table pass's
+    * wording where the two passes' refusals differ.
+    *
+    * DDL settles in one order: renames carry published history to the
+    * new name; drops settle AFTER renames (a rename-then-drop pass drops
+    * the NEW name) and BEFORE the schema union — which re-adds exactly
+    * the columns the envelope still carries (the compressed-DDL window);
+    * then the type-change guardrail fires — the open-envelope design
+    * absorbs ADD (union) and DROP (NULL forward), but a changed type
+    * must fail by name, not as a mid-pass analysis error after some
+    * batches already applied. A RENAME or DROP is envelope-wide (a
+    * topology shares one binlog envelope, so the column changes in
+    * every table); a TRUNCATE targets one table. `computed` appends the
+    * single-table pass's computed columns to the published schema. */
+  private def declareCdcPass(source: CdcSource,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      topology: Boolean, txnCol: Option[String],
+      renameCols: Map[String, String], truncateAt: Map[String, Long],
+      defaultCols: Map[String, ColumnDefault],
+      rowFilters: Map[String, String], maskCols: Map[String, Seq[String]],
+      dropCols: Map[String, Long], keepHistory: Boolean,
+      partialImageCol: Option[String], strictBefore: Option[(String, String)],
+      conflictDlq: Option[String],
+      computed: Seq[org.apache.spark.sql.types.StructField] = Seq.empty)
+      : Unit = {
+    val fields = source.schema.fieldNames
+    val allKeyCols = keyFor.values.flatten.toSeq.distinct
+    partialImageCol.foreach { cc =>
+      require(fields.contains(cc),
+        s"partial-image column '$cc' absent from the envelope")
+      require(!keepHistory,
+        "partial-image completion folds each batch to full per-key " +
+          "images; keepHistory stores events verbatim — the two modes " +
+          "are mutually exclusive (complete upstream to retain history)")
+    }
+    strictBefore.foreach { case (pc, bc) =>
+      Seq(pc, bc).foreach(c => require(fields.contains(c),
+        s"strict-before column '$c' absent from the envelope"))
+      // a key column is degenerate to check (a PK rides every row image
+      // unchanged) and one table's key is another's payload — refuse the
+      // ambiguity topology-wide
+      require(!(Set("op", "seq", "ts", "table") ++ allKeyCols).contains(pc),
+        s"strict-before checks payload, not bookkeeping" +
+          (if (topology) " or key columns" else "") + s": '$pc'")
+      require(partialImageCol.isEmpty,
+        "binlog_row_image=MINIMAL carries no before images — the " +
+          "strict before-image gate and partial-image completion are " +
+          "mutually exclusive by definition")
+      require(conflictDlq.isDefined,
+        "strictBefore without a conflictDlq would DISCARD conflicted " +
+          "events with no record anywhere — declare the dead-letter dir")
+      // a rowFilter INTENTIONALLY diverges destination state from the
+      // source, so a key whose prior update was filter-excluded would
+      // quarantine its later admitted updates as false conflicts —
+      // refuse the composition up front (the partialImageCol treatment)
+      require(rowFilters.isEmpty,
+        "strictBefore checks before images against destination state " +
+          (if (topology) "that row filters have" else "that a rowFilter has") +
+          " intentionally diverged from the source — filter upstream, " +
+          (if (topology) "or replicate strictly" else
+            "or replicate the table strictly") + " and unfiltered")
+    }
+    require(conflictDlq.isEmpty || strictBefore.isDefined,
+      "a conflict DLQ without a strict-before declaration is dead " +
+        "config — declare strictBefore or drop the DLQ dir")
+    require(allKeyCols.forall(fields.contains),
+      s"key column(s) absent from the envelope: " +
+        allKeyCols.filterNot(fields.contains).mkString(", "))
+    Seq("truncate" -> truncateAt.keySet, "row filter" -> rowFilters.keySet,
+        "column mask" -> maskCols.keySet).foreach { case (what, ts) =>
+      require(ts.subsetOf(stateDirs.keySet),
+        s"$what declared for unreplicated table(s): " +
+          (ts -- stateDirs.keySet).toSeq.sorted.mkString(", "))
+    }
+    maskCols.foreach { case (t, cs) =>
+      // identity, not payload: masking a table's OWN key column would
+      // collapse unrelated keys together (another table's key is
+      // ordinary payload here)
+      val unmaskable = Set("op", "seq", "ts", "table") ++ keyFor(t) ++
+        txnCol.toSet ++ partialImageCol.toSet
+      val who = if (topology) s"table '$t' masks" else "mask names"
+      val bad = cs.filter(unmaskable)
+      require(bad.isEmpty,
+        s"$who bookkeeping column(s): ${bad.mkString(", ")}")
+      val absent = cs.filterNot(fields.contains)
+      require(absent.isEmpty,
+        s"$who column(s) absent from the envelope: ${absent.mkString(", ")}")
+    }
+    val stateSchema = org.apache.spark.sql.types.StructType(
+      stateSchemaFor(source.schema, txnCol.toSet ++ partialImageCol.toSet
+        ++ strictBefore.map(_._2)).fields ++ computed)
+    val dirs = stateDirs.values
+    stateDirs.foreach { case (t, d) => ensureKeyCols(d, keyFor(t)) }
+    dirs.foreach(applyRenameDdl(_, renameCols, stateSchema))
+    dirs.foreach(applyDropDdl(_, dropCols, stateSchema,
+      readds = defaultCols.map { case (c, d) => c -> d.atSeq }))
+    dirs.foreach(ensureStateSchema(_, stateSchema))
+    dirs.foreach(ensureHistoryMode(_, keepHistory))
+    truncateAt.foreach { case (t, sq) =>
+      applyTruncateDdl(stateDirs(t), Some(sq)) }
+    dirs.foreach(applyDefaultDdl(_, defaultCols, stateSchema))
+  }
+
   /** `trackSeq` additionally reports the newest `seq` applied BY THIS
     * PASS (only the Replication facade turns it on; the benchmarked
     * queries never pay it). The bookkeeping is OBSERVED, never an action
@@ -1395,43 +1499,6 @@ object StreamingOps {
     * and are never applied as rows; the committed-id set per batch is a
     * handful of ids, so both the ready- and carry-joins broadcast.
     *
-    * Returns (rowsConsumed, epochsWritten, maxAppliedSeq, pendingRows,
-    * sourceMaxSeq) — pendingRows is the txn-gated pass's uncommitted
-    * tail size after the pass (0 when gating is off): the operational
-    * signal for an ABANDONED transaction pinning pending state forever.
-    * sourceMaxSeq (tracked under `trackSeq`, like maxAppliedSeq) is the
-    * newest seq the pass SAW — applied or not — so
-    * `sourceMaxSeq - maxAppliedSeq` reads as REPLICATION LAG: it keeps
-    * advancing while a pending transaction, a start position, or a row
-    * filter holds events back from state, exactly the
-    * binlog-position-vs-applied-position gap a replication operator
-    * watches. */
-  private[graft] def runCdcPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String,
-      trackSeq: Boolean = false,
-      startAfterSeq: Option[Long] = None,
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAtSeq: Option[Long] = None,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilter: Option[String] = None,
-      maskCols: Seq[String] = Seq.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      computedCols: Seq[(String, String)] = Seq.empty,
-      partialImageCol: Option[String] = None,
-      heartbeats: Boolean = false,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Long, Long, Option[Long], Long, Option[Long]) =
-    runCdcPassSource(s, FileCdcSource(schema, in), ckpt, state, trackSeq,
-      startAfterSeq, txnCol, renameCols, truncateAtSeq, defaultCols,
-      rowFilter, maskCols, keyCols, dropCols, keepHistory, computedCols,
-      partialImageCol, heartbeats, strictBefore, conflictDlq)
-
-  /** [[runCdcPass]] over an arbitrary [[CdcSource]] transport.
     * `renameCols` (old → new) declares RENAME COLUMN DDLs this pass's
     * envelope carries (see [[applyRenameDdl]]): the published column is
     * renamed in place and its epoch history keeps serving under the new
@@ -1441,7 +1508,7 @@ object StreamingOps {
     * `defaultCols` declares `ADD COLUMN … DEFAULT` clauses (see
     * [[ColumnDefault]]): pre-DDL rows serve the default instead of NULL.
     * `rowFilter`/`maskCols` are the single-table forms of the multi
-    * pass's per-table filters ([[runCdcPassMultiSource]]): only matching
+    * pass's per-table filters ([[runCdcPassMulti]]): only matching
     * events replicate — deletes ALWAYS bypass the predicate — and masked
     * payload columns ship as NULL. `heartbeats` declares that the
     * transport emits binlog KEEP-ALIVE rows (`op = "H"`, position-only):
@@ -1460,8 +1527,21 @@ object StreamingOps {
     * quarantines to `conflictDlq` instead of applying — MySQL's strict
     * slave-exec discipline against out-of-order applies and second
     * destination writers. Mutually exclusive with `partialImageCol`
-    * (MINIMAL row images carry no before images by definition). */
-  private[graft] def runCdcPassSource(s: SparkSession, source: CdcSource,
+    * (MINIMAL row images carry no before images by definition). Partial
+    * images and the strict gate run through the topology helpers as the
+    * one-table topology ([[OneTable]]).
+    *
+    * Returns the pass's [[SyncProgress]]: rows consumed, deltas kept,
+    * the max applied seq, and pendingRows — the txn-gated pass's
+    * uncommitted tail size after the pass (0 when gating is off): the
+    * operational signal for an ABANDONED transaction pinning pending
+    * state forever. sourceMaxSeq (tracked under `trackSeq`, like the
+    * applied seq) is the newest seq the pass SAW — applied or not — so
+    * its lag reads as REPLICATION LAG: it keeps advancing while a
+    * pending transaction, a start position, or a row filter holds
+    * events back from state, exactly the binlog-position-vs-applied-
+    * position gap a replication operator watches. */
+  private[graft] def runCdcPass(s: SparkSession, source: CdcSource,
       ckpt: String, state: String,
       trackSeq: Boolean = false,
       startAfterSeq: Option[Long] = None,
@@ -1478,55 +1558,7 @@ object StreamingOps {
       partialImageCol: Option[String] = None,
       heartbeats: Boolean = false,
       strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
-    partialImageCol.foreach { cc =>
-      require(source.schema.fieldNames.contains(cc),
-        s"partial-image column '$cc' absent from the envelope")
-      require(!keepHistory,
-        "partial-image completion folds each batch to full per-key " +
-          "images; keepHistory stores events verbatim — the two modes " +
-          "are mutually exclusive (complete upstream to retain history)")
-    }
-    strictBefore.foreach { case (pc, bc) =>
-      Seq(pc, bc).foreach(c => require(
-        source.schema.fieldNames.contains(c),
-        s"strict-before column '$c' absent from the envelope"))
-      require(!(Set("op", "seq", "ts") ++ keyCols).contains(pc),
-        s"strict-before checks payload, not bookkeeping: '$pc'")
-      require(partialImageCol.isEmpty,
-        "binlog_row_image=MINIMAL carries no before images — the " +
-          "strict before-image gate and partial-image completion are " +
-          "mutually exclusive by definition")
-      require(conflictDlq.isDefined,
-        "strictBefore without a conflictDlq would DISCARD conflicted " +
-          "events with no record anywhere — declare the dead-letter dir")
-      // a rowFilter INTENTIONALLY diverges destination state from the
-      // source, so a key whose prior update was filter-excluded would
-      // quarantine its later admitted updates as false conflicts —
-      // refuse the composition up front (the partialImageCol treatment)
-      require(rowFilter.isEmpty,
-        "strictBefore checks before images against destination state " +
-          "that a rowFilter has intentionally diverged from the " +
-          "source — filter upstream, or replicate the table strictly " +
-          "and unfiltered")
-    }
-    require(conflictDlq.isEmpty || strictBefore.isDefined,
-      "a conflict DLQ without a strict-before declaration is dead " +
-        "config — declare strictBefore or drop the DLQ dir")
-    require(keyCols.forall(source.schema.fieldNames.contains),
-      s"key column(s) absent from the envelope: " +
-        keyCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
-    // key columns are identity, not payload: masking one would collapse
-    // unrelated keys together; so they join the unmaskable set
-    val unmaskable = Set("op", "seq", "ts") ++ keyCols ++ txnCol.toSet ++
-      partialImageCol.toSet
-    require(!maskCols.exists(unmaskable),
-      s"mask names bookkeeping column(s): " +
-        maskCols.filter(unmaskable).mkString(", "))
-    require(maskCols.forall(source.schema.fieldNames.contains),
-      s"mask names column(s) absent from the envelope: " +
-        maskCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
+      conflictDlq: Option[String] = None): SyncProgress = {
     // DESTINATION COMPUTED COLUMNS (the ClickHouse MATERIALIZED column
     // analogue): each (name, sql) computes scan-local per event at
     // apply time — after masks, so a computed value can never leak a
@@ -1546,25 +1578,14 @@ object StreamingOps {
           probe.selectExpr(e).schema.head.dataType, nullable = true)
       }
     }
-    // DDL metadata settles BEFORE the stream starts: renames carry
-    // published history to the new name, then the type-change guardrail
-    // fires — the r8 open-envelope design absorbs ADD (union) and DROP
-    // (NULL forward), but a changed type must fail by name, not as a
-    // mid-pass analysis error after some batches already applied
-    val stateSchema = org.apache.spark.sql.types.StructType(
-      stateSchemaFor(source.schema, txnCol.toSet ++ partialImageCol.toSet
-        ++ strictBefore.map(_._2)).fields ++ computedFields)
-    ensureKeyCols(state, keyCols)
-    applyRenameDdl(state, renameCols, stateSchema)
-    // drops settle AFTER renames (a rename-then-drop pass drops the NEW
-    // name) and BEFORE the schema union — which re-adds exactly the
-    // columns the envelope still carries (the compressed-DDL window)
-    applyDropDdl(state, dropCols, stateSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq })
-    ensureStateSchema(state, stateSchema)
-    ensureHistoryMode(state, keepHistory)
-    applyTruncateDdl(state, truncateAtSeq)
-    applyDefaultDdl(state, defaultCols, stateSchema)
+    val one = Map(OneTable -> state)
+    val oneKey = Map(OneTable -> keyCols)
+    declareCdcPass(source, one, oneKey, topology = false, txnCol,
+      renameCols, truncateAtSeq.map(OneTable -> _).toMap, defaultCols,
+      rowFilter.map(OneTable -> _).toMap,
+      if (maskCols.isEmpty) Map.empty else Map(OneTable -> maskCols),
+      dropCols, keepHistory, partialImageCol, strictBefore, conflictDlq,
+      computedFields)
     val pos = new PassPosition
     var written = 0L
     // the last batch's uncommitted tail, observed on its carry write
@@ -1620,6 +1641,10 @@ object StreamingOps {
         def observeResolved(df: DataFrame): DataFrame =
           if (!trackSeq) df
           else { val (o, h) = observeHorizon(df); resolvedObs = Some(h); o }
+        // completion and the strict gate are the topology helpers' one-
+        // table case: the batch carries the one table's name as `table`,
+        // dropped again before anything else sees it
+        def tagged(df: DataFrame) = df.withColumn("table", lit(OneTable))
         // MINIMAL row images complete BEFORE filters/masks/computed
         // columns, so every later stage sees FULL rows — a row filter
         // or computed column referencing an unchanged column must see
@@ -1630,8 +1655,8 @@ object StreamingOps {
         val completed = partialImageCol match {
           case None => gatedTxn
           case Some(cc) =>
-            val c = completePartialImages(s, state, epochId, gatedTxn,
-              keyCols, cc).persist()
+            val c = completePartialImages(s, one, oneKey, epochId,
+              tagged(gatedTxn), cc).drop("table").persist()
             partialPinned = Some(c)
             c
         }
@@ -1645,9 +1670,9 @@ object StreamingOps {
         val checked = strictBefore match {
           case None => completed
           case Some((pc, bc)) =>
-            val (admitted, pin) = gateBeforeImages(s, state, epochId,
-              completed, keyCols, pc, bc, conflictDlq.get,
-              observe = observeResolved)
+            val (admitted, pin) = gateBeforeImages(s, one, oneKey, epochId,
+              tagged(completed), pc, bc, conflictDlq.get,
+              observe = observeResolved, untag = Seq("table"))
             strictPinned = Some(pin)
             admitted
         }
@@ -1745,7 +1770,7 @@ object StreamingOps {
     // re-run pass can only confirm progress, never regress it)
     if (trackSeq) writeLagMarks(state, pos.appliedTs, pos.seenTs)
     // a pass that ran no batch wrote no carry: read the standing tail
-    (rows, written, pos.applied,
+    SyncProgress(rows, written, pos.applied,
       pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
@@ -1862,44 +1887,8 @@ object StreamingOps {
     * [[runCdcPass]]'s: a re-delivered epoch re-reads the same snapshot
     * its crashed attempt read and recomputes the identical ready set.
     *
-    * Returns (per-table (rowsApplied, epochsWritten, maxSeq),
-    * pendingRows, sourceMaxSeq): under txn gating rowsApplied counts
-    * rows APPLIED to that table (an event consumed in epoch k but
-    * committed in epoch k+2 counts once, at apply time), and pendingRows
-    * is the TOPOLOGY-level uncommitted tail after the pass.
-    * sourceMaxSeq (under `trackSourceSeq`, the facade's flag) is the
-    * newest seq SEEN by the pass — ahead of the txn gate, so
-    * `sourceMaxSeq - maxSeq` reads as per-table replication lag while a
-    * transaction is pending; the binlog has one sequence, so the seen
-    * horizon is one topology-level number. */
-  private[graft] def runCdcPassMulti(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String,
-      stateDirs: Map[String, String],
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAt: Map[String, Long] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilters: Map[String, String] = Map.empty,
-      maskCols: Map[String, Seq[String]] = Map.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      trackSourceSeq: Boolean = false,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      routes: Map[String, String] = Map.empty,
-      partialImageCol: Option[String] = None,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Map[String, (Long, Long, Long)], Long, Option[Long]) =
-    runCdcPassMultiSource(s, FileCdcSource(schema, in), ckpt, stateDirs,
-      txnCol, renameCols, truncateAt, defaultCols, rowFilters, maskCols,
-      keyCols, trackSourceSeq, keyColsByTable, dropCols, keepHistory, routes,
-      partialImageCol, strictBefore, conflictDlq)
-
-  /** [[runCdcPassMulti]] over an arbitrary [[CdcSource]] transport.
     * `renameCols` declares RENAME COLUMN DDLs exactly as in
-    * [[runCdcPassSource]] — the shared envelope means one rename applies
+    * [[runCdcPass]] — the shared envelope means one rename applies
     * to EVERY table's state dir (one binlog, one DDL, one fan-out).
     * `truncateAt` (table → binlog position) declares per-table `TRUNCATE
     * TABLE` QueryEvents — unlike a rename, a truncate targets ONE table,
@@ -1934,15 +1923,25 @@ object StreamingOps {
     * fans out to tables whose PKs differ (a header table keyed by
     * order id next to a lines table keyed by (order id, line no)).
     * The fan-out still collapses in ONE job: each row's key tuple is
-    * encoded through a per-table CASE into one canonical string column
-    * (`to_json` of that table's key struct — a scan-local, codegen'd
-    * projection), the collapse groups on (table, encoded key), and the
-    * winning row's full envelope rides the max_by struct so the staged
-    * output carries every real column. Homogeneous topologies skip the
-    * encoding entirely. Each state dir publishes ITS OWN `_keycols`,
-    * so read-time collapse, compaction, and repair are per-table-key
-    * aware with no further plumbing. */
-  private[graft] def runCdcPassMultiSource(s: SparkSession, source: CdcSource,
+    * encoded into one null-padded struct ([[tableKeyStruct]] — a
+    * scan-local, codegen'd projection), the collapse groups on (table,
+    * encoded key), and the winning row's full envelope rides the max_by
+    * struct so the staged output carries every real column. Homogeneous
+    * topologies skip the encoding entirely. Each state dir publishes
+    * ITS OWN `_keycols`, so read-time collapse, compaction, and repair
+    * are per-table-key aware with no further plumbing.
+    *
+    * Returns one [[SyncProgress]] per table in `stateDirs` (tables that
+    * saw no rows report zeros): under txn gating rowsApplied counts rows
+    * APPLIED to that table (an event consumed in epoch k but committed
+    * in epoch k+2 counts once, at apply time), and pendingRows is the
+    * TOPOLOGY-level uncommitted tail after the pass, the same on every
+    * table. sourceMaxSeq (under `trackSourceSeq`, the facade's flag) is
+    * the newest seq SEEN by the pass — ahead of the txn gate, so each
+    * table's lag reads as its replication lag while a transaction is
+    * pending; the binlog has one sequence, so the seen horizon is one
+    * topology-level number. */
+  private[graft] def runCdcPassMulti(s: SparkSession, source: CdcSource,
       ckpt: String, stateDirs: Map[String, String],
       txnCol: Option[String] = None,
       renameCols: Map[String, String] = Map.empty,
@@ -1958,39 +1957,7 @@ object StreamingOps {
       routes: Map[String, String] = Map.empty,
       partialImageCol: Option[String] = None,
       strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Map[String, (Long, Long, Long)], Long, Option[Long]) = {
-    partialImageCol.foreach { cc =>
-      require(source.schema.fieldNames.contains(cc),
-        s"partial-image column '$cc' absent from the envelope")
-      require(!keepHistory,
-        "partial-image completion folds each batch to full per-key " +
-          "images; keepHistory stores events verbatim — the two modes " +
-          "are mutually exclusive (complete upstream to retain history)")
-    }
-    strictBefore.foreach { case (pc, bc) =>
-      Seq(pc, bc).foreach(c => require(
-        source.schema.fieldNames.contains(c),
-        s"strict-before column '$c' absent from the envelope"))
-      require(partialImageCol.isEmpty,
-        "binlog_row_image=MINIMAL carries no before images — the " +
-          "strict before-image gate and partial-image completion are " +
-          "mutually exclusive by definition")
-      require(conflictDlq.isDefined,
-        "strictBefore without a conflictDlq would DISCARD conflicted " +
-          "events with no record anywhere — declare the dead-letter dir")
-      // same mutual exclusion as the single-table pass: a filtered
-      // table's destination state has intentionally diverged, so its
-      // before-image checks would quarantine false conflicts
-      require(rowFilters.isEmpty,
-        "strictBefore checks before images against destination state " +
-          "that row filters have intentionally diverged from the " +
-          "source — filter upstream, or replicate strictly and " +
-          "unfiltered")
-    }
-    require(conflictDlq.isEmpty || strictBefore.isDefined,
-      "a conflict DLQ without a strict-before declaration is dead " +
-        "config — declare strictBefore or drop the DLQ dir")
+      conflictDlq: Option[String] = None): Map[String, SyncProgress] = {
     // TABLE ROUTING (the rename/shard-merge config of this tool class):
     // `routes` maps SOURCE table names in the envelope onto DESTINATION
     // table names — N sources routing to one destination merge shards
@@ -2014,56 +1981,12 @@ object StreamingOps {
         s"${(keyColsByTable.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
     val keyFor: Map[String, Seq[String]] =
       stateDirs.keys.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
-    val allKeyCols = keyFor.values.flatten.toSet
-    require(allKeyCols.forall(source.schema.fieldNames.contains),
-      s"key column(s) absent from the envelope: " +
-        allKeyCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
-    require(truncateAt.keySet.subsetOf(stateDirs.keySet),
-      s"truncate declared for unreplicated table(s): " +
-        s"${(truncateAt.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    require(rowFilters.keySet.subsetOf(stateDirs.keySet),
-      s"row filter declared for unreplicated table(s): " +
-        s"${(rowFilters.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    require(maskCols.keySet.subsetOf(stateDirs.keySet),
-      s"column mask declared for unreplicated table(s): " +
-        s"${(maskCols.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    maskCols.foreach { case (t, cs) =>
-      // identity, not payload: a table's OWN key columns are unmaskable
-      // (another table's key is ordinary payload here)
-      val unmaskable = Set("op", "seq", "ts") ++ keyFor(t) ++
-        txnCol.toSet ++ partialImageCol.toSet + "table"
-      val bad = cs.filter(unmaskable)
-      require(bad.isEmpty,
-        s"table '$t' masks bookkeeping column(s): ${bad.mkString(", ")}")
-      val absent = cs.filterNot(source.schema.fieldNames.contains)
-      require(absent.isEmpty,
-        s"table '$t' masks column(s) absent from the envelope: " +
-          absent.mkString(", "))
-    }
-    strictBefore.foreach { case (pc, _) =>
-      // a key column is degenerate to check (a PK rides every row image
-      // unchanged) and one table's key is another's payload — refuse the
-      // ambiguity topology-wide
-      require(!(Set("op", "seq", "ts", "table") ++ allKeyCols).contains(pc),
-        s"strict-before checks payload, not bookkeeping or key " +
-          s"columns: '$pc'")
-    }
     // every table's state dir shares one envelope schema (one binlog,
-    // one fan-out) — validate/publish each before the stream starts
-    val stateSchema = stateSchemaFor(source.schema,
-      txnCol.toSet ++ partialImageCol.toSet ++ strictBefore.map(_._2))
-    stateDirs.foreach { case (t, d) => ensureKeyCols(d, keyFor(t)) }
-    stateDirs.values.foreach(applyRenameDdl(_, renameCols, stateSchema))
-    // a DROP, like a RENAME, is an envelope-wide DDL: the topology
-    // shares one binlog envelope, so the column dies in every table
-    stateDirs.values.foreach(applyDropDdl(_, dropCols, stateSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq }))
-    stateDirs.values.foreach(ensureStateSchema(_, stateSchema))
-    stateDirs.values.foreach(ensureHistoryMode(_, keepHistory))
-    truncateAt.foreach { case (t, sq) =>
-      applyTruncateDdl(stateDirs(t), Some(sq)) }
-    stateDirs.values.foreach(applyDefaultDdl(_, defaultCols, stateSchema))
-    val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    // one fan-out) — validated/published for each before the stream
+    declareCdcPass(source, stateDirs, keyFor, topology = true, txnCol,
+      renameCols, truncateAt, defaultCols, rowFilters, maskCols, dropCols,
+      keepHistory, partialImageCol, strictBefore, conflictDlq)
+    val acc = scala.collection.mutable.Map.empty[String, SyncProgress]
     val pos = new PassPosition
     // the last batch's topology-level uncommitted tail (carry write)
     var pending = Option.empty[Long]
@@ -2116,7 +2039,7 @@ object StreamingOps {
         val gatedC = partialImageCol match {
           case None => gated
           case Some(cc) =>
-            val c = completePartialImagesMulti(s, stateDirs,
+            val c = completePartialImages(s, stateDirs,
               keyFor, epochId, gated, cc).persist()
             partialPinned = Some(c)
             c
@@ -2126,7 +2049,7 @@ object StreamingOps {
         val checked = strictBefore match {
           case None => gatedC
           case Some((pc, bc)) =>
-            val (adm, pin) = gateBeforeImagesMulti(s, stateDirs, keyFor,
+            val (adm, pin) = gateBeforeImages(s, stateDirs, keyFor,
               epochId, gatedC, pc, bc, conflictDlq.get)
             strictPinned = Some(pin)
             adm
@@ -2189,16 +2112,9 @@ object StreamingOps {
               .select(col("table") +: fields.map(f => col("l." + f).as(f)): _*)
           }
           // same physical bucket column as the single-table pass — each
-          // row bucketed under ITS table's key definition (scan-local
-          // CASE, one pass); no per-trigger sort (see [[bucketed]])
-          val bucketCase = keyFor.foldLeft(
-              lit(null).cast(org.apache.spark.sql.types.LongType)) {
-            case (acc, (t, ks)) =>
-              when(col("table") === t,
-                pmod(xxhash64(ks.map(col): _*), lit(StateBuckets)))
-                .otherwise(acc)
-          }
-          collapsed.withColumn(BucketCol, bucketCase)
+          // row bucketed under ITS table's key definition; no per-trigger
+          // sort (see [[bucketed]])
+          collapsed.withColumn(BucketCol, tableBucket(keyFor))
             .write.mode("overwrite").partitionBy("table").parquet(epochStage)
           present.foreach { r =>
             val t = r.getString(0)
@@ -2210,9 +2126,9 @@ object StreamingOps {
               org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .escapePathName(t)
             StateFs.moveDir(src, dest)
-            val (rows, epochs, mx) = acc.getOrElse(t, (0L, 0L, Long.MinValue))
-            acc(t) = (rows + r.getLong(1), epochs + 1L,
-              math.max(mx, r.getLong(2)))
+            val p = acc.getOrElse(t, SyncProgress(0L, 0L, None))
+            acc(t) = SyncProgress(p.rowsApplied + r.getLong(1), p.epochs + 1L,
+              Some((p.lastSeq.toSeq :+ r.getLong(2)).max))
           }
           // the moves emptied the epoch's stage of everything but
           // write-job metadata (_SUCCESS); drop it
@@ -2225,7 +2141,11 @@ object StreamingOps {
         batch.unpersist(); ()
       }
     }
-    (acc.toMap, pending.getOrElse(pendingCount(s, ckpt, txnCol)), pos.seen)
+    val pendingRows = pending.getOrElse(pendingCount(s, ckpt, txnCol))
+    stateDirs.map { case (t, _) =>
+      t -> acc.getOrElse(t, SyncProgress(0L, 0L, None))
+        .copy(pendingRows = pendingRows, sourceMaxSeq = pos.seen)
+    }
   }
 
   /** Compact all existing `epoch=` delta dirs into ONE baseline epoch
@@ -2264,8 +2184,9 @@ object StreamingOps {
     * untouched. Crash order is safe at every step: the floor is written
     * after the baseline publishes and before old epochs are deleted —
     * between those instants the original tombstone rows still win their
-    * keys by seq, so nothing resurrects even without the floor. */
-  /** `pendingRoot` points the purge-floor computation at the dir whose
+    * keys by seq, so nothing resurrects even without the floor.
+    *
+    * `pendingRoot` points the purge-floor computation at the dir whose
     * `_pending` subdir holds this state's uncommitted txn tail — the
     * state dir itself for single-table passes (the default), the shared
     * CHECKPOINT dir for multi-table topologies (one topology-level tail
@@ -2508,157 +2429,66 @@ object StreamingOps {
   private def writePurgeFloor(state: String, v: Long): Unit =
     StateFs.writeAtomic(s"$state/_purge_floor", v.toString)
 
-  /** Row-level REPAIR of a diverged state dir (the reference's
+  /** Row-level REPAIR of diverged state dirs (the reference's
     * consistency-fix flow, §3.1 #3's completion — the alternative is a
-    * full re-snapshot): diff the source-of-truth table against the
-    * served state with ONE null-safe full-outer join, and write every
-    * divergence as ONE correction epoch — op="I" for keys the state
-    * lost, op="U" for keys whose served values drifted, op="D"
-    * tombstones for keys the source no longer has. The correction rows
-    * all carry seq = (newest applied seq) + 1 — strictly above every
-    * per-key maximum, so each wins its key's collapse; equal seqs
-    * across DIFFERENT keys are fine (collapse is per key), which is
-    * what makes the repair fully distributed with no global row
-    * numbering. "Newest applied seq" also counts the txn-gated PENDING
-    * tail (`pendingRoot`, defaulting to the state dir): a correction at
-    * applied-max + 1 could otherwise TIE with a still-pending event
-    * when its commit later arrives, and max_by would pick the winner
-    * arbitrarily. The epoch id is a fresh unique NEGATIVE (the
-    * compaction-baseline scheme): it can never collide with a resumed
-    * stream's non-negative batch ids, and the purge-floor gate exempts
-    * it (a repair must apply even below a published floor — its seq is
-    * above the floor anyway). `src` must carry the key and EXACTLY the
-    * served value columns; a column the source gained that the state
-    * never saw fails as loudly as a column the source lost — silently
-    * ignoring it would leave the documented check→repair loop
-    * inconsistent forever with a zero-row report.
+    * full re-snapshot), for one table or a whole [[runCdcPassMulti]]
+    * topology in a single call: per-table truth frames union in with a
+    * routing column, the served states union the same way, ONE
+    * null-safe full-outer diff over the (table, key) space emits every
+    * divergence — op="I" for keys a state lost, op="U" for keys whose
+    * served values drifted, op="D" tombstones for keys the source no
+    * longer has — and ONE partitioned write fans the corrections back
+    * out, each table receiving its own correction epoch via a metadata
+    * rename (the multi pass's staging mechanic). Tables may carry
+    * DIFFERENT primary keys (`keyColsByTable`, the runCdcPassMulti
+    * declaration): the diff joins on the per-table-encoded key
+    * ([[tableKeyStruct]]), so a header table keyed by order id heals in
+    * the same pass as a lines table keyed by (order id, line no).
     *
-    * Returns (inserted, updated, deleted). */
-  private[graft] def repairState(s: SparkSession, src: DataFrame,
-      state: String, keyCols: Seq[String] = Seq("okey"),
-      pendingRoot: Option[String] = None,
-      restrict: Option[Column] = None,
-      restrictBuckets: Option[Seq[Long]] = None): (Long, Long, Long) = {
-    // the key is the STATE DIR's property ([[readKeyCols]]); a repair
-    // declaring a different one would diff apples against oranges
-    val published = readKeyCols(state)
-    require(keyCols == published,
-      s"state dir is keyed by (${published.mkString(", ")}) but the repair " +
-        s"declares (${keyCols.mkString(", ")})")
-    // a chunk-restricted repair additionally pushes the dirty chunks'
-    // BUCKET set into the state scan (chunk ids are bucket ids when the
-    // chunk count divides StateBuckets — Replication derives the
-    // mapping): the served-side diff input then prunes files/row groups
-    // instead of collapsing the whole table. `restrict` still does the
-    // exact per-key gating; the buckets are pure IO pruning.
-    val dst = readLatestState(s, state, buckets = restrictBuckets)
-    val valueCols = dst.columns.toSeq.filterNot((keyCols :+ "op").contains)
-    val missingCols = valueCols.filterNot(src.columns.contains)
-    require(missingCols.isEmpty,
-      s"repair source lacks served column(s): ${missingCols.mkString(", ")} — " +
-        "a repair cannot invent values; re-snapshot instead")
-    val gainedCols = src.columns.toSeq.filterNot((keyCols ++ valueCols).contains)
-    require(gainedCols.isEmpty,
-      s"repair source carries column(s) the destination never saw: " +
-        s"${gainedCols.mkString(", ")} — a row-level repair cannot retrofit " +
-        "schema; replicate the DDL (or re-snapshot) first")
-    val raw = readStateDir(s, state)
-    val m = raw.agg(max(col("seq"))).collect()(0)
-    val appliedMax = if (m.isNullAt(0)) 0L else m.getLong(0)
-    val pendingMax = latestPendingBelow(pendingRoot.getOrElse(state),
-        Long.MaxValue)
-      .flatMap { p =>
-        val r = s.read.parquet(p).agg(max(col("seq"))).collect()(0)
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }.getOrElse(0L)
-    val repairSeq = math.max(appliedMax, pendingMax) + 1L
-    val epoch = math.min(-1L, StateFs.epochIds(state).minOption.getOrElse(0L) - 1L)
-    // chunk-restricted repair (the pt-table-checksum fix flow): the
-    // SAME key-derived predicate gates both sides before the diff, so
-    // the expensive full-outer join runs over the dirty chunks only —
-    // keys outside them can never enter, let alone be "repaired"
-    val sv = restrict.foldLeft(
-      src.select((keyCols ++ valueCols).map(col): _*))(_.filter(_))
-    val dv = restrict.foldLeft(
-      dst.select((keyCols ++ valueCols).map(col): _*))(_.filter(_))
-    // the diff's full-outer join REQUIRES unique source keys (a duplicate
-    // would fan out its key's row and let max_by pick an arbitrary
-    // winner) — asserted on the RESTRICTED source, so a chunked repair's
-    // guard scans only the dirty chunks it will diff
-    val uniq = sv.agg(count(lit(1)),
-      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)).collect()(0)
-    require(uniq.getLong(0) == uniq.getLong(1),
-      s"repair source holds ${uniq.getLong(0)} rows over ${uniq.getLong(1)} " +
-        s"distinct (${keyCols.mkString(", ")}) values — the source of truth " +
-        "must be one row per key")
-    val joined = sv.withColumn("__s", lit(true)).as("s")
-      .join(dv.withColumn("__d", lit(true)).as("d"),
-        keyCols.map(k => col(s"s.$k") <=> col(s"d.$k")).reduce(_ && _),
-        "full_outer")
-    val sStruct = struct(valueCols.map(c => col(s"s.$c")): _*)
-    val dStruct = struct(valueCols.map(c => col(s"d.$c")): _*)
-    val diff = joined.withColumn("op",
-        when(col("d.__d").isNull, "I")
-          .when(col("s.__s").isNull, "D")
-          .when(!(sStruct <=> dStruct), "U"))
-      .filter(col("op").isNotNull)
-      .select((col("op") +:
-        keyCols.map(k => coalesce(col(s"s.$k"), col(s"d.$k")).as(k)) :+
-        lit(repairSeq).as("seq")) ++
-        valueCols.map(c => when(col("op") =!= "D", col(s"s.$c")).as(c)): _*)
-      // pinned BEFORE the epoch write — the diff may derive from this
-      // very state dir (src built off appliedState is legal); the counts
-      // action materializes it, so the write never re-reads a state the
-      // repair itself is mutating
-      .persist()
-    try {
-      val counts = diff.groupBy(col("op")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.nonEmpty)
-        bucketed(envelope(diff), keyCols).write.mode("overwrite")
-          .parquet(s"$state/epoch=$epoch")
-      (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
-        counts.getOrElse("D", 0L))
-    } finally { diff.unpersist(); () }
-  }
-
-  /** Topology-level REPAIR — the multi-table completion of
-    * [[repairState]] at [[runCdcPassMulti]]'s scale: ONE null-safe
-    * full-outer diff over the (table, key) space heals N diverged
-    * per-table state dirs in a single call. Per-table truth frames
-    * union in with a routing column, the served states union the same
-    * way, the single diff job emits every divergence, and ONE
-    * partitioned write fans the corrections back out — each table
-    * receives its own correction epoch (unique negative id) via a
-    * metadata rename, exactly the multi-pass staging mechanic. The
-    * txn-gated pending tail is consulted ONCE for the whole topology
-    * (`pendingRoot` = the sync's ckpt dir — where runCdcPassMulti
-    * roots `_pending`), never once per table, and the correction seq
-    * is a single topology-wide number (the binlog has one sequence):
-    * max(applied seq over ALL tables, pending seq) + 1. All state dirs
-    * must share one served envelope — the runCdcPassMulti invariant
-    * (one binlog, one fan-out) — and each table's source must be one
-    * row per key, both asserted loudly. Tables may carry DIFFERENT
-    * primary keys (`keyColsByTable`, the runCdcPassMulti declaration):
-    * the diff joins on a per-table-encoded key tuple, so a header table
-    * keyed by order id heals in the same single pass as a lines table
-    * keyed by (order id, line no).
+    * The correction rows all carry seq = (newest applied seq over ALL
+    * tables — the binlog has one sequence) + 1: strictly above every
+    * per-key maximum, so each wins its key's collapse; equal seqs across
+    * DIFFERENT keys are fine (collapse is per key), which is what makes
+    * the repair fully distributed with no global row numbering. "Newest
+    * applied seq" also counts the txn-gated PENDING tail under
+    * `pendingRoot` (a single table's own dir, a topology's ckpt dir),
+    * consulted ONCE: a correction at applied-max + 1 could otherwise TIE
+    * with a still-pending event when its commit later arrives, and
+    * max_by would pick the winner arbitrarily. Each epoch id is a fresh
+    * unique NEGATIVE (the compaction-baseline scheme): it can never
+    * collide with a resumed stream's non-negative batch ids, and the
+    * purge-floor gate exempts it (a repair must apply even below a
+    * published floor — its seq is above the floor anyway).
     *
-    * Returns per-table (inserted, updated, deleted); zero-divergence
-    * tables report (0, 0, 0) and receive no epoch. */
-  private[graft] def repairStateMulti(s: SparkSession,
+    * All state dirs must share one served envelope (one binlog, one
+    * fan-out), and each table's `src` must carry its key and EXACTLY the
+    * served value columns, one row per key — all asserted loudly: a
+    * column the source gained that the state never saw fails as loudly
+    * as a column the source lost (silently ignoring it would leave the
+    * documented check→repair loop inconsistent forever with a zero-row
+    * report). `restrict` (a key-derived predicate, the chunked repair's
+    * dirty chunks) gates BOTH diff sides before the join, so the
+    * expensive full-outer diff runs over the dirty chunks only and keys
+    * outside them can never enter; `restrictBuckets` additionally pushes
+    * the matching bucket set into the state scans (pure IO pruning).
+    *
+    * Returns one [[RepairReport]] per table; zero-divergence tables
+    * report zeros and receive no epoch. */
+  private[graft] def repairState(s: SparkSession,
       srcByTable: Map[String, DataFrame], stateDirs: Map[String, String],
       keyCols: Seq[String] = Seq("okey"), pendingRoot: Option[String] = None,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty)
-      : Map[String, (Long, Long, Long)] = {
+      keyColsByTable: Map[String, Seq[String]] = Map.empty,
+      restrict: Option[Column] = None,
+      restrictBuckets: Option[Seq[Long]] = None)
+      : Map[String, RepairReport] = {
     require(srcByTable.keySet == stateDirs.keySet,
       s"repair sources ${srcByTable.keySet.toSeq.sorted.mkString(",")} != " +
         s"topology tables ${stateDirs.keySet.toSeq.sorted.mkString(",")} — " +
         "a topology repair heals every table or none")
     require(stateDirs.nonEmpty, "empty topology")
     val tables = stateDirs.keys.toSeq.sorted
-    // per-table PRIMARY KEYS (the runCdcPassMulti declaration shape):
-    // each table's declared key must match its state dir's published one
+    // the key is each STATE DIR's property ([[readKeyCols]]); a repair
+    // declaring a different one would diff apples against oranges
     val keyFor: Map[String, Seq[String]] =
       tables.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
     tables.foreach { t =>
@@ -2667,7 +2497,8 @@ object StreamingOps {
         s"state dir for '$t' is keyed by (${published.mkString(", ")}) but " +
           s"the repair declares (${keyFor(t).mkString(", ")})")
     }
-    val dsts = tables.map(t => t -> readLatestState(s, stateDirs(t))).toMap
+    val dsts = tables.map(t =>
+      t -> readLatestState(s, stateDirs(t), buckets = restrictBuckets)).toMap
     // ONE topology envelope: every table serves the same column SET
     // (which of them are key differs per table); fixed order from the
     // first table for every union/struct below
@@ -2688,25 +2519,27 @@ object StreamingOps {
         s"repair source for '$t' carries column(s) the destination never " +
           s"saw: ${gained.mkString(", ")} — replicate the DDL first")
     }
-    // each row's key tuple encoded under ITS table's key definition
-    // (scan-local to_json projection — the runCdcPassMulti heterogeneous
-    // collapse's mechanic), so one join key spans per-table key shapes;
-    // null key fields encode distinctly, preserving null-safe matching
-    def keyed(df: DataFrame, t: String): DataFrame =
-      df.select(allCols.map(col): _*)
-        .withColumn("__tbl", lit(t))
-        .withColumn("__key", to_json(struct(keyFor(t).map(col): _*)))
-    val srcAll = tables.map(t => keyed(srcByTable(t), t))
-      .reduce(_.unionByName(_))
-    // per-table key uniqueness in ONE aggregate over the unioned source
-    srcAll.groupBy(col("__tbl"))
+    // each side tagged with its table and its key tuple encoded under
+    // ITS table's definition, so one join key spans per-table key shapes
+    def keyed(side: Map[String, DataFrame]): DataFrame = {
+      val all = tables.map(t =>
+        restrict.foldLeft(side(t).select(allCols.map(col): _*))(_.filter(_))
+          .withColumn("table", lit(t))).reduce(_.unionByName(_))
+      all.withColumn("__key", tableKeyStruct(keyFor, all.schema))
+    }
+    val srcAll = keyed(srcByTable)
+    // per-table key uniqueness in ONE aggregate over the (restricted)
+    // unioned source — the diff's full-outer join REQUIRES unique source
+    // keys (a duplicate would fan out its key's row and let max_by pick
+    // an arbitrary winner)
+    srcAll.groupBy(col("table"))
       .agg(count(lit(1)).as("n"), count_distinct(col("__key")).as("nd"))
       .collect().foreach(r => require(r.getLong(1) == r.getLong(2),
         s"repair source for '${r.getString(0)}' holds ${r.getLong(1)} rows " +
           s"over ${r.getLong(2)} distinct key tuples — one row per key"))
-    val dstAll = tables.map(t => keyed(dsts(t), t)).reduce(_.unionByName(_))
+    val dstAll = keyed(dsts)
     // topology seq ceiling: the union of every table's raw seq column in
-    // one 1-row aggregate, plus the SINGLE topology pending tail
+    // one 1-row aggregate, plus the SINGLE pending tail
     val am = tables.map(t => readStateDir(s, stateDirs(t)).select(col("seq")))
       .reduce(_.union(_)).agg(max(col("seq"))).collect()(0)
     val appliedMax = if (am.isNullAt(0)) 0L else am.getLong(0)
@@ -2719,36 +2552,36 @@ object StreamingOps {
     val repairSeq = math.max(appliedMax, pendingMax) + 1L
     val joined = srcAll.withColumn("__s", lit(true)).as("s")
       .join(dstAll.withColumn("__d", lit(true)).as("d"),
-        col("s.__tbl") === col("d.__tbl") && col("s.__key") === col("d.__key"),
+        col("s.table") === col("d.table") && col("s.__key") === col("d.__key"),
         "full_outer")
     // key columns are equal on every matched row (the join key encodes
     // them), so a full-envelope struct compare detects exactly value
     // drift — no per-table value-column split needed
     val sStruct = struct(allCols.map(c => col(s"s.$c")): _*)
     val dStruct = struct(allCols.map(c => col(s"d.$c")): _*)
-    // which tables treat column c as KEY (for the correction select: a
-    // tombstone must carry ITS table's key columns from the d side)
-    val keyTablesOf: Map[String, Seq[String]] =
-      allCols.map(c => c -> tables.filter(t => keyFor(t).contains(c))).toMap
-    val rowTbl = coalesce(col("s.__tbl"), col("d.__tbl"))
+    val rowTbl = coalesce(col("s.table"), col("d.table"))
     val diff = joined.withColumn("op",
         when(col("d.__d").isNull, "I")
           .when(col("s.__s").isNull, "D")
           .when(!(sStruct <=> dStruct), "U"))
       .filter(col("op").isNotNull)
-      .select((Seq(col("op"), rowTbl.as("__tbl"), lit(repairSeq).as("seq")) ++
+      .select((Seq(col("op"), rowTbl.as("table"), lit(repairSeq).as("seq")) ++
         allCols.map { c =>
-          val kt = keyTablesOf(c)
+          // a tombstone carries ITS table's key columns from the d side
+          val kt = tables.filter(t => keyFor(t).contains(c))
           val isKeyHere =
-            if (kt.isEmpty) lit(false) else rowTbl.isin(kt: _*)
+            if (kt.size == tables.size) lit(true)
+            else if (kt.isEmpty) lit(false) else rowTbl.isin(kt: _*)
           when(isKeyHere, coalesce(col(s"s.$c"), col(s"d.$c")))
             .otherwise(when(col("op") =!= "D", col(s"s.$c"))).as(c)
         }): _*)
-      // pinned for the same reason as repairState: the diff derives from
-      // the very state dirs the corrections will mutate
+      // pinned BEFORE the epoch write — the diff may derive from these
+      // very state dirs (src built off appliedState is legal); the counts
+      // action materializes it, so the write never re-reads a state the
+      // repair itself is mutating
       .persist()
     try {
-      val counts = diff.groupBy(col("__tbl"), col("op")).count().collect()
+      val counts = diff.groupBy(col("table"), col("op")).count().collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val touched = counts.keySet.map(_._1)
       if (touched.nonEmpty) {
@@ -2758,19 +2591,21 @@ object StreamingOps {
         // production, so the rename never degrades to a copy)
         val stage = s"${stateDirs(tables.head)}/_repairing"
         try {
-          diff.write.mode("overwrite").partitionBy("__tbl").parquet(stage)
+          diff.select((envelopeCols ++ extraCols(diff) :+ "table").map(col): _*)
+            .withColumn(BucketCol, tableBucket(keyFor))
+            .write.mode("overwrite").partitionBy("table").parquet(stage)
           touched.foreach { t =>
             val epoch = math.min(-1L,
               StateFs.epochIds(stateDirs(t)).minOption.getOrElse(0L) - 1L)
-            val src = s"$stage/__tbl=" +
+            val src = s"$stage/table=" +
               org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .escapePathName(t)
             StateFs.moveDir(src, s"${stateDirs(t)}/epoch=$epoch")
           }
         } finally StateFs.deleteRecursive(stage)
       }
-      tables.map(t => t -> ((counts.getOrElse((t, "I"), 0L),
-        counts.getOrElse((t, "U"), 0L), counts.getOrElse((t, "D"), 0L)))).toMap
+      tables.map(t => t -> RepairReport(counts.getOrElse((t, "I"), 0L),
+        counts.getOrElse((t, "U"), 0L), counts.getOrElse((t, "D"), 0L))).toMap
     } finally { diff.unpersist(); () }
   }
 
@@ -2817,46 +2652,6 @@ object StreamingOps {
         min(col("mn")).as("mn"), max(col("mx")).as("mx"))
       .orderBy(col("event_type"), col("user_bucket"))
 
-  // ───────────────────────────────────────────────────────────────────
-  // INCREMENTAL MATERIALIZED VIEWS over the CDC stream (ST30/ST31) —
-  // the reference tool class's headline downstream shape: MySQL table →
-  // replicated state → aggregate MV kept in sync (ClickHouse's
-  // AggregatingMergeTree-fed-by-MV topology), except the source is a
-  // FULL CDC stream (updates + deletes), so the MV needs true
-  // incremental view maintenance, not insert-only accumulation (ST10).
-  // Two regimes, the two that exist in the IVM literature:
-  //   - runMvSumPass: RETRACTABLE aggregates (count/sum) maintained by
-  //     per-batch deltas — each touched key contributes f(new image) −
-  //     f(old image); work is O(batch) + one bounded old-image lookup,
-  //     NEVER a recompute;
-  //   - runMvMinMaxPass: NON-RETRACTABLE aggregates (min/max) — deleting
-  //     a group's current min cannot be undone from the aggregate alone,
-  //     so dirty GROUPS (the groups the batch's old or new images touch)
-  //     are recomputed from a group-partitioned snapshot while untouched
-  //     groups carry forward; work is O(batch) + O(Σ dirty-group size).
-  // ───────────────────────────────────────────────────────────────────
-
-  /** Complete a `binlog_row_image=MINIMAL` batch into FULL row images
-    * at apply time — the write-side completion that keeps every
-    * downstream path (collapse, compaction, MVs, repair, changelog
-    * export) oblivious to partial images. `changedCol` names an
-    * `array<string>` column listing the payload columns an UPDATE
-    * actually carried (MySQL's columns-present bitmap); INSERTs are
-    * full images by definition (their list is ignored), DELETEs are
-    * tombstones. Per batch, ONE shuffle: prior images of touched keys
-    * (bucket-pruned, key semi-joined — the [[mvImages]] read, DDL
-    * record honored) union the batch under a source tag, and a single
-    * groupBy computes per key the batch winner's bookkeeping, each
-    * payload column's latest in-batch DETERMINER (insert, delete, or a
-    * change-flagged update — an explicit SET c = NULL is a change TO
-    * NULL, never "unchanged", and a change landing before a mid-batch
-    * delete dies with it), and the pre-batch image. The full
-    * image then reads: changed-in-batch value, else prior value, else
-    * NULL (first-seen key — the open-envelope convention). A prior
-    * TOMBSTONE contributes nothing: a key re-touched after its delete
-    * starts from NULLs, exactly like a fresh key. CdcPropertySpec folds
-    * random partial logs over random wave splits against a sequential
-    * per-column reference. */
   /** STRICT BEFORE-IMAGE apply gate (binlog_row_image=FULL carries each
     * update's before image; MySQL's strict slave-exec discipline checks
     * it): an UPDATE whose declared before image does not match what the
@@ -2871,37 +2666,45 @@ object StreamingOps {
     * (deletes bypass the check cross-batch, like the row-filter rule:
     * a tombstone is idempotent repair, never corruption). Expected
     * values: the key's first batch event checks against the PRIOR STATE
-    * image (bucket-pruned, key semi-joined — one metadata-bounded read,
-    * the completePartialImages shape); later events check against their
-    * in-batch predecessor's after image (a predecessor delete resets it
-    * to NULL). One extra shuffle per batch (the per-key window), same
-    * cost shape as partial-image completion. Returns (admitted events
-    * minus the before column, the pinned frame the caller unpersists —
-    * the DLQ write and the admitted read share one computation). */
-  private def gateBeforeImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame, keyCols: Seq[String],
-      checkCol: String, beforeCol: String, dlqDir: String,
-      observe: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+    * image of ITS table ([[readPriorImages]]); later events check
+    * against their in-batch predecessor's after image (a predecessor
+    * delete resets it to NULL). Rows chain per (table,
+    * per-table-encoded key), so one window pass verdicts a whole
+    * topology (heterogeneous PKs included) — never a job per table; one
+    * extra shuffle per batch, the cost shape of partial-image
+    * completion. The DLQ carries the `table` column, so one dead-letter
+    * dir serves a topology; `untag` names caller-added columns dropped
+    * from both outputs (the single-table pass's [[OneTable]] tag).
+    * `observe` wraps the verdicted frame (see [[verdictBeforeImages]]).
+    * Returns (admitted events minus the before column, the pinned frame
+    * the caller unpersists — the DLQ write and the admitted read share
+    * one computation). */
+  private def gateBeforeImages(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame, checkCol: String, beforeCol: String,
+      dlqDir: String, observe: DataFrame => DataFrame = identity,
+      untag: Seq[String] = Seq.empty): (DataFrame, DataFrame) = {
     val t = batch.schema(checkCol).dataType
-    val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
-    val withPrior =
-      if (priorEpochs.isEmpty)
-        batch.withColumn("_cur_op", lit(null).cast("string"))
+    val b0 = batch.filter(col("table").isin(stateDirs.keys.toSeq: _*))
+    def keyed(df: DataFrame) =
+      df.withColumn("_k", tableKeyStruct(keyFor, batch.schema))
+    val withPrior = readPriorImages(s, stateDirs, keyFor, epochId, b0) match {
+      case None =>
+        keyed(b0).withColumn("_cur_op", lit(null).cast("string"))
           .withColumn("_cur", lit(null).cast(t))
-      else {
-        val prior = readLatestPriorImages(s, state, epochId, batch, keyCols)
-          .groupBy(keyCols.map(col): _*)
+      case Some(pall) =>
+        val prior = keyed(pall).groupBy(col("table"), col("_k"))
           .agg(max_by(struct(col("op"), col(checkCol)), col("seq")).as("_p"))
-          .select(keyCols.map(col) :+ col("_p.op").as("_cur_op")
-            :+ col(s"_p.$checkCol").as("_cur"): _*)
-        batch.join(prior, keyCols, "left")
-      }
-    verdictBeforeImages(withPrior, keyCols.map(col), t, checkCol,
-      beforeCol, dlqDir, epochId, extraDrop = Seq.empty, observe)
+          .select(col("table"), col("_k"), col("_p.op").as("_cur_op"),
+            col(s"_p.$checkCol").as("_cur"))
+        keyed(b0).join(prior, Seq("table", "_k"), "left")
+    }
+    verdictBeforeImages(withPrior, Seq(col("table"), col("_k")), t,
+      checkCol, beforeCol, dlqDir, epochId, extraDrop = "_k" +: untag,
+      observe)
   }
 
-  /** The one verdict core both gates share (single-table and fan-out
-    * differ only in the chain's PARTITION KEY and the prior lookup):
+  /** The verdict core of [[gateBeforeImages]], partitioned by `pk`:
     * chain expected values, the conflict test, suffix quarantine, the
     * DLQ write (skipped when the batch has no conflicts — a healthy
     * stream must not accrete one empty epoch dir per trigger), and the
@@ -2970,37 +2773,78 @@ object StreamingOps {
         p(0).toLong -> p(1).toLong
       }.toMap).getOrElse(Map.empty)
 
-  /** The batch's touched keys' latest-known PRIOR images: the state
-    * dir's rows below `epochId`, bucket-pruned to the batch's key
-    * buckets and semi-joined to its exact keys — the metadata-bounded
-    * prior read shared by partial-image completion and the strict
-    * before-image gate. */
-  private def readLatestPriorImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    val touched = batch.select(bucketOf(keyCols).as(BucketCol))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    readStateDirGated(s, state, buckets = Some(touched))
-      .filter(col("epoch") < epochId).drop("epoch")
-      .join(broadcast(batch.select(keyCols.map(col): _*).distinct()),
-        keyCols, "left_semi")
+  /** The batch's touched keys' latest-known PRIOR images, per table:
+    * each table's OWN state dir rows below `epochId` (serving floors
+    * honored), bucket-pruned under ITS key definition to the buckets its
+    * batch slice touches — ONE collect of ≤ tables × StateBuckets rows
+    * (driver-side metadata, like the fan-out's table discovery) — and
+    * key semi-joined to that slice, tagged with `table`. None, with no
+    * collect, when no table has an epoch below `epochId`. The
+    * metadata-bounded prior read shared by partial-image completion and
+    * the strict before-image gate. */
+  private def readPriorImages(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame): Option[DataFrame] = {
+    val withPrior = stateDirs.keys.toSeq.sorted
+      .filter(t => StateFs.epochIds(stateDirs(t)).exists(_ < epochId))
+    if (withPrior.isEmpty) return None
+    val touched = batch.filter(col("table").isin(withPrior: _*))
+      .select(col("table"), tableBucket(keyFor).as("_b")).distinct()
+      .collect().groupBy(_.getString(0))
+      .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
+    withPrior.filter(touched.contains).map { t =>
+      readStateDirGated(s, stateDirs(t), buckets = Some(touched(t)))
+        .filter(col("epoch") < epochId).drop("epoch")
+        .join(broadcast(batch.filter(col("table") === t)
+          .select(keyFor(t).map(col): _*).distinct()),
+          keyFor(t), "left_semi")
+        .withColumn("table", lit(t))
+    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
-  private def completePartialImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame, keyCols: Seq[String],
-      changedCol: String): DataFrame = {
-    val payload = batch.columns.toSeq
-      .filterNot(keyCols.contains)
-      .filterNot(Seq("op", "seq", "ts", changedCol).contains)
-    val b = batch.withColumn("_src", lit("b"))
-    val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
-    val tagged =
-      if (priorEpochs.isEmpty) b
-      else {
-        val prior = readLatestPriorImages(s, state, epochId, batch, keyCols)
-        b.unionByName(prior.withColumn("_src", lit("p")),
-          allowMissingColumns = true)
-      }
+  /** Complete a `binlog_row_image=MINIMAL` batch into FULL row images
+    * at apply time — the write-side completion that keeps every
+    * downstream path (collapse, compaction, MVs, repair, changelog
+    * export) oblivious to partial images. `changedCol` names an
+    * `array<string>` column listing the payload columns an UPDATE
+    * actually carried (MySQL's columns-present bitmap); INSERTs are
+    * full images by definition (their list is ignored), DELETEs are
+    * tombstones. Per batch, ONE shuffle for a whole topology
+    * (heterogeneous PKs included): each table's prior images of touched
+    * keys ([[readPriorImages]]) union the batch under a source tag, and
+    * a single groupBy on (table, per-table-encoded key —
+    * [[tableKeyStruct]]) computes per key the batch winner's
+    * bookkeeping, each payload column's latest in-batch DETERMINER
+    * (insert, delete, or a change-flagged update — an explicit SET c =
+    * NULL is a change TO NULL, never "unchanged", and a change landing
+    * before a mid-batch delete dies with it), and the pre-batch image.
+    * The full image then reads: changed-in-batch value, else prior
+    * value, else NULL (first-seen key — the open-envelope convention). A
+    * prior TOMBSTONE contributes nothing: a key re-touched after its
+    * delete starts from NULLs, exactly like a fresh key. Key columns
+    * bypass the determiner logic: a PK always rides the row image
+    * (MySQL's MINIMAL contract), so each table's key columns read from
+    * the grouping key — one table's key is another's ordinary payload,
+    * and a CASE on `table` keeps the two roles straight per row. Rows of
+    * tables outside the topology are dropped here exactly as the
+    * fan-out would drop them. CdcPropertySpec folds random partial logs
+    * over random wave splits against a sequential per-column
+    * reference. */
+  private def completePartialImages(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame, changedCol: String): DataFrame = {
+    val b0 = batch.filter(col("table").isin(stateDirs.keys.toSeq: _*))
+    val cols = batch.columns.toSeq
+      .filterNot(Seq("op", "seq", "ts", "table", changedCol).contains)
+    val tagged = readPriorImages(s, stateDirs, keyFor, epochId, b0)
+      .foldLeft(b0.withColumn("_src", lit("b")))((b, p) =>
+        b.unionByName(p.withColumn("_src", lit("p")),
+          allowMissingColumns = true))
+    // the tables whose key includes each column: all of them → the
+    // column is read from the grouping key alone
+    val keyOf = cols.map(c =>
+      c -> keyFor.collect { case (t, ks) if ks.contains(c) => t }.toSeq).toMap
+    val payload = cols.filter(keyOf(_).size < keyFor.size)
     // a column's in-batch DETERMINER is the latest event that decided
     // its value: an INSERT (full image), a DELETE (resets every column
     // — a change landing BEFORE a mid-batch delete must not survive
@@ -3010,171 +2854,54 @@ object StreamingOps {
     def det(c: String) =
       col("_src") === "b" && (col("op") === "I" || col("op") === "D" ||
         array_contains(col(changedCol), c))
+    val pSeq = when(col("_src") === "p", col("seq"))
     val aggs = Seq(
       max_by(struct(col("op"), col("seq"), col("ts")),
         when(col("_src") === "b", col("seq"))).as("_top"),
-      max_by(col("op"),
-        when(col("_src") === "p", col("seq"))).as("_oldop")) ++
+      max_by(col("op"), pSeq).as("_oldop")) ++
       payload.flatMap { c => Seq(
         max(when(det(c), col("seq"))).as(s"_chg_$c"),
         max_by(when(col("op") === "D",
           lit(null).cast(batch.schema(c).dataType)).otherwise(col(c)),
           when(det(c), col("seq"))).as(s"_new_$c"),
-        max_by(col(c),
-          when(col("_src") === "p", col("seq"))).as(s"_old_$c")) }
-    val agg = tagged.groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    agg.select((keyCols.map(col) ++ Seq(col("_top.op").as("op"),
-      col("_top.seq").as("seq"), col("_top.ts").as("ts")) ++
-      payload.map { c =>
-        val t = batch.schema(c).dataType
-        when(col("_top.op") === "D", lit(null).cast(t))
-          .when(col(s"_chg_$c").isNotNull, col(s"_new_$c"))
-          .when(col("_oldop").isNull || col("_oldop") === "D",
-            lit(null).cast(t))
-          .otherwise(col(s"_old_$c")).as(c)
-      }): _*)
-  }
-
-  /** [[gateBeforeImages]] for the MULTI-TABLE fan-out: one topology
-    * batch carries before images for N destination tables
-    * (heterogeneous PKs included). The same shape as
-    * [[completePartialImagesMulti]]: each table's prior images read
-    * from its OWN state dir (bucket-pruned under ITS key definition,
-    * key semi-joined to its batch slice), rows chain per (table,
-    * per-table-encoded key), and one window pass verdicts the whole
-    * topology — never a job per table. The DLQ carries the `table`
-    * column, so one dead-letter dir serves the whole topology. */
-  private def gateBeforeImagesMulti(s: SparkSession,
-      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
-      epochId: Long, batch: DataFrame, checkCol: String, beforeCol: String,
-      dlqDir: String): (DataFrame, DataFrame) = {
-    val t = batch.schema(checkCol).dataType
-    val tables = stateDirs.keys.toSeq
-    val b0 = batch.filter(col("table").isin(tables: _*))
-    def bucketCase = keyFor.foldLeft(
-        lit(null).cast(org.apache.spark.sql.types.LongType)) {
-      case (acc, (tb, ks)) =>
-        when(col("table") === tb,
-          pmod(xxhash64(ks.map(col): _*), lit(StateBuckets))).otherwise(acc)
-    }
-    val touched = b0.select(col("table"), bucketCase.as("_b")).distinct()
-      .collect().groupBy(_.getString(0))
-      .map { case (tb, rs) => tb -> rs.map(_.getLong(1)).toSeq }
-    val priors = touched.keys.toSeq.sorted.flatMap { tb =>
-      if (StateFs.epochIds(stateDirs(tb)).forall(_ >= epochId)) None
-      else Some(readStateDirGated(s, stateDirs(tb),
-          buckets = Some(touched(tb)))
-        .filter(col("epoch") < epochId).drop("epoch")
-        .join(broadcast(b0.filter(col("table") === tb)
-          .select(keyFor(tb).map(col): _*).distinct()),
-          keyFor(tb), "left_semi")
-        .select(lit(tb).as("table"),
-          tableKeyStructFor(keyFor, tb, batch.schema).as("_k"),
-          col("op"), col(checkCol), col("seq")))
-    }
-    val keyed = b0.withColumn("_k", tableKeyStruct(keyFor, batch.schema))
-    val withPrior = priors.reduceOption(_.unionByName(_)) match {
-      case None =>
-        keyed.withColumn("_cur_op", lit(null).cast("string"))
-          .withColumn("_cur", lit(null).cast(t))
-      case Some(pall) =>
-        val prior = pall.groupBy(col("table"), col("_k"))
-          .agg(max_by(struct(col("op"), col(checkCol)), col("seq")).as("_p"))
-          .select(col("table"), col("_k"), col("_p.op").as("_cur_op"),
-            col(s"_p.$checkCol").as("_cur"))
-        keyed.join(prior, Seq("table", "_k"), "left")
-    }
-    verdictBeforeImages(withPrior, Seq(col("table"), col("_k")), t,
-      checkCol, beforeCol, dlqDir, epochId, extraDrop = Seq("_k"))
-  }
-
-  /** [[completePartialImages]] for the MULTI-TABLE fan-out: one
-    * topology batch carries partial images for N destination tables
-    * (heterogeneous PKs included). Still ONE shuffle: each table's
-    * prior images (its OWN state dir, bucket-pruned under ITS key
-    * definition, key semi-joined to its batch slice) union the batch
-    * under a source tag, rows group on (table, per-table-encoded key
-    * — the fan-out's `to_json` CASE), and the same per-column
-    * determiner aggregates complete each table's rows. Key columns
-    * bypass the determiner logic: a PK always rides the row image
-    * (MySQL's MINIMAL contract), so each table's key columns read from
-    * the batch winner — one table's key is another's ordinary payload,
-    * and the CASE keeps the two roles straight per row. Rows of tables
-    * outside the topology are dropped here exactly as the fan-out
-    * would drop them. */
-  private def completePartialImagesMulti(s: SparkSession,
-      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
-      epochId: Long, batch: DataFrame, changedCol: String): DataFrame = {
-    val tables = stateDirs.keys.toSeq
-    val b0 = batch.filter(col("table").isin(tables: _*))
-    val cols = batch.columns.toSeq
-      .filterNot(Seq("op", "seq", "ts", "table", changedCol).contains)
-    def bucketCase = keyFor.foldLeft(
-        lit(null).cast(org.apache.spark.sql.types.LongType)) {
-      case (acc, (t, ks)) =>
-        when(col("table") === t,
-          pmod(xxhash64(ks.map(col): _*), lit(StateBuckets))).otherwise(acc)
-    }
-    // per-table touched buckets in ONE collect (≤ tables × StateBuckets
-    // rows — driver-side metadata, like the fan-out's table discovery)
-    val touched = b0.select(col("table"), bucketCase.as("_b")).distinct()
-      .collect().groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
-    val b = b0.withColumn("_src", lit("b"))
-    val priors = touched.keys.toSeq.sorted.flatMap { t =>
-      if (StateFs.epochIds(stateDirs(t)).forall(_ >= epochId)) None
-      else Some(readStateDirGated(s, stateDirs(t),
-          buckets = Some(touched(t)))
-        .filter(col("epoch") < epochId).drop("epoch")
-        .join(broadcast(b0.filter(col("table") === t)
-          .select(keyFor(t).map(col): _*).distinct()),
-          keyFor(t), "left_semi")
-        .withColumn("table", lit(t)))
-    }
-    val tagged = priors.foldLeft(b)((acc, p) =>
-      acc.unionByName(p.withColumn("_src", lit("p")),
-        allowMissingColumns = true))
-    def det(c: String) =
-      col("_src") === "b" && (col("op") === "I" || col("op") === "D" ||
-        array_contains(col(changedCol), c))
-    val bSeq = when(col("_src") === "b", col("seq"))
-    val pSeq = when(col("_src") === "p", col("seq"))
-    // _win_<c> is read ONLY for columns that are some table's key (the
-    // PK-rides-the-image bypass below); emitting it for every payload
-    // column was dead per-batch aggregate work on the one shuffle.
-    val someKey = keyFor.values.flatten.toSet
-    val aggs = Seq(
-      max_by(struct(col("op"), col("seq"), col("ts")), bSeq).as("_top"),
-      max_by(col("op"), pSeq).as("_oldop")) ++
-      cols.flatMap { c => Seq(
-        max(when(det(c), col("seq"))).as(s"_chg_$c"),
-        max_by(when(col("op") === "D",
-          lit(null).cast(batch.schema(c).dataType)).otherwise(col(c)),
-          when(det(c), col("seq"))).as(s"_new_$c"),
-        max_by(col(c), pSeq).as(s"_old_$c")) ++
-        (if (someKey.contains(c)) Seq(max_by(col(c), bSeq).as(s"_win_$c"))
-         else Nil) }
-    val agg = tagged.withColumn("__pk",
-        tableKeyStruct(keyFor, batch.schema))
+        max_by(col(c), pSeq).as(s"_old_$c")) }
+    val agg = tagged.withColumn("__pk", tableKeyStruct(keyFor, batch.schema))
       .groupBy(col("table"), col("__pk"))
       .agg(aggs.head, aggs.tail: _*)
     agg.select((Seq(col("table"), col("_top.op").as("op"),
       col("_top.seq").as("seq"), col("_top.ts").as("ts")) ++
       cols.map { c =>
         val t = batch.schema(c).dataType
-        val keyOf = keyFor.collect { case (tb, ks) if ks.contains(c) => tb }
-          .toSeq
         val completed = when(col("_top.op") === "D", lit(null).cast(t))
           .when(col(s"_chg_$c").isNotNull, col(s"_new_$c"))
           .when(col("_oldop").isNull || col("_oldop") === "D",
             lit(null).cast(t))
           .otherwise(col(s"_old_$c"))
-        (if (keyOf.isEmpty) completed
-         else when(col("table").isin(keyOf: _*), col(s"_win_$c"))
+        (if (keyOf(c).isEmpty) completed
+         else if (keyOf(c).size == keyFor.size) col(s"__pk.$c")
+         else when(col("table").isin(keyOf(c): _*), col(s"__pk.$c"))
            .otherwise(completed)).as(c)
       }): _*)
   }
+
+  // ───────────────────────────────────────────────────────────────────
+  // INCREMENTAL MATERIALIZED VIEWS over the CDC stream (ST30/ST31) —
+  // the reference tool class's headline downstream shape: MySQL table →
+  // replicated state → aggregate MV kept in sync (ClickHouse's
+  // AggregatingMergeTree-fed-by-MV topology), except the source is a
+  // FULL CDC stream (updates + deletes), so the MV needs true
+  // incremental view maintenance, not insert-only accumulation (ST10).
+  // Two regimes, the two that exist in the IVM literature:
+  //   - runMvSumPass: RETRACTABLE aggregates (count/sum) maintained by
+  //     per-batch deltas — each touched key contributes f(new image) −
+  //     f(old image); work is O(batch) + one bounded old-image lookup,
+  //     NEVER a recompute;
+  //   - runMvMinMaxPass: NON-RETRACTABLE aggregates (min/max) — deleting
+  //     a group's current min cannot be undone from the aggregate alone,
+  //     so dirty GROUPS (the groups the batch's old or new images touch)
+  //     are recomputed from a group-partitioned snapshot while untouched
+  //     groups carry forward; work is O(batch) + O(Σ dirty-group size).
+  // ───────────────────────────────────────────────────────────────────
 
   /** The MV passes' per-batch image computation, ONE shuffle for all
     * three views a maintenance step needs: per touched key,
@@ -3514,25 +3241,10 @@ object StreamingOps {
         .agg(count(lit(1)).as("n_rows"),
           min(col("price")).as("mn"), max(col("price")).as("mx")))
 
-  private[graft] def runMvSumPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      enrich: DataFrame => DataFrame = identity,
-      measureCol: String = "price",
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty): (Long, Long) = {
-    val r = runMvSumPassSource(s, FileCdcSource(schema, in), ckpt, state, mv,
-      keyCols, groupCol, enrich, measureCol = measureCol,
-      renameCols = renameCols, defaultCols = defaultCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvSumPass]] over an arbitrary [[CdcSource]] transport — the
-    * MV maintains identically from files, a MemoryStream, or a real
-    * Kafka+Debezium feed (spec-proved over the memory transport). */
-  /** `measureCol` names the summed column of the ENRICHED image frame
+  /** One MV maintenance pass over a [[CdcSource]] transport — the MV
+    * maintains identically from files, a MemoryStream, or a real
+    * Kafka+Debezium feed (spec-proved over the memory transport).
+    * `measureCol` names the summed column of the ENRICHED image frame
     * (default the envelope's `price`). `renameCols`/`defaultCols`
     * declare the same DDL record the CDC passes take
     * ([[applyRenameDdl]]/[[applyDefaultDdl]]): the STATE side stays
@@ -3541,8 +3253,9 @@ object StreamingOps {
     * through [[readStateDir]], so retraction deltas subtract exactly
     * what each row SERVED), while the MV side migrates eagerly when a
     * rename hits its group column ([[migrateMvRename]] — the view is
-    * O(groups), one tiny rewrite). */
-  private[graft] def runMvSumPassSource(s: SparkSession, source: CdcSource,
+    * O(groups), one tiny rewrite). Returns the pass's [[SyncProgress]]
+    * (positions tracked under `trackSeq`, as in [[runCdcPass]]). */
+  private[graft] def runMvSumPass(s: SparkSession, source: CdcSource,
       ckpt: String, state: String, mv: String,
       keyCols: Seq[String] = Seq("okey"),
       groupCol: String = "status",
@@ -3552,7 +3265,7 @@ object StreamingOps {
       measureCol: String = "price",
       renameCols: Map[String, String] = Map.empty,
       defaultCols: Map[String, ColumnDefault] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
+      : SyncProgress = {
     val schema = source.schema
     // a rename that hits the VIEW's group column migrates the view
     // BEFORE its schema is (re)published below — the snapshot rewrite
@@ -3577,7 +3290,7 @@ object StreamingOps {
     ensureKeyCols(state, keyCols)
     val envStateSchema = collapse(envelope(s.createDataFrame(
       new java.util.ArrayList[Row](), envSchema)), keyCols).schema
-    // DDL metadata settles in runCdcPassSource's order: renames first
+    // DDL metadata settles in runCdcPass's order: renames first
     // (carry published history to the new name), then the schema union,
     // then defaults (the column must ride the incoming envelope)
     applyRenameDdl(state, renameCols, envStateSchema)
@@ -3649,7 +3362,7 @@ object StreamingOps {
           bdf.unpersist(); ()
         }
     }
-    (rows, epochs, pos.applied,
+    SyncProgress(rows, epochs, pos.applied,
       pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
@@ -3775,26 +3488,10 @@ object StreamingOps {
     * 100 TB the snapshot is the destination table itself in
     * group-partitioned layout — the partition pruning this buys is
     * exactly why ClickHouse puts the MV's GROUP BY key first in the
-    * target table's ORDER BY. */
+    * target table's ORDER BY. Position bookkeeping (applied/seen seq
+    * horizons under `trackSeq`) is the CDC passes' — what the
+    * Replication facade consumes for [[SyncProgress]]. */
   private[graft] def runMvMinMaxPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty): (Long, Long) = {
-    val r = runMvMinMaxPassSource(s, FileCdcSource(schema, in), ckpt,
-      state, snap, mv, keyCols, groupCol,
-      renameCols = renameCols, defaultCols = defaultCols,
-      dropCols = dropCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvMinMaxPass]] over an arbitrary [[CdcSource]], with the full
-    * position bookkeeping (applied/seen seq horizons) of the CDC passes
-    * — what the Replication facade consumes for [[SyncProgress]]. */
-  private[graft] def runMvMinMaxPassSource(s: SparkSession,
       source: CdcSource,
       ckpt: String, state: String, snap: String, mv: String,
       keyCols: Seq[String] = Seq("okey"),
@@ -3804,14 +3501,14 @@ object StreamingOps {
       renameCols: Map[String, String] = Map.empty,
       defaultCols: Map[String, ColumnDefault] = Map.empty,
       dropCols: Map[String, Long] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
+      : SyncProgress = {
     val mvSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(groupCol, StringType),
       org.apache.spark.sql.types.StructField("n_rows",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("mn", DoubleType),
       org.apache.spark.sql.types.StructField("mx", DoubleType)))
-    runMvRecomputePassSource(s, source, ckpt, state, snap, mv, keyCols,
+    runMvRecomputePass(s, source, ckpt, state, snap, mv, keyCols,
       groupCol, mvSchema,
       snapRows => snapRows.groupBy(col(groupCol))
         .agg(count(lit(1)).as("n_rows"),
@@ -3833,23 +3530,6 @@ object StreamingOps {
     * advance, pointer map, replay safety, pruning) is the machinery
     * documented on [[runMvMinMaxPass]]. */
   private[graft] def runMvRecomputePass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String], groupCol: String,
-      mvSchema: org.apache.spark.sql.types.StructType,
-      recompute: DataFrame => DataFrame,
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty): (Long, Long) = {
-    val r = runMvRecomputePassSource(s, FileCdcSource(schema, in), ckpt,
-      state, snap, mv, keyCols, groupCol, mvSchema, recompute,
-      renameCols = renameCols, defaultCols = defaultCols,
-      dropCols = dropCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvRecomputePass]] over an arbitrary [[CdcSource]]. */
-  private[graft] def runMvRecomputePassSource(s: SparkSession,
       source: CdcSource,
       ckpt: String, state: String, snap: String, mv: String,
       keyCols: Seq[String], groupCol: String,
@@ -3860,10 +3540,10 @@ object StreamingOps {
       renameCols: Map[String, String] = Map.empty,
       defaultCols: Map[String, ColumnDefault] = Map.empty,
       dropCols: Map[String, Long] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
+      : SyncProgress = {
     val schema = org.apache.spark.sql.types.StructType(
       source.schema.fields.filterNot(f => txnCol.contains(f.name)))
-    // DDL settles in [[runMvSumPassSource]]'s order, extended to the
+    // DDL settles in [[runMvSumPass]]'s order, extended to the
     // dirty-group family's THIRD dir: a rename hitting the view's group
     // column migrates the view (snapshot rewrite — O(groups)) AND the
     // group-partitioned snapshot (directory moves only — the group
@@ -3997,7 +3677,7 @@ object StreamingOps {
           bdf.unpersist(); ()
         }
     }
-    (rows, epochs, pos.applied,
+    SyncProgress(rows, epochs, pos.applied,
       pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
@@ -4009,11 +3689,10 @@ object StreamingOps {
     * through to the served state); when a tombstone-GC'ing compaction
     * has published a purge floor, re-delivered already-folded epochs
     * (non-baseline, seq at or below the floor) are ignored so purged
-    * deletes cannot resurrect. */
-  /** `keepSeq` appends each served row's winning `seq` to the output —
-    * the collapse-with-position shape the MV attach paths snapshot
-    * (their dirty-group machinery replays positions); the serving
-    * default stays position-free. */
+    * deletes cannot resurrect. `keepSeq` appends each served row's
+    * winning `seq` to the output — the collapse-with-position shape the
+    * MV attach paths snapshot (their dirty-group machinery replays
+    * positions); the serving default stays position-free. */
   private[graft] def readLatestState(s: SparkSession, state: String,
       asOfSeq: Option[Long] = None, softDelete: Boolean = false,
       buckets: Option[Seq[Long]] = None,
@@ -4170,7 +3849,7 @@ object StreamingOps {
         own
       } else sharedWaves(dir, "cdclog_3w")(i =>
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
     readLatestState(s, s"$tmp/state")
   }
 
@@ -4248,7 +3927,7 @@ object StreamingOps {
       val env = graft.sources.BinlogText.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4273,7 +3952,7 @@ object StreamingOps {
       val env = graft.sources.BinlogBinary.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4299,7 +3978,7 @@ object StreamingOps {
         .where(col("_sql").isNotNull).drop("_sql")
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4330,7 +4009,7 @@ object StreamingOps {
         cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
         .select(col("okey"), col("op"), col("price"), col("status"),
           col("ts"), hex(col("geom")).as("geom_hex"))
@@ -4407,7 +4086,7 @@ object StreamingOps {
           "heartbeat surface is broken")
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state",
         heartbeats = true)
       readLatestState(s, s"$tmp/state")
     }),
@@ -4435,7 +4114,7 @@ object StreamingOps {
       val env = graft.sources.BinlogBinary.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state",
         keyCols = wireKey)
       readLatestState(s, s"$tmp/state")
     }),
@@ -4463,7 +4142,7 @@ object StreamingOps {
       val env = graft.sources.BinlogSocket.parse(s, s"$tmp/cap", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4490,7 +4169,7 @@ object StreamingOps {
         s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4604,7 +4283,7 @@ object StreamingOps {
         txnScenarioCols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4641,7 +4320,7 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(env, in, when(col("seq") <= 1, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state",
         partialImageCol = Some("_changed"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -4842,7 +4521,7 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state", softDelete = true)
     }),
 
@@ -5099,7 +4778,7 @@ object StreamingOps {
       writeWave(log.filter(col("seq") <= 2).unionByName(hb(50L)), in, 0)
       writeWave(log.filter(col("seq") === 3), in, 1)
       writeWave(hb(60L), in, 2)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         heartbeats = true)
       readLatestState(s, s"$tmp/state")
     }),
@@ -5191,7 +4870,7 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(env, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
         .select(col("okey"), col("op"), col("price"), col("status"),
           col("ts"), col("tny").cast(IntegerType).as("tny"),
@@ -5217,7 +4896,8 @@ object StreamingOps {
       // act 1: live replica at the cutover position (cdcLog seq<=2 era)
       val live = Tables.cdcLog(s, dir).filter(col("seq") <= 2)
       writeWave(live, s"$tmp/in_live", 0)
-      runCdcPass(s, live.schema, s"$tmp/in_live", s"$tmp/ckpt_live",
+      runCdcPass(s, FileCdcSource(live.schema, s"$tmp/in_live"),
+        s"$tmp/ckpt_live",
         s"$root/orders")
       // act 2: the copier's shadow fill (new schema: + price_cents);
       // the new-schema stream keeps ONE checkpoint across the cutover —
@@ -5227,7 +4907,8 @@ object StreamingOps {
       val inNew = s"$tmp/in_new"
       val ckptNew = s"$tmp/ckpt_new"
       writeWave(shadow, inNew, 0)
-      runCdcPass(s, shadow.schema, inNew, ckptNew, s"$root/_orders_gho")
+      runCdcPass(s, FileCdcSource(shadow.schema, inNew), ckptNew,
+        s"$root/_orders_gho")
       // act 3: the atomic cutover statement, then the post-cutover
       // binlog resumes under `orders` — the same physical state dir the
       // shadow pass filled, now bound to its post-cutover name
@@ -5235,7 +4916,7 @@ object StreamingOps {
         Seq("orders" -> "_orders_del", "_orders_gho" -> "orders"))
       val post = Tables.cdcLogOscPost(s, dir)
       writeWave(post, inNew, 1)
-      runCdcPass(s, post.schema, inNew, ckptNew, s"$root/orders")
+      runCdcPass(s, FileCdcSource(post.schema, inNew), ckptNew, s"$root/orders")
       val served = readLatestState(s, s"$root/orders")
         .withColumn("tbl", lit("orders"))
       val retired = readLatestState(s, s"$root/_orders_del")
@@ -5262,7 +4943,7 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         strictBefore = Some(("price", "before_price")),
         conflictDlq = Some(s"$tmp/dlq"))
       val confKeys = s.read.parquet(s"$tmp/dlq").select(col("okey"))
@@ -5291,13 +4972,13 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("qty",
         (col("okey") % 1000).cast(org.apache.spark.sql.types.IntegerType))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt", s"$tmp/state")
       val v2 = log.filter(col("seq") >= 2).withColumn("qty_big",
         when(col("op") === "D",
           lit(null).cast(org.apache.spark.sql.types.LongType))
           .otherwise(col("okey") + lit(3000000000L)))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state",
         renameCols = Map("qty" -> "qty_big"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5318,7 +4999,7 @@ object StreamingOps {
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"), col("line_no"))))
       val dirs = Map("t_ord" -> s"$tmp/state_ord", "t_line" -> s"$tmp/state_line")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs,
+      runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", dirs,
         keyColsByTable = Map("t_ord" -> Seq("okey"),
           "t_line" -> Seq("okey", "line_no")))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
@@ -5350,7 +5031,7 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclogcomp_2w")(i =>
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"), col("line_no"))))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         keyCols = Seq("okey", "line_no"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5371,7 +5052,7 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_eo_3w")(i =>
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", dirs)
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5417,7 +5098,7 @@ object StreamingOps {
         byTable)
       writeWave(env1, in, 0)
       val dirs = Map("t_even" -> s"$root/t_even", "t_odd" -> s"$root/t_odd")
-      runCdcPassMulti(s, env1.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPassMulti(s, FileCdcSource(env1.schema, in), s"$tmp/ckpt", dirs)
       // rotation 2, TXN-DELIMITED (the production shape: one dump
       // carrying lifecycle QueryEvents AND cross-table transactions):
       // transaction 1 SPANS t_even (the seq-2 updates) and t_new (its
@@ -5486,7 +5167,8 @@ object StreamingOps {
       val env2 = graft.sources.BinlogText.parseMultiTxn(s, s"$tmp/binlog2",
         byTable - "t_odd", ignoreTables = Set("t_odd"))
       writeWave(env2, in, 1)
-      runCdcPassMulti(s, env2.schema, in, s"$tmp/ckpt", report.stateDirs,
+      runCdcPassMulti(s, FileCdcSource(env2.schema, in), s"$tmp/ckpt",
+        report.stateDirs,
         txnCol = Some("txn"))
       // the uncommitted delete wave really is HELD, not lost: the
       // topology's pending tail (rooted under the ckpt dir) is
@@ -5523,7 +5205,7 @@ object StreamingOps {
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
       val dirs = (0 until nShards)
         .map(i => s"shard_$i" -> s"$tmp/state_$i").toMap
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", dirs)
       dirs.values.toSeq.sorted
         .map(d => readLatestState(s, d))
         .reduce(_.unionByName(_))
@@ -5545,7 +5227,7 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_shard_2w")(i =>
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt",
+      runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         Map("t_main" -> s"$tmp/state_main"),
         routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))
       readLatestState(s, s"$tmp/state_main")
@@ -5570,7 +5252,7 @@ object StreamingOps {
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"))))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs,
+      runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", dirs,
         rowFilters = Map("t_even" -> "okey % 4 = 0"),
         maskCols = Map("t_odd" -> Seq("status")))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
@@ -5601,7 +5283,7 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPass(s, log.schema, in, s"$r/ckpt", s"$r/state")
+        runCdcPass(s, FileCdcSource(log.schema, in), s"$r/ckpt", s"$r/state")
         ()
       }
       val tmp = cloneSynced(root, "state")
@@ -5628,7 +5310,7 @@ object StreamingOps {
           lit(1000L).as("seq"), col("ts"), lit(-424242L).as("okey"),
           lit(1.23).as("price"), lit("PHANTOM").as("status")))
         .write.mode("overwrite").parquet(s"$tmp/state/epoch=99")
-      repairState(s, truth, s"$tmp/state")
+      graft.Replication.repairSync(s, truth, s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5651,7 +5333,7 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPass(s, log.schema, in, s"$r/ckpt", s"$r/state")
+        runCdcPass(s, FileCdcSource(log.schema, in), s"$r/ckpt", s"$r/state")
         ()
       }
       val tmp = cloneSynced(root, "state")
@@ -5684,7 +5366,7 @@ object StreamingOps {
     // multi-table consistency-fix flow live: the one-binlog→2-tables
     // fan-out applies, then BOTH destinations diverge differently
     // (t_even drifts prices, t_odd loses keys to a corrupting delete
-    // wave AND gains a phantom row); ONE repairStateMulti call — one
+    // wave AND gains a phantom row); ONE repairState call — one
     // diff job, one staged fan-out write, the pending tail consulted
     // once — must put the whole topology back to exactly the per-table
     // batch collapses.
@@ -5700,7 +5382,7 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_eo_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPassMulti(s, log.schema, in, s"$r/ckpt",
+        runCdcPassMulti(s, FileCdcSource(log.schema, in), s"$r/ckpt",
           Map("t_even" -> s"$r/state_even", "t_odd" -> s"$r/state_odd"))
         ()
       }
@@ -5737,7 +5419,7 @@ object StreamingOps {
           lit(1000L).as("seq"), col("ts"), lit(-777L).as("okey"),
           lit(9.99).as("price"), lit("PHANTOM").as("status")))
         .write.mode("overwrite").parquet(s"$tmp/state_odd/epoch=99")
-      repairStateMulti(s, truthBy, dirs)
+      repairState(s, truthBy, dirs)
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5761,14 +5443,14 @@ object StreamingOps {
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("old"), (col("okey") % 4).cast(StringType))))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // post-rename values differ on purpose ("new" prefix): a fork
       // that recomputed instead of carried would hash-mismatch
       val v2 = log.filter(col("seq") >= 2).withColumn("chan",
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("new"), (col("okey") % 4).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state",
         renameCols = Map("channel" -> "chan"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5785,14 +5467,14 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       val v2 = log.filter(col("seq") >= 2).withColumn("channel",
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("ch"), (col("okey") % 4).cast(StringType))))
       // one post-DDL wave: the batch boundary that matters is the schema
       // change itself (per-wave semantics are spec-covered elsewhere)
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5817,7 +5499,7 @@ object StreamingOps {
           when(col("op") === "D", lit(null).cast(StringType))
             .otherwise(concat(lit("x"), (col("okey") % 2).cast(StringType))))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // the DDL gap, exactly as the binlog ships it: QueryEvents at
       // position 1 (= everything pass 1 applied), raw SQL text
       val cfg = DdlSql.fold(Seq(
@@ -5836,7 +5518,7 @@ object StreamingOps {
             lit(null).cast(StringType))
             .otherwise(concat(lit("n"), (col("okey") % 3).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state",
         renameCols = cfg.renameCols, defaultCols = cfg.defaultCols,
         dropCols = cfg.dropCols, truncateAtSeq = cfg.truncateAtSeq)
       readLatestState(s, s"$tmp/state")
@@ -5858,7 +5540,7 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("qty",
         (col("okey") % 1000).cast(org.apache.spark.sql.types.IntegerType))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // one post-DDL wave, as in ST14: the boundary that matters is the
       // type change itself
       val v2 = log.filter(col("seq") >= 2).withColumn("qty",
@@ -5866,7 +5548,7 @@ object StreamingOps {
           lit(null).cast(org.apache.spark.sql.types.LongType))
           .otherwise(col("okey") + lit(3000000000L)))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5899,7 +5581,8 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(partial, in, when(col("seq") <= 1, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, partial.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(partial.schema, in), s"$tmp/ckpt",
+        s"$tmp/state",
         partialImageCol = Some("_changed"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5918,13 +5601,13 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       val v2 = log.filter(col("seq") >= 2).withColumn("channel",
         when(col("op") === "D" || col("okey") % 5 === 0,
           lit(null).cast(StringType))
           .otherwise(concat(lit("ch"), (col("okey") % 4).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state",
         defaultCols = Map("channel" -> ColumnDefault(1L, "'none'")))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5946,11 +5629,11 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // one post-truncate wave: the boundary that matters is the
       // truncate itself, not per-wave apply — one less trigger
       writeWave(log.filter(col("seq") >= 2), in, 1)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         truncateAtSeq = Some(1L))
       readLatestState(s, s"$tmp/state")
     }),
@@ -5975,7 +5658,7 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("channel",
         concat(lit("old"), (col("okey") % 4).cast(StringType)))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // the compressed-DDL window: DROP at position 1 and RE-ADD with
       // DEFAULT at position 3 both landed while the stream was down —
       // ONE resumed pass declares both; events between the two (seq
@@ -5988,7 +5671,7 @@ object StreamingOps {
         .withColumn("channel", lit(null).cast(StringType))
         .unionByName(upd4)
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt", s"$tmp/state",
         dropCols = Map("channel" -> 1L),
         defaultCols = Map("channel" -> ColumnDefault(3L, "'readd'")))
       readLatestState(s, s"$tmp/state")
@@ -6007,7 +5690,7 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         keepHistory = true)
       readLatestState(s, s"$tmp/state", asOfSeq = Some(2L))
     }),
@@ -6025,7 +5708,7 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         computedCols = Seq(
           "price_band" -> "CASE WHEN price < 150000 THEN 'low' ELSE 'high' END",
           "event_day" -> "CAST(ts AS DATE)"))
@@ -6046,7 +5729,7 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       readStateChanges(s, s"$tmp/state", 1L)
     }),
 
@@ -6062,7 +5745,7 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         keepHistory = true)
       readStateChanges(s, s"$tmp/state", 1L, untilSeq = Some(3L))
     }),
@@ -6086,7 +5769,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_tail2w")(i =>
         writeWaves(log.filter(col("seq") > 1), i, col("seq") - 2, 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv")
+      runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state", s"$tmp/mv")
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -6105,7 +5789,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv")
+      runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state", s"$tmp/mv")
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -6178,7 +5863,7 @@ object StreamingOps {
       // wave 0 (seq 1): inserts; group column still named `grp`, no amt
       val w0 = log.filter(col("seq") === 1).withColumn("grp", grp)
       writeWave(w0, in, 0)
-      runCdcPass(s, w0.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(w0.schema, in), s"$tmp/ckpt", s"$tmp/state")
       // wave 1 (seq 2): updates + ADD COLUMN amt DEFAULT 5.00 (declared
       // at position 1); okey%5==0 writes an EXPLICIT NULL, which must
       // stay NULL (MySQL backfill semantics, not a blanket coalesce)
@@ -6187,7 +5872,7 @@ object StreamingOps {
           lit(null).cast(DoubleType))
           .otherwise((col("okey") % 89).cast(DoubleType) + lit(0.25)))
       writeWave(w1, in, 1)
-      runCdcPass(s, w1.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(w1.schema, in), s"$tmp/ckpt", s"$tmp/state",
         defaultCols = Map("amt" -> ColumnDefault(1L, "5.00")))
       // the operator creates the MV over the table AS EVOLVED
       mvAttachSum(s, s"$tmp/state", s"$tmp/mv",
@@ -6197,7 +5882,8 @@ object StreamingOps {
         .withColumn("seg", lit(null).cast(StringType))
         .withColumn("amt", lit(null).cast(DoubleType))
       writeWave(w2, in, 2)
-      runMvSumPass(s, w2.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
+      runMvSumPass(s, FileCdcSource(w2.schema, in), s"$tmp/ckpt", s"$tmp/state",
+        s"$tmp/mv",
         groupCol = "seg", measureCol = "amt",
         renameCols = Map("grp" -> "seg"))
       readMv(s, s"$tmp/mv")
@@ -6229,7 +5915,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclogdim_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
+      runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state", s"$tmp/mv",
         groupCol = "grp",
         enrich = img => img.join(broadcast(dim), Seq("custkey")))
       readMv(s, s"$tmp/mv")
@@ -6258,7 +5945,8 @@ object StreamingOps {
         org.apache.spark.sql.types.StructField("okey",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("price", DoubleType)))
-      runMvRecomputePass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runMvRecomputePass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state",
         s"$tmp/snap", s"$tmp/mv", Seq("okey"), "status", mvSchema,
         rows => rows.withColumn("rnk", row_number().over(
             Window.partitionBy(col("status"))
@@ -6282,7 +5970,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
+      runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state", s"$tmp/mv",
         groupCol = "ym",
         enrich = img => img.withColumn("ym", date_format(col("ts"), "yyyy-MM")))
       readMv(s, s"$tmp/mv")
@@ -6301,7 +5990,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvMinMaxPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runMvMinMaxPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        s"$tmp/state",
         s"$tmp/snap", s"$tmp/mv")
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"), col("mn"), col("mx"))
@@ -6334,7 +6024,8 @@ object StreamingOps {
         .when(col("seq") === 2 && col("op") =!= "C" && col("okey") % 2 === 0, 0)
         .otherwise(1)
       writeWaves(evLog, in, waveCol, 2, Seq(col("okey"), col("op")))
-      runCdcPass(s, evLog.schema, in, s"$tmp/ckpt", s"$tmp/state",
+      runCdcPass(s, FileCdcSource(evLog.schema, in), s"$tmp/ckpt",
+        s"$tmp/state",
         txnCol = Some("txn"))
       readLatestState(s, s"$tmp/state")
     }),
@@ -6372,7 +6063,7 @@ object StreamingOps {
         .otherwise(1)
       writeWaves(evLog, in, waveCol, 2, Seq(col("okey"), col("op")))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, evLog.schema, in, s"$tmp/ckpt", dirs,
+      runCdcPassMulti(s, FileCdcSource(evLog.schema, in), s"$tmp/ckpt", dirs,
         txnCol = Some("txn"))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
@@ -6396,7 +6087,7 @@ object StreamingOps {
       // configuration the purge + re-delivery gate must survive
       writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey"), col("seq")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
       compactState(s, s"$tmp/state", tombstoneHorizon = Some(0))
       log.filter(col("seq") === 1).write.mode("overwrite")
         .parquet(s"$tmp/state/epoch=0")

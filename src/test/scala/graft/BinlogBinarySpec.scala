@@ -450,7 +450,7 @@ class BinlogBinarySpec extends SparkTestBase {
     val src = BinlogBinaryCdcSource(dump, cols)
     assert(src.schema.fieldNames.toSeq ==
       Seq("op", "seq", "ts", "okey", "price", "status"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt", s"$base/state")
     def served: Map[Long, Double] =
       StreamingOps.readLatestState(spark, s"$base/state")
         .select("okey", "price").collect()
@@ -468,7 +468,7 @@ class BinlogBinarySpec extends SparkTestBase {
       .filter(_.getName.startsWith("bin.")).head
     java.nio.file.Files.copy(rot2.toPath,
       java.nio.file.Paths.get(s"$dump/bin.000200"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt", s"$base/state")
     assert(served == Map(1L -> 10.0))
     // a TORN rotation (no trailing ROTATE/STOP) refuses the batch
     val base2 = tmp()
@@ -477,7 +477,7 @@ class BinlogBinarySpec extends SparkTestBase {
       BinlogBinary.tableMapEvent("orders", cols)))
     val src2 = BinlogBinaryCdcSource(dump2, cols)
     val e = intercept[Throwable] {
-      StreamingOps.runCdcPassSource(spark, src2, s"$base2/ckpt",
+      StreamingOps.runCdcPass(spark, src2, s"$base2/ckpt",
         s"$base2/state")
     }
     assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
@@ -2064,7 +2064,7 @@ class BinlogBinarySpec extends SparkTestBase {
     val src = BinlogBinaryMultiCdcSource(dump,
       Map("ta" -> cols, "tb" -> colsB2))
     val dirs = Map("ta" -> s"$base/ta", "tb" -> s"$base/tb")
-    StreamingOps.runCdcPassMultiSource(spark, src, s"$base/ckpt", dirs)
+    StreamingOps.runCdcPassMulti(spark, src, s"$base/ckpt", dirs)
     assert(StreamingOps.readLatestState(spark, s"$base/ta").count() == 1)
     assert(StreamingOps.readLatestState(spark, s"$base/tb").count() == 1)
     // the next rotation lands; the resumed pass fans out only its rows
@@ -2074,7 +2074,7 @@ class BinlogBinarySpec extends SparkTestBase {
       BinlogBinary.tableMapEvent("tb", colsB2, tableId = 9L),
       bRow(4L, 1L, "m2"),
       BinlogBinary.rotateEvent("bin.000003")))
-    StreamingOps.runCdcPassMultiSource(spark, src, s"$base/ckpt", dirs)
+    StreamingOps.runCdcPassMulti(spark, src, s"$base/ckpt", dirs)
     assert(StreamingOps.readLatestState(spark, s"$base/ta")
       .select("okey").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     assert(StreamingOps.readLatestState(spark, s"$base/tb")

@@ -174,7 +174,7 @@ class BinlogSocketSpec extends SparkTestBase {
     val src = BinlogSocketCdcSource(caps, cols)
     assert(src.schema.fieldNames.toSeq ==
       Seq("op", "seq", "ts", "okey", "price", "status"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
       s"$base/state")
     def served: Map[Long, Double] =
       StreamingOps.readLatestState(spark, s"$base/state")
@@ -188,7 +188,7 @@ class BinlogSocketSpec extends SparkTestBase {
     val c2 = new java.io.File(s"$base/cap2").listFiles().head
     java.nio.file.Files.copy(c2.toPath,
       java.nio.file.Paths.get(s"$caps/sock.000001.cap"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
       s"$base/state")
     assert(served == Map(1L -> 10.0))
     // a TORN capture (EOF packet cut off) refuses the batch
@@ -200,7 +200,7 @@ class BinlogSocketSpec extends SparkTestBase {
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     java.nio.file.Files.write(f.toPath, bytes.dropRight(9))
     val e = intercept[Throwable] {
-      StreamingOps.runCdcPassSource(spark,
+      StreamingOps.runCdcPass(spark,
         BinlogSocketCdcSource(caps2, cols), s"$base2/ckpt",
         s"$base2/state")
     }

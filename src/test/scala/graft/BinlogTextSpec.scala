@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.BinlogText
+import graft.sources.FileCdcSource
 
 /** The mysqlbinlog-verbose text transport: render/parse round-trip
   * fidelity and the loud-refusal edges (see BinlogText's dialect
@@ -212,7 +213,7 @@ class BinlogTextSpec extends SparkTestBase {
     // before 99.0 vs the actually-served 20.0) quarantines to the DLQ
     val base = tmp()
     StreamingOps.writeWave(env, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, env.schema, s"$base/in",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state",
       strictBefore = Some(("price", "before_price")),
       conflictDlq = Some(s"$base/dlq"))
@@ -273,7 +274,7 @@ class BinlogTextSpec extends SparkTestBase {
     // changed value AND its carried unchanged value
     val base = tmp()
     StreamingOps.writeWave(env, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, env.schema, s"$base/in",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", partialImageCol = Some("_changed"))
     val served = StreamingOps.readLatestState(spark, s"$base/state")
       .select("okey", "price", "status").collect()
@@ -449,7 +450,7 @@ class BinlogTextSpec extends SparkTestBase {
     import graft.streaming.StreamingOps
     val base = tmp()
     StreamingOps.writeWave(env, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, env.schema, s"$base/in",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", partialImageCol = Some("_changed"))
     assert(StreamingOps.readLatestState(spark, s"$base/state").count() == 0)
   }
@@ -494,14 +495,17 @@ class BinlogTextSpec extends SparkTestBase {
     // replica with txns 1-2 applied, then resume over the FULL dump
     val a = tmp()
     StreamingOps.writeWave(env, s"$a/in", 0)
-    StreamingOps.runCdcPass(spark, env.schema, s"$a/in", s"$a/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$a/in"),
+      s"$a/ckpt",
       s"$a/state")
     val b = tmp()
     StreamingOps.writeWave(env.filter(col("seq") <= 21), s"$b/in", 0)
-    StreamingOps.runCdcPass(spark, env.schema, s"$b/in", s"$b/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$b/in"),
+      s"$b/ckpt",
       s"$b/state")
     StreamingOps.writeWave(env, s"$b/in", 1)
-    StreamingOps.runCdcPass(spark, env.schema, s"$b/in", s"$b/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(env.schema, s"$b/in"),
+      s"$b/ckpt",
       s"$b/state", startAfterSeq = Some(boundary))
     def served(d: String) = StreamingOps.readLatestState(spark, s"$d/state")
       .select("okey", "price", "status").collect()
@@ -957,7 +961,8 @@ class BinlogTextSpec extends SparkTestBase {
     assert(u.getLong(u.fieldIndex("okey")) == 1L) // PK merged from WHERE
     val base = tmp()
     StreamingOps.writeWave(env.drop("table"), s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, env.drop("table").schema, s"$base/in",
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(env.drop("table").schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", partialImageCol = Some("_changed"))
     val served = StreamingOps.readLatestState(spark, s"$base/state")
       .select("okey", "price", "status").collect()(0)
@@ -1041,7 +1046,7 @@ class BinlogTextSpec extends SparkTestBase {
     // atomically; txn 2 (no Xid) holds back across the whole topology
     val base = tmp()
     StreamingOps.writeWave(env, s"$base/in", 0)
-    StreamingOps.runCdcPassMulti(spark, env.schema, s"$base/in",
+    StreamingOps.runCdcPassMulti(spark, FileCdcSource(env.schema, s"$base/in"),
       s"$base/ckpt",
       Map("ta" -> s"$base/ta", "tb" -> s"$base/tb"),
       txnCol = Some("txn"))
@@ -1093,7 +1098,7 @@ class BinlogTextSpec extends SparkTestBase {
         "/*!50003 SET COMPLETION_TYPE=@OLD_COMPLETION_TYPE*/;\n" +
         "DELIMITER ;\nROLLBACK /* added by mysqlbinlog */;\n" +
         "/*!50530 SET @@SESSION.PSEUDO_SLAVE_MODE=0*/;\n")
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt", s"$base/state")
     def served: Map[Long, Double] =
       StreamingOps.readLatestState(spark, s"$base/state")
         .select("okey", "price").collect()
@@ -1105,7 +1110,7 @@ class BinlogTextSpec extends SparkTestBase {
       rowBlock(3, "U", 1L, 11.0) + fin)
     rotation("bin.000003",
       rowBlock(4, "D", 2L, 20.0) + fin)
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt", s"$base/state")
     assert(served == Map(1L -> 11.0))
     // an IN-FLIGHT rotation (no terminator yet) refuses the batch —
     // partial bytes must never decode as final, because the file
@@ -1119,7 +1124,7 @@ class BinlogTextSpec extends SparkTestBase {
       rowBlock(1, "I", 1L, 10.0)) // torn: writer still appending
     val src2 = BinlogTextCdcSource(dump2, cols)
     val e = intercept[Throwable] {
-      StreamingOps.runCdcPassSource(spark, src2, s"$base2/ckpt",
+      StreamingOps.runCdcPass(spark, src2, s"$base2/ckpt",
         s"$base2/state")
     }
     val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
@@ -1154,14 +1159,14 @@ class BinlogTextSpec extends SparkTestBase {
     val src = BinlogTextMultiCdcSource(dump,
       Map("ta" -> colsA, "tb" -> colsB))
     val dirs = Map("ta" -> s"$base/ta", "tb" -> s"$base/tb")
-    StreamingOps.runCdcPassMultiSource(spark, src, s"$base/ckpt", dirs)
+    StreamingOps.runCdcPassMulti(spark, src, s"$base/ckpt", dirs)
     assert(StreamingOps.readLatestState(spark, s"$base/ta").count() == 1)
     assert(StreamingOps.readLatestState(spark, s"$base/tb").count() == 1)
     // the next rotation lands; the resumed pass fans out only its rows
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dump/bin.000002"),
       rowA(3L, 2L, 20.0) + rowB(4L, 1L, "m2") + fin)
-    StreamingOps.runCdcPassMultiSource(spark, src, s"$base/ckpt", dirs)
+    StreamingOps.runCdcPassMulti(spark, src, s"$base/ckpt", dirs)
     assert(StreamingOps.readLatestState(spark, s"$base/ta")
       .select("okey").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     assert(StreamingOps.readLatestState(spark, s"$base/tb")
@@ -1485,7 +1490,7 @@ class BinlogTextSpec extends SparkTestBase {
       ("I", 2L, 800000000L, 2L, 20.0, "b"))),
       cols, dump, files = 1)
     val src = BinlogBase64CdcSource(dump, cols)
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
       s"$base/state")
     assert(StreamingOps.readLatestState(spark, s"$base/state")
       .count() == 2)
@@ -1494,7 +1499,7 @@ class BinlogTextSpec extends SparkTestBase {
     BinlogText.renderBase64(envDf(Seq(
       ("D", 3L, 800000001L, 2L, null, null))),
       cols, dump, files = 1, append = true)
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
       s"$base/state")
     assert(StreamingOps.readLatestState(spark, s"$base/state")
       .select("okey").collect().map(_.getLong(0)).toSeq == Seq(1L))
@@ -1509,7 +1514,7 @@ class BinlogTextSpec extends SparkTestBase {
         "'/*!*/;\n")
     val src2 = BinlogBase64CdcSource(dump2, cols)
     val e = intercept[Throwable] {
-      StreamingOps.runCdcPassSource(spark, src2, s"$base2/ckpt",
+      StreamingOps.runCdcPass(spark, src2, s"$base2/ckpt",
         s"$base2/state")
     }
     assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)

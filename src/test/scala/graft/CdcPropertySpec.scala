@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import graft.sources.FileCdcSource
 
 /** Property-based CDC semantics (SURVEY.md §5.2.3): for random I/U/D
   * sequences, the distributed latest-wins collapse must equal a
@@ -19,6 +20,13 @@ class CdcPropertySpec extends SparkTestBase {
 
   case class SOp(op: String, seq: Long, key: Long, price: java.lang.Double,
     status: String, before: java.lang.Double)
+
+  case class REv(table: String, op: String, seq: Long, okey: Long,
+    line_no: Long, price: Double, status: String)
+
+  /** A served row of the REPAIR property: (okey, line_no, price, status,
+    * seq of the winning event). */
+  type Img = (Long, Long, Double, String, Long)
 
   private val genOps: Gen[List[Op]] = for {
     nKeys <- Gen.choose(1, 8)
@@ -488,16 +496,24 @@ class CdcPropertySpec extends SparkTestBase {
             col("key").as("okey"), col("price"), col("status"),
             col("changed"))
         StreamingOps.writeWave(df, s"$base/in", i)
-        StreamingOps.runCdcPass(spark, df.schema, s"$base/in",
+        StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
           s"$base/ckpt", s"$base/state",
           partialImageCol = Some("changed"))
+        // the same waves through the topology pass as a one-table topology
+        val tdf = df.withColumn("table", lit("t"))
+        StreamingOps.writeWave(tdf, s"$base/in_t", i)
+        StreamingOps.runCdcPassMulti(spark,
+          FileCdcSource(tdf.schema, s"$base/in_t"), s"$base/ckpt_t",
+          Map("t" -> s"$base/topo"), partialImageCol = Some("changed"))
       }
-      val served = StreamingOps.readLatestState(spark, s"$base/state")
-        .collect().map(r => r.getLong(0) ->
-          ((Option(r.get(2)).map(_.toString.toDouble),
-            Option(r.getString(3))))).toMap
-      assert(served == fold(sorted),
-        s"partial fold diverged (log $si, ${waves.size} waves): $ops")
+      Seq("state", "topo").foreach { dir =>
+        val served = StreamingOps.readLatestState(spark, s"$base/$dir")
+          .collect().map(r => r.getLong(0) ->
+            ((Option(r.get(2)).map(_.toString.toDouble),
+              Option(r.getString(3))))).toMap
+        assert(served == fold(sorted),
+          s"partial fold diverged in $dir (log $si, ${waves.size} waves): $ops")
+      }
     }
   }
 
@@ -583,24 +599,150 @@ class CdcPropertySpec extends SparkTestBase {
             col("key").as("okey"), col("price"), col("status"),
             col("before"))
         StreamingOps.writeWave(df, s"$base/in", i)
-        StreamingOps.runCdcPass(spark, df.schema, s"$base/in",
+        StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
           s"$base/ckpt", s"$base/state",
           strictBefore = Some(("price", "before")),
           conflictDlq = Some(s"$base/dlq"))
+        // the same waves through the topology pass as a one-table topology
+        val tdf = df.withColumn("table", lit("t"))
+        StreamingOps.writeWave(tdf, s"$base/in_t", i)
+        StreamingOps.runCdcPassMulti(spark,
+          FileCdcSource(tdf.schema, s"$base/in_t"), s"$base/ckpt_t",
+          Map("t" -> s"$base/topo"),
+          strictBefore = Some(("price", "before")),
+          conflictDlq = Some(s"$base/dlq_t"))
       }
-      val served = StreamingOps.readLatestState(spark, s"$base/state")
-        .collect().map(r => r.getLong(0) ->
-          ((r.get(2).toString.toDouble, r.getString(3)))).toMap
-      assert(served == state,
-        s"strict fold diverged (log $si, ${evWaves.size} waves): $evList")
-      // a conflict-free run never creates the DLQ dir (the gate skips
-      // empty epoch writes) — absent reads as the empty verdict set
-      val dlqImpl =
-        if (!graft.streaming.StateFs.exists(s"$base/dlq")) Set.empty[Long]
-        else spark.read.parquet(s"$base/dlq")
-          .select(col("seq")).collect().map(_.getLong(0)).toSet
-      assert(dlqImpl == dlqModel.toSet,
-        s"DLQ diverged (log $si, ${evWaves.size} waves): $evList")
+      Seq("state" -> "dlq", "topo" -> "dlq_t").foreach { case (dir, dlq) =>
+        val served = StreamingOps.readLatestState(spark, s"$base/$dir")
+          .collect().map(r => r.getLong(0) ->
+            ((r.get(2).toString.toDouble, r.getString(3)))).toMap
+        assert(served == state,
+          s"strict fold diverged in $dir (log $si, ${evWaves.size} waves): " +
+            evList)
+        // a conflict-free run never creates the DLQ dir (the gate skips
+        // empty epoch writes) — absent reads as the empty verdict set
+        val dlqImpl =
+          if (!graft.streaming.StateFs.exists(s"$base/$dlq")) Set.empty[Long]
+          else spark.read.parquet(s"$base/$dlq")
+            .select(col("seq")).collect().map(_.getLong(0)).toSet
+        assert(dlqImpl == dlqModel.toSet,
+          s"DLQ diverged in $dlq (log $si, ${evWaves.size} waves): $evList")
+      }
+    }
+  }
+
+  test("REPAIR property: any divergence heals to the truth and reports " +
+      "the driver-side diff — single, chunked and topology repair") {
+    // random logs replicate into state, then a random CORRUPTION wave
+    // (seq ≥ 1000: deletes of live keys, updates, inserts of keys the
+    // truth never had) diverges what the replica serves from the truth —
+    // the log's own replay. Each repair flow must heal the served state
+    // to the truth exactly, and its (inserted, updated, deleted) report
+    // must equal the driver-side diff of truth vs served: keys only the
+    // truth has, keys whose row differs, keys only the replica serves.
+    // Single-table repairs alternate a single and a composite key; the
+    // topology repair heals two tables with heterogeneous keys at once.
+    def ev(maxKey: Long) = for {
+      t <- Gen.oneOf("t_one", "t_two")
+      o <- Gen.frequency((3, "I"), (3, "U"), (2, "D"))
+      k <- Gen.choose(0L, maxKey)
+      ln <- Gen.choose(0L, 2L)
+      // few values: a drift often keeps the price and moves only the
+      // status or the event time
+      p <- Gen.choose(0, 3).map(_.toDouble)
+      st <- Gen.oneOf("A", "B")
+    } yield REv(t, o, 0L, k, ln, p, st)
+    val gen = for {
+      n <- Gen.choose(2, 40)
+      log <- Gen.listOfN(n, ev(4L))
+      c <- Gen.choose(1, 8)
+      bad <- Gen.listOfN(c, ev(7L))
+    } yield (
+      // both tables hold at least one row before the corruption
+      (REv("t_one", "I", 0L, 0L, 0L, 1.0, "A") +:
+        REv("t_two", "I", 0L, 0L, 0L, 1.0, "A") +: log)
+        .zipWithIndex.map { case (e, i) => e.copy(seq = i + 1L) },
+      bad.zipWithIndex.map { case (e, i) => e.copy(seq = 1000L + i) })
+    def img(e: REv): Img = (e.okey, e.line_no, e.price, e.status, e.seq)
+    def latest(evs: Seq[REv], key: REv => Seq[Long]): Map[Seq[Long], Img] =
+      evs.sortBy(_.seq).foldLeft(Map.empty[Seq[Long], Option[Img]]) {
+        (m, e) => m.updated(key(e), if (e.op == "D") None else Some(img(e)))
+      }.collect { case (k, Some(v)) => k -> v }
+    def diff(truth: Map[Seq[Long], Img], served: Map[Seq[Long], Img]) =
+      Replication.RepairReport((truth.keySet -- served.keySet).size,
+        truth.count { case (k, v) => served.get(k).exists(_ != v) },
+        (served.keySet -- truth.keySet).size)
+    def keyFn(keys: Seq[String]): REv => Seq[Long] = e =>
+      keys.map(k => if (k == "okey") e.okey else e.line_no)
+    def frame(evs: Seq[REv]) = spark.createDataFrame(evs)
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+    def truthDf(m: Map[Seq[Long], Img]) = spark.createDataFrame(m.values.toSeq)
+      .toDF("okey", "line_no", "price", "status", "seq")
+      .select(col("okey"), col("line_no"), col("price"), col("status"),
+        timestamp_seconds(lit(1700000000L) + col("seq")).as("ts"))
+    def served(dir: String): Set[Img] = Replication.appliedState(spark, dir)
+      .select(col("okey"), col("line_no"), col("price"), col("status"),
+        (unix_seconds(col("ts")) - 1700000000L).as("seq"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getString(3), r.getLong(4))).toSet
+    val cases = (0 until 6).flatMap(i =>
+      gen.apply(Gen.Parameters.default, Seed(777L + i)))
+    cases.zipWithIndex.foreach { case ((log, bad), si) =>
+      val base = java.nio.file.Files
+        .createTempDirectory(s"graft_repairprop$si").toString
+      val where = s"(case $si): log $log, corruption $bad"
+      // SINGLE TABLE, plain and chunk-bounded, over one envelope
+      val keys = if (si % 2 == 0) Seq("okey") else Seq("okey", "line_no")
+      val truth = latest(log, keyFn(keys))
+      val want = diff(truth, latest(log ++ bad, keyFn(keys)))
+      val env = (evs: Seq[REv]) => frame(evs).drop("table")
+      Seq("plain", "chunked").foreach { mode =>
+        val d = s"$base/$mode"
+        graft.streaming.StreamingOps.writeWave(env(log), s"$d/in", 0)
+        graft.streaming.StreamingOps.writeWave(env(bad), s"$d/in", 1)
+        Replication.incrementalSync(spark, env(log).schema, s"$d/in",
+          s"$d/ckpt", s"$d/state", keyCols = keys)
+        assert(served(s"$d/state") == latest(log ++ bad, keyFn(keys)).values
+          .toSet, s"diverged replica serves the corrupted replay $where")
+        val src = truthDf(truth)
+        val got = if (mode == "plain")
+          Replication.repairSync(spark, src, s"$d/state", keys)
+        else {
+          // a chunk count dividing the bucket count prunes the state
+          // scan; one that does not falls back to the exact predicate
+          val nChunks = if (si % 3 == 0) 6 else 8
+          val dirty = Replication.consistencyCheckChunked(src,
+              Replication.appliedState(spark, s"$d/state").drop("op"),
+              keys, nChunks)
+            .filterNot(_.consistent).map(_.chunk)
+          Replication.repairSyncChunked(spark, src, s"$d/state", dirty,
+            nChunks, keys)
+        }
+        assert(got == want, s"$mode repair report $got != diff $want $where")
+        assert(served(s"$d/state") == truth.values.toSet,
+          s"$mode repair did not heal $where")
+      }
+      // TOPOLOGY: two tables, heterogeneous keys, one repair call
+      val keyOf = Map("t_one" -> Seq("okey"), "t_two" -> Seq("okey", "line_no"))
+      val dirs = keyOf.keys.map(t => t -> s"$base/topo_$t").toMap
+      graft.streaming.StreamingOps.writeWave(frame(log), s"$base/topo_in", 0)
+      graft.streaming.StreamingOps.writeWave(frame(bad), s"$base/topo_in", 1)
+      Replication.incrementalSyncMulti(spark, frame(log).schema,
+        s"$base/topo_in", s"$base/topo_ckpt", dirs,
+        keyColsByTable = keyOf)
+      def slice(t: String, evs: Seq[REv]) =
+        latest(evs.filter(_.table == t), keyFn(keyOf(t)))
+      val truthBy = keyOf.keys.map(t => t -> slice(t, log)).toMap
+      val reports = Replication.repairSyncMulti(spark,
+        truthBy.map { case (t, m) => t -> truthDf(m) }, dirs,
+        keyColsByTable = keyOf)
+      keyOf.keys.foreach { t =>
+        val wantT = diff(truthBy(t), slice(t, log ++ bad))
+        assert(reports(t) == wantT,
+          s"topology report for $t ${reports(t)} != diff $wantT $where")
+        assert(served(dirs(t)) == truthBy(t).values.toSet,
+          s"topology repair did not heal $t $where")
+      }
     }
   }
 
@@ -634,14 +776,16 @@ class CdcPropertySpec extends SparkTestBase {
       if (narrow.nonEmpty) {
         StreamingOps.writeWave(toDf(narrow, wide = false), s"$base/in", w)
         StreamingOps.runCdcPass(spark,
-          toDf(narrow, wide = false).schema, s"$base/in", s"$base/ckpt",
+          FileCdcSource(toDf(narrow, wide = false).schema, s"$base/in"),
+          s"$base/ckpt",
           s"$base/state")
         w += 1
       }
       if (wide.nonEmpty) {
         StreamingOps.writeWave(toDf(wide, wide = true), s"$base/in", w)
-        StreamingOps.runCdcPass(spark, toDf(wide, wide = true).schema,
-          s"$base/in", s"$base/ckpt", s"$base/state")
+        StreamingOps.runCdcPass(spark,
+          FileCdcSource(toDf(wide, wide = true).schema, s"$base/in"),
+          s"$base/ckpt", s"$base/state")
       }
       val served = StreamingOps.readLatestState(spark, s"$base/state")
         .select(col("okey"), col("qty")).collect()

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.DriverManager
 
-import graft.sources.{EpochParquetSink, JdbcBatchSink, JdbcSource}
+import graft.sources.{EpochParquetSink, FileCdcSource, JdbcBatchSink, JdbcSource}
 import org.apache.spark.sql.functions._
 
 /** The JDBC PRODUCTION path executed for real against embedded Derby (on
@@ -124,7 +124,8 @@ class JdbcSpec extends SparkTestBase {
       .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
         col("status"))
     graft.streaming.StreamingOps.writeWave(ev, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, ev.schema, s"$base/in",
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(ev.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     // export = the collapse WITH tombstones + seq (the changes shape)
     val changes = graft.streaming.StreamingOps

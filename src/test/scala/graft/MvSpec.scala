@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.streaming.StreamingOps
+import graft.sources.FileCdcSource
 
 /** Incremental materialized views over the CDC stream (ST30/ST31):
   * retraction-delta maintenance for count/sum, dirty-group recompute for
@@ -62,13 +63,15 @@ class MvSpec extends SparkTestBase {
 
   private def runSum(base: String, epochs: Seq[Seq[MvEv]]): Unit = {
     writeEpochs(base, epochs)
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/mv")
   }
 
   private def runMinMax(base: String, epochs: Seq[Seq[MvEv]]): Unit = {
     writeEpochs(base, epochs)
-    StreamingOps.runMvMinMaxPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvMinMaxPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv")
   }
 
@@ -102,7 +105,8 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
     StreamingOps.writeWave(evDf(e2), s"$base/in", 2) // duplicate delivery
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/mv")
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2))
   }
@@ -164,8 +168,9 @@ class MvSpec extends SparkTestBase {
     val e2 = Seq(MvEv("D", 6, 4, 0.00, null))
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
-    StreamingOps.runMvRecomputePass(spark, evDf(Seq.empty).schema,
-      s"$base/in", s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"), s"$base/ckpt",
+      s"$base/state", s"$base/snap", s"$base/mv",
       Seq("okey"), "status", mvSchema, top2)
     val got = StreamingOps.readMv(spark, s"$base/mv").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -189,7 +194,8 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     StreamingOps.writeWave(e1, s"$base/in", 0)
     StreamingOps.writeWave(e2, s"$base/in", 1)
-    StreamingOps.runMvSumPass(spark, e1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(e1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "grp",
       enrich = img => img.join(broadcast(dim), Seq("custkey")))
     val served = StreamingOps.readMv(spark, s"$base/mv").collect()
@@ -212,7 +218,8 @@ class MvSpec extends SparkTestBase {
     val b1 = tmp()
     StreamingOps.mvSeedSum(spark, snapshot, s"$b1/state", s"$b1/mv")
     writeEpochs(b1, Seq(e2, e3))
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$b1/in",
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$b1/in"),
       s"$b1/ckpt", s"$b1/state", s"$b1/mv")
     assert(servedSum(s"$b1/mv") == refSum(all))
     // DIRTY-GROUP regime (top-2)
@@ -236,8 +243,9 @@ class MvSpec extends SparkTestBase {
     StreamingOps.mvSeedRecompute(spark, snapshot, s"$b2/state", s"$b2/snap",
       s"$b2/mv", Seq("okey"), "status", top2)
     writeEpochs(b2, Seq(e2, e3))
-    StreamingOps.runMvRecomputePass(spark, evDf(Seq.empty).schema,
-      s"$b2/in", s"$b2/ckpt", s"$b2/state", s"$b2/snap", s"$b2/mv",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$b2/in"), s"$b2/ckpt",
+      s"$b2/state", s"$b2/snap", s"$b2/mv",
       Seq("okey"), "status", mvSchema, top2)
     val got = StreamingOps.readMv(spark, s"$b2/mv").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -293,7 +301,7 @@ class MvSpec extends SparkTestBase {
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
     val dirs = (0 until nShards).map(i => s"shard_$i" -> s"$base/s_$i").toMap
-    StreamingOps.runCdcPassMulti(spark, log.schema, s"$base/in",
+    StreamingOps.runCdcPassMulti(spark, FileCdcSource(log.schema, s"$base/in"),
       s"$base/ckpt", dirs)
     // per-shard views seeded from each shard's served slice
     dirs.values.foreach { d =>
@@ -366,7 +374,7 @@ class MvSpec extends SparkTestBase {
       waves.zipWithIndex.foreach { case (w, i) =>
         StreamingOps.writeWave(df(w), s"$base/in", i)
       }
-      StreamingOps.runMvSumPassSource(spark,
+      StreamingOps.runMvSumPass(spark,
         graft.sources.FileCdcSource(df(events).schema, s"$base/in"),
         s"$base/ckpt", s"$base/state", s"$base/mv", txnCol = Some("txn"))
       assert(servedSum(s"$base/mv") == committedMv(events),
@@ -382,7 +390,7 @@ class MvSpec extends SparkTestBase {
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
     val dirs = (0 until nShards).map(i => s"shard_$i" -> s"$base/s_$i").toMap
-    StreamingOps.runCdcPassMulti(spark, log.schema, s"$base/in",
+    StreamingOps.runCdcPassMulti(spark, FileCdcSource(log.schema, s"$base/in"),
       s"$base/ckpt", dirs)
     def union() = dirs.values.toSeq.sorted
       .map(d => StreamingOps.readLatestState(spark, d))
@@ -520,7 +528,8 @@ class MvSpec extends SparkTestBase {
       .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
         col("status"), col("line_no"))
     StreamingOps.writeWave(ev, s"$base/in", 0)
-    StreamingOps.runMvSumPass(spark, ev.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(ev.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", keyCols = Seq("okey", "line_no"))
     assert(StreamingOps.readKeyCols(s"$base/state") == Seq("okey", "line_no"),
       "an MV-built state dir must publish its key like runCdcPass does — " +
@@ -548,7 +557,7 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     StreamingOps.writeWave(w0, s"$base/in", 0)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvSumPassSource(spark,
+    StreamingOps.runMvSumPass(spark,
       graft.sources.FileCdcSource(w0.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/mv", txnCol = Some("txn"))
     // committed view: txn1 ∪ txn2 = k1 moved A→B at 11.00, k2 deleted;
@@ -567,7 +576,7 @@ class MvSpec extends SparkTestBase {
     val b2 = tmp()
     StreamingOps.writeWave(w0, s"$b2/in", 0)
     StreamingOps.writeWave(w1, s"$b2/in", 1)
-    StreamingOps.runMvRecomputePassSource(spark,
+    StreamingOps.runMvRecomputePass(spark,
       graft.sources.FileCdcSource(w0.schema, s"$b2/in"),
       s"$b2/ckpt", s"$b2/state", s"$b2/snap", s"$b2/mv",
       Seq("okey"), "status", mvSchema,
@@ -601,7 +610,8 @@ class MvSpec extends SparkTestBase {
     val e3 = Seq(MvEv("I", 6, 4, 2.00, "B"), MvEv("D", 7, 2, 0.00, null))
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/mv")
     // fold the state's epochs into a baseline (tombstone GC on)
     StreamingOps.compactState(spark, s"$base/state",
@@ -609,7 +619,8 @@ class MvSpec extends SparkTestBase {
     // deliver one more wave through the SAME checkpoint — the pass
     // resumes, and the old-image lookup now reads baseline + new delta
     StreamingOps.writeWave(evDf(e3), s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/mv")
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2 ++ e3))
   }
@@ -633,8 +644,9 @@ class MvSpec extends SparkTestBase {
       graft.streaming.StreamingOps.writeWave(export, s"$dn/in", w - 1)
       lastPos = prog.lastSeq.get
     }
-    StreamingOps.runMvSumPass(spark, Tables.cdcLog(spark, sf).schema,
-      s"$dn/in", s"$dn/ckpt", s"$dn/state", s"$dn/mv")
+    StreamingOps.runMvSumPass(spark,
+      FileCdcSource(Tables.cdcLog(spark, sf).schema, s"$dn/in"), s"$dn/ckpt",
+      s"$dn/state", s"$dn/mv")
     // the chained MV equals the group-by over the UPSTREAM final state
     val expect = Replication.appliedState(spark, s"$up/state")
       .groupBy(col("status"))
@@ -650,7 +662,8 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
-    StreamingOps.runMvSumPass(spark, log.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(log.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", keyCols = Seq("okey", "line_no"))
     import org.apache.spark.sql.expressions.Window
     val expect = log.withColumn("rn", row_number().over(
@@ -683,7 +696,7 @@ class MvSpec extends SparkTestBase {
         .select(col("op"), col("seq"), col("ts"), col("okey"),
           col("price"), col("status")))
     val base = tmp()
-    StreamingOps.runMvSumPassSource(spark, src, s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, src, s"$base/ckpt",
       s"$base/state", s"$base/mv")
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2),
       "the MV must maintain identically over a memory transport")
@@ -716,10 +729,12 @@ class MvSpec extends SparkTestBase {
     val e2 = Seq(MvEv("U", 4, 2, 40.00, "A"))
     val base = tmp()
     writeEpochs(base, Seq(e1))
-    StreamingOps.runCdcPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     StreamingOps.writeWave(evDf(e2), s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     StreamingOps.mvAttachMinMax(spark, s"$base/state", s"$base/snap",
       s"$base/mv")
@@ -729,7 +744,8 @@ class MvSpec extends SparkTestBase {
     // from the attached snapshot minus k2, B from snapshot plus k4
     val e3 = Seq(MvEv("D", 5, 2, 0.00, null), MvEv("I", 6, 4, 7.00, "B"))
     StreamingOps.writeWave(evDf(e3), s"$base/in", 2)
-    StreamingOps.runMvMinMaxPass(spark, evDf(Seq.empty).schema, s"$base/in",
+    StreamingOps.runMvMinMaxPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv")
     val all = e1 ++ e2 ++ e3
     assert(servedMinMax(s"$base/mv") == refMinMax(all),
@@ -760,7 +776,8 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "g1"), ("I", 2L, 2L, 5.0, "g2")),
       "grp")
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvSumPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "grp")
     // the pre-rename MV content — what the crashed swap's trash held
     val preRows = StreamingOps.readMv(spark, s"$base/mv").collect().toSeq
@@ -768,7 +785,8 @@ class MvSpec extends SparkTestBase {
     // committed rename grp→seg (k1's price moves to 12 in the same pass)
     val w1 = frame(Seq(("U", 3L, 1L, 12.0, "g1")), "seg")
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvSumPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "seg",
       renameCols = Map("grp" -> "seg"))
     assert(servedSum(s"$base/mv") == Map(
@@ -787,7 +805,8 @@ class MvSpec extends SparkTestBase {
     // then swap seg→zone over the LIVE data — never the stale copy
     val w2 = frame(Seq(("I", 4L, 3L, 2.0, "g2")), "zone")
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, w2.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(w2.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "zone",
       renameCols = Map("seg" -> "zone"))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "zone")
@@ -804,7 +823,7 @@ class MvSpec extends SparkTestBase {
     val w3 = frame(Seq(("I", 5L, 4L, 1.0, "g1")), "zone")
     StreamingOps.writeWave(w3, s"$base/in", 3)
     val e = intercept[IllegalArgumentException] {
-      StreamingOps.runMvSumPass(spark, w3.schema, s"$base/in",
+      StreamingOps.runMvSumPass(spark, FileCdcSource(w3.schema, s"$base/in"),
         s"$base/ckpt", s"$base/state", s"$base/mv", groupCol = "zone",
         renameCols = Map("zone" -> "region"))
     }
@@ -829,14 +848,14 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "g1"), ("I", 2L, 2L, 30.0, "g1"),
       ("I", 3L, 3L, 5.0, "g2")), "grp")
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvMinMaxPass(spark, w0.schema, s"$base/in",
+    StreamingOps.runMvMinMaxPass(spark, FileCdcSource(w0.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       groupCol = "grp")
     // pass 2: RENAME grp→seg; delete g1's max (k2) — g1 recomputes from
     // the MIGRATED snapshot partition, g2 carries untouched
     val w1 = frame(Seq(("D", 4L, 2L, 0.0, null)), "seg")
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvMinMaxPass(spark, w1.schema, s"$base/in",
+    StreamingOps.runMvMinMaxPass(spark, FileCdcSource(w1.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       groupCol = "seg", renameCols = Map("grp" -> "seg"))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "seg",
@@ -849,7 +868,7 @@ class MvSpec extends SparkTestBase {
     val w2 = frame(Seq(("I", 5L, 4L, 7.0, "g2"), ("U", 6L, 1L, 12.0, "g2")),
       "seg")
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvMinMaxPass(spark, w2.schema, s"$base/in",
+    StreamingOps.runMvMinMaxPass(spark, FileCdcSource(w2.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       groupCol = "seg")
     assert(servedMinMax(s"$base/mv") == Map("g2" -> ((3L, 5.0, 12.0))),
@@ -885,7 +904,8 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, "g1", null), ("I", 2L, 2L, "g1", null),
       ("I", 3L, 3L, "g2", null)), withAmt = false)
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvRecomputePass(spark, w0.schema, s"$base/in",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(w0.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       Seq("okey"), "grp", mvSchema, rec)
     // pass 2: ADD COLUMN amt DEFAULT 7.50 at position 3; k2 writes 2.00,
@@ -895,7 +915,8 @@ class MvSpec extends SparkTestBase {
     val w1 = frame(Seq(("U", 4L, 2L, "g1", 2.0), ("U", 5L, 3L, "g2", null)),
       withAmt = true)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvRecomputePass(spark, w1.schema, s"$base/in",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(w1.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       Seq("okey"), "grp", mvSchema, rec,
       defaultCols = Map("amt" -> StreamingOps.ColumnDefault(3L, "7.50")))
@@ -936,7 +957,8 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, "g1", 100.0), ("I", 2L, 2L, "g1", 200.0),
       ("I", 3L, 3L, "g2", 300.0)))
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvRecomputePass(spark, w0.schema, s"$base/in",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(w0.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       Seq("okey"), "grp", mvSchema, rec)
     // pass 2: DROP amt at position 3, RE-ADD DEFAULT 7.50 at position 4;
@@ -944,7 +966,8 @@ class MvSpec extends SparkTestBase {
     // k1's snapshot row (physically 100.0): gate to NULL, fill 7.50
     val w1 = frame(Seq(("U", 5L, 2L, "g1", 2.0)))
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvRecomputePass(spark, w1.schema, s"$base/in",
+    StreamingOps.runMvRecomputePass(spark,
+      FileCdcSource(w1.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
       Seq("okey"), "grp", mvSchema, rec,
       dropCols = Map("amt" -> 3L),
@@ -979,7 +1002,8 @@ class MvSpec extends SparkTestBase {
       ev("I", 3, 3, "g2", null), ev("I", 4, 5, "g2", null)),
       "grp", withAmt = false)
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state")
     // pass 2: ADD COLUMN amt DEFAULT 7.50 at position 4; k2 writes 2.00,
     // k3 writes an explicit NULL (stays NULL — MySQL backfill, not a
@@ -987,7 +1011,8 @@ class MvSpec extends SparkTestBase {
     val w1 = frame(Seq(ev("U", 5, 2, "g1", 2.0), ev("U", 6, 3, "g2", null)),
       "grp", withAmt = true)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state",
       defaultCols = Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50")))
     // attach: g1 = (2, 7.50 + 2.00); g2 = (2, NULL + 7.50)
@@ -1001,7 +1026,8 @@ class MvSpec extends SparkTestBase {
     // subtract the DEFAULT it served, 7.50, not 0)
     val w2 = frame(Seq(ev("D", 7, 1, null, null)), "seg", withAmt = true)
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, w2.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(w2.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "seg", measureCol = "amt",
       renameCols = Map("grp" -> "seg"))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "seg",
@@ -1014,7 +1040,8 @@ class MvSpec extends SparkTestBase {
     val w3 = frame(Seq(ev("I", 8, 4, "g2", 1.25), ev("U", 9, 2, "g2", 2.0)),
       "seg", withAmt = true)
     StreamingOps.writeWave(w3, s"$base/in", 3)
-    StreamingOps.runMvSumPass(spark, w3.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runMvSumPass(spark, FileCdcSource(w3.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", s"$base/mv", groupCol = "seg", measureCol = "amt")
     assert(served() == Map(
       "g2" -> (4L, BigDecimal("10.75"))),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
+import graft.sources.FileCdcSource
 
 /** Physical-plan shape assertions — the 100 TB design contract
   * (SURVEY.md §4): pushdown reaches the scan, small dims broadcast,
@@ -456,11 +457,13 @@ class PlanSpec extends SparkTestBase {
       col("id").as("okey"), lit(1.0).as("price"), lit("O").as("status"),
       concat(lit("ch"), col("id")).as("channel"))
     graft.streaming.StreamingOps.writeWave(v1, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, v1.schema, s"$base/in",
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(v1.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     val v2 = v1.drop("channel").withColumn("seq", col("seq") + 10)
     graft.streaming.StreamingOps.writeWave(v2, s"$base/in", 1)
-    graft.streaming.StreamingOps.runCdcPass(spark, v2.schema, s"$base/in",
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(v2.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state", dropCols = Map("channel" -> 5L))
     val plan = graft.streaming.StreamingOps
       .readLatestState(spark, s"$base/state")
@@ -487,7 +490,8 @@ class PlanSpec extends SparkTestBase {
       col("id").as("okey"), (col("id") * 1.0).as("price"),
       lit("O").as("status"))
     graft.streaming.StreamingOps.writeWave(ev, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, ev.schema, s"$base/in",
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(ev.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     val probe = graft.streaming.StreamingOps
       .readLatestState(spark, s"$base/state", buckets = Some(Seq(3L, 7L)))

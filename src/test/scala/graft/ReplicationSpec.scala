@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.sources.FileCdcSource
 
 /** End-to-end lifecycle of the [[Replication]] facade — the reference's
   * `--full` / `--increment` / consistency-check surface (SURVEY.md §3.1).
@@ -669,13 +670,14 @@ class ReplicationSpec extends SparkTestBase {
     val live = frame(Seq(("I", 1L, 1L, 0L, 10.0, "A"),
       ("U", 2L, 1L, 0L, 11.0, "B")))
     StreamingOps.writeWave(live, s"$base/in_live", 0)
-    StreamingOps.runCdcPass(spark, live.schema, s"$base/in_live",
+    StreamingOps.runCdcPass(spark, FileCdcSource(live.schema, s"$base/in_live"),
       s"$base/ckpt_live", s"$root/orders")
     // shadow fill: COMPOSITE key — same okey, two lines, both live
     val shadow = frame(Seq(("I", 1L, 1L, 1L, 5.0, "X"),
       ("I", 2L, 1L, 2L, 6.0, "Y")))
     StreamingOps.writeWave(shadow, s"$base/in_gho", 0)
-    StreamingOps.runCdcPass(spark, shadow.schema, s"$base/in_gho",
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(shadow.schema, s"$base/in_gho"),
       s"$base/ckpt_gho", s"$root/_orders_gho",
       keyCols = Seq("okey", "line_no"))
     Replication.renameTables(root,
@@ -1139,8 +1141,8 @@ class ReplicationSpec extends SparkTestBase {
     graft.streaming.StreamingOps.writeWave(txnDf(Seq(
       TxnEv("I", 1, 1, 10.0, "O", 0))), s"$cold/in", 0)
     graft.streaming.StreamingOps.runCdcPass(spark,
-      txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 0))).schema,
-      s"$cold/in", s"$cold/ckpt", s"$cold/state")
+      FileCdcSource(txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 0))).schema, s"$cold/in"),
+      s"$cold/ckpt", s"$cold/state")
     assert(Replication.replicaStatus(spark, s"$cold/state")
       .secondsBehindSource.isEmpty)
   }
@@ -1392,6 +1394,52 @@ class ReplicationSpec extends SparkTestBase {
     assert(mv.size <= carryWrite + deltaWrite + viewWrite + touchedProbe + 1,
       s"${mv.size} actions in one tracked view micro-batch: $mv")
     assert(vprog == prog, s"view bookkeeping: $vprog")
+    // partial-image completion and the strict before-image gate: the
+    // measured batch updates keys with prior state (touched-bucket
+    // probe + prior read), inserts a fresh key, and — under the strict
+    // gate — quarantines one conflict (DLQ write + its count). Bounds
+    // are the per-batch action counts of the single-table code before
+    // it became the one-table topology (3 and 6), so the merge adds
+    // none: the raw-batch horizon aggregate, the touched-bucket probe
+    // and the delta write; the strict gate adds the DLQ emptiness
+    // probe, its write and its count
+    val rawAgg = 1; val dlqProbe = 1; val dlqWrite = 1; val dlqCount = 1
+    val seedEvs = Seq(TxnEv("I", 1, 1, 10.0, "O", 0),
+      TxnEv("I", 2, 2, 20.0, "O", 0))
+    val waveEvs = Seq(TxnEv("U", 5, 1, 11.0, "P", 0),
+      TxnEv("U", 6, 2, 21.0, "P", 0), TxnEv("I", 8, 4, 40.0, "O", 0))
+    def imaged(evs: Seq[TxnEv], c: String, v: org.apache.spark.sql.Column) =
+      txnDf(evs).drop("txn").withColumn(c, v)
+    def measured(frame: Seq[TxnEv] => org.apache.spark.sql.DataFrame)(
+        sync: (org.apache.spark.sql.types.StructType, String) => Unit) = {
+      val b = tmp()
+      graft.streaming.StreamingOps.writeWave(frame(seedEvs), s"$b/in", 0)
+      sync(frame(seedEvs).schema, b)
+      graft.streaming.StreamingOps.writeWave(frame(waveEvs), s"$b/in", 1)
+      batchActions(sync(frame(seedEvs).schema, b))
+    }
+    // MINIMAL images: updates carry price only; status rides from state
+    val partial = measured(evs => imaged(evs, "changed",
+      when(col("op") === "U", array(lit("price")))
+        .otherwise(array(lit("price"), lit("status"))))
+      .withColumn("status", when(col("op") =!= "U", col("status")))) {
+      (sch, b) => Replication.incrementalSync(spark, sch, s"$b/in",
+        s"$b/ckpt", s"$b/state", partialImageCol = Some("changed")); ()
+    }
+    info(s"partial-image micro-batch: ${partial.size} actions $partial")
+    assert(partial.size <= rawAgg + touchedProbe + deltaWrite,
+      s"${partial.size} actions in one partial-image micro-batch: $partial")
+    // FULL images with before images: seq 6 declares a stale before
+    val strict = measured(evs => imaged(evs, "before",
+      when(col("seq") === 5, lit(10.0)).when(col("seq") === 6, lit(99.0)))) {
+      (sch, b) => Replication.incrementalSync(spark, sch, s"$b/in",
+        s"$b/ckpt", s"$b/state", strictBefore = Some(("price", "before")),
+        conflictDlq = Some(s"$b/dlq")); ()
+    }
+    info(s"strict-before micro-batch: ${strict.size} actions $strict")
+    assert(strict.size <= rawAgg + touchedProbe + dlqProbe + dlqWrite +
+      dlqCount + deltaWrite,
+      s"${strict.size} actions in one strict-before micro-batch: $strict")
   }
 
   test("position bookkeeping per branch: SyncProgress and lag marks equal " +
@@ -3413,7 +3461,8 @@ class ReplicationSpec extends SparkTestBase {
       TxnEv("I", 4, 3, 4.0, "O", 0), TxnEv("D", 5, 2, 9.0, "O", 0)))
       .drop("txn")
     graft.streaming.StreamingOps.writeWave(log, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, log.schema, s"$base/in",
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(log.schema, s"$base/in"),
       s"$base/ckpt", s"$base/state")
     // hard view: tombstone winners dropped
     val hard = graft.streaming.StreamingOps
@@ -3444,8 +3493,9 @@ class ReplicationSpec extends SparkTestBase {
       .withColumn("table",
         when(col("okey") % 2 === 0, "t_shard_0").otherwise("t_shard_1"))
     graft.streaming.StreamingOps.writeWave(log, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-      s"$base/in", s"$base/ckpt", Map("t_main" -> s"$base/state_main"),
+    graft.streaming.StreamingOps.runCdcPassMulti(spark,
+      FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt",
+      Map("t_main" -> s"$base/state_main"),
       routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))
     val served = graft.streaming.StreamingOps
       .readLatestState(spark, s"$base/state_main")
@@ -3455,15 +3505,16 @@ class ReplicationSpec extends SparkTestBase {
     assert(served == Map(2L -> 7.0, 4L -> 1.0))
     // a route must land on a replicated table…
     val e1 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-        s"$base/in", s"$base/ckpt2", Map("t_main" -> s"$base/s2"),
+      graft.streaming.StreamingOps.runCdcPassMulti(spark,
+        FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt2",
+        Map("t_main" -> s"$base/s2"),
         routes = Map("t_shard_0" -> "t_mian"))
     }
     assert(e1.getMessage.contains("t_mian"))
     // …and a routed-away source must not itself be a destination
     val e2 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-        s"$base/in", s"$base/ckpt3",
+      graft.streaming.StreamingOps.runCdcPassMulti(spark,
+        FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt3",
         Map("t_main" -> s"$base/s3", "t_shard_0" -> s"$base/s4"),
         routes = Map("t_shard_0" -> "t_main"))
     }

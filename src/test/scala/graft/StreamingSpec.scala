@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.sources.FileCdcSource
 
 /** Streaming ≡ batch equivalence (SURVEY.md §5.2.4) — the verification
   * story for the non-oracle streaming operators.
@@ -25,7 +26,8 @@ class StreamingSpec extends SparkTestBase {
           col("status"), col("_changed"))
     def pass(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
       StreamingOps.writeWave(df, s"$base/in", w)
-      StreamingOps.runCdcPass(spark, df.schema, s"$base/in", s"$base/ckpt",
+      StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
+        s"$base/ckpt",
         s"$base/state", partialImageCol = Some("_changed"))
     }
     pass(frame(Seq(("I", 1L, 1L, 10.0, "A", null),
@@ -70,7 +72,8 @@ class StreamingSpec extends SparkTestBase {
           col("status"), col("before_price"))
     def pass(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
       StreamingOps.writeWave(df, s"$base/in", w)
-      StreamingOps.runCdcPass(spark, df.schema, s"$base/in", s"$base/ckpt",
+      StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
+        s"$base/ckpt",
         s"$base/state", strictBefore = Some(("price", "before_price")),
         conflictDlq = Some(s"$base/dlq"))
     }
@@ -122,8 +125,9 @@ class StreamingSpec extends SparkTestBase {
       conflictDlq = Some(s"$base/dlq")).conflictRows.contains(0L))
     // the gate without a DLQ would discard events silently — refused
     val noDlq = intercept[IllegalArgumentException] {
-      StreamingOps.runCdcPass(spark, frame(Seq.empty).schema,
-        s"$base/in2", s"$base/ckpt2", s"$base/state2",
+      StreamingOps.runCdcPass(spark,
+        FileCdcSource(frame(Seq.empty).schema, s"$base/in2"), s"$base/ckpt2",
+        s"$base/state2",
         strictBefore = Some(("price", "before_price")))
     }
     assert(noDlq.getMessage.contains("DISCARD"))
@@ -148,14 +152,16 @@ class StreamingSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "A", null),
       ("I", 2L, 2L, 20.0, "B", null)), "chan")
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", partialImageCol = Some("_changed"))
     // RENAME chan→chan2; k1's partial update changes only price — its
     // completed chan2 must read the pre-rename 'A'
     val w1 = frame(Seq(("U", 3L, 1L, 11.0, null, Seq("price")),
       ("U", 4L, 2L, null, "Z", Seq("chan2"))), "chan2")
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", partialImageCol = Some("_changed"),
       renameCols = Map("chan" -> "chan2"))
     val served = StreamingOps.readLatestState(spark, s"$base/state")
@@ -189,13 +195,15 @@ class StreamingSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10L), ("I", 2L, 2L, 20L)),
       "qty", wide = false)
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state")
     // the CHANGE COLUMN pass: k1 rewritten with a BIGINT-only value,
     // k2 untouched — must serve 20 under qty_big
     val w1 = frame(Seq(("U", 3L, 1L, 3000000000L)), "qty_big", wide = true)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", renameCols = Map("qty" -> "qty_big"))
     val st = StreamingOps.readLatestState(spark, s"$base/state")
       .select(col("okey"), col("qty_big"))
@@ -210,7 +218,8 @@ class StreamingSpec extends SparkTestBase {
     val w2 = frame(Seq(("U", 4L, 2L, 5L)), "qty_small", wide = false)
     StreamingOps.writeWave(w2, s"$base/in", 2)
     val e = intercept[StreamingOps.EnvelopeTypeChangeException] {
-      StreamingOps.runCdcPass(spark, w2.schema, s"$base/in", s"$base/ckpt",
+      StreamingOps.runCdcPass(spark, FileCdcSource(w2.schema, s"$base/in"),
+        s"$base/ckpt",
         s"$base/state", renameCols = Map("qty_big" -> "qty_small"))
     }
     assert(e.column == "qty_small")
@@ -232,7 +241,8 @@ class StreamingSpec extends SparkTestBase {
           col("status"), col("_changed"), col("txn"))
     def pass(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
       StreamingOps.writeWave(df, s"$base/in", w)
-      StreamingOps.runCdcPass(spark, df.schema, s"$base/in", s"$base/ckpt",
+      StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
+        s"$base/ckpt",
         s"$base/state", txnCol = Some("txn"),
         partialImageCol = Some("_changed"))
     }
@@ -273,14 +283,16 @@ class StreamingSpec extends SparkTestBase {
           col("status"), col("_changed"))
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "A", null)))
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", partialImageCol = Some("_changed"))
     // TRUNCATE at position 1 kills the insert; the resumed pass applies
     // a MINIMAL update carrying only status — price must complete to
     // NULL, never to the dead row's 10.0
     val w1 = frame(Seq(("U", 2L, 1L, null, "Z", Seq("status"))))
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt",
       s"$base/state", partialImageCol = Some("_changed"),
       truncateAtSeq = Some(1L))
     val served = StreamingOps.readLatestState(spark, s"$base/state")
@@ -309,7 +321,7 @@ class StreamingSpec extends SparkTestBase {
       "t_line" -> s"$base/state_line")
     def pass(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
       StreamingOps.writeWave(df, s"$base/in", w)
-      StreamingOps.runCdcPassMulti(spark, df.schema, s"$base/in",
+      StreamingOps.runCdcPassMulti(spark, FileCdcSource(df.schema, s"$base/in"),
         s"$base/ckpt", dirs,
         keyColsByTable = Map("t_ord" -> Seq("okey"),
           "t_line" -> Seq("okey", "line_no")),
@@ -361,7 +373,7 @@ class StreamingSpec extends SparkTestBase {
       "t_line" -> s"$base/state_line")
     def pass(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
       StreamingOps.writeWave(df, s"$base/in", w)
-      StreamingOps.runCdcPassMulti(spark, df.schema, s"$base/in",
+      StreamingOps.runCdcPassMulti(spark, FileCdcSource(df.schema, s"$base/in"),
         s"$base/ckpt", dirs,
         keyColsByTable = Map("t_ord" -> Seq("okey"),
           "t_line" -> Seq("okey", "line_no")),
@@ -480,11 +492,13 @@ class StreamingSpec extends SparkTestBase {
     val in = s"$tmp/in"
     StreamingOps.writeWave(log.filter(col("seq") === 1), in, 0)
     StreamingOps.writeWave(log.filter(col("seq") === 2), in, 1)
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     // first query stopped ("crash"); more data arrives; a NEW query resumes
     // from the same checkpoint — state must come from disk, not driver memory
     StreamingOps.writeWave(log.filter(col("seq") === 3), in, 2)
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     val resumed = StreamingOps.readLatestState(spark, s"$tmp/state")
       .collect().map(_.toSeq).toSet
     val batch = q("agg_latest_by_version").collect().map(_.toSeq).toSet
@@ -503,7 +517,8 @@ class StreamingSpec extends SparkTestBase {
     val in = s"$tmp/in"
     StreamingOps.writeWave(log.filter(col("seq") === 1), in, 0)
     StreamingOps.writeWave(log.filter(col("seq") === 2), in, 1)
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     val before = StreamingOps.readLatestState(spark, s"$tmp/state")
       .collect().map(_.toSeq).toSet
     StreamingOps.compactState(spark, s"$tmp/state")
@@ -523,7 +538,8 @@ class StreamingSpec extends SparkTestBase {
     assert(replayed == before, "epoch replay after compaction lost history")
     // deltas arriving AFTER compaction must still merge on top of the baseline
     StreamingOps.writeWave(log.filter(col("seq") === 3), in, 2)
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     val resumed = StreamingOps.readLatestState(spark, s"$tmp/state")
       .collect().map(_.toSeq).toSet
     val batch = q("agg_latest_by_version").collect().map(_.toSeq).toSet
@@ -549,7 +565,8 @@ class StreamingSpec extends SparkTestBase {
     val in = s"$tmp/in"
     (1 to 3).foreach(w => StreamingOps.writeWave(
       log.filter(col("seq") === w), in, w - 1))
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     val before = StreamingOps.readLatestState(spark, s"$tmp/state")
       .collect().map(_.toSeq).toSet
     // keep copies: the whole state (for the horizon-retention check) and
@@ -578,7 +595,8 @@ class StreamingSpec extends SparkTestBase {
     val del4 = log.filter(col("seq") === 1 && col("okey") % 11 === 0)
       .withColumn("op", lit("D")).withColumn("seq", lit(4L))
     StreamingOps.writeWave(del4, in, 3)
-    StreamingOps.runCdcPass(spark, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      s"$tmp/state")
     val latest = StreamingOps.readLatestState(spark, s"$tmp/state")
     assert(latest.filter(col("okey") % 11 === 0).count() == 0,
       "fresh post-GC delete did not apply")
@@ -656,10 +674,10 @@ class StreamingSpec extends SparkTestBase {
     val base = java.nio.file.Files.createTempDirectory("graft_memsrc").toString
     val src = new graft.sources.WrappedCdcSource(
       mem.toDF().toDF("op", "seq", "ts", "okey", "price", "status"))
-    val (rows, _, lastSeq, _, _) = StreamingOps.runCdcPassSource(spark, src,
+    val prog = StreamingOps.runCdcPass(spark, src,
       s"$base/ckpt", s"$base/state", trackSeq = true)
-    assert(rows == log.length.toLong)
-    assert(lastSeq.contains(3L))
+    assert(prog.rowsApplied == log.length.toLong)
+    assert(prog.lastSeq.contains(3L))
     val served = Replication.appliedState(spark, s"$base/state")
       .collect().map(_.toSeq).toSet
     val batch = q("agg_latest_by_version").collect().map(_.toSeq).toSet
@@ -689,14 +707,14 @@ class StreamingSpec extends SparkTestBase {
         sp.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
     }
-    StreamingOps.runCdcPassSource(spark, custom, s"$base/ckpt",
+    StreamingOps.runCdcPass(spark, custom, s"$base/ckpt",
       s"$base/state")
     assert(Replication.appliedState(spark, s"$base/state")
       .select(col("okey"), col("price"), col("status"))
       .collect().map(_.toSeq).toSet ==
       Set(Seq(1L, 15.0, "B")),
       "the CDC pass must apply identically over a custom transport")
-    StreamingOps.runMvSumPassSource(spark, custom, s"$base/ckpt_mv",
+    StreamingOps.runMvSumPass(spark, custom, s"$base/ckpt_mv",
       s"$base/state_mv", s"$base/mv")
     assert(StreamingOps.readMv(spark, s"$base/mv")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
