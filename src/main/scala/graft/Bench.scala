@@ -1,21 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts, see Tables.t
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the JVM (codegen, parquet reader, shuffle machinery) before
-    // timing: otherwise whichever query happens to run first absorbs ~5s
-    // of one-time session initialization and benches as a false hot spot.
-    // A warmup failure must not abort the bench — per-query timings are
-    // still meaningful (just with init billed to the first queries).
+  /** Warm up the JVM (codegen, parquet reader, shuffle machinery) before
+    * timing: otherwise whichever query happens to run first absorbs ~5s
+    * of one-time session initialization and benches as a false hot spot.
+    * A warmup failure must not abort the bench — per-query timings are
+    * still meaningful (just with init billed to the first queries). */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -48,6 +39,18 @@ object Bench {
         System.err.println(
           s"BENCH WARMUP FAIL: ${e.getClass.getName}: ${e.getMessage}")
     }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts, see Tables.t
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warmup(spark, sfDir)
     // optional comma-separated substring filter (local iteration, any
     // match); the driver passes no args
     val filt = args.headOption.getOrElse("")

@@ -22,29 +22,7 @@ object ProfileQueries {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warmup as Bench so the first profiled query is not billed init
-    try {
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-      val wtmp = TmpDirs.create("prof_warm")
-      spark.range(100).selectExpr("timestamp_micros(id) AS ts", "id")
-        .write.parquet(s"$wtmp/in")
-      for ((provider, tag) <- Seq(
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider" -> "hdfs",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider" -> "rocks")) {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        val q = spark.readStream.schema("ts TIMESTAMP, id BIGINT")
-          .parquet(s"$wtmp/in")
-          .groupBy(org.apache.spark.sql.functions.window(
-            org.apache.spark.sql.functions.col("ts"), "1 minute"))
-          .count()
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(s"prof_warmup_$tag").start()
-        q.processAllAvailable()
-        q.stop()
-        spark.catalog.dropTempView(s"prof_warmup_$tag")
-      }
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    } catch { case e: Throwable => System.err.println(s"warmup fail: $e") }
+    Bench.warmup(spark, sfDir)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()

@@ -126,7 +126,10 @@ object Replication {
     * never scans an unbounded epoch list. Returns the pass's
     * [[SyncProgress]]; rows/epochs come free from StreamingQueryProgress,
     * lastSeq from observations on the writes each micro-batch already
-    * makes — never a scan of the accumulated state.
+    * makes — never a scan of the accumulated state. Each epoch is
+    * staged under `ckptDir/_staging` and renamed into `stateDir`: keep
+    * `ckptDir` on `stateDir`'s filesystem, or every epoch is copied
+    * byte for byte instead of renamed.
     *
     * `fromSeq` is the reference's `--position`: start applying strictly
     * AFTER the given sequence number — consumed-but-skipped events count
@@ -184,8 +187,9 @@ object Replication {
     * `binlog_row_image=MINIMAL` stream: each batch completes into full
     * row images against the prior state at apply time (see
     * StreamingOps.completePartialImages), so the replica and every
-    * downstream consumer hold full rows. */
-  /** `ddlSql` is the RAW-TEXT alternative to the structured DDL
+    * downstream consumer hold full rows.
+    *
+    * `ddlSql` is the RAW-TEXT alternative to the structured DDL
     * arguments: the gap's `QueryEvent` statements as the binlog ships
     * them — `(binlog position, SQL text)` pairs — parsed and folded
     * onto `renameCols`/`defaultCols`/`dropCols`/`truncateAtSeq` by
@@ -309,8 +313,9 @@ object Replication {
     * group-partitioned snapshot (kept under `mvDir/_snap`). `enrich`
     * (sum mode only) joins each delta image against broadcast static
     * dimensions before grouping — the join-MV shape. Returns the pass's
-    * progress and the SERVED view. */
-  /** `renameCols`/`defaultCols` are the MV-across-DDL surface in BOTH
+    * progress and the SERVED view.
+    *
+    * `renameCols`/`defaultCols` are the MV-across-DDL surface in BOTH
     * modes — the same RENAME COLUMN / ADD COLUMN … DEFAULT declarations
     * [[incrementalSync]] takes. The state side stays lazy; a rename
     * hitting the view's group column migrates the O(groups) view
@@ -459,15 +464,6 @@ object Replication {
     def consistent: Boolean = groupsDiverged == 0
   }
 
-  /** Does the maintained SUM view still equal the group-by over the
-    * served state? The one divergence a correctly-running pass cannot
-    * prevent: a row-level REPAIR ([[repairSync]]) writes correction
-    * epochs straight into the state dir — the next MV batch's old-image
-    * lookup will read them, but the view's AGGREGATE was never adjusted
-    * by the correction delta, so the view is permanently off by exactly
-    * that delta until rebuilt. The operator flow is repair → check →
-    * [[viewRebuild]] if red. One aggregate scan of the state + one read
-    * of the O(groups) view, compared null-safe per group. */
   /** Fail loudly — by name — when `mvDir` does not hold a SUM view of
     * the expected (groupCol, n_rows, total) shape: a minMax-mode view
     * (n_rows, mn, mx) or a mismatched groupCol would otherwise surface
@@ -488,6 +484,15 @@ object Replication {
         "this is a different view")
   }
 
+  /** Does the maintained SUM view still equal the group-by over the
+    * served state? The one divergence a correctly-running pass cannot
+    * prevent: a row-level REPAIR ([[repairSync]]) writes correction
+    * epochs straight into the state dir — the next MV batch's old-image
+    * lookup will read them, but the view's AGGREGATE was never adjusted
+    * by the correction delta, so the view is permanently off by exactly
+    * that delta until rebuilt. The operator flow is repair → check →
+    * [[viewRebuild]] if red. One aggregate scan of the state + one read
+    * of the O(groups) view, compared null-safe per group. */
   def viewConsistencyCheck(spark: SparkSession, stateDir: String,
       mvDir: String, groupCol: String = "status"): ViewCheckReport = {
     requireSumView(mvDir, groupCol)
@@ -945,7 +950,10 @@ object Replication {
     * `stateDirs` maps each replicated table to its own state dir (tables
     * absent from the map are skipped — the TableFilter analogue);
     * compaction runs independently per table. Returns per-table
-    * [[SyncProgress]] (tables that saw no rows report zeros).
+    * [[SyncProgress]] (tables that saw no rows report zeros). Epochs
+    * are staged under `ckptDir/_staging` and renamed into each state
+    * dir: keep `ckptDir` on the state dirs' filesystem, or every epoch
+    * is copied byte for byte instead of renamed.
     *
     * `txnCol` enables transaction-boundary apply across the WHOLE
     * topology (the GTID case: one binlog transaction touching N tables):
@@ -976,8 +984,9 @@ object Replication {
     * tables whose PKs differ — a header table keyed by order id next
     * to a lines table keyed by (order id, line no) — and the single
     * fan-out job collapses each table under its own key (see
-    * StreamingOps.runCdcPassMulti). */
-  /** `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
+    * StreamingOps.runCdcPassMulti).
+    *
+    * `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
     * [[incrementalSync]]'s: the gap's QueryEvents fold through
     * [[streaming.DdlSql.foldTopology]] scoped to the replicated set —
     * column verbs fold ENVELOPE-WIDE (one binlog, one shared envelope,

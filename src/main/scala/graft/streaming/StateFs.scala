@@ -130,12 +130,7 @@ private[graft] object StateFs {
     if (!renamed)
       require(FileUtil.copy(sfs, sp, dfs, dp, true, conf(dp)),
         s"cannot move $src -> $dst")
-    // a WHOLE state dir can land at dst (table rename cutover) carrying
-    // its DDL gate files — a stale clean verdict memoized for that path
-    // would skip gates the arriving dir needs. Bumped AFTER the move is
-    // visible (see gateGen): a concurrent clean probe either sees the
-    // arrived files or fails the generation check at cache time.
-    bumpGate(normDir(dst))
+    bumpIfGated(dst)
   }
 
   /** Recursive directory COPY (source untouched) — the fixture-clone
@@ -144,8 +139,7 @@ private[graft] object StateFs {
     * other consumer replays the pristine original. Byte copy, no Spark
     * job, O(state bytes) — at harness scale milliseconds vs the
     * seconds of re-running the streaming sync it replaces. The
-    * destination must not exist. Like [[moveDir]], bumps the arriving
-    * path's DDL-gate generation. */
+    * destination must not exist. */
   def copyDir(src: String, dst: String): Unit = {
     val sp = new Path(src)
     val dp = new Path(dst)
@@ -156,7 +150,22 @@ private[graft] object StateFs {
     Option(dp.getParent).foreach(dfs.mkdirs(_))
     require(FileUtil.copy(sfs, sp, dfs, dp, false, conf(dp)),
       s"cannot copy $src -> $dst")
-    bumpGate(normDir(dst))
+    bumpIfGated(dst)
+  }
+
+  /** A WHOLE state dir can arrive at `dst` by [[moveDir]]/[[copyDir]]
+    * (table rename cutover, fixture clone) carrying its DDL gate files —
+    * a clean verdict memoized for that path would then skip gates the
+    * arriving dir needs. Only such a dir can turn the verdict stale, so
+    * one listing of its root decides: an epoch dir (every per-trigger
+    * move) bumps nothing and leaves no generation entry behind. Bumped
+    * AFTER the move is visible (see gateGen): a concurrent clean probe
+    * either sees the arrived files or fails the generation check at
+    * cache time. */
+  private def bumpIfGated(dst: String): Unit = {
+    val p = new Path(dst)
+    if (fs(p).listStatus(p).exists(st => DdlGateFiles(st.getPath.getName)))
+      bumpGate(normDir(dst))
   }
 
   /** Contents of a small control file, None when absent. */

@@ -117,11 +117,13 @@ object StreamingOps {
     * evolved envelope columns ride inside the max_by struct, so the
     * winning row's value (NULL for pre-DDL rows) is what survives.
     * `seq` stays globally monotone per FULL key, so max_by(seq) is
-    * total per key tuple exactly as in the single-column case. */
+    * total per key tuple exactly as in the single-column case. Every
+    * other envelope column (`okey` included, when a heterogeneous-PK
+    * topology groups on an encoded key instead) rides the struct. */
   private def collapse(df: DataFrame,
       keyCols: Seq[String] = Seq("okey")): DataFrame = {
-    val fields = (Seq("op", "price", "status", "ts", "seq") ++ extraCols(df))
-      .filterNot(keyCols.contains)
+    val fields = (Seq("op", "price", "status", "ts", "seq", "okey") ++
+      extraCols(df)).filterNot(keyCols.contains)
     df.groupBy(keyCols.map(col): _*)
       .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
       .select(keyCols.map(col) ++ fields.map(f => col("l." + f).as(f)): _*)
@@ -238,10 +240,11 @@ object StreamingOps {
         when(col("table") === t, bucketOf(ks)).otherwise(acc)
     }
 
-  /** The single-table pass's one table in the topology helpers
-    * ([[completePartialImages]], [[gateBeforeImages]]): the pass tags its
-    * batch `table = OneTable`, and the tag drops before anything is
-    * written. For one table [[tableKeyStruct]] is the plain key struct. */
+  /** The single-table pass's one table in [[runCdcBody]]: the pass
+    * tags its batch `table = OneTable`, and the partitioned staged write
+    * carries the tag in the dir name only. For one table
+    * [[tableKeyStruct]] is the plain key struct and [[tableBucket]] is
+    * [[bucketOf]]. */
   private val OneTable = "_"
 
   /** Materialize the bucket column on a state epoch write. Deliberately
@@ -1195,23 +1198,33 @@ object StreamingOps {
     Horizon(r.getLong(3 * i), opt(3 * i + 1), opt(3 * i + 2))
   }
 
+  private def horizonsAggs(df: DataFrame, wheres: Seq[Column]): Seq[Column] =
+    wheres.zipWithIndex.flatMap { case (w, i) => horizonAggs(df.schema, w, i) }
+
   /** One [[Horizon]] per predicate over `df`, all in ONE aggregate. */
   private def horizons(df: DataFrame, wheres: Seq[Column]): Seq[Horizon] = {
-    val aggs = wheres.zipWithIndex.flatMap { case (w, i) =>
-      horizonAggs(df.schema, w, i) }
+    val aggs = horizonsAggs(df, wheres)
     val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     wheres.indices.map(horizonAt(r, _))
   }
 
-  /** Attach a fresh per-batch [[org.apache.spark.sql.Observation]] of
-    * `df`'s [[Horizon]]; the returned reader blocks until the metrics
-    * arrive. PLACEMENT: the observed frame must feed a write the batch
-    * makes anyway, outside any persist()ed subplan (a cached subplan's
-    * metrics fire only when the cache builds), and the reader runs only
-    * after that write returns. The wait is bounded, so a misplaced
-    * observation fails the batch instead of hanging it. */
-  private def observeHorizon(df: DataFrame): (DataFrame, () => Horizon) =
-    observeAggs(df, horizonAggs(df.schema, lit(true), 0), horizonAt(_, 0))
+  /** [[horizons]] as a fresh per-batch
+    * [[org.apache.spark.sql.Observation]] of `df`; the returned reader
+    * blocks until the metrics arrive. PLACEMENT: the observed frame must
+    * feed a write the batch makes anyway, outside any persist()ed
+    * subplan (a cached subplan's metrics fire only when the cache
+    * builds), and the reader runs only after that write returns. The
+    * wait is bounded, so a misplaced observation fails the batch instead
+    * of hanging it. */
+  private def observeHorizons(df: DataFrame, wheres: Seq[Column])
+      : (DataFrame, () => Seq[Horizon]) =
+    observeAggs(df, horizonsAggs(df, wheres),
+      r => wheres.indices.map(horizonAt(r, _)))
+
+  private def observeHorizon(df: DataFrame): (DataFrame, () => Horizon) = {
+    val (o, h) = observeHorizons(df, Seq(lit(true)))
+    (o, () => h().head)
+  }
 
   private def observeHorizonIf(on: Boolean, df: DataFrame)
       : (DataFrame, Option[() => Horizon]) =
@@ -1327,27 +1340,61 @@ object StreamingOps {
     * dataBatches). The transport is a [[CdcSource]] plug — the file
     * impl in the harness, MemoryStream in StreamingSpec, Kafka+Debezium
     * in production — the apply machinery never changes. Progress is
-    * free: StreamingQueryProgress already carries per-batch input row
-    * counts — no extra job runs on the timed path. (The buffer is
-    * bounded — spark.sql.streaming.numRecentProgressUpdates, default
-    * 100 — plenty for the harness's ≤4-wave passes; a long-lived
-    * production stream would consume a StreamingQueryListener instead.) */
+    * free: every trigger's progress event already carries its input row
+    * count — no extra job runs on the timed path. The counts are summed
+    * by a listener ([[ProgressTally]]), not read from the query's
+    * `recentProgress`, which keeps only the last
+    * `spark.sql.streaming.numRecentProgressUpdates` (default 100)
+    * triggers — a longer catch-up would under-report. */
   private def runSourcePass(s: SparkSession, source: CdcSource, ckpt: String)(
       apply: (Dataset[Row], Long) => Unit): (Long, Long) = {
-    val query = withNoIdleBatch(s) {
-      source.open(s)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-          withBatchShuffle(s, batch) { apply(batch, epochId) }
-        }
-        .start()
+    // the query runs on the session of the frame the source returns (a
+    // source may ignore `s`), so the tally listens on THAT session's bus
+    val df = source.open(s)
+    val streams = df.sparkSession.streams
+    val tally = new ProgressTally
+    streams.addListener(tally)
+    try {
+      val query = withNoIdleBatch(s) {
+        df.writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+            withBatchShuffle(s, batch) { apply(batch, epochId) }
+          }
+          .start()
+      }
+      try query.processAllAvailable() finally query.stop()
+      tally.await(query.runId)
+    } finally streams.removeListener(tally)
+  }
+
+  /** (input rows, batches with input) per query run, summed from the
+    * listener bus. A run's events arrive in order, so once its
+    * termination event is in, every progress event of it has been
+    * counted; [[await]] blocks until then (bounded, like an
+    * observation's wait). */
+  private final class ProgressTally
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    private val sums = scala.collection.mutable.Map.empty[java.util.UUID, (Long, Long)]
+    private val ended = scala.collection.mutable.Set.empty[java.util.UUID]
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = synchronized {
+      val n = e.progress.numInputRows
+      val (rows, batches) = sums.getOrElse(e.progress.runId, (0L, 0L))
+      sums(e.progress.runId) = (rows + n, batches + (if (n > 0) 1L else 0L))
     }
-    query.processAllAvailable()
-    val rows = query.recentProgress.map(_.numInputRows).sum
-    val epochs = query.recentProgress.count(_.numInputRows > 0).toLong
-    query.stop()
-    (rows, epochs)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      synchronized { ended += e.runId; notifyAll() }
+    def await(run: java.util.UUID): (Long, Long) = synchronized {
+      val deadline = System.nanoTime() + 600L * 1000000000L
+      while (!ended(run)) {
+        val left = (deadline - System.nanoTime()) / 1000000L
+        require(left > 0, s"no termination event for stream run $run")
+        wait(left)
+      }
+      sums.getOrElse(run, (0L, 0L))
+    }
   }
 
   /** The pre-stream step both CDC passes share: refuse a malformed
@@ -1455,92 +1502,43 @@ object StreamingOps {
     dirs.foreach(applyDefaultDdl(_, defaultCols, stateSchema))
   }
 
-  /** `trackSeq` additionally reports the newest `seq` applied BY THIS
-    * PASS (only the Replication facade turns it on; the benchmarked
-    * queries never pay it). The bookkeeping is OBSERVED, never an action
-    * of its own: the applied horizon and row count are an
-    * [[org.apache.spark.sql.Observation]] on the epoch delta write; the
-    * pending tail, the heartbeat cap, and — when the gate sees the raw
-    * batch — the seen and commit-marker horizons are observations on
-    * the txn gate's carry write. Only a pass that drops or folds raw
-    * events outside a gate (start position, heartbeats, row filter,
-    * strict gate, partial images) adds ONE combined aggregate over the
-    * pinned raw batch. A txn-gated micro-batch therefore runs two
-    * actions (carry write, delta write), an ungated one just the delta
-    * write. A batch consumed by more than one action inside
-    * foreachBatch MUST be persisted first: each extra action otherwise
-    * re-reads the file source, which both doubles the work and inflates
-    * the source's numInputRows metric (observed: rowsApplied exactly
-    * 2x).
+  /** Single-table CDC pass: the one-table topology of [[runCdcBody]].
+    * The batch's table column is the constant [[OneTable]], the pending
+    * tail lives under `state/_pending`, and every epoch lands as
+    * `state/epoch=N`.
+    *
+    * `trackSeq` turns on position bookkeeping (only the Replication
+    * facade does; the benchmarked queries never pay it): the applied and
+    * seen horizons below, and the `_lag` marks ([[writeLagMarks]]).
     *
     * `startAfterSeq` is the reference's explicit-position start
     * (`--position`/GTID): events at or below the position are consumed
     * from the stream (rowsApplied still reports consumption) but never
-    * applied to state, epochs left fully below the position keep no
-    * delta at all (a batch whose observed applied row count is zero —
-    * skipped, held pending, filtered, heartbeat-only, or quarantined —
-    * drops the delta it just wrote; a replay rewrites and re-drops it),
-    * and the returned epoch count is the number of deltas actually KEPT
-    * (not batches consumed).
+    * applied to state. `heartbeats` declares that the transport emits
+    * binlog KEEP-ALIVE rows (`op = "H"`, position-only): they never reach
+    * state and advance the applied position like a commit marker (the
+    * source's "nothing happened through here"). Under transaction gating
+    * that advance is CAPPED at the oldest still-pending event — a
+    * keep-alive cannot resolve a held transaction, so a connector that
+    * interleaves a heartbeat ahead of events it already shipped cannot
+    * fake a caught-up position that a fresh resume would then skip from.
     *
-    * `txnCol` turns on TRANSACTION-BOUNDARY apply (the GTID/XID
-    * analogue): events carry a transaction id in the named column and a
-    * transaction's end is marked by an `op = "C"` commit row (the binlog
-    * XID event; markers always FOLLOW their transaction's events in seq
-    * order). Each batch applies only events whose commit marker has been
-    * seen; the uncommitted tail is carried in an epoch-keyed pending
-    * snapshot under `state/_pending` (underscore-hidden from state
-    * reads), so a reader of the state dir can never observe a
-    * half-applied transaction — and an at-least-once replay of epoch k
-    * re-reads the SAME pending snapshot (the one written by the last
-    * epoch BELOW k), making the recomputed delta identical to the
-    * crashed attempt's. Commit markers are consumed the batch they
-    * arrive (their events are guaranteed present — in-batch or pending)
-    * and are never applied as rows; the committed-id set per batch is a
-    * handful of ids, so both the ready- and carry-joins broadcast.
+    * `renameCols`, `truncateAtSeq` and `defaultCols` declare RENAME
+    * COLUMN, TRUNCATE TABLE and `ADD COLUMN … DEFAULT` DDLs
+    * ([[applyRenameDdl]], [[applyTruncateDdl]], [[ColumnDefault]]).
+    * `rowFilter`/`maskCols` are the one-table forms of the topology's
+    * per-table filters and masks. `strictBefore` = (payload column,
+    * before column) turns on the strict before-image gate, quarantining
+    * conflicts to `conflictDlq`; it and `partialImageCol` are mutually
+    * exclusive (MINIMAL row images carry no before images).
     *
-    * `renameCols` (old → new) declares RENAME COLUMN DDLs this pass's
-    * envelope carries (see [[applyRenameDdl]]): the published column is
-    * renamed in place and its epoch history keeps serving under the new
-    * name. `truncateAtSeq` declares a `TRUNCATE TABLE` QueryEvent at the
-    * given binlog position (see [[applyTruncateDdl]]): every event at or
-    * below it is dead at read time, events after it rebuild the table.
-    * `defaultCols` declares `ADD COLUMN … DEFAULT` clauses (see
-    * [[ColumnDefault]]): pre-DDL rows serve the default instead of NULL.
-    * `rowFilter`/`maskCols` are the single-table forms of the multi
-    * pass's per-table filters ([[runCdcPassMulti]]): only matching
-    * events replicate — deletes ALWAYS bypass the predicate — and masked
-    * payload columns ship as NULL. `heartbeats` declares that the
-    * transport emits binlog KEEP-ALIVE rows (`op = "H"`, position-only):
-    * they never reach state, they advance the applied position like a
-    * commit marker (the source's "nothing happened through here"), and a
-    * heartbeat-only batch writes no delta. Under transaction gating the
-    * advance is CAPPED at the oldest still-pending event — a keep-alive
-    * cannot resolve a held transaction, so a connector that interleaves
-    * a heartbeat ahead of events it already shipped cannot fake a
-    * caught-up position that a fresh resume would then skip from.
-    *
-    * `strictBefore` = (payload column, before column) turns on the
-    * STRICT before-image apply gate ([[gateBeforeImages]]): every
-    * UPDATE's declared before image must match what the destination
-    * serves, or the event (and the key's remaining batch chain)
-    * quarantines to `conflictDlq` instead of applying — MySQL's strict
-    * slave-exec discipline against out-of-order applies and second
-    * destination writers. Mutually exclusive with `partialImageCol`
-    * (MINIMAL row images carry no before images by definition). Partial
-    * images and the strict gate run through the topology helpers as the
-    * one-table topology ([[OneTable]]).
-    *
-    * Returns the pass's [[SyncProgress]]: rows consumed, deltas kept,
-    * the max applied seq, and pendingRows — the txn-gated pass's
-    * uncommitted tail size after the pass (0 when gating is off): the
-    * operational signal for an ABANDONED transaction pinning pending
-    * state forever. sourceMaxSeq (tracked under `trackSeq`, like the
-    * applied seq) is the newest seq the pass SAW — applied or not — so
-    * its lag reads as REPLICATION LAG: it keeps advancing while a
-    * pending transaction, a start position, or a row filter holds
-    * events back from state, exactly the binlog-position-vs-applied-
-    * position gap a replication operator watches. */
+    * Returns the pass's [[SyncProgress]]: rows consumed, deltas kept, the
+    * applied POSITION — resolved through commit markers, heartbeats,
+    * position-skipped, filter-excluded and quarantined events — the
+    * uncommitted tail after the pass (0 when gating is off: the signal
+    * for an ABANDONED transaction pinning pending state forever) and the
+    * newest seq SEEN, so lag reads as REPLICATION LAG while a pending
+    * transaction, a start position, or a row filter holds events back. */
   private[graft] def runCdcPass(s: SparkSession, source: CdcSource,
       ckpt: String, state: String,
       trackSeq: Boolean = false,
@@ -1580,171 +1578,326 @@ object StreamingOps {
     }
     val one = Map(OneTable -> state)
     val oneKey = Map(OneTable -> keyCols)
+    val filters = rowFilter.map(OneTable -> _).toMap
+    val masks = if (maskCols.isEmpty) Map.empty[String, Seq[String]]
+      else Map(OneTable -> maskCols)
     declareCdcPass(source, one, oneKey, topology = false, txnCol,
       renameCols, truncateAtSeq.map(OneTable -> _).toMap, defaultCols,
-      rowFilter.map(OneTable -> _).toMap,
-      if (maskCols.isEmpty) Map.empty else Map(OneTable -> maskCols),
-      dropCols, keepHistory, partialImageCol, strictBefore, conflictDlq,
-      computedFields)
+      filters, masks, dropCols, keepHistory, partialImageCol, strictBefore,
+      conflictDlq, computedFields)
+    val run = runCdcBody(s, source, ckpt, one, oneKey, lit(OneTable),
+      pendRoot = state, untag = Seq("table"), trackSeq, startAfterSeq,
+      txnCol, filters, masks, keepHistory, computedCols, partialImageCol,
+      heartbeats, strictBefore, conflictDlq)
+    // persist the time horizons with the state they describe — read by
+    // replicaStatus as secondsBehindSource (monotone max-merge, so a
+    // re-run pass can only confirm progress, never regress it)
+    if (trackSeq) writeLagMarks(state, run.pos.appliedTs, run.pos.seenTs)
+    SyncProgress(run.consumed, run.tables(OneTable).epochs, run.pos.applied,
+      run.pendingRows, run.pos.seen)
+  }
+
+  /** Multi-table CDC pass (SURVEY §3.1 #2): ONE ordered change stream
+    * whose envelope carries a `table` column fans out to per-table
+    * destination state dirs — the reference tool tails one binlog and
+    * applies to N ClickHouse tables the same way ([[runCdcBody]]).
+    * Tables not in `stateDirs` are dropped (the TableFilter analogue).
+    * Each per-table state dir keeps the single-table layout, so
+    * compaction and read-time collapse reuse
+    * [[compactState]]/[[readLatestState]] unchanged.
+    *
+    * `routes` maps SOURCE table names in the envelope onto DESTINATION
+    * names — N sources routing to one destination merge shards (the
+    * caller's contract is that merged shards' key spaces are disjoint,
+    * the standard sharded setup). Every per-table option (`stateDirs`,
+    * `rowFilters`, `maskCols`, `keyColsByTable`, `truncateAt`) is keyed
+    * by DESTINATION name. `keyColsByTable` declares PER-TABLE primary
+    * keys (tables absent from it use `keyCols`): one binlog fans out to
+    * tables whose PKs differ (a header table keyed by order id next to a
+    * lines table keyed by (order id, line no)); each state dir publishes
+    * ITS OWN `_keycols`. A rename, drop or default DDL is envelope-wide
+    * (one binlog, one DDL, every table's state dir); a truncate
+    * (`truncateAt`, table → binlog position) targets one table.
+    *
+    * Under `txnCol` the gate spans the whole topology — the one-binlog →
+    * N-tables GTID case: a transaction's events may span several tables,
+    * its `op = "C"` commit marker is a single topology-level row, and
+    * every touched table applies its slice in the SAME epoch, so no
+    * per-table reader sees a partial transaction and no cross-table
+    * reader sees one table a batch ahead of another. The uncommitted
+    * tail is ONE snapshot under `ckpt/_pending`: pending epochs are keyed
+    * by the checkpoint's batch ids, so co-locating them keeps the two
+    * lifecycles inseparable (delete the checkpoint → epoch ids restart →
+    * the pending tail must reset with it).
+    *
+    * Returns one [[SyncProgress]] per table in `stateDirs` (zeros for a
+    * table that saw no rows): rowsApplied counts rows APPLIED to that
+    * table (an event consumed in epoch k but committed in epoch k+2
+    * counts once, at apply time), lastSeq is the newest seq applied to
+    * it, pendingRows the TOPOLOGY-level tail, and sourceMaxSeq (under
+    * `trackSourceSeq`, the facade's flag) the newest seq the pass SAW —
+    * one binlog, one number — so each table's lag reads as its
+    * replication lag while a transaction is pending. */
+  private[graft] def runCdcPassMulti(s: SparkSession, source: CdcSource,
+      ckpt: String, stateDirs: Map[String, String],
+      txnCol: Option[String] = None,
+      renameCols: Map[String, String] = Map.empty,
+      truncateAt: Map[String, Long] = Map.empty,
+      defaultCols: Map[String, ColumnDefault] = Map.empty,
+      rowFilters: Map[String, String] = Map.empty,
+      maskCols: Map[String, Seq[String]] = Map.empty,
+      keyCols: Seq[String] = Seq("okey"),
+      trackSourceSeq: Boolean = false,
+      keyColsByTable: Map[String, Seq[String]] = Map.empty,
+      dropCols: Map[String, Long] = Map.empty,
+      keepHistory: Boolean = false,
+      routes: Map[String, String] = Map.empty,
+      partialImageCol: Option[String] = None,
+      strictBefore: Option[(String, String)] = None,
+      conflictDlq: Option[String] = None): Map[String, SyncProgress] = {
+    // typos fail loudly both ways: a route must land on a replicated
+    // table, and a routed-away source name must not itself be replicated
+    // (its events would silently split between two dirs) — which also
+    // makes routing idempotent on destination names
+    require(routes.values.forall(stateDirs.contains),
+      s"route target(s) not replicated: " +
+        routes.values.filterNot(stateDirs.contains).toSeq.distinct.sorted
+          .mkString(", "))
+    require(!routes.keys.exists(stateDirs.contains),
+      s"route source(s) also declared as destination table(s): " +
+        routes.keys.filter(stateDirs.contains).toSeq.sorted.mkString(", "))
+    require(keyColsByTable.keySet.subsetOf(stateDirs.keySet),
+      s"per-table key declared for unreplicated table(s): " +
+        s"${(keyColsByTable.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
+    val keyFor: Map[String, Seq[String]] =
+      stateDirs.keys.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
+    declareCdcPass(source, stateDirs, keyFor, topology = true, txnCol,
+      renameCols, truncateAt, defaultCols, rowFilters, maskCols, dropCols,
+      keepHistory, partialImageCol, strictBefore, conflictDlq)
+    // one scan-local codegen'd CASE renames source tables to destinations
+    val table = routes.foldLeft(col("table")) { case (acc, (src, dst)) =>
+      when(col("table") === src, lit(dst)).otherwise(acc) }
+    val run = runCdcBody(s, source, ckpt, stateDirs, keyFor, table,
+      pendRoot = ckpt, untag = Nil, trackSourceSeq, startAfterSeq = None,
+      txnCol, rowFilters, maskCols, keepHistory, computedCols = Nil,
+      partialImageCol, heartbeats = false, strictBefore, conflictDlq)
+    run.tables.transform((_, p) =>
+      p.copy(pendingRows = run.pendingRows, sourceMaxSeq = run.pos.seen))
+  }
+
+  /** [[runCdcBody]]'s result: rows consumed, per declared table its rows
+    * applied, deltas kept and newest applied seq (zeros for a table that
+    * saw no rows), the pass position, and the uncommitted tail after the
+    * pass. */
+  private final case class CdcRun(consumed: Long,
+      tables: Map[String, SyncProgress], pos: PassPosition, pendingRows: Long)
+
+  /** The ONE CDC micro-batch body behind [[runCdcPass]] and
+    * [[runCdcPassMulti]]: a stream whose `table` column (the entry's
+    * `table` expression) fans out to `stateDirs`. Per batch, in order:
+    *  - events at or below `startAfterSeq` drop, and so do keep-alive
+    *    rows under `heartbeats`;
+    *  - the transaction gate ([[txnGate]], pending tail under `pendRoot`)
+    *    applies only events whose commit marker has arrived. Markers
+    *    always FOLLOW their transaction's events, resolve the batch they
+    *    arrive and never apply as rows; a replay of epoch k re-reads the
+    *    snapshot the crashed attempt read (the newest one BELOW k), so it
+    *    recomputes the identical ready set, and no reader ever observes a
+    *    half-applied transaction;
+    *  - the table column is set right AFTER the gate, so a pending
+    *    snapshot holds the stream's own columns;
+    *  - partial-image completion ([[completePartialImages]]) and the
+    *    strict before-image gate ([[gateBeforeImages]]; `untag` drops
+    *    from its DLQ) run against each table's own prior state, before
+    *    filters and masks, so every later stage sees full rows;
+    *  - per-table row filters — deletes ALWAYS bypass the predicate (a
+    *    filtered tombstone for a key whose insert matched would serve a
+    *    deleted row forever; filter on effectively-immutable columns) —
+    *    and masks (a masked value never leaves the source side), then
+    *    computed columns. Filters run after the gate: the pending tail
+    *    carries a transaction's events unfiltered, and a filter change
+    *    between passes applies to not-yet-committed history;
+    *  - ONE [[org.apache.spark.sql.Observation]] on that frame yields
+    *    each declared table's (rows, max seq, max ts) and the total's;
+    *    the frame, limited to the declared tables, collapses per (table,
+    *    key) ([[collapse]]; retained history and completed batches are
+    *    already what lands) into ONE `partitionBy("table")` write under
+    *    `ckpt/_staging` — one Spark job however many tables;
+    *  - each table the observation saw rows for moves its staged
+    *    `table=` dir into its state dir as `epoch=N`: delete-then-rename,
+    *    so a replayed epoch heals a crashed attempt. A table without rows
+    *    wrote no dir and keeps no epoch. The move is a metadata rename
+    *    only when `ckpt` and the state dirs share a filesystem; across
+    *    filesystems [[StateFs.moveDir]] copies bytes and deletes the
+    *    stage (doubled write I/O, and the epoch appears file by file), so
+    *    keep the checkpoint on the state's filesystem.
+    *
+    * Bookkeeping is OBSERVED, never an action of its own: the applied
+    * horizon rides the staged write; the pending tail, the heartbeat cap
+    * and — when the gate sees the raw batch — the seen and commit-marker
+    * horizons ride the gate's carry write. Only a `trackSeq` pass that
+    * drops or folds raw events outside the gate (start position,
+    * heartbeats, row filter, strict gate, partial images) adds ONE
+    * aggregate over the raw batch. A txn-gated micro-batch therefore
+    * runs two actions (carry write, staged write), an ungated one just
+    * the staged write. A batch read by more than one action is persisted
+    * first: each extra action would otherwise re-read the file source,
+    * doubling the work and inflating its numInputRows (observed:
+    * rowsApplied exactly 2x). */
+  private def runCdcBody(s: SparkSession, source: CdcSource, ckpt: String,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      table: Column, pendRoot: String, untag: Seq[String],
+      trackSeq: Boolean, startAfterSeq: Option[Long], txnCol: Option[String],
+      rowFilters: Map[String, String], maskCols: Map[String, Seq[String]],
+      keepHistory: Boolean, computedCols: Seq[(String, String)],
+      partialImageCol: Option[String], heartbeats: Boolean,
+      strictBefore: Option[(String, String)], conflictDlq: Option[String])
+      : CdcRun = {
+    val declared = stateDirs.keys.toSeq.sorted
+    val tables = scala.collection.mutable.Map(
+      declared.map(_ -> SyncProgress(0L, 0L, None)): _*)
     val pos = new PassPosition
-    var written = 0L
     // the last batch's uncommitted tail, observed on its carry write
     var pending = Option.empty[Long]
-    // a batch that may apply nothing (every event position-skipped,
-    // held pending, filtered, a heartbeat, or quarantined) writes its
-    // delta and DROPS it when the observed row count is zero — no
-    // emptiness probe; a replay rewrites and re-drops identically
-    val mayApplyNothing = startAfterSeq.isDefined || txnCol.isDefined ||
-      rowFilter.isDefined || heartbeats || strictBefore.isDefined
-    // the seen horizon equals the applied one unless something between
-    // the raw batch and the delta drops, holds, or folds events. A txn
-    // gate fed the raw batch observes it on its carry write; otherwise
-    // ONE combined aggregate over the pinned raw batch computes it
+    // the seen horizon equals the observed total unless something
+    // between the raw batch and the observation drops, holds, or folds
+    // events (the declared-table filter runs after it). A txn gate fed
+    // the raw batch observes it on its carry write; otherwise ONE
+    // combined aggregate over the pinned raw batch computes it
     val rawAtGate = txnCol.isDefined && startAfterSeq.isEmpty && !heartbeats
-    val rawAgg = trackSeq && !rawAtGate &&
-      (mayApplyNothing || partialImageCol.isDefined)
-    // a batch consumed by >1 action must be pinned (see the note above):
-    // the raw aggregate, and the prior-image probes of completion and
-    // the strict gate, each read the batch beside the delta write
+    val rawAgg = trackSeq && !rawAtGate && (startAfterSeq.isDefined ||
+      txnCol.isDefined || rowFilters.nonEmpty || heartbeats ||
+      strictBefore.isDefined || partialImageCol.isDefined)
+    // the raw aggregate and the prior-image probes of completion and the
+    // strict gate each read the batch beside the staged write
     val multiAction = rawAgg || partialImageCol.isDefined ||
       strictBefore.isDefined
     val (rows, _) = runSourcePass(s, source, ckpt) { (batch, epochId) =>
       if (multiAction) batch.persist()
-      var txnFull = Option.empty[DataFrame] // txn path's extra pin
-      var partialPinned = Option.empty[DataFrame]
-      var strictPinned = Option.empty[DataFrame]
+      val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       try {
         val positioned0 = startAfterSeq
-          .map(p => batch.filter(col("seq") > p)).getOrElse(batch)
-        // HEARTBEAT events (the binlog keep-alive rows a long-polling
-        // connector emits on a quiet source): op = "H" rows carry a
-        // position and nothing else — they must never reach state (a
-        // NULL-key phantom row) but DO advance the applied position
-        // below, exactly like a commit marker: the source is declaring
-        // "nothing happened through here", which is the caught-up
-        // signal a replication operator reads. Filtered BEFORE the txn
-        // gate (a heartbeat belongs to no transaction).
+          .fold(batch.toDF())(p => batch.filter(col("seq") > p))
+        // HEARTBEAT events (`op = "H"`, position only) must never reach
+        // state (a NULL-key phantom row); filtered BEFORE the txn gate —
+        // a heartbeat belongs to no transaction
         val positioned = if (!heartbeats) positioned0
           else positioned0.filter(col("op") =!= "H")
-        // replay-deterministic input: this batch plus the pending
-        // snapshot of the newest epoch BELOW this one (never this
-        // epoch's own — a crashed attempt must re-read what its first
-        // attempt read)
         val gate = txnCol.map(tc =>
-          txnGate(s, positioned.toDF(), tc, state, epochId))
-        gate.foreach { g => txnFull = Some(g.full); pending = Some(g.pendingRows) }
-        val gatedTxn = gate.fold(positioned.toDF())(_.ready)
+          txnGate(s, positioned, tc, pendRoot, epochId))
+        gate.foreach { g => pins += g.full; pending = Some(g.pendingRows) }
+        val entry = gate.fold(positioned)(_.ready).withColumn("table", table)
         // the RESOLVED-but-not-applied horizon of filter-excluded or
-        // quarantined events: observed on the delta write just ahead of
-        // the row filter / admitted filter (see its placement below)
+        // quarantined events: observed just ahead of the row filter or
+        // the strict gate's admitted filter
         var resolvedObs = Option.empty[() => Horizon]
         def observeResolved(df: DataFrame): DataFrame =
           if (!trackSeq) df
           else { val (o, h) = observeHorizon(df); resolvedObs = Some(h); o }
-        // completion and the strict gate are the topology helpers' one-
-        // table case: the batch carries the one table's name as `table`,
-        // dropped again before anything else sees it
-        def tagged(df: DataFrame) = df.withColumn("table", lit(OneTable))
-        // MINIMAL row images complete BEFORE filters/masks/computed
-        // columns, so every later stage sees FULL rows — a row filter
-        // or computed column referencing an unchanged column must see
-        // its carried value, never a partial event's NULL
-        // pinned: the completed frame feeds the prior-image probe and
-        // the epoch write — without the cache each action re-runs the
+        // pinned: the completed frame feeds the prior-image probe and the
+        // staged write — without the cache each action re-runs the
         // prior-state read and the completion shuffle
-        val completed = partialImageCol match {
-          case None => gatedTxn
-          case Some(cc) =>
-            val c = completePartialImages(s, one, oneKey, epochId,
-              tagged(gatedTxn), cc).drop("table").persist()
-            partialPinned = Some(c)
-            c
+        val completed = partialImageCol.fold(entry) { cc =>
+          val c = completePartialImages(s, stateDirs, keyFor, epochId,
+            entry, cc).persist()
+          pins += c
+          c
         }
-        // STRICT BEFORE-IMAGE gate after completion (full rows), before
-        // filters/masks — a conflict is a property of the source chain
-        // vs the destination, not of what this replica chooses to ship.
-        // Quarantined conflicts are resolved the batch they verdict:
-        // they will never apply (the operator reads them in the DLQ),
-        // so the applied position advances past them — the observation
-        // wraps the verdicted frame ahead of the admitted filter
-        val checked = strictBefore match {
-          case None => completed
-          case Some((pc, bc)) =>
-            val (admitted, pin) = gateBeforeImages(s, one, oneKey, epochId,
-              tagged(completed), pc, bc, conflictDlq.get,
-              observe = observeResolved, untag = Seq("table"))
-            strictPinned = Some(pin)
-            admitted
+        // quarantined conflicts are resolved the batch they verdict: they
+        // will never apply (the operator reads them in the DLQ)
+        val checked = strictBefore.fold(completed) { case (pc, bc) =>
+          val (admitted, pin) = gateBeforeImages(s, stateDirs, keyFor,
+            epochId, completed, pc, bc, conflictDlq.get,
+            observe = observeResolved, untag = untag)
+          pins += pin
+          admitted
         }
-        // single-table row filter + masks (the multi pass's per-table
-        // forms): one codegen'd filter, one select — deletes bypass.
-        // Filter-excluded events are resolved too: the predicate says
-        // they will never apply, which is configuration, not lag — their
-        // horizon is the pre-filter frame's. A completed frame is pinned
-        // and collapses per key (its ts horizon is the winners', not the
-        // events'), so there the ready events take one aggregate instead
-        val filtered = rowFilter.fold(checked) { p =>
+        // ONE codegen'd filter and ONE select over the batch, never a job
+        // per table. Filter-excluded events are resolved too (the
+        // predicate says they will never apply — configuration, not
+        // lag). A completed frame is pinned and collapsed per key (its ts
+        // horizon is the winners', not the events'), so there the ready
+        // events take one aggregate instead
+        val filtered = if (rowFilters.isEmpty) checked else {
           val pre =
             if (partialImageCol.isEmpty) observeResolved(checked)
             else {
-              if (trackSeq) pos.resolve(horizons(gatedTxn, Seq(lit(true))).head)
+              if (trackSeq) pos.resolve(horizons(entry, Seq(lit(true))).head)
               checked
             }
-          pre.filter(col("op") === "D" || expr(p))
+          pre.filter(rowFilters.foldLeft(lit(true)) { case (acc, (t, p)) =>
+            acc && (col("table") =!= t || col("op") === "D" || expr(p))
+          })
         }
         val masked =
           if (maskCols.isEmpty) filtered
           else filtered.select(filtered.columns.toSeq.map { c =>
-            if (maskCols.contains(c))
-              lit(null).cast(filtered.schema(c).dataType).as(c)
-            else col(c)
+            val maskers = maskCols.collect {
+              case (t, cs) if cs.contains(c) => t }.toSeq
+            if (maskers.isEmpty) col(c)
+            else when(col("table").isin(maskers: _*),
+              lit(null).cast(filtered.schema(c).dataType))
+              .otherwise(col(c)).as(c)
           }: _*)
-        // computed columns AFTER masks (privacy: a computed value must
-        // not leak a masked source column) — scan-local, codegen'd
-        val applied0 = computedCols.foldLeft(masked) {
-          case (df, (n, e)) => df.withColumn(n, expr(e))
-        }
-        // the applied horizon (and the row count that decides whether
-        // the delta stays) rides on the delta write itself
-        val (applied, appliedObs) =
-          observeHorizonIf(trackSeq || mayApplyNothing, applied0)
+        val (applied, observed) = observeHorizons(
+          computedCols.foldLeft(masked) { case (df, (n, e)) =>
+            df.withColumn(n, expr(e)) },
+          declared.map(col("table") === _) :+ lit(true))
+        // evolved envelope columns (mid-stream DDL) ride through
+        val routed = applied
+          .select((envelopeCols ++ extraCols(applied) :+ "table").map(col): _*)
+          .filter(col("table").isin(declared: _*))
+        val keys = keyFor.values.toSeq.distinct
         // default: fold the batch to per-key winners before writing —
-        // the delta then costs O(keys touched), not O(events), and
-        // the read-side collapse is unchanged. keepHistory skips the
-        // fold (events land verbatim) so as-of reads keep EVENT
-        // granularity — the retention trade a time-traveling replica
-        // opts into, exactly like retaining binlogs.
-        val epochDir = s"$state/epoch=$epochId"
-        bucketed(
-          if (keepHistory || partialImageCol.isDefined) envelope(applied)
-          else collapse(envelope(applied), keyCols), keyCols)
-          .write.mode("overwrite").parquet(epochDir)
-        val appliedH = appliedObs.map(_())
-        if (mayApplyNothing && appliedH.exists(_.rows == 0L))
-          StateFs.deleteRecursive(epochDir)
-        else written += 1
+        // the delta costs O(keys touched), not O(events). keepHistory
+        // lands events verbatim (as-of reads keep EVENT granularity, the
+        // retention trade a time-traveling replica opts into), and a
+        // completed batch is one row per key already. Heterogeneous PKs
+        // group on each row's key under ITS table's definition
+        // ([[tableKeyStruct]]), still in ONE job, and keep the envelope's
+        // column order
+        val collapsed =
+          if (keepHistory || partialImageCol.isDefined) routed
+          else if (keys.size == 1) collapse(routed, "table" +: keys.head)
+          else collapse(routed.withColumn("__key",
+            tableKeyStruct(keyFor, routed.schema)), Seq("table", "__key"))
+            .select(routed.columns.map(col): _*)
+        val epochStage = s"$ckpt/_staging/epoch=$epochId"
+        // the writer percent-escapes special chars in partition dir
+        // names — the staged dir lives under the ESCAPED name
+        def staged(t: String) = s"$epochStage/table=" + org.apache.spark.sql
+          .catalyst.catalog.ExternalCatalogUtils.escapePathName(t)
+        collapsed.withColumn(BucketCol, tableBucket(keyFor))
+          .write.mode("overwrite").partitionBy("table").parquet(epochStage)
+        val hs = observed()
+        declared.zip(hs).filter(_._2.rows > 0L).foreach { case (t, h) =>
+          val dest = s"${stateDirs(t)}/epoch=$epochId"
+          StateFs.deleteRecursive(dest)
+          StateFs.moveDir(staged(t), dest)
+          val p = tables(t)
+          tables(t) = SyncProgress(p.rowsApplied + h.rows, p.epochs + 1L,
+            (p.lastSeq ++ h.seq).maxOption)
+        }
+        // the moves emptied the stage of everything but write metadata
+        StateFs.deleteRecursive(epochStage)
         if (trackSeq) {
-          appliedH.foreach(pos.resolve)
+          pos.resolve(hs.last)
           resolvedObs.foreach(h => pos.resolve(h()))
           if (rawAtGate) gate.foreach { g =>
             // commit markers resolve the batch they arrive: their txn's
             // events are applied by this batch (in-batch or carried)
             pos.see(g.input); pos.resolve(g.markers)
-          } else if (!rawAgg) appliedH.foreach(pos.see)
+          } else if (!rawAgg) pos.see(hs.last)
           else {
             // the applied POSITION also advances through RESOLVED raw
-            // events that never reach state: commit markers (see above),
-            // events the start position covers (applied by definition),
-            // and heartbeats (the source declares itself caught up) —
-            // without them a caught-up destination reads a permanent
-            // phantom lag. A heartbeat must never advance the position
-            // past HELD events: under the txn gate only heartbeats below
-            // the oldest still-pending event resolve — position
+            // events that never reach state: commit markers, events the
+            // start position covers (applied by definition), and
+            // heartbeats below the oldest still-pending event (position
             // integrity must not TRUST the connector's ordering, or a
-            // fresh resume would skip the held transaction. The SEEN
-            // horizon reads the raw batch — before the position skip,
-            // the txn gate, and the row filter — so replication lag
-            // stays visible while events are held. One aggregate
+            // fresh resume would skip the held transaction) — without
+            // them a caught-up destination reads a permanent phantom
+            // lag. The SEEN horizon reads the raw batch, so replication
+            // lag stays visible while events are held. One aggregate
             // computes both.
             val resolvedRaw = Seq(
               txnCol.map(_ => col("op") === "C"),
@@ -1752,26 +1905,20 @@ object StreamingOps {
               else Some(gate.flatMap(_.pendingMinSeq).fold(col("op") === "H")(
                 m => col("op") === "H" && col("seq") < m)),
               startAfterSeq.map(p => col("seq") <= p)).flatten
-            val hs = horizons(batch.toDF(),
+            val raw = horizons(batch.toDF(),
               lit(true) +: resolvedRaw.reduceOption(_ || _).toSeq)
-            pos.see(hs.head)
-            hs.tail.foreach(pos.resolve)
+            pos.see(raw.head)
+            raw.tail.foreach(pos.resolve)
           }
         }
       } finally {
-        txnFull.foreach(_.unpersist())
-        partialPinned.foreach(_.unpersist())
-        strictPinned.foreach(_.unpersist())
+        pins.foreach(_.unpersist())
         if (multiAction) { batch.unpersist(); () }
       }
     }
-    // persist the time horizons with the state they describe — read by
-    // replicaStatus as secondsBehindSource (monotone max-merge, so a
-    // re-run pass can only confirm progress, never regress it)
-    if (trackSeq) writeLagMarks(state, pos.appliedTs, pos.seenTs)
     // a pass that ran no batch wrote no carry: read the standing tail
-    SyncProgress(rows, written, pos.applied,
-      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
+    CdcRun(rows, tables.toMap, pos,
+      pending.getOrElse(pendingCount(s, pendRoot, txnCol)))
   }
 
   /** Size of the uncommitted pending tail of a txn-gated dir (one count
@@ -1848,305 +1995,6 @@ object StreamingOps {
     StateFs.epochIds(s"$state/_pending")
       .filter(_ < keepFrom)
       .foreach(e => StateFs.deleteRecursive(s"$state/_pending/epoch=$e"))
-
-  /** Multi-table variant of [[runCdcPass]] (SURVEY §3.1 #2): ONE ordered
-    * change stream whose envelope carries a `table` column fans out to
-    * per-table destination state dirs — the reference tool tails one
-    * binlog and applies to N ClickHouse tables the same way. Each
-    * micro-batch runs one tiny table-discovery aggregate (count + max seq
-    * per table — a handful of rows to the driver, metadata not data),
-    * then ONE `partitionBy("table")` write of the per-(table, key)
-    * collapse into a staging dir — a single Spark job per batch however
-    * many tables are present, never a per-table pass over the batch —
-    * and each staged `table=` subdir is renamed (a metadata move, no
-    * copy) into that table's own state dir; tables not in `stateDirs`
-    * are filtered out before the write (the TableFilter analogue).
-    * Replay safety: an at-least-once re-delivery of an epoch re-stages
-    * and re-renames over the previous attempt (delete-then-rename), so a
-    * partially-applied crash heals on the replay, exactly like the
-    * single-table overwrite. Each per-table state dir keeps the
-    * single-table layout (the partition column is carried by the dir
-    * name, and the staged files hold the standard envelope columns), so
-    * compaction and read-time collapse reuse
-    * [[compactState]]/[[readLatestState]] unchanged.
-    *
-    * `txnCol` turns on TRANSACTION-BOUNDARY apply across the whole
-    * topology — the one-binlog→N-tables GTID case: a transaction's
-    * events may span several tables, its `op = "C"` commit marker is a
-    * single topology-level row, and NO table applies ANY of the txn's
-    * events until the marker arrives — then every touched table applies
-    * its slice in the SAME epoch. A per-table reader can never observe a
-    * transaction's partial effect on that table (the epoch rename is
-    * atomic), and a cross-table reader sees a committed transaction
-    * land in one batch — never one table a batch ahead of another. The
-    * uncommitted tail is ONE topology-level pending snapshot under
-    * `ckpt/_pending`: pending epochs are keyed by the checkpoint's batch
-    * ids, so co-locating them with the checkpoint keeps the two
-    * lifecycles inseparable (delete the checkpoint → epoch ids restart →
-    * the pending tail must reset with it). Replay mechanics are
-    * [[runCdcPass]]'s: a re-delivered epoch re-reads the same snapshot
-    * its crashed attempt read and recomputes the identical ready set.
-    *
-    * `renameCols` declares RENAME COLUMN DDLs exactly as in
-    * [[runCdcPass]] — the shared envelope means one rename applies
-    * to EVERY table's state dir (one binlog, one DDL, one fan-out).
-    * `truncateAt` (table → binlog position) declares per-table `TRUNCATE
-    * TABLE` QueryEvents — unlike a rename, a truncate targets ONE table,
-    * so only the named tables' floors advance. `defaultCols` declares
-    * `ADD COLUMN … DEFAULT` clauses — envelope-wide, like a rename.
-    *
-    * `rowFilters` (table → SQL predicate) replicates only matching
-    * events for that table — the sharding/subset config every tool in
-    * this class carries. DELETES ALWAYS REPLICATE regardless of the
-    * predicate: a tombstone for a never-replicated key is a harmless
-    * no-op in the collapse, while a FILTERED tombstone for a key whose
-    * insert matched would leave the destination serving a deleted row
-    * forever. Filter on effectively-immutable columns (key ranges,
-    * tenant/region routing): a row whose payload drifts across the
-    * predicate boundary simply stops receiving updates — the standard
-    * caveat of event-level row filtering.
-    *
-    * `maskCols` (table → payload columns) NULLs the named columns for
-    * that table before anything is staged — the masked values never
-    * leave the source side of the pass (the column-exclusion/masking
-    * config of this tool class, for PII-shaped payloads). Bookkeeping
-    * (`okey`/`op`/`seq`/`ts` and the txn column) cannot be masked.
-    *
-    * Filters run AFTER the txn gate, at apply time: the pending tail
-    * carries a transaction's events UNFILTERED (so the reported
-    * pendingRows counts them), and the predicate/mask applies when the
-    * commit arrives — a filter change between passes therefore applies
-    * to not-yet-committed history, which is the declarative reading.
-    *
-    * `keyColsByTable` declares PER-TABLE primary keys (tables absent
-    * from the map use `keyCols`) — the real topology shape: one binlog
-    * fans out to tables whose PKs differ (a header table keyed by
-    * order id next to a lines table keyed by (order id, line no)).
-    * The fan-out still collapses in ONE job: each row's key tuple is
-    * encoded into one null-padded struct ([[tableKeyStruct]] — a
-    * scan-local, codegen'd projection), the collapse groups on (table,
-    * encoded key), and the winning row's full envelope rides the max_by
-    * struct so the staged output carries every real column. Homogeneous
-    * topologies skip the encoding entirely. Each state dir publishes
-    * ITS OWN `_keycols`, so read-time collapse, compaction, and repair
-    * are per-table-key aware with no further plumbing.
-    *
-    * Returns one [[SyncProgress]] per table in `stateDirs` (tables that
-    * saw no rows report zeros): under txn gating rowsApplied counts rows
-    * APPLIED to that table (an event consumed in epoch k but committed
-    * in epoch k+2 counts once, at apply time), and pendingRows is the
-    * TOPOLOGY-level uncommitted tail after the pass, the same on every
-    * table. sourceMaxSeq (under `trackSourceSeq`, the facade's flag) is
-    * the newest seq SEEN by the pass — ahead of the txn gate, so each
-    * table's lag reads as its replication lag while a transaction is
-    * pending; the binlog has one sequence, so the seen horizon is one
-    * topology-level number. */
-  private[graft] def runCdcPassMulti(s: SparkSession, source: CdcSource,
-      ckpt: String, stateDirs: Map[String, String],
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAt: Map[String, Long] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilters: Map[String, String] = Map.empty,
-      maskCols: Map[String, Seq[String]] = Map.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      trackSourceSeq: Boolean = false,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      routes: Map[String, String] = Map.empty,
-      partialImageCol: Option[String] = None,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None): Map[String, SyncProgress] = {
-    // TABLE ROUTING (the rename/shard-merge config of this tool class):
-    // `routes` maps SOURCE table names in the envelope onto DESTINATION
-    // table names — N sources routing to one destination merge shards
-    // (the sharded-MySQL → one-mart topology; the caller's contract is
-    // that merged shards' key spaces are disjoint, the standard sharded
-    // setup). Routing applies at batch entry, BEFORE the txn gate, so
-    // every later per-table config (stateDirs, filters, masks, per-table
-    // keys, truncates) is keyed by DESTINATION name — one vocabulary
-    // end to end. Typos fail loudly both ways: a route must land on a
-    // replicated table, and a routed-away source name must not itself be
-    // replicated (its events would silently split between two dirs).
-    require(routes.values.forall(stateDirs.contains),
-      s"route target(s) not replicated: " +
-        routes.values.filterNot(stateDirs.contains).toSeq.distinct.sorted
-          .mkString(", "))
-    require(!routes.keys.exists(stateDirs.contains),
-      s"route source(s) also declared as destination table(s): " +
-        routes.keys.filter(stateDirs.contains).toSeq.sorted.mkString(", "))
-    require(keyColsByTable.keySet.subsetOf(stateDirs.keySet),
-      s"per-table key declared for unreplicated table(s): " +
-        s"${(keyColsByTable.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    val keyFor: Map[String, Seq[String]] =
-      stateDirs.keys.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
-    // every table's state dir shares one envelope schema (one binlog,
-    // one fan-out) — validated/published for each before the stream
-    declareCdcPass(source, stateDirs, keyFor, topology = true, txnCol,
-      renameCols, truncateAt, defaultCols, rowFilters, maskCols, dropCols,
-      keepHistory, partialImageCol, strictBefore, conflictDlq)
-    val acc = scala.collection.mutable.Map.empty[String, SyncProgress]
-    val pos = new PassPosition
-    // the last batch's topology-level uncommitted tail (carry write)
-    var pending = Option.empty[Long]
-    // staging lives WITH the checkpoint, not in a local tmp dir: the
-    // ckpt and the state dirs share a durable filesystem in production,
-    // so every staged `table=` subdir renames into its state dir as a
-    // metadata move — staging on local disk would force a copy per
-    // table per epoch
-    val stage = s"$ckpt/_staging"
-    runSourcePass(s, source, ckpt) { (batch, epochId) =>
-      // the batch is consumed by the discovery aggregate plus the staged
-      // write — persist so the file source is read once per trigger (see
-      // runCdcPass's note on multi-action foreachBatch)
-      batch.persist()
-      var txnFull = Option.empty[DataFrame] // txn path's extra pin
-      var partialPinned = Option.empty[DataFrame]
-      var strictPinned = Option.empty[DataFrame]
-      try {
-        // routing first: one scan-local codegen'd CASE renames source
-        // table names to destinations, so the gate's pending tail and
-        // every per-table step below speak destination names only
-        val entry =
-          if (routes.isEmpty) batch.toDF()
-          else batch.toDF().withColumn("table",
-            routes.foldLeft(col("table")) { case (acc, (src, dst)) =>
-              when(col("table") === src, lit(dst)).otherwise(acc)
-            })
-        val gated = txnCol match {
-          case None => entry
-          case Some(tc) =>
-            // one shared commit gate for the whole topology (the same
-            // ready/carry split as runCdcPass, pending rooted at ckpt)
-            val g = txnGate(s, entry, tc, ckpt, epochId)
-            txnFull = Some(g.full)
-            pending = Some(g.pendingRows)
-            // the gate observes its raw input on the carry write
-            if (trackSourceSeq) pos.see(g.input)
-            g.ready
-        }
-        // SEEN horizon over the raw topology batch — ahead of the txn
-        // gate, so lag stays visible while a transaction is pending
-        if (trackSourceSeq && txnCol.isEmpty)
-          pos.see(horizons(batch.toDF(), Seq(lit(true))).head)
-        // MINIMAL row images complete BEFORE the per-table filters and
-        // masks, against each table's OWN prior state — every later
-        // stage sees FULL rows (the single-table pass's rule, applied
-        // per destination)
-        // pinned like the single-table completion: the fan-out's table
-        // discovery aggregate and the staged write both consume it
-        val gatedC = partialImageCol match {
-          case None => gated
-          case Some(cc) =>
-            val c = completePartialImages(s, stateDirs,
-              keyFor, epochId, gated, cc).persist()
-            partialPinned = Some(c)
-            c
-        }
-        // STRICT BEFORE-IMAGE gate, per destination table against its
-        // own prior state (the single-table pass's rule, fanned out)
-        val checked = strictBefore match {
-          case None => gatedC
-          case Some((pc, bc)) =>
-            val (adm, pin) = gateBeforeImages(s, stateDirs, keyFor,
-              epochId, gatedC, pc, bc, conflictDlq.get)
-            strictPinned = Some(pin)
-            adm
-        }
-        // per-table row filters + column masks: ONE codegen'd filter and
-        // ONE select over the batch — never a job per table. Deletes
-        // bypass the predicate (see the scaladoc), masks NULL the value
-        // before anything is staged.
-        val filtered =
-          if (rowFilters.isEmpty) checked
-          else checked.filter(rowFilters.foldLeft(lit(true)) {
-            case (acc, (t, pred)) =>
-              acc && (col("table") =!= t || col("op") === "D" || expr(pred))
-          })
-        val applied =
-          if (maskCols.isEmpty) filtered
-          else filtered.select(filtered.columns.toSeq.map { c =>
-            val maskers = maskCols.collect {
-              case (t, cs) if cs.contains(c) => t }.toSeq
-            if (maskers.isEmpty) col(c)
-            else when(col("table").isin(maskers: _*),
-              lit(null).cast(filtered.schema(c).dataType))
-              .otherwise(col(c)).as(c)
-          }: _*)
-        val present = applied.groupBy(col("table"))
-          .agg(count(lit(1)).as("n"), max(col("seq")).as("mx")).collect()
-          .filter(r => stateDirs.contains(r.getString(0)))
-        if (present.nonEmpty) {
-          val admitted = present.map(_.getString(0)).toSeq
-          val epochStage = s"$stage/epoch=$epochId"
-          // evolved envelope columns (mid-stream DDL) ride through the
-          // fan-out exactly as in the single-table pass
-          val routed = applied
-            .select((envelopeCols ++ extraCols(applied) :+ "table").map(col): _*)
-            .filter(col("table").isin(admitted: _*))
-          val collapsed = if (keepHistory) {
-            // retained-history topology: events land verbatim (see the
-            // single-table pass) — the fan-out is the partitionBy alone
-            routed
-          } else if (keyColsByTable.isEmpty) {
-            // homogeneous topology: group on the real key columns
-            val fields = (Seq("op", "price", "status", "ts", "seq") ++
-              extraCols(applied)).filterNot(keyCols.contains)
-            routed.groupBy((col("table") +: keyCols.map(col)): _*)
-              .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
-              .select((col("table") +: keyCols.map(col)) ++
-                fields.map(f => col("l." + f).as(f)): _*)
-          } else {
-            // heterogeneous PKs: ONE job still — encode each row's key
-            // tuple under ITS table's definition (scan-local codegen'd
-            // null-padded struct, [[tableKeyStruct]]), group on (table,
-            // encoded key), and carry the FULL envelope (key columns
-            // included — they differ per table) through the max_by
-            // struct
-            val fields = envelopeCols ++ extraCols(applied)
-            val keyed = routed.withColumn("__key",
-              tableKeyStruct(keyFor, routed.schema))
-            keyed.groupBy(col("table"), col("__key"))
-              .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
-              .select(col("table") +: fields.map(f => col("l." + f).as(f)): _*)
-          }
-          // same physical bucket column as the single-table pass — each
-          // row bucketed under ITS table's key definition; no per-trigger
-          // sort (see [[bucketed]])
-          collapsed.withColumn(BucketCol, tableBucket(keyFor))
-            .write.mode("overwrite").partitionBy("table").parquet(epochStage)
-          present.foreach { r =>
-            val t = r.getString(0)
-            val dest = s"${stateDirs(t)}/epoch=$epochId"
-            StateFs.deleteRecursive(dest) // idempotent replay: clear prior attempt
-            // the writer percent-escapes special chars in partition dir
-            // names — look the staged dir up under the ESCAPED name
-            val src = s"$epochStage/table=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(t)
-            StateFs.moveDir(src, dest)
-            val p = acc.getOrElse(t, SyncProgress(0L, 0L, None))
-            acc(t) = SyncProgress(p.rowsApplied + r.getLong(1), p.epochs + 1L,
-              Some((p.lastSeq.toSeq :+ r.getLong(2)).max))
-          }
-          // the moves emptied the epoch's stage of everything but
-          // write-job metadata (_SUCCESS); drop it
-          StateFs.deleteRecursive(epochStage)
-        }
-      } finally {
-        txnFull.foreach(_.unpersist())
-        partialPinned.foreach(_.unpersist())
-        strictPinned.foreach(_.unpersist())
-        batch.unpersist(); ()
-      }
-    }
-    val pendingRows = pending.getOrElse(pendingCount(s, ckpt, txnCol))
-    stateDirs.map { case (t, _) =>
-      t -> acc.getOrElse(t, SyncProgress(0L, 0L, None))
-        .copy(pendingRows = pendingRows, sourceMaxSeq = pos.seen)
-    }
-  }
 
   /** Compact all existing `epoch=` delta dirs into ONE baseline epoch
     * holding their latest-wins collapse (tombstones KEPT — they must keep
@@ -2674,7 +2522,7 @@ object StreamingOps {
     * extra shuffle per batch, the cost shape of partial-image
     * completion. The DLQ carries the `table` column, so one dead-letter
     * dir serves a topology; `untag` names caller-added columns dropped
-    * from both outputs (the single-table pass's [[OneTable]] tag).
+    * from the DLQ (the single-table pass's [[OneTable]] tag).
     * `observe` wraps the verdicted frame (see [[verdictBeforeImages]]).
     * Returns (admitted events minus the before column, the pinned frame
     * the caller unpersists — the DLQ write and the admitted read share
@@ -2700,7 +2548,7 @@ object StreamingOps {
         keyed(b0).join(prior, Seq("table", "_k"), "left")
     }
     verdictBeforeImages(withPrior, Seq(col("table"), col("_k")), t,
-      checkCol, beforeCol, dlqDir, epochId, extraDrop = "_k" +: untag,
+      checkCol, beforeCol, dlqDir, epochId, extraDrop = Seq("_k"), untag,
       observe)
   }
 
@@ -2710,13 +2558,13 @@ object StreamingOps {
     * stream must not accrete one empty epoch dir per trigger), and the
     * admitted filter. `observe` wraps the pinned frame BEFORE the
     * admitted filter, so an observation there sees every verdicted
-    * event yet fires on the caller's write. Returns (admitted, the
-    * pinned frame the caller unpersists). */
+    * event yet fires on the caller's write; `untag` drops from the DLQ
+    * only. Returns (admitted, the pinned frame the caller unpersists). */
   private def verdictBeforeImages(withPrior: DataFrame, pk: Seq[Column],
       t: org.apache.spark.sql.types.DataType, checkCol: String,
       beforeCol: String, dlqDir: String, epochId: Long,
-      extraDrop: Seq[String],
-      observe: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+      extraDrop: Seq[String], untag: Seq[String],
+      observe: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(pk: _*).orderBy(col("seq"))
     // an event's AFTER image for chaining: a delete resets to NULL
@@ -2737,7 +2585,7 @@ object StreamingOps {
     val book = Seq("_rn", "_prev", "_cur_op", "_cur", "_cseq") ++ extraDrop
     val conflicts = pinned
       .filter(col("_cseq").isNotNull && col("seq") >= col("_cseq"))
-      .drop(book: _*)
+      .drop((book ++ untag): _*)
     // epoch-keyed overwrite keeps a crash-replayed batch's re-verdict
     // idempotent; the emptiness probe is one cheap action on the
     // already-pinned frame. The count sidecar rides the same write so
@@ -2777,7 +2625,7 @@ object StreamingOps {
     * each table's OWN state dir rows below `epochId` (serving floors
     * honored), bucket-pruned under ITS key definition to the buckets its
     * batch slice touches — ONE collect of ≤ tables × StateBuckets rows
-    * (driver-side metadata, like the fan-out's table discovery) — and
+    * (driver-side metadata) — and
     * key semi-joined to that slice, tagged with `table`. None, with no
     * collect, when no table has an epoch below `epochId`. The
     * metadata-bounded prior read shared by partial-image completion and
@@ -3604,8 +3452,8 @@ object StreamingOps {
           val alive = (df: DataFrame) => df.filter(col("op") =!= "D")
           val newA = alive(mvView(images, "new", keyCols))
           // dirty groups: a handful per batch (≤ 2×|batch| values,
-          // group-cardinality-bounded) — driver-side METADATA, like the
-          // multi-table pass's table discovery; ONE pass over the
+          // group-cardinality-bounded) — driver-side METADATA; ONE pass
+          // over the
           // persisted images frame covers both delta sides
           // (group values are non-null for alive rows — the MV group
           // key is a dimension column; a null would not partition)

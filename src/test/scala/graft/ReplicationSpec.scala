@@ -1394,6 +1394,29 @@ class ReplicationSpec extends SparkTestBase {
     assert(mv.size <= carryWrite + deltaWrite + viewWrite + touchedProbe + 1,
       s"${mv.size} actions in one tracked view micro-batch: $mv")
     assert(vprog == prog, s"view bookkeeping: $vprog")
+    // the topology: the same gate over the same fixture tagged with two
+    // tables. Which tables a batch touched is observed on the staged
+    // write, so the fan-out adds no action of its own
+    val stagedWrite = 1
+    def twoTables(df: org.apache.spark.sql.DataFrame) = df.withColumn("table",
+      when(col("okey") % 2 === 0, "t_even").otherwise("t_odd"))
+    val mb = tmp()
+    val dirs = Map("t_even" -> s"$mb/even", "t_odd" -> s"$mb/odd")
+    def multiSync() = Replication.incrementalSyncMulti(spark,
+      twoTables(seed).schema, s"$mb/in", s"$mb/ckpt", dirs, txnCol = Some("txn"))
+    graft.streaming.StreamingOps.writeWave(twoTables(seed), s"$mb/in", 0)
+    multiSync()
+    graft.streaming.StreamingOps.writeWave(twoTables(wave), s"$mb/in", 1)
+    var mprog = Map.empty[String, Replication.SyncProgress]
+    val multi = batchActions { mprog = multiSync() }
+    info(s"tracked topology micro-batch: ${multi.size} actions $multi")
+    assert(multi.size <= carryWrite + stagedWrite,
+      s"${multi.size} actions in one tracked topology micro-batch: $multi")
+    // txn 99 (key 3) and txn 11 (key 1) commit onto t_odd; txn 12 pends
+    assert(mprog == Map(
+      "t_odd" -> Replication.SyncProgress(2L, 1L, Some(5L), 1L, Some(8L)),
+      "t_even" -> Replication.SyncProgress(0L, 0L, None, 1L, Some(8L))),
+      s"topology bookkeeping: $mprog")
     // partial-image completion and the strict before-image gate: the
     // measured batch updates keys with prior state (touched-bucket
     // probe + prior read), inserts a fresh key, and — under the strict
@@ -1440,6 +1463,28 @@ class ReplicationSpec extends SparkTestBase {
     assert(strict.size <= rawAgg + touchedProbe + dlqProbe + dlqWrite +
       dlqCount + deltaWrite,
       s"${strict.size} actions in one strict-before micro-batch: $strict")
+  }
+
+  test("rowsApplied counts every micro-batch of a catch-up longer than the " +
+      "recent-progress buffer") {
+    // a query keeps only its last numRecentProgressUpdates progress
+    // entries; a backlog of more wave files than that is still one pass
+    val conf = "spark.sql.streaming.numRecentProgressUpdates"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "2")
+    try {
+      val base = tmp()
+      val waves = (0 until 4).map(w => txnDf((1 to 3).map { i =>
+        val sq = w * 3L + i
+        TxnEv("I", sq, sq, 1.0, "O", 0)
+      }).drop("txn"))
+      waves.zipWithIndex.foreach { case (df, w) =>
+        graft.streaming.StreamingOps.writeWave(df, s"$base/in", w) }
+      val p = Replication.incrementalSync(spark, waves.head.schema,
+        s"$base/in", s"$base/ckpt", s"$base/state")
+      assert(p.rowsApplied == 12L && p.epochs == 4L && p.lastSeq.contains(12L),
+        s"4 waves of 3 rows: $p")
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 
   test("position bookkeeping per branch: SyncProgress and lag marks equal " +

@@ -55,6 +55,18 @@ class StateFsSpec extends SparkTestBase {
     assert(e.getMessage.contains("staged dir missing"))
   }
 
+  test("moveDir of a dir carrying DDL gate files onto a path memoized clean reads dirty") {
+    val base = tmp()
+    StateFs.mkdirs(s"$base/state")
+    assert(StateFs.dirHasNoDdl(s"$base/state")) // memoizes the clean verdict
+    StateFs.deleteRecursive(s"$base/state")
+    StateFs.mkdirs(s"$base/renamed")
+    StateFs.writeAtomic(s"$base/renamed/_renames", "price\tcost\t7")
+    StateFs.moveDir(s"$base/renamed", s"$base/state")
+    assert(!StateFs.dirHasNoDdl(s"$base/state"),
+      "a stale clean verdict would skip the arrived dir's rename gate")
+  }
+
   test("per-URI conf: a scheme registered only in the session's hadoop conf resolves") {
     // two schemes over one directory: the default (schemeless → local)
     // and mockfs, which exists ONLY in the session conf — each gets its

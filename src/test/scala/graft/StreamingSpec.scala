@@ -728,6 +728,33 @@ class StreamingSpec extends SparkTestBase {
     assert(k.schema == ev.schema)
   }
 
+  test("a transport whose stream lives on another session still reports " +
+      "its pass's progress") {
+    // a source may ignore the session it is handed (WrappedCdcSource
+    // returns its own frame): the query then runs, and posts its
+    // progress and termination events, on the frame's session
+    import graft.streaming.StreamingOps
+    val base = java.nio.file.Files.createTempDirectory("graft_othersess").toString
+    val ev = spark.createDataFrame(Seq(
+        ("I", 1L, 1L, 10.0, "A"), ("I", 2L, 2L, 20.0, "B"),
+        ("U", 3L, 1L, 15.0, "B")))
+      .toDF("op", "seq", "okey", "price", "status")
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+      .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
+        col("status"))
+    StreamingOps.writeWave(ev, s"$base/in", 0)
+    val other = spark.newSession()
+    val src = new graft.sources.WrappedCdcSource(other.readStream
+      .schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(s"$base/in"))
+    val prog = StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
+      s"$base/state", trackSeq = true)
+    assert(prog.rowsApplied == 3L && prog.epochs == 1L &&
+      prog.lastSeq.contains(3L), s"one wave of 3 rows: $prog")
+    assert(Replication.appliedState(spark, s"$base/state")
+      .select(col("okey"), col("price")).collect().map(_.toSeq).toSet ==
+      Set(Seq(1L, 15.0), Seq(2L, 20.0)))
+  }
+
   test("Kafka transport: the Debezium value projection maps, orders, and gates") {
     // record-shaped batch rows stand in for the broker (the stream and a
     // batch frame share the exact projectEnvelope plan): op dialect maps
