@@ -351,11 +351,15 @@ object Replication {
   }
 
   /** One-call operational readout of a replica state dir — the SHOW
-    * REPLICA STATUS surface of this tool class. Everything except the
-    * applied position is O(1) published metadata (the control files the
-    * passes maintain); `appliedSeq` is one column-pruned max over the
-    * state's `seq` column — the only field that touches data, priced
-    * like the checksum flows that read it anyway. */
+    * REPLICA STATUS surface of this tool class, read from the control
+    * files the passes maintain. `appliedSeq` folds each epoch dir's
+    * applied-position record (`epoch=N/_maxseq`, written with the epoch
+    * at no extra job); only epochs without one — written before records
+    * existed, or by a pass that crashed between an MV delta write and
+    * its record — are scanned, in one partition-pruned max over just
+    * those dirs. The only other Spark jobs are the txn tail's count
+    * (`txnCol`) and the DLQ epochs that predate their count sidecar
+    * (`conflictDlq`). */
   final case class ReplicaStatus(
       appliedSeq: Option[Long],
       deltaEpochs: Int,
@@ -398,19 +402,15 @@ object Replication {
     // a strict replica that never diverged has no dir at all — report 0
     // (unlike the txn root, which a txn-gated pass always materializes)
     val epochs = StateFs.epochIds(stateDir)
+    val purgeFloor = StreamingOps.readPurgeFloor(stateDir)
+    val truncFloor = StreamingOps.readTruncFloor(stateDir)
     // applied position = the newest seq any applied event carries — the
-    // raw (pre-collapse, tombstone-inclusive) read, column-pruned to
-    // `seq` — FOLDED with the purge/truncate floors: a GC'ing
+    // raw (pre-collapse, tombstone-inclusive) rows, per epoch its
+    // `_maxseq` record — FOLDED with the purge/truncate floors: a GC'ing
     // compaction physically reclaims trailing tombstones' rows, but
     // their seqs were applied and the floor records exactly that
-    val rawMax = if (epochs.isEmpty) None else {
-      val r = StreamingOps.readStateDir(spark, stateDir)
-        .agg(max(col("seq"))).collect()(0)
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    val applied = (rawMax.toSeq ++
-      StreamingOps.readPurgeFloor(stateDir) ++
-      StreamingOps.readTruncFloor(stateDir)).maxOption
+    val applied = (StreamingOps.maxSeqOf(spark, stateDir, epochs).toSeq ++
+      purgeFloor ++ truncFloor).maxOption
     ReplicaStatus(
       appliedSeq = applied,
       deltaEpochs = epochs.count(_ >= 0),
@@ -420,8 +420,8 @@ object Replication {
         .map(_.fieldNames.toSeq).getOrElse(Seq.empty),
       pendingRows = StreamingOps.pendingCount(spark,
         pendingRoot.getOrElse(stateDir), txnCol),
-      purgeFloor = StreamingOps.readPurgeFloor(stateDir),
-      truncateFloor = StreamingOps.readTruncFloor(stateDir),
+      purgeFloor = purgeFloor,
+      truncateFloor = truncFloor,
       compactHorizon = StreamingOps.readCompactHorizon(stateDir),
       historyRetained =
         StateFs.readSmall(s"$stateDir/_history").isDefined,

@@ -1226,11 +1226,6 @@ object StreamingOps {
     (o, () => h().head)
   }
 
-  private def observeHorizonIf(on: Boolean, df: DataFrame)
-      : (DataFrame, Option[() => Horizon]) =
-    if (!on) (df, None)
-    else { val (o, h) = observeHorizon(df); (o, Some(h)) }
-
   private def observeAggs[T](df: DataFrame, aggs: Seq[Column],
       decode: Row => T): (DataFrame, () => T) = {
     val obs = org.apache.spark.sql.Observation()
@@ -1725,7 +1720,10 @@ object StreamingOps {
     *    `ckpt/_staging` — one Spark job however many tables;
     *  - each table the observation saw rows for moves its staged
     *    `table=` dir into its state dir as `epoch=N`: delete-then-rename,
-    *    so a replayed epoch heals a crashed attempt. A table without rows
+    *    so a replayed epoch heals a crashed attempt. The staged dir first
+    *    gets its `_maxseq` record ([[writeMaxSeq]], the table's observed
+    *    max seq), so an epoch dir is its rows plus that record, and both
+    *    arrive in one rename. A table without rows
     *    wrote no dir and keeps no epoch. The move is a metadata rename
     *    only when `ckpt` and the state dirs share a filesystem; across
     *    filesystems [[StateFs.moveDir]] copies bytes and deletes the
@@ -1872,6 +1870,7 @@ object StreamingOps {
         val hs = observed()
         declared.zip(hs).filter(_._2.rows > 0L).foreach { case (t, h) =>
           val dest = s"${stateDirs(t)}/epoch=$epochId"
+          writeMaxSeq(staged(t), h.seq)
           StateFs.deleteRecursive(dest)
           StateFs.moveDir(staged(t), dest)
           val p = tables(t)
@@ -2114,11 +2113,14 @@ object StreamingOps {
       // touched-bucket probe prunes at file granularity, not just row
       // groups — one extra exchange on the maintenance path, never on
       // reads
-      val baseline = kept.drop("epoch")
+      val (observed, folded) = observeHorizon(kept.drop("epoch"))
+      val baseline = observed
         .withColumn(BucketCol, bucketOf(keyCols))
         .repartition(col(BucketCol))
         .sortWithinPartitions(BucketCol)
       baseline.write.mode("overwrite").parquet(s"$side/epoch=$baseEpoch")
+      val foldedSeq = folded().seq
+      writeMaxSeq(s"$side/epoch=$baseEpoch", foldedSeq)
       StateFs.moveDir(s"$side/epoch=$baseEpoch", s"$state/epoch=$baseEpoch")
       // a pre-publication state dir (no pass has written _schema yet)
       // gets one from the compaction — the footer sweep this run already
@@ -2131,17 +2133,13 @@ object StreamingOps {
       newFloor.foreach(writePurgeFloor(state, _))
       // TIME-TRAVEL HORIZON: the newest seq folded into the baseline —
       // as-of reads below it are unreconstructable once the old epochs
-      // go. Read from the just-published baseline (a column-pruned scan
-      // of `seq` on the maintenance path, not a recompute of the
-      // collapse), monotone across compactions, and written BEFORE the
-      // old epochs are deleted: in the crash window between baseline
-      // publish and epoch delete the per-event history still exists, so
-      // an as-of read stays correct either way.
-      val folded = s.read.parquet(s"$state/epoch=$baseEpoch")
-        .agg(max(col("seq"))).collect()(0)
-      if (!folded.isNullAt(0)) {
-        val h = readCompactHorizon(state).fold(folded.getLong(0))(
-          math.max(_, folded.getLong(0)))
+      // go. Observed on the baseline write (no scan of its own),
+      // monotone across compactions, and written BEFORE the old epochs
+      // are deleted: in the crash window between baseline publish and
+      // epoch delete the per-event history still exists, so an as-of
+      // read stays correct either way.
+      foldedSeq.foreach { f =>
+        val h = readCompactHorizon(state).fold(f)(math.max(_, f))
         StateFs.writeAtomic(s"$state/_compact_horizon", h.toString)
       }
       // every old dir is folded into the published baseline
@@ -2203,6 +2201,7 @@ object StreamingOps {
       s"truth frame holds duplicate rows for key (${keyCols.mkString(", ")})" +
         " — a snapshot must be unique per key; refuse rather than bake " +
         "a broken identity into every later collapse")
+    writeMaxSeq(s"$stage/epoch=-1", Option.when(rows > 0L)(snapshotSeq))
     StateFs.writeAtomic(s"$stage/_keycols", keyCols.mkString("\t"))
     StateFs.writeAtomic(s"$stage/_schema", schema.json)
     rows
@@ -2220,6 +2219,40 @@ object StreamingOps {
     * compaction has run (an uncompacted dir holds full history). */
   private[graft] def readCompactHorizon(state: String): Option[Long] =
     StateFs.readSmall(s"$state/_compact_horizon").map(_.trim.toLong)
+
+  /** APPLIED-POSITION RECORD (`epoch=N/_maxseq`): the max `seq` over one
+    * state epoch dir's rows, tombstones included; empty when no row
+    * carries one. Each writer takes the value from an observation on
+    * the write it makes anyway, or from the constant seq it stamps, so a
+    * record costs no Spark job. A record that exists always describes
+    * its dir's current rows: it is written inside the dir — in the stage
+    * before the publishing rename, or after an overwrite write, which
+    * deletes the dir and any older record first — and it is deleted and
+    * moved with the dir. Underscore-hidden, so no parquet read sees it. */
+  private def writeMaxSeq(epochDir: String, seq: Option[Long]): Unit =
+    StateFs.writeAtomic(s"$epochDir/_maxseq", seq.fold("")(_.toString))
+
+  /** An epoch dir's [[writeMaxSeq]] record: None when the dir has none,
+    * Some(None) when it records no rows. */
+  private[graft] def readMaxSeq(epochDir: String): Option[Option[Long]] =
+    StateFs.readSmall(s"$epochDir/_maxseq").map(_.trim)
+      .map(v => if (v.isEmpty) None else Some(v.toLong))
+
+  /** Max `seq` over the rows of `state`'s epoch dirs `epochs`: their
+    * records, plus ONE partition-pruned scan of the epochs without one
+    * (written before records existed, or by a pass that crashed between
+    * an MV delta write and its record) — no Spark job when all have one. */
+  private[graft] def maxSeqOf(s: SparkSession, state: String,
+      epochs: Seq[Long]): Option[Long] = {
+    val recorded = epochs.map(e => e -> readMaxSeq(s"$state/epoch=$e"))
+    val unknown = recorded.collect { case (e, None) => e }
+    val scanned = if (unknown.isEmpty) None else {
+      val r = readStateDir(s, state).filter(col("epoch").isin(unknown: _*))
+        .agg(max(col("seq"))).collect()(0)
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+    (recorded.flatMap(_._2.flatten) ++ scanned).maxOption
+  }
 
   /** The history-retention marker (`_history`): present iff every pass
     * that wrote this dir ran with `keepHistory` — epochs hold VERBATIM
@@ -2448,6 +2481,7 @@ object StreamingOps {
             val src = s"$stage/table=" +
               org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .escapePathName(t)
+            writeMaxSeq(src, Some(repairSeq))
             StateFs.moveDir(src, s"${stateDirs(t)}/epoch=$epoch")
           }
         } finally StateFs.deleteRecursive(stage)
@@ -3169,11 +3203,12 @@ object StreamingOps {
           .persist()
         try {
           // the destination table's own delta — same fold as runCdcPass
-          val (bwin, applied) =
-            observeHorizonIf(trackSeq, mvView(images, "bwin", keyCols))
+          val (bwin, applied) = observeHorizon(mvView(images, "bwin", keyCols))
           bucketed(bwin, keyCols)
             .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          applied.foreach(h => mvPosition(pos, gate, h()))
+          val h = applied()
+          writeMaxSeq(s"$state/epoch=$epochId", h.seq)
+          if (trackSeq) mvPosition(pos, gate, h)
           // delta as ONE signed aggregate: +f(new image) − f(old image)
           // per touched key, exploded from the images frame — no second
           // shuffle, no two-sided join. `enrich` is the JOIN-MV hook
@@ -3294,6 +3329,7 @@ object StreamingOps {
     ensureStateSchema(state, envl.schema)
     bucketed(envl, keyCols).write.mode("overwrite")
       .parquet(s"$state/epoch=-1")
+    writeMaxSeq(s"$state/epoch=-1", Option.when(uniq.getLong(0) > 0L)(0L))
     s.read.schema(envl.schema).parquet(s"$state/epoch=-1")
   }
 
@@ -3444,11 +3480,12 @@ object StreamingOps {
         val images = mvImages(s, state, epochId, ready, keyCols)
           .persist()
         try {
-          val (bwin, applied) =
-            observeHorizonIf(trackSeq, mvView(images, "bwin", keyCols))
+          val (bwin, applied) = observeHorizon(mvView(images, "bwin", keyCols))
           bucketed(bwin, keyCols)
             .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          applied.foreach(h => mvPosition(pos, gate, h()))
+          val h = applied()
+          writeMaxSeq(s"$state/epoch=$epochId", h.seq)
+          if (trackSeq) mvPosition(pos, gate, h)
           val alive = (df: DataFrame) => df.filter(col("op") =!= "D")
           val newA = alive(mvView(images, "new", keyCols))
           // dirty groups: a handful per batch (≤ 2×|batch| values,

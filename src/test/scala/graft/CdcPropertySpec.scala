@@ -746,6 +746,126 @@ class CdcPropertySpec extends SparkTestBase {
     }
   }
 
+  test("APPLIED-POSITION RECORD property: every epoch's _maxseq equals a " +
+      "scan of its own dir, and replicaStatus equals the full-scan answer " +
+      "with any subset of records gone") {
+    import graft.streaming.{StateFs, StreamingOps}
+    // the reference: the raw (tombstone-inclusive) max seq over every
+    // epoch dir, folded with the purge and truncate floors
+    def fullScan(dir: String): Option[Long] = {
+      val r = StreamingOps.readStateDir(spark, dir)
+        .agg(max(col("seq"))).collect()(0)
+      ((if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq ++
+        StreamingOps.readPurgeFloor(dir) ++
+        StreamingOps.readTruncFloor(dir)).maxOption
+    }
+    def epochScan(dir: String, e: Long): Option[Long] = {
+      val r = StreamingOps.readStateDir(spark, dir)
+        .filter(col("epoch") === e).agg(max(col("seq"))).collect()(0)
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+    def check(dir: String, rng: scala.util.Random, where: String): Unit = {
+      val epochs = StateFs.epochIds(dir)
+      epochs.foreach { e =>
+        val rec = StreamingOps.readMaxSeq(s"$dir/epoch=$e")
+        assert(rec.isDefined, s"$dir/epoch=$e has no _maxseq $where")
+        assert(rec.get == epochScan(dir, e),
+          s"$dir/epoch=$e records ${rec.get}, its rows hold " +
+            s"${epochScan(dir, e)} $where")
+      }
+      val want = fullScan(dir)
+      assert(Replication.replicaStatus(spark, dir).appliedSeq == want,
+        s"$dir status != full scan $want $where")
+      epochs.filter(_ => rng.nextBoolean()).foreach(e =>
+        StateFs.deleteRecursive(s"$dir/epoch=$e/_maxseq"))
+      assert(Replication.replicaStatus(spark, dir).appliedSeq == want,
+        s"$dir status != full scan $want with records deleted $where")
+    }
+    samples(4).zipWithIndex.foreach { case (ops, si) =>
+      val sorted = ops.sortBy(_.seq)
+      val base = java.nio.file.Files
+        .createTempDirectory(s"graft_maxseqprop$si").toString
+      val where = s"(log $si): $sorted"
+      val nWaves = 1 + si % 3
+      def waves[T](evs: Seq[T]) =
+        evs.grouped(math.max(1, (evs.length + nWaves - 1) / nWaves)).toList
+      def envelope(df: org.apache.spark.sql.DataFrame) = df
+        .select(Seq(col("op"), col("seq"),
+          timestamp_seconds(lit(1700000000L) + col("seq")).as("ts"),
+          col("key").as("okey"), col("v").cast("double").as("price"),
+          when(col("op") =!= "D", concat(lit("s"), col("v") % 3))
+            .as("status")) ++
+          df.columns.filterNot(Set("op", "seq", "key", "v")).map(col): _*)
+      def frame(evs: Seq[Op]) = envelope(spark.createDataFrame(evs))
+      // the txn-gated log: transactions of 3 events, each closed by a
+      // commit marker except (on odd logs) the last, which stays pending
+      val groups = sorted.grouped(3).toList
+      val txnLog = groups.zipWithIndex.flatMap { case (g, t) =>
+        g.map(_ -> t.toLong) ++ (if (t == groups.size - 1 && si % 2 == 1)
+          Nil else Seq(Op("C", 0L, -1L, 0L) -> t.toLong))
+      }.zipWithIndex.map { case ((o, t), i) => (o.copy(seq = i.toLong), t) }
+      def txnFrame(evs: Seq[(Op, Long)]) = envelope(spark.createDataFrame(
+        evs.map { case (o, t) => (o.op, o.seq, o.key, o.v, t) })
+        .toDF("op", "seq", "key", "v", "txn"))
+      // partial images: updates carry only the price; strict: updates at
+      // even seqs declare a before image no row holds, the rest none
+      def partial(df: org.apache.spark.sql.DataFrame) = df
+        .withColumn("changed", when(col("op") === "U", array(lit("price")))
+          .when(col("op") === "I", array(lit("price"), lit("status"))))
+        .withColumn("status", when(col("op") =!= "U", col("status")))
+      def strict(df: org.apache.spark.sql.DataFrame) = df
+        .withColumn("before", when(col("op") === "U" && col("seq") % 2 === 0,
+          lit(-1.0)))
+      def twoTables(df: org.apache.spark.sql.DataFrame) = df.withColumn(
+        "table", when(col("okey") % 2 === 0, "t_even").otherwise("t_odd"))
+      def pass(name: String, df: org.apache.spark.sql.DataFrame, i: Int)(
+          run: FileCdcSource => Unit): Unit = {
+        StreamingOps.writeWave(df, s"$base/$name/in", i)
+        run(FileCdcSource(df.schema, s"$base/$name/in"))
+      }
+      val ws = waves(sorted)
+      ws.zipWithIndex.foreach { case (w, i) =>
+        val df = frame(w)
+        pass("plain", df, i)(src => StreamingOps.runCdcPass(spark, src,
+          s"$base/plain/ckpt", s"$base/plain/state"))
+        pass("hist", df, i)(src => StreamingOps.runCdcPass(spark, src,
+          s"$base/hist/ckpt", s"$base/hist/state", keepHistory = true))
+        pass("partial", partial(df), i)(src => StreamingOps.runCdcPass(spark,
+          src, s"$base/partial/ckpt", s"$base/partial/state",
+          partialImageCol = Some("changed")))
+        pass("strict", strict(df), i)(src => StreamingOps.runCdcPass(spark,
+          src, s"$base/strict/ckpt", s"$base/strict/state",
+          strictBefore = Some(("price", "before")),
+          conflictDlq = Some(s"$base/strict/dlq")))
+        pass("topo", twoTables(df), i)(src => StreamingOps.runCdcPassMulti(
+          spark, src, s"$base/topo/ckpt", Map("t_even" -> s"$base/topo/even",
+            "t_odd" -> s"$base/topo/odd")))
+        pass("mv", df, i)(src => StreamingOps.runMvSumPass(spark, src,
+          s"$base/mv/ckpt", s"$base/mv/state", s"$base/mv/view"))
+        // compaction mid-stream (after the first wave) and GC'ing at the
+        // end, so later deltas land on a baseline with a purge floor
+        if (i == 0) StreamingOps.compactState(spark, s"$base/plain/state")
+      }
+      waves(txnLog).zipWithIndex.foreach { case (w, i) =>
+        pass("txn", txnFrame(w), i)(src => StreamingOps.runCdcPass(spark, src,
+          s"$base/txn/ckpt", s"$base/txn/state", txnCol = Some("txn")))
+      }
+      StreamingOps.compactState(spark, s"$base/plain/state",
+        tombstoneHorizon = Some(0))
+      // repair against a truth that lost the odd keys and moved every
+      // even key's price: one correction epoch of deletes and updates
+      val truth = Replication.appliedState(spark, s"$base/plain/state")
+        .drop("op").filter(col("okey") % 2 === 0)
+        .withColumn("price", col("price") + 1.0)
+      Replication.repairSync(spark, truth, s"$base/plain/state")
+      val rng = new scala.util.Random(si)
+      Seq("plain/state", "hist/state", "partial/state", "strict/state",
+        "topo/even", "topo/odd", "mv/state", "txn/state")
+        .map(d => s"$base/$d").filter(StateFs.exists)
+        .foreach(check(_, rng, where))
+    }
+  }
+
   test("WIDEN property: any log, any widen point — narrow epochs serve exactly under the wide type") {
     import graft.streaming.StreamingOps
     // random logs split at a random wave boundary: waves before the

@@ -718,6 +718,28 @@ class ReplicationSpec extends SparkTestBase {
       log.filter(col("seq") === w), s"$base/in", w - 1))
     Replication.incrementalSync(spark, log.schema, s"$base/in",
       s"$base/ckpt", s"$base/state")
+    // every epoch dir records its applied position (`_maxseq`), so the
+    // status of a replica without txn accounting or a DLQ starts no
+    // Spark job; an epoch whose record is gone is scanned, alone, and
+    // the answer does not change
+    def scanFree(state: String, applied: Long): Unit = {
+      val (l, st) = listened(Replication.replicaStatus(spark, state))
+      assert(l.jobCount == 0 && st.appliedSeq.contains(applied),
+        s"$state: ${l.jobCount} jobs, $st")
+      val newest = graft.streaming.StateFs.epochIds(state).max
+      graft.streaming.StateFs.deleteRecursive(s"$state/epoch=$newest/_maxseq")
+      val (ls, scanned) = listened(Replication.replicaStatus(spark, state))
+      assert(ls.jobCount > 0 && scanned.appliedSeq.contains(applied),
+        s"$state without epoch=$newest's record: ${ls.jobCount} jobs, " +
+          s"$scanned")
+    }
+    scanFree(s"$base/state", 3L)
+    val bv = tmp()
+    (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
+      log.filter(col("seq") === w), s"$bv/in", w - 1))
+    Replication.incrementalSyncWithView(spark, log.schema, s"$bv/in",
+      s"$bv/ckpt", s"$bv/state", s"$bv/mv")
+    scanFree(s"$bv/state", 3L)
     val s1 = Replication.replicaStatus(spark, s"$base/state")
     assert(s1.appliedSeq.contains(3L) && s1.deltaEpochs == 3 &&
       s1.baselineEpochs == 0 && s1.keyCols == Seq("okey") &&
@@ -1299,6 +1321,13 @@ class ReplicationSpec extends SparkTestBase {
     // (execution id, root execution id, description, plan root node)
     private val starts = new java.util.concurrent
       .ConcurrentLinkedQueue[(Long, Long, String, String)]()
+    // descriptions of the Spark jobs started
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      jobs.add(String.valueOf(Option(e.properties)
+        .map(_.getProperty("spark.job.description")).orNull)); ()
+    }
     override def onOtherEvent(
         e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
       case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
@@ -1321,7 +1350,19 @@ class ReplicationSpec extends SparkTestBase {
         Thread.sleep(20)
       }
     }
-    def clear(): Unit = starts.clear()
+    def clear(): Unit = { starts.clear(); jobs.clear() }
+    /** Spark jobs started since [[clear]], the drain marks excluded */
+    def jobCount: Int = {
+      import scala.jdk.CollectionConverters._
+      jobs.asScala.count(!_.startsWith("drain-"))
+    }
+    /** plan root nodes of the ROOT executions since [[clear]], the drain
+      * marks excluded */
+    def roots: Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      starts.asScala.toSeq.filter { case (id, root, d, _) =>
+        id == root && !String.valueOf(d).startsWith("drain-") }.map(_._4)
+    }
     /** root execution → plan root nodes of the executions nested in it */
     def nested: Map[Long, Seq[String]] = {
       import scala.jdk.CollectionConverters._
@@ -1333,15 +1374,20 @@ class ReplicationSpec extends SparkTestBase {
   /** Actions inside the ONE micro-batch of `sync`: the sync must run
     * exactly one micro-batch with nested actions. */
   private def batchActions(sync: => Unit): Seq[String] = {
+    val batches = listened(sync)._1.nested
+    assert(batches.size == 1, s"expected one micro-batch: $batches")
+    batches.head._2
+  }
+
+  /** `body`'s result, with the drained listener that saw it run. */
+  private def listened[T](body: => T): (BatchActions, T) = {
     val l = new BatchActions
     spark.sparkContext.addSparkListener(l)
     try {
       l.drain(); l.clear()
-      sync
+      val r = body
       l.drain()
-      val batches = l.nested
-      assert(batches.size == 1, s"expected one micro-batch: $batches")
-      batches.head._2
+      (l, r)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -1463,6 +1509,37 @@ class ReplicationSpec extends SparkTestBase {
     assert(strict.size <= rawAgg + touchedProbe + dlqProbe + dlqWrite +
       dlqCount + deltaWrite,
       s"${strict.size} actions in one strict-before micro-batch: $strict")
+  }
+
+  test("compactState's SQL executions: the time-travel horizon is observed " +
+      "on the baseline write, not re-read from it") {
+    // the code before the horizon became an observation ran, per
+    // compaction, the baseline write plus a max(seq) scan of the published
+    // baseline — 2 root executions plain, 3 with tombstone GC (its purge
+    // floor aggregate); each bound is that count minus the dropped scan
+    // (the GC'd baseline keeps only key 3's insert, so its horizon is 3)
+    val plainBefore = 2; val gcBefore = 3
+    Seq((None, plainBefore, 13L), (Some(0), gcBefore, 3L)).foreach {
+        case (gc, before, horizon) =>
+      val base = tmp()
+      (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
+        txnDf(Seq(TxnEv("I", w, w, w.toDouble, "O", 0),
+          TxnEv("D", 10L + w, w - 1L, 0.0, null, 0))).drop("txn"),
+        s"$base/in", w - 1))
+      Replication.incrementalSync(spark,
+        txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 1))).drop("txn").schema,
+        s"$base/in", s"$base/ckpt", s"$base/state")
+      val roots = listened(graft.streaming.StreamingOps.compactState(spark,
+        s"$base/state", tombstoneHorizon = gc))._1.roots
+      info(s"compactState(tombstoneHorizon = $gc): ${roots.size} root " +
+        s"executions $roots")
+      assert(roots.size <= before - 1,
+        s"${roots.size} root executions in compactState($gc): $roots")
+      val st = Replication.replicaStatus(spark, s"$base/state")
+      assert(st.baselineEpochs == 1 && st.deltaEpochs == 0 &&
+        st.compactHorizon.contains(horizon) && st.appliedSeq.contains(13L),
+        s"compacted ($gc): $st")
+    }
   }
 
   test("rowsApplied counts every micro-batch of a catch-up longer than the " +
