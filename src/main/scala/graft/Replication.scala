@@ -1434,7 +1434,8 @@ object Replication {
     * polls (see [[streaming.StreamingOps.readStateChanges]] for the
     * retention guards: positions past a tombstone GC or a truncate
     * refuse — the downstream needs a re-snapshot, exactly like polling
-    * past MySQL's binlog retention). */
+    * past MySQL's binlog retention). The rows come in no particular
+    * order; a caller that wants key order adds its own `orderBy`. */
   def changesSince(spark: SparkSession, stateDir: String,
       sinceSeq: Long): DataFrame =
     streaming.StreamingOps.readStateChanges(spark, stateDir, sinceSeq)
@@ -1443,7 +1444,8 @@ object Replication {
     * each key's image as of the window's end, deletes as tombstones.
     * Needs the dir synced with `keepHistory` (a fold may have displaced
     * an in-window image with a later one — see
-    * [[streaming.StreamingOps.readStateChanges]]). */
+    * [[streaming.StreamingOps.readStateChanges]]). Unordered, like
+    * [[changesSince]]. */
   def changesBetween(spark: SparkSession, stateDir: String,
       p1: Long, p2: Long): DataFrame = {
     require(p1 <= p2, s"empty window: ($p1, $p2]")

@@ -671,15 +671,18 @@ object StreamingOps {
   private def readStateDirGated(s: SparkSession, state: String,
       buckets: Option[Seq[Long]] = None): DataFrame = {
     val raw = readStateDir(s, state, buckets = buckets)
-    if (dirHasNoDdl(state)) return raw
-    val purgeGated = readPurgeFloor(state) match {
-      case Some(f) => raw.filter(col("epoch") < 0 || col("seq") > f)
-      case None => raw
-    }
-    readTruncFloor(state) match {
-      case Some(t) => purgeGated.filter(col("seq") > t)
-      case None => purgeGated
-    }
+    if (dirHasNoDdl(state)) raw
+    else floorGated(raw, readPurgeFloor(state), readTruncFloor(state))
+  }
+
+  /** The serving floors over a state read: the purge floor drops
+    * non-baseline rows at or below it, the truncate floor every row at
+    * or below it. */
+  private def floorGated(raw: DataFrame, purgeFloor: Option[Long],
+      truncFloor: Option[Long]): DataFrame = {
+    val purgeGated = purgeFloor.fold(raw)(f =>
+      raw.filter(col("epoch") < 0 || col("seq") > f))
+    truncFloor.fold(purgeGated)(t => purgeGated.filter(col("seq") > t))
   }
 
   private def tmpDir(): String = graft.TmpDirs.create("graft_stream")
@@ -2055,19 +2058,13 @@ object StreamingOps {
       // the pre-publication fallback: epochs written before and after a
       // mid-stream DDL carry different envelope widths; pre-DDL rows
       // surface NULL either way
-      val raw = readStateDir(s, state)
-      val purgeGated = readPurgeFloor(state) match {
-        case Some(f) => raw.filter(col("epoch") < 0 || col("seq") > f)
-        case None => raw
-      }
+      val purgeFloor = readPurgeFloor(state)
+      val truncFloor = readTruncFloor(state)
       // the truncate floor's space reclaim: rows at or below the floor
       // never enter the baseline, so the compaction physically frees
       // what the TRUNCATE logically deleted (the floor file stays — a
       // replayed pre-truncate epoch is still gated at read)
-      val gated = readTruncFloor(state) match {
-        case Some(t) => purgeGated.filter(col("seq") > t)
-        case None => purgeGated
-      }
+      val gated = floorGated(readStateDir(s, state), purgeFloor, truncFloor)
       val keyCols = readKeyCols(state)
       val fields = (Seq("op", "price", "status", "ts", "seq") ++
         extraCols(gated)).filterNot(keyCols.contains)
@@ -2085,19 +2082,18 @@ object StreamingOps {
       // never decreasing across compactions (new pending events always
       // carry seq above every previously applied seq, so monotonicity is
       // free); tombstones are purged ONLY at or below that floor, which
-      // is exactly the range the gate permanently silences.
+      // is exactly the range the gate permanently silences. The newest
+      // folded seq is the gated max, read from the epoch records.
       val newFloor: Option[Long] = if (tombstoneHorizon.isEmpty) None else {
-        val m = gated.agg(max(col("seq"))).collect()(0)
-        if (m.isNullAt(0)) None else {
+        maxSeqOf(s, state, epochIds, purgeFloor, truncFloor).map { m =>
           val pendingMin = latestPendingBelow(pendingRoot.getOrElse(state),
               Long.MaxValue)
             .flatMap { p =>
               val r = s.read.parquet(p).agg(min(col("seq"))).collect()(0)
               if (r.isNullAt(0)) None else Some(r.getLong(0))
             }
-          val candidate = pendingMin.fold(m.getLong(0))(pm =>
-            math.min(m.getLong(0), pm - 1L))
-          Some(readPurgeFloor(state).fold(candidate)(math.max(_, candidate)))
+          val candidate = pendingMin.fold(m)(pm => math.min(m, pm - 1L))
+          purgeFloor.fold(candidate)(math.max(_, candidate))
         }
       }
       val kept = (tombstoneHorizon, newFloor) match {
@@ -2241,17 +2237,29 @@ object StreamingOps {
   /** Max `seq` over the rows of `state`'s epoch dirs `epochs`: their
     * records, plus ONE partition-pruned scan of the epochs without one
     * (written before records existed, or by a pass that crashed between
-    * an MV delta write and its record) — no Spark job when all have one. */
+    * an MV delta write and its record) — no Spark job when all have one.
+    *
+    * `purgeFloor` / `truncFloor` take the max over the rows that pass
+    * those floors instead ([[floorGated]]). A floor only drops rows at
+    * or below it, so an epoch's gated max is its record when the record
+    * clears the floors that apply to it, and nothing otherwise — exact,
+    * still no job. */
   private[graft] def maxSeqOf(s: SparkSession, state: String,
-      epochs: Seq[Long]): Option[Long] = {
+      epochs: Seq[Long], purgeFloor: Option[Long] = None,
+      truncFloor: Option[Long] = None): Option[Long] = {
+    def kept(e: Long, sq: Long) = truncFloor.forall(sq > _) &&
+      (e < 0 || purgeFloor.forall(sq > _))
     val recorded = epochs.map(e => e -> readMaxSeq(s"$state/epoch=$e"))
     val unknown = recorded.collect { case (e, None) => e }
     val scanned = if (unknown.isEmpty) None else {
-      val r = readStateDir(s, state).filter(col("epoch").isin(unknown: _*))
+      val r = floorGated(
+          readStateDir(s, state).filter(col("epoch").isin(unknown: _*)),
+          purgeFloor, truncFloor)
         .agg(max(col("seq"))).collect()(0)
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
-    (recorded.flatMap(_._2.flatten) ++ scanned).maxOption
+    (recorded.collect { case (e, Some(Some(sq))) if kept(e, sq) => sq } ++
+      scanned).maxOption
   }
 
   /** The history-retention marker (`_history`): present iff every pass
@@ -2419,11 +2427,12 @@ object StreamingOps {
         s"repair source for '${r.getString(0)}' holds ${r.getLong(1)} rows " +
           s"over ${r.getLong(2)} distinct key tuples — one row per key"))
     val dstAll = keyed(dsts)
-    // topology seq ceiling: the union of every table's raw seq column in
-    // one 1-row aggregate, plus the SINGLE pending tail
-    val am = tables.map(t => readStateDir(s, stateDirs(t)).select(col("seq")))
-      .reduce(_.union(_)).agg(max(col("seq"))).collect()(0)
-    val appliedMax = if (am.isNullAt(0)) 0L else am.getLong(0)
+    // topology seq ceiling: every table's raw max seq from its epoch
+    // records (a scan only of epochs without one), plus the SINGLE
+    // pending tail
+    val appliedMax = tables.flatMap(t =>
+      maxSeqOf(s, stateDirs(t), StateFs.epochIds(stateDirs(t)))).maxOption
+      .getOrElse(0L)
     val pendingMax = pendingRoot
       .flatMap(latestPendingBelow(_, Long.MaxValue))
       .flatMap { p =>
@@ -3670,6 +3679,13 @@ object StreamingOps {
     * a caught-up consumer's incremental poll costs O(changed), not
     * O(table).
     *
+    * UNORDERED, like the update-mode output of a streaming query: the
+    * rows are a set of per-key changes and come in no particular order
+    * (a downstream applies them per key). The plan is the `seq`-pruned
+    * scan, the partial collapse, one hash exchange and the final
+    * collapse — no range sort. A caller that wants key order adds its
+    * own `orderBy`.
+    *
     * Retention guards, loud: a position below the tombstone-GC purge
     * floor would silently miss purged deletes, and one below a truncate
     * floor cannot be expressed as per-key changes at all (a truncate is
@@ -3713,7 +3729,6 @@ object StreamingOps {
       .select((keyCols ++
         (Seq("op", "price", "status", "ts", "seq") ++ extraCols(gated))
           .filterNot(keyCols.contains)).map(col): _*)
-      .orderBy(keyCols.map(col): _*)
   }
 
   /** Play the CDC log as 3 seq-ordered waves; apply with foreachBatch +
@@ -5615,7 +5630,8 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
       runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state")
-      readStateChanges(s, s"$tmp/state", 1L)
+      // the export is unordered; the oracle's total order is the key
+      readStateChanges(s, s"$tmp/state", 1L).orderBy(col("okey"))
     }),
 
     // S-CHANGES-BETWEEN: the bounded incident-window audit live —
@@ -5633,6 +5649,7 @@ object StreamingOps {
       runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt", s"$tmp/state",
         keepHistory = true)
       readStateChanges(s, s"$tmp/state", 1L, untilSeq = Some(3L))
+        .orderBy(col("okey"))
     }),
 
     // S-MV-SEED: the `--full`-then-`--increment` operator flow with the

@@ -338,6 +338,63 @@ class CdcPropertySpec extends SparkTestBase {
     }
   }
 
+  test("CHANGES-SINCE property: any log through the pass, a compaction " +
+      "partway, any position at or above the purge floor — the export == " +
+      "per-key latest event above it, tombstones included, one row per key") {
+    import graft.streaming.StreamingOps
+    // random logs applied by the CDC pass onto a FOLDED dir (per-batch
+    // winners only), compacted after the middle wave — tombstones GC'd on
+    // even logs, so those dirs carry a purge floor and a baseline without
+    // the purged deletes — then polled at random positions the export
+    // accepts. The export is unordered; it is compared as a map and
+    // must hold exactly one row per key.
+    samples(6).filter(_.length > 3).zipWithIndex.foreach { case (ops, si) =>
+      val sorted = ops.sortBy(_.seq)
+      val base = java.nio.file.Files
+        .createTempDirectory(s"graft_csprop$si").toString
+      def toDf(chunk: List[Op]) =
+        spark.createDataFrame(chunk)
+          .select(col("op"), col("seq"),
+            timestamp_seconds(lit(1700000000L) + col("seq")).as("ts"),
+            col("key").as("okey"), col("v").cast("double").as("price"),
+            lit("S").as("status"))
+      val waves = sorted.grouped(math.max(1, (sorted.length + 2) / 3)).toList
+      waves.zipWithIndex.foreach { case (w, i) =>
+        StreamingOps.writeWave(toDf(w), s"$base/in", i)
+        StreamingOps.runCdcPass(spark, FileCdcSource(toDf(w).schema,
+          s"$base/in"), s"$base/ckpt", s"$base/state")
+        if (i == waves.length / 2) StreamingOps.compactState(spark,
+          s"$base/state",
+          tombstoneHorizon = Option.when(si % 2 == 0)(0))
+      }
+      // a GC'ing compaction's floor is the newest seq it folded (no txn
+      // tail here), now taken from the epoch records
+      val folded = waves.take(waves.length / 2 + 1).flatten.map(_.seq).max
+      assert(StreamingOps.readPurgeFloor(s"$base/state") ==
+        Option.when(si % 2 == 0)(folded), s"purge floor, log: $ops")
+      val floor = StreamingOps.readPurgeFloor(s"$base/state")
+        .getOrElse(sorted.head.seq - 1)
+      val rnd = new scala.util.Random(91 + si)
+      val positions = (floor +: sorted.last.seq +:
+        Seq.fill(3)(floor + rnd.nextInt((sorted.last.seq - floor).toInt + 1)))
+        .distinct
+      val latest = sorted.groupBy(_.key).map { case (k, es) =>
+        k -> es.maxBy(_.seq) }
+      positions.foreach { p =>
+        val rows = StreamingOps.readStateChanges(spark, s"$base/state", p)
+          .select(col("okey"), col("op"), col("price"), col("seq"))
+          .collect()
+        val got = rows.map(r => r.getLong(0) -> (r.getString(1),
+          r.getDouble(2), r.getLong(3))).toMap
+        val want = latest.collect { case (k, w) if w.seq > p =>
+          k -> (w.op, w.v.toDouble, w.seq) }
+        assert(rows.length == got.size,
+          s"${rows.length} rows for ${got.size} keys at $p, log: $ops")
+        assert(got == want, s"export at $p (floor $floor), log: $ops")
+      }
+    }
+  }
+
   test("TIME TRAVEL property: any log, any position — as-of == replay of the prefix") {
     import graft.streaming.{StateFs, StreamingOps}
     samples(6).filter(_.length > 3).zipWithIndex.foreach { case (ops, si) =>

@@ -1535,11 +1535,49 @@ class ReplicationSpec extends SparkTestBase {
         s"executions $roots")
       assert(roots.size <= before - 1,
         s"${roots.size} root executions in compactState($gc): $roots")
+      // with GC the purge floor's newest folded seq comes from the epoch
+      // records too (the code before that ran its own max(seq) scan of
+      // the gated state: 2 root executions), leaving the baseline write
+      if (gc.isDefined) assert(roots.size <= 1,
+        s"${roots.size} root executions in a GC'ing compactState: $roots")
       val st = Replication.replicaStatus(spark, s"$base/state")
       assert(st.baselineEpochs == 1 && st.deltaEpochs == 0 &&
         st.compactHorizon.contains(horizon) && st.appliedSeq.contains(13L),
         s"compacted ($gc): $st")
     }
+  }
+
+  test("repairSync's SQL executions: the topology seq ceiling comes from " +
+      "the epoch records, not a max(seq) scan of every state") {
+    // the code before the ceiling came from the records ran, per repair
+    // of this fixture, 4 root executions: the source key uniqueness
+    // aggregate, the max(seq) scan over the union of every table's
+    // state, the diff's counts and the staged correction write
+    val before = 4
+    val base = tmp()
+    val log = txnDf(Seq(TxnEv("I", 1, 1, 10.0, "O", 0),
+      TxnEv("I", 2, 2, 20.0, "O", 0), TxnEv("I", 3, 3, 30.0, "O", 0),
+      TxnEv("U", 4, 2, 21.0, "P", 0), TxnEv("D", 5, 3, 30.0, "O", 0)))
+      .drop("txn")
+    (0 to 1).foreach { w =>
+      graft.streaming.StreamingOps.writeWave(
+        log.filter(col("seq") > w * 3 && col("seq") <= w * 3 + 3),
+        s"$base/in", w)
+      Replication.incrementalSync(spark, log.schema, s"$base/in",
+        s"$base/ckpt", s"$base/state")
+    }
+    // the truth lost key 1, moved key 2's price and still has key 3
+    val truth = txnDf(Seq(TxnEv("I", 4, 2, 22.0, "P", 0),
+      TxnEv("I", 3, 3, 30.0, "O", 0))).drop("txn").drop("op").drop("seq")
+    val (l, report) = listened(
+      Replication.repairSync(spark, truth, s"$base/state"))
+    info(s"repairSync: ${l.roots.size} root executions ${l.roots}")
+    assert(report == Replication.RepairReport(1L, 1L, 1L), s"report: $report")
+    assert(l.roots.size <= before - 1,
+      s"${l.roots.size} root executions in repairSync: ${l.roots}")
+    // the corrections land one above the newest applied seq
+    assert(Replication.replicaStatus(spark, s"$base/state").appliedSeq
+      .contains(6L))
   }
 
   test("rowsApplied counts every micro-batch of a catch-up longer than the " +
@@ -3511,6 +3549,60 @@ class ReplicationSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("purge floor"))
     assert(changes(4L) == Map.empty, "at the floor the export still serves")
+  }
+
+  test("changes poll: no global sort — at most 2 Spark jobs, no global " +
+      "SortExec or range exchange, the same rows as the sorted export") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the sorted export ran 4 Spark jobs per poll of this fixture: the
+    // scan and hash-exchange map stage, the range-partition sampling
+    // job, the range-exchange map stage and the result stage
+    val sortedJobs = 4
+    val base = tmp()
+    val evs = (1 to 40).map(k => TxnEv("I", k, k, k.toDouble, "O", 0)) ++
+      (41 to 60).map(i => TxnEv("U", i, (i * 7) % 40 + 1, i.toDouble, "P", 0)) ++
+      (61 to 66).map(i => TxnEv("D", i, (i * 11) % 40 + 1, 0.0, "O", 0))
+    val log = txnDf(evs).drop("txn")
+    // a seed epoch (the compacted baseline of the inserts) and 2 deltas
+    Seq((0L, 20L), (20L, 40L), (40L, 56L), (56L, 66L)).zipWithIndex
+      .foreach { case ((lo, hi), w) =>
+        graft.streaming.StreamingOps.writeWave(
+          log.filter(col("seq") > lo && col("seq") <= hi), s"$base/in", w)
+        Replication.incrementalSync(spark, log.schema, s"$base/in",
+          s"$base/ckpt", s"$base/state")
+        if (w == 1) graft.streaming.StreamingOps.compactState(spark,
+          s"$base/state")
+      }
+    val st = Replication.replicaStatus(spark, s"$base/state")
+    assert(st.baselineEpochs == 1 && st.deltaEpochs == 2, s"fixture: $st")
+    val poll = Replication.changesSince(spark, s"$base/state", 30L)
+    val (l, rows) = listened(poll.collect())
+    info(s"changesSince: ${l.jobCount} Spark jobs")
+    assert(l.jobCount <= sortedJobs - 2,
+      s"${l.jobCount} Spark jobs in one changes poll")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = poll.queryExecution.executedPlan
+    // the collapse's sort aggregate keeps its partition-local sorts;
+    // only a global (total-order) sort is gone
+    assert(helper.collect(plan) { case p: SortExec if p.global => p }.isEmpty,
+      s"global SortExec in the poll: $plan")
+    assert(helper.collect(plan) {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.isEmpty, s"range exchange in the poll: $plan")
+    // the rows, as a map: each key changed above 30, its latest image
+    val got = rows.map(r => r.getAs[Long]("okey") ->
+      ((r.getAs[String]("op"), r.getAs[Double]("price"),
+        r.getAs[Long]("seq")))).toMap
+    val want = evs.filter(_.seq > 30).groupBy(_.okey).map { case (k, es) =>
+      val w = evs.filter(_.okey == k).maxBy(_.seq)
+      k -> ((w.op, w.price, w.seq))
+    }
+    assert(rows.length == got.size, s"${rows.length} rows for ${got.size} keys")
+    assert(got == want, s"export $got != reference $want")
   }
 
   test("computed columns materialize at apply; masks run before the compute") {
