@@ -1092,10 +1092,8 @@ object Llm {
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
         .writeStream.option("checkpointLocation", s"$tmp/ckpt")
         .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          graft.streaming.StreamingOps.withBatchShuffle(s, batch) {
-            dedupIncremental(s, batch.toDF(), idx)
-              .write.mode("append").parquet(s"$tmp/out")
-          }
+          dedupIncremental(s, batch.toDF(), idx)
+            .write.mode("append").parquet(s"$tmp/out")
           // the maintenance op, live: fold the seed's + wave 0's
           // appended files mid-stream — wave 1 must see the identical
           // index (the SAME oracle gates the whole run)
@@ -1561,10 +1559,8 @@ object Llm {
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
         .writeStream.option("checkpointLocation", s"$tmp/ckpt")
         .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          graft.streaming.StreamingOps.withBatchShuffle(s, batch) {
-            annIngest(s, batch.toDF(), idx)
-              .write.mode("append").parquet(s"$tmp/out")
-          }; ()
+          annIngest(s, batch.toDF(), idx)
+            .write.mode("append").parquet(s"$tmp/out")
         }
         .start()
       }

@@ -192,7 +192,7 @@ object StreamingOps {
     * the touched-key probes: every state delta/baseline row materializes
     * `_bucket = pmod(xxhash64(key columns), StateBuckets)` and rows are
     * clustered by it within each written file, so parquet row-group
-    * stats answer a bucket-set probe ([[mvImages]]' old-image lookup,
+    * stats answer a bucket-set probe ([[readPriorImages]]' prior lookup,
     * the chunk-restricted repair read) with pruning instead of a full
     * state scan per trigger. The bucket column is PHYSICAL-ONLY: it is
     * excluded from the published `_schema`, so every schema-pinned
@@ -1302,37 +1302,6 @@ object StreamingOps {
     withConfs(s,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
-  /** Run a foreachBatch body with shuffle partitions DERIVED FROM THE
-    * BATCH'S INPUT SIZE (guide §2.2: size partitions from data, never
-    * inherit a constant): AQE cannot coalesce inside a streaming
-    * micro-batch plan, so every per-batch collapse/completion shuffle
-    * otherwise runs at the session's partition count — pure per-trigger
-    * fixed cost when a micro-batch is a few MB (one wave file here),
-    * and exactly as wrong at 100 TB in the other direction if someone
-    * hard-coded a small constant. Partitions = ceil(batch input bytes /
-    * 32 MB of parquet ≈ 100-150 MB of shuffled rows), capped at the
-    * session value (never raised — the session's number is the sized-
-    * for-the-cluster ceiling, the [[withMicroBatchShuffle]] policy) and
-    * floored at 1. Unknown input size (non-file sources: MemoryStream
-    * in specs, a socket transport) keeps the session value untouched.
-    * Results are partition-count-independent (groupBy/join semantics);
-    * only task count and epoch file count change. */
-  private[graft] def withBatchShuffle[T](s: SparkSession, batch: Dataset[Row])
-      (body: => T): T = {
-    val bytes =
-      try {
-        val files = batch.inputFiles
-        if (files.isEmpty ||
-          files.exists(f => new java.net.URI(f).getScheme != "file")) -1L
-        else files.map(f => new java.io.File(new java.net.URI(f)).length()).sum
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-    if (bytes <= 0L) return body
-    val session = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val sized = math.max(1L, math.min(session.toLong,
-      (bytes + (32L << 20) - 1) / (32L << 20))).toString
-    withConfs(s, "spark.sql.shuffle.partitions" -> sized)(body)
-  }
-
   /** Shared ingest scaffold: play the change stream opened by `source`
     * as micro-batches into `apply`, then return (rowsApplied,
     * dataBatches). The transport is a [[CdcSource]] plug — the file
@@ -1356,9 +1325,7 @@ object StreamingOps {
       val query = withNoIdleBatch(s) {
         df.writeStream
           .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-            withBatchShuffle(s, batch) { apply(batch, epochId) }
-          }
+          .foreachBatch(apply)
           .start()
       }
       try query.processAllAvailable() finally query.stop()
@@ -1690,9 +1657,10 @@ object StreamingOps {
   private final case class CdcRun(consumed: Long,
       tables: Map[String, SyncProgress], pos: PassPosition, pendingRows: Long)
 
-  /** The ONE CDC micro-batch body behind [[runCdcPass]] and
-    * [[runCdcPassMulti]]: a stream whose `table` column (the entry's
-    * `table` expression) fans out to `stateDirs`. Per batch, in order:
+  /** The ONE CDC micro-batch body behind [[runCdcPass]],
+    * [[runCdcPassMulti]] and the MV passes ([[runViewPass]]): a stream
+    * whose `table` column (the entry's `table` expression) fans out to
+    * `stateDirs`. Per batch, in order:
     *  - events at or below `startAfterSeq` drop, and so do keep-alive
     *    rows under `heartbeats`;
     *  - the transaction gate ([[txnGate]], pending tail under `pendRoot`)
@@ -1731,7 +1699,13 @@ object StreamingOps {
     *    only when `ckpt` and the state dirs share a filesystem; across
     *    filesystems [[StateFs.moveDir]] copies bytes and deletes the
     *    stage (doubled write I/O, and the epoch appears file by file), so
-    *    keep the checkpoint on the state's filesystem.
+    *    keep the checkpoint on the state's filesystem;
+    *  - a view's `fold` (the MV passes, [[runViewPass]]) replaces the
+    *    collapse with the per-key images ([[keyImages]]: ONE groupBy over
+    *    the batch and its prior images), pinned: their `bwin` is the
+    *    staged write, which carries the observation, and after the moves
+    *    `fold(epochId, images)` writes the view's epoch — on every batch,
+    *    rows or not.
     *
     * Bookkeeping is OBSERVED, never an action of its own: the applied
     * horizon rides the staged write; the pending tail, the heartbeat cap
@@ -1752,8 +1726,8 @@ object StreamingOps {
       rowFilters: Map[String, String], maskCols: Map[String, Seq[String]],
       keepHistory: Boolean, computedCols: Seq[(String, String)],
       partialImageCol: Option[String], heartbeats: Boolean,
-      strictBefore: Option[(String, String)], conflictDlq: Option[String])
-      : CdcRun = {
+      strictBefore: Option[(String, String)], conflictDlq: Option[String],
+      fold: Option[(Long, DataFrame) => Unit] = None): CdcRun = {
     val declared = stateDirs.keys.toSeq.sorted
     val tables = scala.collection.mutable.Map(
       declared.map(_ -> SyncProgress(0L, 0L, None)): _*)
@@ -1769,10 +1743,11 @@ object StreamingOps {
     val rawAgg = trackSeq && !rawAtGate && (startAfterSeq.isDefined ||
       txnCol.isDefined || rowFilters.nonEmpty || heartbeats ||
       strictBefore.isDefined || partialImageCol.isDefined)
-    // the raw aggregate and the prior-image probes of completion and the
-    // strict gate each read the batch beside the staged write
+    // the raw aggregate and the prior-image probes of completion, the
+    // strict gate and a view's images each read the batch beside the
+    // staged write
     val multiAction = rawAgg || partialImageCol.isDefined ||
-      strictBefore.isDefined
+      strictBefore.isDefined || fold.isDefined
     val (rows, _) = runSourcePass(s, source, ckpt) { (batch, epochId) =>
       if (multiAction) batch.persist()
       val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -1840,35 +1815,49 @@ object StreamingOps {
               lit(null).cast(filtered.schema(c).dataType))
               .otherwise(col(c)).as(c)
           }: _*)
-        val (applied, observed) = observeHorizons(
-          computedCols.foldLeft(masked) { case (df, (n, e)) =>
-            df.withColumn(n, expr(e)) },
-          declared.map(col("table") === _) :+ lit(true))
+        val ready = computedCols.foldLeft(masked) { case (df, (n, e)) =>
+          df.withColumn(n, expr(e)) }
+        def observe(df: DataFrame) =
+          observeHorizons(df, declared.map(col("table") === _) :+ lit(true))
+        // a view pins its images frame, so its horizons ride the written
+        // winners below it (a completed frame's do too)
+        val (applied, eventsObserved) =
+          if (fold.isDefined) (ready, None)
+          else { val (o, h) = observe(ready); (o, Some(h)) }
         // evolved envelope columns (mid-stream DDL) ride through
         val routed = applied
           .select((envelopeCols ++ extraCols(applied) :+ "table").map(col): _*)
           .filter(col("table").isin(declared: _*))
         val keys = keyFor.values.toSeq.distinct
+        val images = fold.map(_ =>
+          keyImages(s, stateDirs, keyFor, epochId, routed).persist())
+        pins ++= images
         // default: fold the batch to per-key winners before writing —
         // the delta costs O(keys touched), not O(events). keepHistory
         // lands events verbatim (as-of reads keep EVENT granularity, the
         // retention trade a time-traveling replica opts into), and a
-        // completed batch is one row per key already. Heterogeneous PKs
-        // group on each row's key under ITS table's definition
-        // ([[tableKeyStruct]]), still in ONE job, and keep the envelope's
-        // column order
-        val collapsed =
-          if (keepHistory || partialImageCol.isDefined) routed
-          else if (keys.size == 1) collapse(routed, "table" +: keys.head)
-          else collapse(routed.withColumn("__key",
-            tableKeyStruct(keyFor, routed.schema)), Seq("table", "__key"))
-            .select(routed.columns.map(col): _*)
+        // completed batch is one row per key already, as is a view's
+        // `bwin`. Heterogeneous PKs group on each row's key under ITS
+        // table's definition ([[tableKeyStruct]]), still in ONE job, and
+        // keep the envelope's column order
+        val collapsed = images match {
+          case Some(im) => im.select(routed.columns.toSeq.map(c =>
+            if (c == "table") col(c) else col(s"bwin.$c").as(c)): _*)
+          case None =>
+            if (keepHistory || partialImageCol.isDefined) routed
+            else if (keys.size == 1) collapse(routed, "table" +: keys.head)
+            else collapse(routed.withColumn("__key",
+              tableKeyStruct(keyFor, routed.schema)), Seq("table", "__key"))
+              .select(routed.columns.map(col): _*)
+        }
+        val (written, observed) = eventsObserved
+          .fold(observe(collapsed))(collapsed -> _)
         val epochStage = s"$ckpt/_staging/epoch=$epochId"
         // the writer percent-escapes special chars in partition dir
         // names — the staged dir lives under the ESCAPED name
         def staged(t: String) = s"$epochStage/table=" + org.apache.spark.sql
           .catalyst.catalog.ExternalCatalogUtils.escapePathName(t)
-        collapsed.withColumn(BucketCol, tableBucket(keyFor))
+        written.withColumn(BucketCol, tableBucket(keyFor))
           .write.mode("overwrite").partitionBy("table").parquet(epochStage)
         val hs = observed()
         declared.zip(hs).filter(_._2.rows > 0L).foreach { case (t, h) =>
@@ -1882,6 +1871,8 @@ object StreamingOps {
         }
         // the moves emptied the stage of everything but write metadata
         StateFs.deleteRecursive(epochStage)
+        // on EVERY batch, rows or not: a view keeps one epoch per batch
+        for (f <- fold; im <- images) f(epochId, im)
         if (trackSeq) {
           pos.resolve(hs.last)
           resolvedObs.foreach(h => pos.resolve(h()))
@@ -2517,13 +2508,10 @@ object StreamingOps {
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-          withBatchShuffle(s, batch) {
-            batch.groupBy(col("event_type"), (col("user_id") % 10).as("user_bucket"))
-              .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("tot"),
-                min(col("value")).as("mn"), max(col("value")).as("mx"))
-              .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-          }
-          ()
+          batch.groupBy(col("event_type"), (col("user_id") % 10).as("user_bucket"))
+            .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("tot"),
+              min(col("value")).as("mn"), max(col("value")).as("mx"))
+            .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
         }
         .start()
     }
@@ -2693,6 +2681,48 @@ object StreamingOps {
     }.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** The batch tagged `_src = "b"`, unioned with its touched keys' prior
+    * images ([[readPriorImages]]) tagged `"p"` — the input of the
+    * one-shuffle per-key passes ([[completePartialImages]],
+    * [[keyImages]]). */
+  private def withPriorImages(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame): DataFrame =
+    readPriorImages(s, stateDirs, keyFor, epochId, batch)
+      .foldLeft(batch.withColumn("_src", lit("b")))((b, p) =>
+        b.unionByName(p.withColumn("_src", lit("p")),
+          allowMissingColumns = true))
+
+  /** A view fold's input ([[runCdcBody]]'s `fold`), ONE shuffle for the
+    * three images a maintenance step needs: per (table, key) the batch
+    * touches ([[tableKeyStruct]]),
+    *   - `bwin` — the batch's own winner, the state delta the epoch lands;
+    *   - `old`  — the key's image BEFORE the batch: latest-wins over the
+    *     prior images, state epochs STRICTLY below `epochId` (replay
+    *     safety: epoch K's second delivery must not see its first
+    *     attempt's delta); NULL for a first-seen key;
+    *   - `new`  — the image AFTER the batch (latest-wins over both).
+    * Three `max_by`s of one groupBy: `max_by` ignores NULL ordering
+    * keys, so nulling the other side's seq splits the aggregates without
+    * a second shuffle. Each image is a whole row, key columns included
+    * (`old`/`new` also carry published columns the batch lacks), so
+    * `img.*` reads back as a state row. */
+  private def keyImages(s: SparkSession, stateDirs: Map[String, String],
+      keyFor: Map[String, Seq[String]], epochId: Long,
+      batch: DataFrame): DataFrame = {
+    val tagged = withPriorImages(s, stateDirs, keyFor, epochId, batch)
+    def img(cs: Seq[String]) =
+      struct(cs.filterNot(Set("table", "_src")).map(col): _*)
+    tagged.groupBy(col("table"),
+        tableKeyStruct(keyFor, tagged.schema).as("__key"))
+      .agg(
+        max_by(img(batch.columns), when(col("_src") === "b", col("seq")))
+          .as("bwin"),
+        max_by(img(tagged.columns), when(col("_src") === "p", col("seq")))
+          .as("old"),
+        max_by(img(tagged.columns), col("seq")).as("new"))
+  }
+
   /** Complete a `binlog_row_image=MINIMAL` batch into FULL row images
     * at apply time — the write-side completion that keeps every
     * downstream path (collapse, compaction, MVs, repair, changelog
@@ -2727,10 +2757,7 @@ object StreamingOps {
     val b0 = batch.filter(col("table").isin(stateDirs.keys.toSeq: _*))
     val cols = batch.columns.toSeq
       .filterNot(Seq("op", "seq", "ts", "table", changedCol).contains)
-    val tagged = readPriorImages(s, stateDirs, keyFor, epochId, b0)
-      .foldLeft(b0.withColumn("_src", lit("b")))((b, p) =>
-        b.unionByName(p.withColumn("_src", lit("p")),
-          allowMissingColumns = true))
+    val tagged = withPriorImages(s, stateDirs, keyFor, epochId, b0)
     // the tables whose key includes each column: all of them → the
     // column is read from the grouping key alone
     val keyOf = cols.map(c =>
@@ -2794,74 +2821,6 @@ object StreamingOps {
   //     groups carry forward; work is O(batch) + O(Σ dirty-group size).
   // ───────────────────────────────────────────────────────────────────
 
-  /** The MV passes' per-batch image computation, ONE shuffle for all
-    * three views a maintenance step needs: per touched key,
-    *   - `bwin` — the batch's own winner (the state-epoch delta to
-    *     persist, [[runCdcPass]]'s fold),
-    *   - `old`  — the key's image BEFORE the batch (latest-wins over
-    *     state epochs STRICTLY below `epochId`; replay safety: epoch
-    *     K's second delivery must not see its first attempt's delta),
-    *   - `new`  — the image AFTER the batch (latest-wins over both).
-    * The prior-epoch scan is restricted to touched keys by a broadcast
-    * semi-join BEFORE the shuffle and is compaction-bounded exactly like
-    * [[repairState]]'s; the three views are three `max_by` aggregates of
-    * one groupBy (`max_by` ignores NULL ordering keys, so tagging rows
-    * with their side and nulling the other side's seq splits the
-    * aggregates without a second shuffle). Returned columns:
-    * keyCols ++ (bwin, old, new) structs; `old` is NULL for
-    * first-seen keys. */
-  private def mvImages(s: SparkSession, state: String, epochId: Long,
-      batch: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val b = envelope(batch)
-    val fields = (Seq("op", "price", "status", "ts", "seq") ++ extraCols(b))
-      .filterNot(keyCols.contains)
-    val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
-    val tagged =
-      if (priorEpochs.isEmpty) b.withColumn("_src", lit("b"))
-      else {
-        // the batch's touched BUCKETS (≤ StateBuckets values, one tiny
-        // distinct over the already-persisted batch): pushed into the
-        // prior-state scan so the old-image lookup prunes row groups /
-        // files instead of scanning every epoch per trigger — the
-        // O(state-scan) → O(touched-buckets) conversion that matters at
-        // 100 TB. The key-exact semi-join below is unchanged; the
-        // bucket gate is pure IO pruning.
-        val touched = b.select(bucketOf(keyCols).as(BucketCol)).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        // the prior-state read goes through readStateDir, so old images
-        // honor the dir's FULL DDL record — pre-rename epochs serve
-        // under the current name (rename-history coalesce), pre-DDL
-        // rows serve an added column's DEFAULT, dropped-then-re-added
-        // columns gate to NULL — exactly what the retraction delta must
-        // subtract (retracting NULL where the row SERVED its default
-        // would leak the default into the view forever). On a dir with
-        // no DDL record this is bit-for-bit the old pinned read.
-        val prior = readStateDirGated(s, state, buckets = Some(touched))
-          .filter(col("epoch") < epochId).drop("epoch")
-          .join(broadcast(b.select(keyCols.map(col): _*).distinct()),
-            keyCols, "left_semi")
-        envelope(prior).withColumn("_src", lit("p"))
-          .unionByName(b.withColumn("_src", lit("b")))
-      }
-    val img = struct(fields.map(col): _*)
-    tagged.groupBy(keyCols.map(col): _*)
-      .agg(
-        max_by(img, when(col("_src") === "b", col("seq"))).as("bwin"),
-        max_by(img, when(col("_src") === "p", col("seq"))).as("old"),
-        max_by(img, col("seq")).as("new"))
-  }
-
-  /** Un-nest one of [[mvImages]]' struct views back to envelope shape,
-    * dropping keys where the view is NULL. */
-  private def mvView(images: DataFrame, viewCol: String,
-      keyCols: Seq[String]): DataFrame = {
-    val fields = images.schema(viewCol).dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-    images.filter(col(viewCol).isNotNull)
-      .select(keyCols.map(col) ++
-        fields.map(f => col(s"$viewCol.$f").as(f)): _*)
-  }
-
   /** Newest MV snapshot strictly below `epochId` (same pattern as
     * [[latestPendingBelow]]): a replayed epoch recomputes from the same
     * base its crashed attempt read. Reads are SCHEMA-PINNED via the
@@ -2872,48 +2831,18 @@ object StreamingOps {
     s.read.schema(readStateSchema(mv).getOrElse(throw new IllegalStateException(
       s"MV dir $mv has no published _schema"))).parquet(s"$mv/epoch=$epoch")
 
+  /** [[readMvEpoch]] of the newest snapshot strictly below `epochId`,
+    * or the empty view before the first. */
   private def latestMvBelow(s: SparkSession, mv: String,
-      epochId: Long): Option[DataFrame] =
-    StateFs.epochIds(mv).filter(_ < epochId).sorted.lastOption
-      .map(e => readMvEpoch(s, mv, e))
+      epochId: Long): DataFrame =
+    StateFs.epochIds(mv).filter(_ < epochId).maxOption
+      .fold(s.createDataFrame(new java.util.ArrayList[Row](),
+        readStateSchema(mv).get))(readMvEpoch(s, mv, _))
 
   /** Serve the MV: its newest epoch snapshot. */
   private[graft] def readMv(s: SparkSession, mv: String): DataFrame =
     readMvEpoch(s, mv, StateFs.epochIds(mv).max)
 
-  /** RETRACTABLE-aggregate MV maintenance (ST30): per group
-    * (`groupCol`, e.g. `status`), `n_rows = count(*)` and
-    * `total = sum(price)` over the LATEST state of the replicated table,
-    * maintained per micro-batch from deltas only.
-    *
-    * Per batch: fold the batch to per-key winners (`bw`, O(batch)), look
-    * up those keys' old images ([[mvOldImages]]), write the state epoch
-    * delta (the destination table advances exactly as [[runCdcPass]]'s
-    * default path), then update the MV:
-    *
-    *   delta(group) = Σ_alive(new images) − Σ_alive(old images)
-    *   mv_K = merge(mv_{K-1}, delta), groups reaching n_rows = 0 dropped
-    *
-    * The per-key deltas telescope across batches — Σ_batches (f(new) −
-    * f(old)) = f(final) − f(initial) in exact DECIMAL(18,2) arithmetic —
-    * so the served MV equals the group-by over the final latest state
-    * bit-for-bit, which is what the oracle checks. An update that moves
-    * a key between groups retracts from the old group and adds to the
-    * new one in the same batch; a delete retracts only.
-    *
-    * Crash safety: the MV is epoch-keyed like every sink here — epoch K
-    * writes `mv/epoch=K` reading only strictly-older snapshots, so an
-    * at-least-once replay recomputes the identical snapshot; snapshots
-    * two or more epochs old are pruned (a replay can only be of the
-    * newest epoch). The MV itself is O(groups) — metadata-sized next to
-    * the table — while per-batch work is O(batch) + the bounded
-    * old-image lookup; nothing scans the full table, ever.
-    *
-    * Cardinality regime: each epoch rewrites the MV snapshot — O(groups)
-    * — which is the right trade for DIMENSION-sized group keys (status,
-    * nation, month: the ClickHouse MV norm). A key-cardinality "view"
-    * (one row per customer) is just the table itself — serve it from
-    * the state dir's collapse instead; an MV adds nothing there. */
   /** Migrate the MV dir itself across a RENAME COLUMN DDL that hits its
     * group column: the published `_schema` renames in place and the
     * newest snapshot physically rewrites under the new name. EAGER where
@@ -2985,19 +2914,8 @@ object StreamingOps {
           // copy) — reclaim
           StateFs.deleteRecursive(stage)
       }
-      val hit = renames.filter { case (o, _) => p.fieldNames.contains(o) }
+      val (hit, renamed) = renamedSchema(p, renames, "view")
       if (hit.nonEmpty) {
-        val dup = hit.values.groupBy(identity)
-          .collect { case (n, vs) if vs.size > 1 => n }
-        require(dup.isEmpty,
-          s"renames merge view columns onto '${dup.mkString(", ")}'")
-        hit.foreach { case (_, n) =>
-          require(!p.fieldNames.contains(n),
-            s"MV rename target '$n' already published — a rename cannot " +
-              "merge two view columns")
-        }
-        val renamed = org.apache.spark.sql.types.StructType(p.fields.map(f =>
-          hit.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
         // the claim publishes BEFORE the first destructive step: from
         // here until the schema publish, healing rolls back; after it,
         // healing reclaims — ownership, not guesswork, decides
@@ -3018,6 +2936,25 @@ object StreamingOps {
       }
     }
 
+  /** The renames that hit the published schema `p` of a view-side dir,
+    * and the schema they publish — validated before any mutation, so
+    * nothing is half-renamed: no two renames onto one name, none onto an
+    * already-published column. */
+  private def renamedSchema(p: org.apache.spark.sql.types.StructType,
+      renames: Map[String, String], what: String)
+      : (Map[String, String], org.apache.spark.sql.types.StructType) = {
+    val hit = renames.filter { case (o, _) => p.fieldNames.contains(o) }
+    val dup = hit.values.groupBy(identity)
+      .collect { case (n, vs) if vs.size > 1 => n }
+    require(dup.isEmpty,
+      s"renames merge $what columns onto '${dup.mkString(", ")}'")
+    hit.values.foreach(n => require(!p.fieldNames.contains(n),
+      s"$what rename target '$n' already published — a rename cannot " +
+        s"merge two $what columns"))
+    (hit, org.apache.spark.sql.types.StructType(p.fields.map(f =>
+      hit.get(f.name).fold(f)(n => f.copy(name = n)))))
+  }
+
   /** [[migrateMvRename]]'s companion for the GROUP-PARTITIONED snapshot
     * dir of the recompute-family passes: the group column lives only in
     * the partition DIRECTORY NAMES (`partitionBy` drops it from the
@@ -3034,22 +2971,14 @@ object StreamingOps {
   private def migrateSnapRename(snap: String, renames: Map[String, String],
       groupCol: String): Unit =
     readStateSchema(snap).foreach { p =>
-      val hit = renames.filter { case (o, _) => p.fieldNames.contains(o) }
+      val (hit, renamed) = renamedSchema(p, renames, "snapshot")
       if (hit.nonEmpty) {
-        val dup = hit.values.groupBy(identity)
-          .collect { case (n, vs) if vs.size > 1 => n }
-        require(dup.isEmpty,
-          s"renames merge columns onto '${dup.mkString(", ")}' — " +
-            "validated BEFORE any mutation, so nothing is half-renamed")
         hit.foreach { case (o, n) =>
           require(n == groupCol,
             s"snapshot rename '$o' -> '$n' hits a non-group snapshot " +
               "column — snapshot data files carry it physically and " +
               "only the state dir reads through a rename history; " +
               "re-attach the MV (mvAttach*) after this DDL instead")
-          require(!p.fieldNames.contains(n),
-            s"snapshot rename target '$n' already published — a rename " +
-              "cannot merge two snapshot columns")
         }
         StateFs.epochIds(snap).foreach { e =>
           val root = s"$snap/epoch=$e"
@@ -3060,8 +2989,6 @@ object StreamingOps {
             }
           }
         }
-        val renamed = org.apache.spark.sql.types.StructType(p.fields.map(f =>
-          hit.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
         StateFs.writeAtomic(s"$snap/_schema", renamed.json)
       }
     }
@@ -3132,20 +3059,95 @@ object StreamingOps {
         .agg(count(lit(1)).as("n_rows"),
           min(col("price")).as("mn"), max(col("price")).as("mx")))
 
-  /** One MV maintenance pass over a [[CdcSource]] transport — the MV
-    * maintains identically from files, a MemoryStream, or a real
-    * Kafka+Debezium feed (spec-proved over the memory transport).
-    * `measureCol` names the summed column of the ENRICHED image frame
-    * (default the envelope's `price`). `renameCols`/`defaultCols`
-    * declare the same DDL record the CDC passes take
-    * ([[applyRenameDdl]]/[[applyDefaultDdl]]): the STATE side stays
-    * lazy (pre-rename epochs serve via history coalesce, pre-DDL rows
-    * serve the default at read time — the old-image lookup reads
-    * through [[readStateDir]], so retraction deltas subtract exactly
-    * what each row SERVED), while the MV side migrates eagerly when a
-    * rename hits its group column ([[migrateMvRename]] — the view is
-    * O(groups), one tiny rewrite). Returns the pass's [[SyncProgress]]
-    * (positions tracked under `trackSeq`, as in [[runCdcPass]]). */
+  /** The MV passes' one adapter over [[declareCdcPass]] +
+    * [[runCdcBody]]. The view side settles first: a rename hitting the
+    * view's group column migrates the O(groups) view eagerly
+    * ([[migrateMvRename]]), then its `_schema` publishes. The table then
+    * replicates as [[runCdcPass]]'s one-table topology — the same txn
+    * gate (pending tail under `state/_pending`; a straddling transaction
+    * enters table and view together, in the epoch its commit marker
+    * arrives), DDL record, staged epoch write, `_maxseq` record and
+    * position bookkeeping under `trackSeq` — and `fold` maintains
+    * `mv/epoch=N` from the batch's per-key images ([[keyImages]]). So a
+    * view pass keeps no state epoch for a batch that applied nothing,
+    * its [[SyncProgress]] counts the state epochs it kept, a `_history`
+    * state dir refuses by name ([[ensureHistoryMode]]: the images are
+    * batch winners), and its state files and published `_schema` are
+    * the CDC pass's (envelope column order, every column nullable).
+    *
+    * Crash safety: the view is epoch-keyed like every sink here. The
+    * fold runs on EVERY batch — one whose rows the gate holds entirely
+    * included — after the state epoch's rename, and reads only
+    * strictly-older view (and snapshot) epochs, so an at-least-once
+    * replay of epoch K recomputes both the state epoch and the identical
+    * view. View epochs two or more below the batch are pruned (a replay
+    * can only be of the newest epoch). */
+  private def runViewPass(s: SparkSession, source: CdcSource, ckpt: String,
+      state: String, mv: String,
+      mvSchema: org.apache.spark.sql.types.StructType,
+      keyCols: Seq[String], txnCol: Option[String], trackSeq: Boolean,
+      renameCols: Map[String, String], defaultCols: Map[String, ColumnDefault],
+      dropCols: Map[String, Long])(
+      fold: (Long, DataFrame) => Unit): SyncProgress = {
+    migrateMvRename(s, mv, renameCols)
+    ensureStateSchema(mv, mvSchema)
+    val one = Map(OneTable -> state)
+    val oneKey = Map(OneTable -> keyCols)
+    declareCdcPass(source, one, oneKey, topology = false, txnCol,
+      renameCols, truncateAt = Map.empty, defaultCols, rowFilters = Map.empty,
+      maskCols = Map.empty, dropCols, keepHistory = false,
+      partialImageCol = None, strictBefore = None, conflictDlq = None)
+    val run = runCdcBody(s, source, ckpt, one, oneKey, lit(OneTable),
+      pendRoot = state, untag = Seq("table"), trackSeq, startAfterSeq = None,
+      txnCol, rowFilters = Map.empty, maskCols = Map.empty,
+      keepHistory = false, computedCols = Nil, partialImageCol = None,
+      heartbeats = false, strictBefore = None, conflictDlq = None,
+      fold = Some { (epochId, images) =>
+        fold(epochId, images)
+        StateFs.epochIds(mv).filter(_ < epochId - 1)
+          .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
+      })
+    SyncProgress(run.consumed, run.tables(OneTable).epochs, run.pos.applied,
+      run.pendingRows, run.pos.seen)
+  }
+
+  /** RETRACTABLE-aggregate MV maintenance (ST30): per group
+    * (`groupCol`, e.g. `status`), `n_rows = count(*)` and
+    * `total = sum(measureCol)` over the LATEST state of the replicated
+    * table, maintained per micro-batch from deltas only — the fold of
+    * [[runViewPass]] over the batch's per-key images:
+    *
+    *   delta(group) = Σ_alive(new images) − Σ_alive(old images)
+    *   mv_K = merge(mv_{K-1}, delta), groups reaching n_rows = 0 dropped
+    *
+    * The per-key deltas telescope across batches — Σ_batches (f(new) −
+    * f(old)) = f(final) − f(initial) in exact DECIMAL(18,2) arithmetic —
+    * so the served MV equals the group-by over the final latest state
+    * bit-for-bit, which is what the oracle checks. An update that moves
+    * a key between groups retracts from the old group and adds to the
+    * new one in the same batch; a delete retracts only. The MV itself is
+    * O(groups) — metadata-sized next to the table — while per-batch work
+    * is O(batch) + the bounded old-image lookup; nothing scans the full
+    * table, ever.
+    *
+    * `enrich` is the JOIN-MV hook (ST32): a pure per-image lookup
+    * against STATIC dimensions (broadcast), applied to both delta sides
+    * at once — Δ(R ⋈ S) = ΔR ⋈ S when S is fixed, so only touched images
+    * ever join, never the table. `groupCol` and `measureCol` name
+    * columns of the ENRICHED image frame.
+    *
+    * `renameCols`/`defaultCols` declare the same DDL record the CDC
+    * passes take ([[applyRenameDdl]]/[[applyDefaultDdl]]): the STATE side
+    * stays lazy (pre-rename epochs serve via history coalesce, pre-DDL
+    * rows serve the default at read time — the old images read through
+    * [[readStateDir]], so retraction deltas subtract exactly what each
+    * row SERVED), while the view migrates eagerly ([[runViewPass]]).
+    *
+    * Cardinality regime: each epoch rewrites the MV snapshot — O(groups)
+    * — which is the right trade for DIMENSION-sized group keys (status,
+    * nation, month: the ClickHouse MV norm). A key-cardinality "view"
+    * (one row per customer) is just the table itself — serve it from
+    * the state dir's collapse instead; an MV adds nothing there. */
   private[graft] def runMvSumPass(s: SparkSession, source: CdcSource,
       ckpt: String, state: String, mv: String,
       keyCols: Seq[String] = Seq("okey"),
@@ -3157,120 +3159,36 @@ object StreamingOps {
       renameCols: Map[String, String] = Map.empty,
       defaultCols: Map[String, ColumnDefault] = Map.empty)
       : SyncProgress = {
-    val schema = source.schema
-    // a rename that hits the VIEW's group column migrates the view
-    // BEFORE its schema is (re)published below — the snapshot rewrite
-    // plus in-place schema rename; on any other rename this is a no-op
-    migrateMvRename(s, mv, renameCols)
     val mvSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(groupCol, StringType),
       org.apache.spark.sql.types.StructField("n_rows",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("total", D2)))
-    ensureStateSchema(mv, mvSchema)
-    // pin the state dir's schema up front: the per-batch old-image read
-    // must not pay a mergeSchema footer sweep per trigger. The txn id
-    // is bookkeeping, not payload — it never reaches state (the gate
-    // drops it), so it must not enter the published schema either.
-    val envSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => txnCol.contains(f.name)))
-    // the MV pass owns its state dir exactly like runCdcPass does —
-    // publish the key so compaction/repair/consistency tooling collapses
-    // on the declared (possibly composite) key, not the historical
-    // single-key fallback
-    ensureKeyCols(state, keyCols)
-    val envStateSchema = collapse(envelope(s.createDataFrame(
-      new java.util.ArrayList[Row](), envSchema)), keyCols).schema
-    // DDL metadata settles in runCdcPass's order: renames first
-    // (carry published history to the new name), then the schema union,
-    // then defaults (the column must ride the incoming envelope)
-    applyRenameDdl(state, renameCols, envStateSchema)
-    ensureStateSchema(state, envStateSchema)
-    applyDefaultDdl(state, defaultCols, envStateSchema)
-    // position bookkeeping, same contract as runCdcPass's trackSeq: the
-    // applied horizon advances through applied events AND resolved commit
-    // markers; the seen horizon reads the raw batch so txn-held events
-    // surface as lag, not as silence ([[mvPosition]])
-    val pos = new PassPosition
-    var pending = Option.empty[Long]
-    val (rows, epochs) = runSourcePass(s, source, ckpt) {
-      (batch, epochId) =>
-        // pin the batch: the old-image semi-join's broadcast subtree is
-        // OUTSIDE the images cache and would re-scan the file source
-        // (inflating numInputRows — the runCdcPass multi-action rule)
-        val bdf = batch.toDF().persist()
-        // TRANSACTION-BOUNDARY gate, when declared: the MV must never
-        // observe half a transaction — the SAME ready/carry split the
-        // CDC passes use ([[txnGate]], pending tail under the state
-        // root) holds uncommitted events back from the images, so a
-        // straddling txn's rows enter the view only in the epoch its
-        // commit marker arrives, atomically with the table itself
-        val gate = txnCol.map(tc => txnGate(s, bdf, tc, state, epochId))
-        gate.foreach(g => pending = Some(g.pendingRows))
-        val ready = gate.fold(bdf)(_.ready)
-        val images = mvImages(s, state, epochId, ready, keyCols)
-          .persist()
-        try {
-          // the destination table's own delta — same fold as runCdcPass
-          val (bwin, applied) = observeHorizon(mvView(images, "bwin", keyCols))
-          bucketed(bwin, keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          val h = applied()
-          writeMaxSeq(s"$state/epoch=$epochId", h.seq)
-          if (trackSeq) mvPosition(pos, gate, h)
-          // delta as ONE signed aggregate: +f(new image) − f(old image)
-          // per touched key, exploded from the images frame — no second
-          // shuffle, no two-sided join. `enrich` is the JOIN-MV hook
-          // (ST32): a pure per-image lookup against STATIC dimensions
-          // (broadcast), applied to both delta sides at once —
-          // Δ(R ⋈ S) = ΔR ⋈ S when S is fixed, so only touched images
-          // ever join, never the table. groupCol names a column of the
-          // ENRICHED frame. (A null old struct — a first-seen key —
-          // explodes to null fields and drops with the tombstones.)
-          val signed = images.select(explode(array(
-              struct(lit(1L).as("sign"), col("new").as("img")),
-              struct(lit(-1L).as("sign"), col("old").as("img")))).as("se"))
-            .select(col("se.sign").as("sign"), col("se.img.*"))
-            .filter(col("op").isNotNull && col("op") =!= "D")
-          val delta = enrich(signed)
-            .groupBy(col(groupCol))
-            .agg(sum(col("sign")).as("dn"),
-              sum(col("sign") * dec2(col(measureCol))).cast(D2).as("dt"))
-          val mvPrior = latestMvBelow(s, mv, epochId)
-            .getOrElse(s.createDataFrame(
-              new java.util.ArrayList[Row](), mvSchema))
-          val mvNew = mvPrior.join(delta, Seq(groupCol), "full_outer")
-            .select(col(groupCol),
-              (coalesce(col("n_rows"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_rows"),
-              (coalesce(col("total"), lit(0).cast(D2)) +
-                coalesce(col("dt"), lit(0).cast(D2))).cast(D2).as("total"))
-            .filter(col("n_rows") > 0)
-          mvNew.write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-          StateFs.epochIds(mv).filter(_ < epochId - 1)
-            .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
-        } finally {
-          images.unpersist(); gate.foreach(_.full.unpersist())
-          bdf.unpersist(); ()
-        }
-    }
-    SyncProgress(rows, epochs, pos.applied,
-      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
-  }
-
-  /** The MV passes' trackSeq step, after the `bwin` delta write: the
-    * applied horizon is that write's observed max(seq) — each touched
-    * key's batch winner carries the key's newest ready seq, so it equals
-    * the max over the ready events. Without a txn gate the ready events
-    * ARE the raw batch, so the seen horizon is the same number; a gated
-    * pass reads the seen horizon and the resolved commit markers off
-    * the gate's carry-write observation. */
-  private def mvPosition(pos: PassPosition, gate: Option[Gated],
-      applied: Horizon): Unit = {
-    pos.resolve(applied)
-    gate match {
-      case None => pos.see(applied)
-      case Some(g) => pos.see(g.input); pos.resolve(g.markers)
+    runViewPass(s, source, ckpt, state, mv, mvSchema, keyCols, txnCol,
+        trackSeq, renameCols, defaultCols, dropCols = Map.empty) {
+      (epochId, images) =>
+        // delta as ONE signed aggregate: +f(new image) − f(old image) per
+        // touched key, exploded from the images frame — no second
+        // shuffle, no two-sided join (a null old image — a first-seen key
+        // — explodes to null fields and drops with the tombstones)
+        val signed = images.select(explode(array(
+            struct(lit(1L).as("sign"), col("new").as("img")),
+            struct(lit(-1L).as("sign"), col("old").as("img")))).as("se"))
+          .select(col("se.sign").as("sign"), col("se.img.*"))
+          .filter(col("op").isNotNull && col("op") =!= "D")
+        val delta = enrich(signed)
+          .groupBy(col(groupCol))
+          .agg(sum(col("sign")).as("dn"),
+            sum(col("sign") * dec2(col(measureCol))).cast(D2).as("dt"))
+        latestMvBelow(s, mv, epochId)
+          .join(delta, Seq(groupCol), "full_outer")
+          .select(col(groupCol),
+            (coalesce(col("n_rows"), lit(0L)) +
+              coalesce(col("dn"), lit(0L))).as("n_rows"),
+            (coalesce(col("total"), lit(0).cast(D2)) +
+              coalesce(col("dt"), lit(0).cast(D2))).cast(D2).as("total"))
+          .filter(col("n_rows") > 0)
+          .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
     }
   }
 
@@ -3278,8 +3196,8 @@ object StreamingOps {
     * table (the `--full`-then-`--increment` operator flow, MV included):
     * the snapshot lands as the BASELINE epoch (`epoch=-1`, `op='I'`,
     * `seq=0` — the compaction convention: negative epochs are folded
-    * baselines, exempt from the purge gate), and the MV's first
-    * snapshot is one group-by over it. A subsequent [[runMvSumPass]]
+    * baselines, exempt from the purge gate), and the view attaches over
+    * it ([[mvAttachSum]] at epoch −1). A subsequent [[runMvSumPass]]
     * continues incrementally with NO special case: its old-image lookup
     * reads `epoch < 0` like any prior delta, and `latestMvBelow(0)`
     * finds the seeded view. `snapshot` must carry the key plus the
@@ -3289,43 +3207,26 @@ object StreamingOps {
       state: String, mv: String, keyCols: Seq[String] = Seq("okey"),
       groupCol: String = "status",
       enrich: DataFrame => DataFrame = identity): Unit = {
-    val base = mvSeedState(s, snapshot, state, keyCols)
-    val mvDf = enrich(base)
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(dec2(col("price"))).cast(D2).as("total"))
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=-1")
+    mvSeedState(s, snapshot, state, keyCols)
+    mvAttachSum(s, state, mv, groupCol, enrich = enrich)
   }
 
   /** [[mvSeedSum]] for the dirty-group family ([[runMvRecomputePass]]):
-    * seeds the state baseline, the group-partitioned snapshot (every
-    * group's pointer at epoch −1), and the view itself via `recompute`
-    * over the full seeded snapshot — the ONE full-table recompute the
-    * regime ever pays. */
+    * seeds the state baseline, then attaches the group-partitioned
+    * snapshot (every group's pointer at epoch −1) and the view
+    * ([[mvAttachRecompute]]) — the ONE full-table recompute the regime
+    * ever pays. */
   private[graft] def mvSeedRecompute(s: SparkSession, snapshot: DataFrame,
       state: String, snap: String, mv: String,
       keyCols: Seq[String] = Seq("okey"), groupCol: String = "status",
       recompute: DataFrame => DataFrame): Unit = {
-    val base = mvSeedState(s, snapshot, state, keyCols)
-    ensureStateSchema(snap, base.schema)
-    base.write.mode("overwrite").partitionBy(groupCol)
-      .parquet(s"$snap/epoch=-1")
-    val groups = s.read.schema(base.schema).parquet(s"$snap/epoch=-1")
-      .select(col(groupCol)).filter(col(groupCol).isNotNull)
-      .distinct().collect().map(_.getString(0))
-    StateFs.writeAtomic(s"$snap/_ptr/epoch=-1",
-      groups.map(g => s"$g\t-1").mkString("\n"))
-    val mvDf = recompute(
-      s.read.schema(base.schema).parquet(s"$snap/epoch=-1"))
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=-1")
+    mvSeedState(s, snapshot, state, keyCols)
+    mvAttachRecompute(s, state, snap, mv, groupCol, recompute)
   }
 
-  /** Shared seeding step: snapshot → baseline state epoch, returned in
-    * envelope/collapse shape for the view aggregate. */
+  /** Shared seeding step: snapshot → baseline state epoch. */
   private def mvSeedState(s: SparkSession, snapshot: DataFrame,
-      state: String, keyCols: Seq[String]): DataFrame = {
+      state: String, keyCols: Seq[String]): Unit = {
     val uniq = snapshot.agg(count(lit(1)),
       count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)).collect()(0)
     require(uniq.getLong(0) == uniq.getLong(1),
@@ -3339,7 +3240,6 @@ object StreamingOps {
     bucketed(envl, keyCols).write.mode("overwrite")
       .parquet(s"$state/epoch=-1")
     writeMaxSeq(s"$state/epoch=-1", Option.when(uniq.getLong(0) > 0L)(0L))
-    s.read.schema(envl.schema).parquet(s"$state/epoch=-1")
   }
 
   /** Pointer map for the group-partitioned snapshot ([[runMvMinMaxPass]]):
@@ -3421,7 +3321,7 @@ object StreamingOps {
     * declares the view's shape with `groupCol` first. Untouched groups'
     * MV rows carry forward untouched; everything else (snapshot
     * advance, pointer map, replay safety, pruning) is the machinery
-    * documented on [[runMvMinMaxPass]]. */
+    * documented on [[runMvMinMaxPass]], run as [[runViewPass]]'s fold. */
   private[graft] def runMvRecomputePass(s: SparkSession,
       source: CdcSource,
       ckpt: String, state: String, snap: String, mv: String,
@@ -3434,145 +3334,82 @@ object StreamingOps {
       defaultCols: Map[String, ColumnDefault] = Map.empty,
       dropCols: Map[String, Long] = Map.empty)
       : SyncProgress = {
-    val schema = org.apache.spark.sql.types.StructType(
-      source.schema.fields.filterNot(f => txnCol.contains(f.name)))
-    // DDL settles in [[runMvSumPass]]'s order, extended to the
-    // dirty-group family's THIRD dir: a rename hitting the view's group
-    // column migrates the view (snapshot rewrite — O(groups)) AND the
-    // group-partitioned snapshot (directory moves only — the group
-    // column never enters the data files) BEFORE either schema
-    // (re)publishes below; then the state renames carry published
-    // history, the schema union widens, and defaults record last
-    migrateMvRename(s, mv, renameCols)
+    // the dirty-group family's THIRD dir migrates beside the view: a
+    // rename hitting the group column moves the group-partitioned
+    // snapshot's directories (the group column never enters the data
+    // files) BEFORE its schema (re)publishes below
     migrateSnapRename(snap, renameCols, groupCol)
-    ensureStateSchema(mv, mvSchema)
-    // the snapshot's schema: the collapse's output columns (derived from
-    // a driver-side probe so any keyCols order works) — published so
-    // partition reads stay pinned even for an all-rows-gone epoch
-    val snapSchema = collapse(envelope(s.createDataFrame(
-      new java.util.ArrayList[Row](), schema)), keyCols).schema
+    // the snapshot's schema is the state's — published so partition
+    // reads stay pinned even for an all-rows-gone epoch
+    val snapSchema = stateSchemaFor(source.schema, txnCol.toSet)
     ensureStateSchema(snap, snapSchema)
-    ensureKeyCols(state, keyCols) // published key, as in runCdcPass
-    applyRenameDdl(state, renameCols, snapSchema)
-    applyDropDdl(state, dropCols, snapSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq })
-    ensureStateSchema(state, snapSchema) // pinned old-image reads
-    applyDefaultDdl(state, defaultCols, snapSchema)
-    // read-time DDL gates for PRE-DDL snapshot partitions — the state
-    // read path's rules applied to the snapshot, in the same order.
-    // DROP gate first: a column dropped and RE-ADDED must not leak a
-    // row's stale pre-drop value out of an old snapshot partition —
-    // rows last written at or below the newest drop position serve
-    // NULL. DEFAULT fill second (so a re-add with DEFAULT backfills
-    // the gated rows): a row last written at or below the declaring
-    // position serves the declared default (its snapshot epoch
-    // predates the column, so the pinned read surfaces NULL); a
-    // post-DDL row — explicit NULL included — serves what it wrote.
-    // Snapshot rows carry their winning `seq` precisely for this
-    // replay. The record of truth is the STATE dir's `_drops` /
-    // `_defaults` logs, so DDL declared in an earlier pass keeps
-    // gating here without being re-passed.
-    def fillSnapDefaults(df: DataFrame): DataFrame =
-      applyDdlGates(state, df)
-    // position bookkeeping — see the sum pass's trackSeq note
-    val pos = new PassPosition
-    var pending = Option.empty[Long]
-    val (rows, epochs) = runSourcePass(s, source, ckpt) {
-      (batch, epochId) =>
-        // pin the batch (see the sum pass's note on the semi-join's
-        // broadcast subtree re-scanning the source)
-        val bdf = batch.toDF().persist()
-        // transaction gate, same contract as the sum pass's
-        val gate = txnCol.map(tc => txnGate(s, bdf, tc, state, epochId))
-        gate.foreach(g => pending = Some(g.pendingRows))
-        val ready = gate.fold(bdf)(_.ready)
-        val images = mvImages(s, state, epochId, ready, keyCols)
-          .persist()
+    runViewPass(s, source, ckpt, state, mv, mvSchema, keyCols, txnCol,
+        trackSeq, renameCols, defaultCols, dropCols) { (epochId, images) =>
+      // dirty groups: a handful per batch (≤ 2×|batch| values,
+      // group-cardinality-bounded) — driver-side METADATA; ONE pass over
+      // the pinned images frame covers both delta sides (group values are
+      // non-null for alive rows — the MV group key is a dimension column;
+      // a null would not partition)
+      val dirty = images.select(explode(array(
+          col(s"old.$groupCol"), col(s"new.$groupCol"))).as("g"))
+        .filter(col("g").isNotNull)
+        .distinct().collect().map(_.getString(0)).toSet
+      val mvPrior = latestMvBelow(s, mv, epochId)
+      if (dirty.isEmpty) {
+        // quiet batch (e.g. delete-only of already-absent keys): the MV
+        // still advances an epoch for replay bookkeeping
+        mvPrior.write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
+      } else {
+        val ptr = readSnapPtr(snap, epochId)
+        // prior rows of the dirty groups, resolved per pointer epoch — one
+        // pruned, schema-pinned read per distinct source epoch. The read
+        // applies the state dir's DDL gates ([[applyDdlGates]]: drop gate,
+        // then default fill — snapshot rows carry their winning `seq`
+        // precisely for this replay), so a pre-DDL partition serves what
+        // the state serves; the record of truth is the STATE dir's
+        // `_drops`/`_defaults` logs, so DDL declared in an earlier pass
+        // keeps gating here without being re-passed
+        val priorRows = dirty.flatMap(g => ptr.get(g).map(g -> _))
+          .groupBy(_._2).map { case (e, gs) =>
+            applyDdlGates(state,
+              s.read.schema(snapSchema).parquet(s"$snap/epoch=$e")
+                .filter(col(groupCol).isin(gs.map(_._1).toSeq: _*)))
+          }.reduceOption(_.unionByName(_))
+          .map(_.join(broadcast(images.select(col("__key.*"))), keyCols,
+            "left_anti"))
+        val newA = images.filter(col("new.op") =!= "D")
+          .select(snapSchema.fieldNames.toSeq.map(c =>
+            col(s"new.$c").as(c)): _*)
+        // pinned: the snapshot write AND the MV recompute both consume it
+        // — without the cache the recompute would re-run the
+        // prior-partition read + anti-join (or re-read the files just
+        // written, paying a scan per batch for nothing)
+        val fresh = priorRows.fold(newA)(_.unionByName(newA)).persist()
         try {
-          val (bwin, applied) = observeHorizon(mvView(images, "bwin", keyCols))
-          bucketed(bwin, keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          val h = applied()
-          writeMaxSeq(s"$state/epoch=$epochId", h.seq)
-          if (trackSeq) mvPosition(pos, gate, h)
-          val alive = (df: DataFrame) => df.filter(col("op") =!= "D")
-          val newA = alive(mvView(images, "new", keyCols))
-          // dirty groups: a handful per batch (≤ 2×|batch| values,
-          // group-cardinality-bounded) — driver-side METADATA; ONE pass
-          // over the
-          // persisted images frame covers both delta sides
-          // (group values are non-null for alive rows — the MV group
-          // key is a dimension column; a null would not partition)
-          val dirty = images.select(explode(array(
-              col(s"old.$groupCol"), col(s"new.$groupCol"))).as("g"))
-            .filter(col("g").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSet
-          if (dirty.nonEmpty) {
-            val ptr = readSnapPtr(snap, epochId)
-            // prior rows of the dirty groups, resolved per pointer
-            // epoch — one pruned, schema-pinned read per distinct
-            // source epoch
-            val priorParts = dirty.flatMap(g => ptr.get(g).map(g -> _))
-              .groupBy(_._2).map { case (e, gs) =>
-                fillSnapDefaults(
-                  s.read.schema(snapSchema).parquet(s"$snap/epoch=$e")
-                    .filter(col(groupCol).isin(gs.map(_._1).toSeq: _*)))
-              }.toSeq
-            val priorRows = priorParts
-              .reduceOption(_.unionByName(_))
-              .map(_.join(broadcast(images.select(keyCols.map(col): _*)),
-                keyCols, "left_anti"))
-            // pinned: the snapshot write AND the MV recompute both
-            // consume it — without the cache the recompute would re-run
-            // the prior-partition read + anti-join (or re-read the files
-            // just written, paying a scan per batch for nothing)
-            val fresh = priorRows
-              .map(_.unionByName(newA.select(
-                snapSchema.fieldNames.map(col).toSeq: _*)))
-              .getOrElse(newA.select(
-                snapSchema.fieldNames.map(col).toSeq: _*))
-              .persist()
-            try {
-              fresh.write.mode("overwrite").partitionBy(groupCol)
-                .parquet(s"$snap/epoch=$epochId")
-              val newPtr = ptr ++ dirty.map(_ -> epochId)
-              StateFs.writeAtomic(s"$snap/_ptr/epoch=$epochId",
-                newPtr.map { case (g, e) => s"$g\t$e" }.mkString("\n"))
-              // prune: keep epochs referenced by the newest two pointer
-              // maps (the replay window), drop the rest
-              val keep = (newPtr.values.toSet ++ ptr.values.toSet) + epochId
-              StateFs.epochIds(snap).filterNot(keep.contains)
-                .foreach(e => StateFs.deleteRecursive(s"$snap/epoch=$e"))
-              StateFs.epochFileIds(s"$snap/_ptr").filter(_ < epochId - 1)
-                .foreach(e => StateFs.deleteRecursive(s"$snap/_ptr/epoch=$e"))
-              // recompute ONLY the dirty groups — `fresh` IS exactly
-              // their new partitions (at scale a reader recomputing
-              // later would take the partition-pruned, schema-pinned
-              // read of snap/epoch=K instead; same rows)
-              val recomputed = recompute(fresh)
-              val carried = latestMvBelow(s, mv, epochId)
-                .map(_.filter(!col(groupCol).isin(dirty.toSeq: _*)))
-                .getOrElse(recomputed.filter(lit(false)))
-              carried.unionByName(recomputed)
-                .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-            } finally { fresh.unpersist(); () }
-          } else {
-            // quiet batch (e.g. delete-only of already-absent keys):
-            // the MV still advances an epoch for replay bookkeeping
-            latestMvBelow(s, mv, epochId)
-              .getOrElse(s.createDataFrame(
-                new java.util.ArrayList[Row](), mvSchema))
-              .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-          }
-          StateFs.epochIds(mv).filter(_ < epochId - 1)
-            .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
-        } finally {
-          images.unpersist(); gate.foreach(_.full.unpersist())
-          bdf.unpersist(); ()
-        }
+          fresh.write.mode("overwrite").partitionBy(groupCol)
+            .parquet(s"$snap/epoch=$epochId")
+          val newPtr = ptr ++ dirty.map(_ -> epochId)
+          StateFs.writeAtomic(s"$snap/_ptr/epoch=$epochId",
+            newPtr.map { case (g, e) => s"$g\t$e" }.mkString("\n"))
+          // prune: keep the pointer map this batch read and its own (the
+          // replay window — a quiet batch writes none, so the map read is
+          // not always epochId - 1) and the epochs they reference
+          val keep = (newPtr.values.toSet ++ ptr.values.toSet) + epochId
+          StateFs.epochIds(snap).filterNot(keep.contains)
+            .foreach(e => StateFs.deleteRecursive(s"$snap/epoch=$e"))
+          val maps = StateFs.epochFileIds(s"$snap/_ptr").filter(_ < epochId)
+          maps.filter(e => maps.exists(_ > e))
+            .foreach(e => StateFs.deleteRecursive(s"$snap/_ptr/epoch=$e"))
+          // recompute ONLY the dirty groups — `fresh` IS exactly their new
+          // partitions (at scale a reader recomputing later would take the
+          // partition-pruned, schema-pinned read of snap/epoch=K instead;
+          // same rows)
+          mvPrior.filter(!col(groupCol).isin(dirty.toSeq: _*))
+            .unionByName(recompute(fresh))
+            .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
+        } finally { fresh.unpersist(); () }
+      }
     }
-    SyncProgress(rows, epochs, pos.applied,
-      pending.getOrElse(pendingCount(s, state, txnCol)), pos.seen)
   }
 
   /** Read-time collapse of all epoch deltas into the latest state (A8
@@ -3620,7 +3457,7 @@ object StreamingOps {
     // still surface through NULL-bucket rows, and one whose history
     // spans bucketed and unbucketed epochs then serves a PARTIAL view
     // (its bucketed rows were pruned) — callers must only consult keys
-    // whose buckets they asked for; both probe call sites (mvImages'
+    // whose buckets they asked for; both probe call sites (readPriorImages'
     // semi-join, the chunk repair's restrict predicate) re-gate exactly
     val raw = readStateDir(s, state, asOfSeq, buckets)
     val clean = dirHasNoDdl(state)
@@ -3730,6 +3567,21 @@ object StreamingOps {
         (Seq("op", "price", "status", "ts", "seq") ++ extraCols(gated))
           .filterNot(keyCols.contains)).map(col): _*)
   }
+
+  /** The MV family's two-wave fixture of `log` (its inserts, then its
+    * updates and deletes: wave 1 is the retraction delta against
+    * EXISTING state), shared per `key` ([[sharedWaves]]). */
+  private def mvWaves(dir: String, log: DataFrame,
+      key: String = "cdclog_mv2w"): String =
+    sharedWaves(dir, key)(i => writeWaves(log, i,
+      when(col("seq") === 1, 0).otherwise(1), 2, Seq(col("okey"))))
+
+  /** A served SUM view in its oracle's shape: `total` as a double, rows
+    * in group order. */
+  private def servedSum(s: SparkSession, mv: String,
+      groupCol: String = "status"): DataFrame =
+    readMv(s, mv).select(col(groupCol), col("n_rows"),
+      col("total").cast(DoubleType).as("total")).orderBy(col(groupCol))
 
   /** Play the CDC log as 3 seq-ordered waves; apply with foreachBatch +
     * epoch-keyed delta sink; return the final latest-state table (minus
@@ -5673,10 +5525,7 @@ object StreamingOps {
           Seq(col("okey"))))
       runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         s"$tmp/state", s"$tmp/mv")
-      readMv(s, s"$tmp/mv")
-        .select(col("status"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("status"))
+      servedSum(s, s"$tmp/mv")
     }),
 
     // ST30: aggregate MV (count/sum per status) maintained from the CDC
@@ -5685,18 +5534,10 @@ object StreamingOps {
     "cdc_mv_sum" -> ((s, dir) => {
       val log = Tables.cdcLog(s, dir)
       val tmp = tmpDir()
-      // two waves (inserts, then updates+deletes): the scenario is the
-      // retraction delta against EXISTING state — wave 2 exercises it
-      // fully; the split is shared by the whole MV family (sharedWaves)
-      val in = sharedWaves(dir, "cdclog_mv2w")(i =>
-        writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-          Seq(col("okey"))))
+      val in = mvWaves(dir, log)
       runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         s"$tmp/state", s"$tmp/mv")
-      readMv(s, s"$tmp/mv")
-        .select(col("status"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("status"))
+      servedSum(s, s"$tmp/mv")
     }),
 
     // S-VIEW-REBUILD (M11): the repair→check→rebuild recovery flow of
@@ -5717,9 +5558,7 @@ object StreamingOps {
       // MV family's shared waves, then cloned — repairSync writes into
       // the clone's state dir and viewRebuild rewrites the clone's MV
       val root = sharedSynced(dir, "mvsum_2w") { r =>
-        val in = sharedWaves(dir, "cdclog_mv2w")(i =>
-          writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-            Seq(col("okey"))))
+        val in = mvWaves(dir, log)
         graft.Replication.incrementalSyncWithView(s, log.schema, in,
           s"$r/ckpt", s"$r/state", s"$r/mv")
         ()
@@ -5738,10 +5577,7 @@ object StreamingOps {
       require(!graft.Replication.viewConsistencyCheck(s, s"$tmp/state",
         s"$tmp/mv").consistent, "the repair delta must surface as drift")
       graft.Replication.viewRebuild(s, s"$tmp/state", s"$tmp/mv")
-      readMv(s, s"$tmp/mv")
-        .select(col("status"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("status"))
+      servedSum(s, s"$tmp/mv")
     }),
 
     // ST-MV-DDL: MV MAINTENANCE ACROSS DDL — the composition a real
@@ -5788,10 +5624,7 @@ object StreamingOps {
         s"$tmp/mv",
         groupCol = "seg", measureCol = "amt",
         renameCols = Map("grp" -> "seg"))
-      readMv(s, s"$tmp/mv")
-        .select(col("seg"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("seg"))
+      servedSum(s, s"$tmp/mv", "seg")
     }),
 
     // ST32: JOIN-MV — the aggregate MV's group key lives in STATIC
@@ -5813,18 +5646,12 @@ object StreamingOps {
           .persist())
       dim.count() // materialize ahead of the stream
       val tmp = tmpDir()
-      // two waves, shared fixture — see cdc_mv_sum's note
-      val in = sharedWaves(dir, "cdclogdim_mv2w")(i =>
-        writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-          Seq(col("okey"))))
+      val in = mvWaves(dir, log, "cdclogdim_mv2w")
       runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         s"$tmp/state", s"$tmp/mv",
         groupCol = "grp",
         enrich = img => img.join(broadcast(dim), Seq("custkey")))
-      readMv(s, s"$tmp/mv")
-        .select(col("grp"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("grp"))
+      servedSum(s, s"$tmp/mv", "grp")
     }),
 
     // ST33: TOP-K MV — the general dirty-group recompute regime: the
@@ -5836,10 +5663,7 @@ object StreamingOps {
       import org.apache.spark.sql.expressions.Window
       val log = Tables.cdcLog(s, dir)
       val tmp = tmpDir()
-      // two waves, shared fixture — see cdc_mv_sum's note
-      val in = sharedWaves(dir, "cdclog_mv2w")(i =>
-        writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-          Seq(col("okey"))))
+      val in = mvWaves(dir, log)
       val mvSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("status", StringType),
         org.apache.spark.sql.types.StructField("rnk",
@@ -5868,18 +5692,12 @@ object StreamingOps {
     "cdc_mv_time" -> ((s, dir) => {
       val log = Tables.cdcLog(s, dir)
       val tmp = tmpDir()
-      // two waves, shared fixture — see cdc_mv_sum's note
-      val in = sharedWaves(dir, "cdclog_mv2w")(i =>
-        writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-          Seq(col("okey"))))
+      val in = mvWaves(dir, log)
       runMvSumPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         s"$tmp/state", s"$tmp/mv",
         groupCol = "ym",
         enrich = img => img.withColumn("ym", date_format(col("ts"), "yyyy-MM")))
-      readMv(s, s"$tmp/mv")
-        .select(col("ym"), col("n_rows"),
-          col("total").cast(DoubleType).as("total"))
-        .orderBy(col("ym"))
+      servedSum(s, s"$tmp/mv", "ym")
     }),
 
     // ST31: min/max MV — non-retractable, so maintenance recomputes only
@@ -5888,10 +5706,7 @@ object StreamingOps {
     "cdc_mv_minmax" -> ((s, dir) => {
       val log = Tables.cdcLog(s, dir)
       val tmp = tmpDir()
-      // two waves, shared fixture — see cdc_mv_sum's note
-      val in = sharedWaves(dir, "cdclog_mv2w")(i =>
-        writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
-          Seq(col("okey"))))
+      val in = mvWaves(dir, log)
       runMvMinMaxPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
         s"$tmp/state",
         s"$tmp/snap", s"$tmp/mv")

@@ -975,4 +975,127 @@ class CdcPropertySpec extends SparkTestBase {
         s"widen diverged (log $si, cut $cut): $ops")
     }
   }
+
+  test("VIEW-PASS property: the MV passes replicate exactly as the CDC " +
+      "pass, serve the group-by over its state, and replay their last " +
+      "batch idempotently") {
+    import graft.streaming.{StateFs, StreamingOps}
+    // random txn-gated logs — one of whose waves holds a transaction's
+    // events only, so the gate holds every row of it — through
+    // runCdcPass, runMvSumPass and runMvMinMaxPass, with a single and a
+    // composite key: the three state dirs must be the same replica (rows
+    // served, epochs kept, `_maxseq` records, pending tail) with the
+    // same SyncProgress per pass, and each view the group-by over it
+    type Ev = (String, Long, Long, Double, String)
+    val gen: Gen[List[List[Ev]]] = for {
+      nKeys <- Gen.choose(1, 5)
+      nTxn <- Gen.choose(3, 6)
+      txns <- Gen.listOfN(nTxn, Gen.choose(1, 4).flatMap(n =>
+        Gen.listOfN(n, for {
+          k <- Gen.choose(0L, nKeys.toLong)
+          ln <- Gen.choose(0L, 1L)
+          o <- Gen.frequency((3, "I"), (3, "U"), (2, "D"))
+          p <- Gen.choose(0, 99)
+          st <- Gen.oneOf("A", "B", "C")
+        } yield (o, k, ln, p.toDouble, st))))
+    } yield txns
+    val logs = (0 until 4).flatMap(i =>
+      gen.apply(Gen.Parameters.default, Seed(9090L + i)))
+    logs.zipWithIndex.foreach { case (txns, si) =>
+      val keys = if (si % 2 == 0) Seq("okey") else Seq("okey", "line_no")
+      val rng = new scala.util.Random(si)
+      // (op, okey, line_no, price, status, txn) rows, a commit marker
+      // closing every transaction — but the last on odd logs
+      val rows = txns.zipWithIndex.flatMap { case (t, ti) =>
+        t.map { case (o, k, ln, p, st) =>
+          (o, k, ln, p, if (o == "D") null else st, ti.toLong) } ++
+          (if (si % 2 == 1 && ti == txns.size - 1) Nil
+           else Seq(("C", -1L, -1L, 0.0, null, ti.toLong)))
+      }.zipWithIndex.map { case (r, i) => (r, i.toLong) }
+      // wave cuts: around the held transaction's events (every row of
+      // that wave is held) and one more at random
+      val held = rng.nextInt(txns.size - 1)
+      val heldFrom = rows.indexWhere(_._1._6 == held)
+      val cuts = (Set(heldFrom, heldFrom + txns(held).size,
+        1 + rng.nextInt(rows.size - 1)) - 0).toSeq.sorted
+      val waves = (0 +: cuts).zip(cuts :+ rows.size)
+        .map { case (a, b) => rows.slice(a, b) }.filter(_.nonEmpty)
+      val base = java.nio.file.Files
+        .createTempDirectory(s"graft_viewprop$si").toString
+      val where = s"(log $si, keys $keys, cuts $cuts): $rows"
+      def frame(w: Seq[((String, Long, Long, Double, String, Long), Long)]) =
+        spark.createDataFrame(w.map { case ((o, k, ln, p, st, t), sq) =>
+            (o, sq, k, ln, p, st, t) })
+          .toDF("op", "seq", "okey", "line_no", "price", "status", "txn")
+          .select(col("op"), col("seq"),
+            timestamp_seconds(lit(1700000000L) + col("seq")).as("ts"),
+            col("okey"), col("price"), col("status"), col("line_no"),
+            col("txn"))
+      val schema = frame(rows.take(1)).schema
+      def cdc(src: FileCdcSource) = StreamingOps.runCdcPass(spark, src,
+        s"$base/cdc/ckpt", s"$base/cdc/state", trackSeq = true,
+        txnCol = Some("txn"), keyCols = keys)
+      def sumView(src: FileCdcSource) = StreamingOps.runMvSumPass(spark,
+        src, s"$base/sum/ckpt", s"$base/sum/state", s"$base/sum/mv",
+        keyCols = keys, txnCol = Some("txn"), trackSeq = true)
+      def mmView(src: FileCdcSource) = StreamingOps.runMvMinMaxPass(spark,
+        src, s"$base/mm/ckpt", s"$base/mm/state", s"$base/mm/snap",
+        s"$base/mm/mv", keyCols = keys, txnCol = Some("txn"),
+        trackSeq = true)
+      waves.zipWithIndex.foreach { case (w, i) =>
+        StreamingOps.writeWave(frame(w), s"$base/in", i)
+        val src = FileCdcSource(schema, s"$base/in")
+        val progress = Seq(cdc(src), sumView(src), mmView(src))
+        assert(progress.distinct.size == 1,
+          s"SyncProgress differs after wave $i (cdc, sum, minmax): " +
+            s"$progress $where")
+      }
+      def replica(d: String) = {
+        val state = s"$base/$d/state"
+        val epochs = StateFs.epochIds(state)
+        val pending =
+          if (!StateFs.exists(s"$state/_pending")) Set.empty[Seq[Any]]
+          else spark.read.parquet(s"$state/_pending").collect()
+            .map(_.toSeq).toSet
+        (StreamingOps.readLatestState(spark, state).collect()
+          .map(_.toSeq).toSet, epochs,
+          epochs.map(e => StreamingOps.readMaxSeq(s"$state/epoch=$e")),
+          pending)
+      }
+      val want = replica("cdc")
+      Seq("sum", "mm").foreach(d => assert(replica(d) == want,
+        s"the $d view pass's replica differs from the CDC pass's: " +
+          s"${replica(d)} vs $want $where"))
+      def served = StreamingOps.readLatestState(spark, s"$base/cdc/state")
+      def sums(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getString(0) -> ((r.getLong(1),
+          BigDecimal(r.getDecimal(2))))).toSet
+      def minMaxes(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2),
+          r.getDouble(3)))).toSet
+      val wantSum = sums(served.groupBy(col("status"))
+        .agg(count(lit(1)), sum(Tables.dec2(col("price"))).cast(Tables.D2)))
+      val wantMm = minMaxes(served.groupBy(col("status"))
+        .agg(count(lit(1)), min(col("price")), max(col("price"))))
+      def views() = (sums(StreamingOps.readMv(spark, s"$base/sum/mv")),
+        minMaxes(StreamingOps.readMv(spark, s"$base/mm/mv")))
+      assert(views() == ((wantSum, wantMm)),
+        s"views != group-by over the served state: ${views()} $where")
+      // a crash after the last batch's writes but before its commit: the
+      // re-run replays that batch over its own outputs
+      Seq("sum", "mm").foreach { d =>
+        val commits = new java.io.File(s"$base/$d/ckpt/commits")
+        val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+        StateFs.deleteRecursive(s"${commits.getPath}/$last")
+        StateFs.deleteRecursive(s"${commits.getPath}/.$last.crc")
+        StateFs.deleteRecursive(s"$base/$d/mv/epoch=$last")
+      }
+      val src = FileCdcSource(schema, s"$base/in")
+      sumView(src); mmView(src)
+      Seq("sum", "mm").foreach(d => assert(replica(d) == want,
+        s"replaying the $d view pass's last batch changed its replica $where"))
+      assert(views() == ((wantSum, wantMm)),
+        s"replaying the last batch changed the views: ${views()} $where")
+    }
+  }
 }

@@ -1056,4 +1056,32 @@ class MvSpec extends SparkTestBase {
       (5L, "g2", 7.5)),
       s"state across rename+default: $st")
   }
+
+  test("an MV pass over a keepHistory state dir refuses by name") {
+    // a view pass lands each batch's per-key WINNERS, so running one over
+    // a retaining (_history) dir would silently break its as-of reads
+    val base = tmp()
+    val e1 = Seq(MvEv("I", 1, 1, 10.00, "A"), MvEv("U", 2, 1, 12.00, "A"))
+    val schema = evDf(Seq.empty).schema
+    StreamingOps.writeWave(evDf(e1), s"$base/in", 0)
+    StreamingOps.runCdcPass(spark, FileCdcSource(schema, s"$base/in"),
+      s"$base/ckpt", s"$base/state", keepHistory = true)
+    StreamingOps.writeWave(evDf(Seq(MvEv("D", 3, 1, 0.00, null))),
+      s"$base/in", 1)
+    val passes = Seq[() => Unit](
+      () => StreamingOps.runMvSumPass(spark, FileCdcSource(schema,
+        s"$base/in"), s"$base/ckpt", s"$base/state", s"$base/mv"),
+      () => StreamingOps.runMvMinMaxPass(spark, FileCdcSource(schema,
+        s"$base/in"), s"$base/ckpt", s"$base/state", s"$base/snap",
+        s"$base/mm"))
+    passes.foreach { pass =>
+      val e = intercept[IllegalArgumentException](pass())
+      assert(e.getMessage.contains("_history"), e.getMessage)
+    }
+    // nothing applied: the dir still answers as-of reads of every event
+    assert(graft.streaming.StateFs.epochIds(s"$base/state") == Seq(0L))
+    assert(StreamingOps.readLatestState(spark, s"$base/state",
+      asOfSeq = Some(1L)).select(col("price")).collect()
+      .map(_.getDouble(0)).toSeq == Seq(10.00))
+  }
 }
