@@ -254,33 +254,7 @@ object Replication {
             " — CREATE/DROP TABLE bootstrap or retire whole state " +
             "dirs: apply them via Replication.applyTableLifecycle " +
             "BEFORE this pass")
-        // MODIFY declarations are checked against the PUBLISHED schema
-        // at the gate: a narrowing (or cross-family) modify refuses
-        // HERE, naming the statement — MySQL rewrites (truncates)
-        // source data on a narrowing MODIFY, so a replica that kept
-        // serving wide values for untouched keys would silently
-        // diverge; the envelope-layer guardrail alone would refuse
-        // later with no statement to point at. Widenings and same-type
-        // modifies pass through — the resumed envelope carries them to
-        // the widening guardrail as before.
-        // declarations whose MySQL type has no engine mapping SKIP the
-        // gate (a metadata-only MODIFY of an exotic type must not
-        // hard-fail the sync) — the envelope guardrail still owns the
-        // actual type change
-        for (published <- streaming.StreamingOps.readStateSchema(stateDir);
-             (colName, (atSeq, tpe)) <- cfg.modifyCols;
-             pf <- published.fields.find(_.name == colName);
-             declared <- scala.util.Try(
-               streaming.DdlSql.sparkType(tpe)).toOption) {
-          require(declared == pf.dataType ||
-            streaming.StreamingOps.widensForDdl(pf.dataType, declared),
-            s"MODIFY COLUMN '$colName' $tpe (at seq $atSeq) would " +
-              s"narrow or change the published ${pf.dataType.simpleString}" +
-              " — the source rewrites its data on such a MODIFY while " +
-              "untouched replica keys would keep serving the old-typed " +
-              "values; resync the table instead of replicating the " +
-              "statement")
-        }
+        requireNoNarrowing(Seq(stateDir), cfg.modifyCols)
         (cfg.renameCols, cfg.truncateAtSeq, cfg.defaultCols, cfg.dropCols)
       }
     val progress = streaming.StreamingOps.runCdcPass(spark,
@@ -484,6 +458,35 @@ object Replication {
         "this is a different view")
   }
 
+  /** The MODIFY narrowing gate of the `ddlSql` facades: each declared
+    * MODIFY is checked against every state dir's PUBLISHED schema, and a
+    * narrowing (or cross-family) one refuses HERE, naming the statement
+    * and the dir — MySQL rewrites (truncates) source data on a narrowing
+    * MODIFY, so a replica that kept serving wide values for untouched
+    * keys would silently diverge; the envelope-layer guardrail alone
+    * would refuse later with no statement to point at. Widenings and
+    * same-type modifies pass through to the widening guardrail.
+    * Declarations whose MySQL type has no engine mapping SKIP the gate
+    * (a metadata-only MODIFY of an exotic type must not hard-fail the
+    * sync) — the envelope guardrail still owns the actual type change. */
+  private def requireNoNarrowing(stateDirs: Seq[String],
+      modifyCols: Map[String, (Long, String)]): Unit =
+    for (dirPath <- stateDirs.sorted;
+         published <- streaming.StreamingOps.readStateSchema(dirPath);
+         (colName, (atSeq, tpe)) <- modifyCols;
+         pf <- published.fields.find(_.name == colName);
+         declared <- scala.util.Try(
+           streaming.DdlSql.sparkType(tpe)).toOption) {
+      require(declared == pf.dataType ||
+        streaming.StreamingOps.widensForDdl(pf.dataType, declared),
+        s"MODIFY COLUMN '$colName' $tpe (at seq $atSeq) would " +
+          s"narrow or change the published ${pf.dataType.simpleString}" +
+          s" of $dirPath — the source rewrites its data on such a " +
+          "MODIFY while untouched replica keys would keep serving " +
+          "the old-typed values; resync instead of replicating " +
+          "the statement")
+    }
+
   /** Does the maintained SUM view still equal the group-by over the
     * served state? The one divergence a correctly-running pass cannot
     * prevent: a row-level REPAIR ([[repairSync]]) writes correction
@@ -525,39 +528,31 @@ object Replication {
       groupCol: String = "status"): Unit = {
     requireSumView(mvDir, groupCol)
     import streaming.StateFs
-    val stage = s"$mvDir/_rebuilding"
     val trash = s"$mvDir/_rebuild_old"
     val marker = s"$mvDir/_rebuild_at"
-    // the replace is STAGED, never a direct overwrite of the serving
-    // epoch: a Spark overwrite deletes the live files before the job
-    // commits, so a crash mid-rebuild would leave the only snapshot
-    // empty (readMv would silently serve an empty view). The target id
-    // is recorded in a marker file BEFORE the swap, because the heal
-    // must distinguish a crash BETWEEN the two moves (trash holds what
-    // was the newest epoch — restore it to its ORIGINAL id) from a
-    // crash before the trash drop (the rebuilt epoch is live — drop
-    // the stale trash); the epoch listing alone cannot tell the two
-    // apart. Crash-safe, not concurrent-safe: run between passes (the
-    // repair flow is an operator maintenance window by nature).
+    // the replace is a staged swap ([[StateFs.replaceDir]]), never a
+    // direct overwrite of the serving epoch: a Spark overwrite deletes
+    // the live files before the job commits, so a crash mid-rebuild
+    // would leave the only snapshot empty (readMv would silently serve
+    // an empty view). The target id is recorded in a marker file BEFORE
+    // the swap, because the heal must restore a crashed swap's trash to
+    // its ORIGINAL id — the epoch listing alone cannot tell which id
+    // that was. Crash-safe, not concurrent-safe: run between passes
+    // (the repair flow is an operator maintenance window by nature).
     StateFs.readSmall(marker).map(_.trim.toLong).foreach { crashedAt =>
-      if (StateFs.exists(trash) &&
-          !StateFs.exists(s"$mvDir/epoch=$crashedAt"))
-        StateFs.moveDir(trash, s"$mvDir/epoch=$crashedAt")
-      else StateFs.deleteRecursive(trash)
+      StateFs.healSwap(s"$mvDir/epoch=$crashedAt", trash)
       StateFs.deleteRecursive(marker)
     }
     val at = StateFs.epochIds(mvDir).maxOption.getOrElse(0L)
-    val live = s"$mvDir/epoch=$at"
-    StateFs.deleteRecursive(stage)
-    appliedState(spark, stateDir)
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(Tables.dec2(col("price"))).cast(Tables.D2).as("total"))
-      .write.mode("overwrite").parquet(stage)
-    StateFs.writeAtomic(marker, at.toString)
-    if (StateFs.exists(live)) StateFs.moveDir(live, trash)
-    StateFs.moveDir(stage, live)
-    StateFs.deleteRecursive(trash)
+    StateFs.replaceDir(s"$mvDir/epoch=$at", s"$mvDir/_rebuilding", trash) {
+      stage =>
+        appliedState(spark, stateDir)
+          .groupBy(col(groupCol))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(Tables.dec2(col("price"))).cast(Tables.D2).as("total"))
+          .write.mode("overwrite").parquet(stage)
+        StateFs.writeAtomic(marker, at.toString)
+    }
     StateFs.deleteRecursive(marker)
     StateFs.epochIds(mvDir).filter(_ < at - 1)
       .foreach(e => StateFs.deleteRecursive(s"$mvDir/epoch=$e"))
@@ -1047,27 +1042,9 @@ object Replication {
             cfg.dropTables.map(d => s"'${d._2}'").mkString(", ") +
             " for table(s) still declared in this topology — retire " +
             "them via Replication.applyTableLifecycle BEFORE this pass")
-        // the MODIFY narrowing gate, topology-wide: the envelope is
-        // shared, so a declared type must not narrow ANY table's
-        // published column. Declarations whose MySQL type has no
-        // engine mapping SKIP the gate (a metadata-only MODIFY of an
-        // exotic type must not hard-fail the sync) — the envelope
-        // guardrail still owns the actual type change.
-        for (dirPath <- stateDirs.values.toSeq.sorted;
-             published <- streaming.StreamingOps.readStateSchema(dirPath);
-             (colName, (atSeq, tpe)) <- cfg.modifyCols;
-             pf <- published.fields.find(_.name == colName);
-             declared <- scala.util.Try(
-               streaming.DdlSql.sparkType(tpe)).toOption) {
-          require(declared == pf.dataType ||
-            streaming.StreamingOps.widensForDdl(pf.dataType, declared),
-            s"MODIFY COLUMN '$colName' $tpe (at seq $atSeq) would " +
-              s"narrow or change the published ${pf.dataType.simpleString}" +
-              s" of $dirPath — the source rewrites its data on such a " +
-              "MODIFY while untouched replica keys would keep serving " +
-              "the old-typed values; resync instead of replicating " +
-              "the statement")
-        }
+        // topology-wide: the envelope is shared, so a declared type must
+        // not narrow ANY table's published column
+        requireNoNarrowing(stateDirs.values.toSeq, cfg.modifyCols)
         (cfg.renameCols, truncates, cfg.defaultCols, cfg.dropCols)
       }
     val progress = streaming.StreamingOps.runCdcPassMulti(spark,

@@ -514,24 +514,13 @@ object Llm {
     fresh.groupBy(col("text_hash")).agg(min(col("doc_id")).as("doc_id"))
   }
 
-  /** Replace one persisted index table with `df` under the crash-safe
-    * stage/swap/drop of [[compactIndexTable]] (same auto-heal). `df`
-    * MUST be pinned (localCheckpoint) when it derives from the table it
-    * replaces — the stage write otherwise re-reads the dir mid-swap. */
-  private def replaceIndexTable(df: DataFrame, live: String): Unit = {
-    import graft.streaming.StateFs
-    val trash = s"${live}_old"
-    if (StateFs.exists(trash)) {
-      if (StateFs.exists(live)) StateFs.deleteRecursive(trash)
-      else StateFs.moveDir(trash, live)
-    }
-    val side = s"${live}_staging"
-    StateFs.deleteRecursive(side)
-    df.write.mode("overwrite").parquet(side)
-    if (StateFs.exists(live)) StateFs.moveDir(live, trash)
-    StateFs.moveDir(side, live)
-    StateFs.deleteRecursive(trash)
-  }
+  /** Replace one index table with `df` through
+    * [[graft.streaming.StateFs.replaceDir]]. `df` is built after the
+    * swap's heal; a frame the caller keeps using after the swap MUST be
+    * pinned (localCheckpoint), or it re-reads a dir the swap moved. */
+  private def replaceIndexTable(df: => DataFrame, live: String): Unit =
+    graft.streaming.StateFs.replaceDir(live, s"${live}_staging",
+      s"${live}_old")(df.write.mode("overwrite").parquet(_))
 
   /** Seed the incremental CLUSTER layer: [[dedupIndexSeed]] plus the
     * snapshot's own CC labels persisted as `labels` (doc_id, lbl). The
@@ -603,39 +592,23 @@ object Llm {
     * artifact. Rewrites the dir as `targetFiles` coalesced parquet
     * files; row content is untouched, so every consumer is invariant
     * (llm_dedup_stream compacts mid-stream under the SAME oracle).
-    * Crash-safe swap with auto-heal: stage the rewrite to a side dir,
-    * move live → trash, move stage → live, drop trash; a caller that
-    * finds trash WITHOUT live (a crash between the two moves) moves it
-    * back, trash WITH live (a crash before the drop) just drops it —
-    * at no instant is the data absent from disk. Crash-safe, NOT
-    * concurrent-safe: a reader between the two swap moves finds no live
-    * dir — run it between ingests (a maintenance window), exactly as
-    * llm_dedup_stream does inside its serial foreachBatch. */
+    * The rewrite replaces the table through [[replaceIndexTable]]'s
+    * crash-safe swap — run it between ingests (a maintenance window),
+    * exactly as llm_dedup_stream does inside its serial foreachBatch. */
   private def compactIndexTable(s: SparkSession, live: String,
       targetFiles: Int, clusterCol: Option[String] = None,
-      transform: DataFrame => DataFrame = identity): Unit = {
-    import graft.streaming.StateFs
-    val trash = s"${live}_old"
-    if (StateFs.exists(trash)) {
-      if (StateFs.exists(live)) StateFs.deleteRecursive(trash)
-      else StateFs.moveDir(trash, live)
-    }
-    val side = s"${live}_compacting"
-    StateFs.deleteRecursive(side)
-    // a cluster column (the ANN index's cell, the exact index's bucket)
-    // re-aligns the compacted files to it, restoring the probe pruning
-    // the per-ingest appends progressively dilute; `transform` is the
-    // retirement hook — dropping a retired doc's rows here is the one
-    // moment the whole table is rewritten anyway, so retirement rides
-    // the maintenance job for free
-    val raw = transform(s.read.parquet(live))
-    clusterCol.fold(raw.repartition(targetFiles))(c =>
+      transform: DataFrame => DataFrame = identity): Unit =
+    replaceIndexTable({
+      // a cluster column (the ANN index's cell, the exact index's
+      // bucket) re-aligns the compacted files to it, restoring the probe
+      // pruning the per-ingest appends progressively dilute; `transform`
+      // is the retirement hook — dropping a retired doc's rows here is
+      // the one moment the whole table is rewritten anyway, so
+      // retirement rides the maintenance job for free
+      val raw = transform(s.read.parquet(live))
+      clusterCol.fold(raw.repartition(targetFiles))(c =>
         raw.repartition(targetFiles, col(c)).sortWithinPartitions(c))
-      .write.mode("overwrite").parquet(side)
-    StateFs.moveDir(live, trash)
-    StateFs.moveDir(side, live)
-    StateFs.deleteRecursive(trash)
-  }
+    }, live)
 
   // ── INDEX RETIREMENT ──────────────────────────────────────────────
   // A doc deleted from the corpus must stop claiming dedup victories
@@ -767,7 +740,7 @@ object Llm {
     * ingested batch, read from the `assigned` table itself, never the
     * stale seed snapshot — then reassigns EVERY indexed vector to the
     * refreshed centroids and swaps both tables through
-    * [[replaceIndexTable]]'s stage→swap→drop auto-heal.
+    * [[replaceIndexTable]].
     *
     * Both replacement tables are fully materialized (localCheckpoint)
     * BEFORE either swap, so no stage write ever reads a half-swapped

@@ -16,10 +16,15 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
   * Rename semantics: [[moveDir]] is a metadata move when source and
   * destination share a filesystem and degrades to copy+delete across
   * filesystems (the staging dir is co-located with the checkpoint
-  * precisely so the production path never degrades). [[writeAtomic]]
-  * publishes small control files via `FileContext.rename(OVERWRITE)` —
-  * atomic on HDFS and local POSIX, so a concurrent reader sees either
-  * the old or the new content, never a missing or partial file. On
+  * precisely so the production path never degrades). Two publish
+  * protocols sit on it, one helper each: a state epoch lands by
+  * `StreamingOps.publishEpoch` (record written in the stage, a crashed
+  * attempt's dir removed, one [[renameDir]]); a live dir is swapped by
+  * [[replaceDir]] (stage → live, old live via trash, healed by
+  * [[healSwap]]). [[writeAtomic]] publishes small control files via
+  * `FileContext.rename(OVERWRITE)` — atomic on HDFS and local POSIX, so
+  * a concurrent reader sees either the old or the new content, never a
+  * missing or partial file. On
   * object stores (S3A/GCS) rename is NOT atomic — a concurrent reader
   * can observe the control file mid-replace — so deployments there must
   * serialize control-file readers against the single writer (the
@@ -118,8 +123,15 @@ private[graft] object StateFs {
 
   /** Move a directory into place: a metadata rename on one filesystem,
     * copy + delete-source across filesystems. The destination must not
-    * exist (callers delete a prior replay attempt first). */
+    * exist. */
   def moveDir(src: String, dst: String): Unit = {
+    renameDir(src, dst)
+    bumpIfGated(dst)
+  }
+
+  /** [[moveDir]] without its gate probe — for a dir that never holds DDL
+    * gate files (a state epoch dir). */
+  def renameDir(src: String, dst: String): Unit = {
     val sp = new Path(src)
     val dp = new Path(dst)
     val sfs = fs(sp)
@@ -130,8 +142,28 @@ private[graft] object StateFs {
     if (!renamed)
       require(FileUtil.copy(sfs, sp, dfs, dp, true, conf(dp)),
         s"cannot move $src -> $dst")
-    bumpIfGated(dst)
   }
+
+  /** Crash-safe swap of a live dir: [[healSwap]], drop a stale `stage`,
+    * `write` it whole, move live → trash and stage → live, drop the
+    * trash. At no instant is the data absent from disk; a reader between
+    * the two moves finds no live dir, so swap between passes. */
+  def replaceDir(live: String, stage: String, trash: String)(
+      write: String => Unit): Unit = {
+    healSwap(live, trash)
+    deleteRecursive(stage)
+    write(stage)
+    if (exists(live)) moveDir(live, trash)
+    moveDir(stage, live)
+    deleteRecursive(trash)
+  }
+
+  /** The heal rule of a swap: trash beside live crashed before its drop
+    * — drop it; trash alone crashed between the moves — restore it. */
+  def healSwap(live: String, trash: String): Unit =
+    if (exists(trash)) {
+      if (exists(live)) deleteRecursive(trash) else moveDir(trash, live)
+    }
 
   /** Recursive directory COPY (source untouched) — the fixture-clone
     * primitive: a cached synced-state prefix is copied into a fresh

@@ -1689,17 +1689,15 @@ object StreamingOps {
     *    key) ([[collapse]]; retained history and completed batches are
     *    already what lands) into ONE `partitionBy("table")` write under
     *    `ckpt/_staging` — one Spark job however many tables;
-    *  - each table the observation saw rows for moves its staged
-    *    `table=` dir into its state dir as `epoch=N`: delete-then-rename,
-    *    so a replayed epoch heals a crashed attempt. The staged dir first
-    *    gets its `_maxseq` record ([[writeMaxSeq]], the table's observed
-    *    max seq), so an epoch dir is its rows plus that record, and both
-    *    arrive in one rename. A table without rows
-    *    wrote no dir and keeps no epoch. The move is a metadata rename
+    *  - each table the observation saw rows for publishes its staged
+    *    `table=` dir as `epoch=N` of its state dir ([[publishEpoch]],
+    *    with the table's observed max seq as the `_maxseq` record), so a
+    *    replayed epoch heals a crashed attempt. A table without rows
+    *    wrote no dir and keeps no epoch. The publish is a metadata rename
     *    only when `ckpt` and the state dirs share a filesystem; across
-    *    filesystems [[StateFs.moveDir]] copies bytes and deletes the
-    *    stage (doubled write I/O, and the epoch appears file by file), so
-    *    keep the checkpoint on the state's filesystem;
+    *    filesystems it copies bytes and deletes the stage (doubled write
+    *    I/O, and the epoch appears file by file), so keep the checkpoint
+    *    on the state's filesystem;
     *  - a view's `fold` (the MV passes, [[runViewPass]]) replaces the
     *    collapse with the per-key images ([[keyImages]]: ONE groupBy over
     *    the batch and its prior images), pinned: their `bwin` is the
@@ -1853,18 +1851,11 @@ object StreamingOps {
         val (written, observed) = eventsObserved
           .fold(observe(collapsed))(collapsed -> _)
         val epochStage = s"$ckpt/_staging/epoch=$epochId"
-        // the writer percent-escapes special chars in partition dir
-        // names — the staged dir lives under the ESCAPED name
-        def staged(t: String) = s"$epochStage/table=" + org.apache.spark.sql
-          .catalyst.catalog.ExternalCatalogUtils.escapePathName(t)
         written.withColumn(BucketCol, tableBucket(keyFor))
           .write.mode("overwrite").partitionBy("table").parquet(epochStage)
         val hs = observed()
         declared.zip(hs).filter(_._2.rows > 0L).foreach { case (t, h) =>
-          val dest = s"${stateDirs(t)}/epoch=$epochId"
-          writeMaxSeq(staged(t), h.seq)
-          StateFs.deleteRecursive(dest)
-          StateFs.moveDir(staged(t), dest)
+          publishEpoch(epochStage, Some(t), stateDirs(t), epochId, h.seq)
           val p = tables(t)
           tables(t) = SyncProgress(p.rowsApplied + h.rows, p.epochs + 1L,
             (p.lastSeq ++ h.seq).maxOption)
@@ -2105,10 +2096,9 @@ object StreamingOps {
         .withColumn(BucketCol, bucketOf(keyCols))
         .repartition(col(BucketCol))
         .sortWithinPartitions(BucketCol)
-      baseline.write.mode("overwrite").parquet(s"$side/epoch=$baseEpoch")
+      baseline.write.mode("overwrite").parquet(side)
       val foldedSeq = folded().seq
-      writeMaxSeq(s"$side/epoch=$baseEpoch", foldedSeq)
-      StateFs.moveDir(s"$side/epoch=$baseEpoch", s"$state/epoch=$baseEpoch")
+      publishEpoch(side, None, state, baseEpoch, foldedSeq)
       // a pre-publication state dir (no pass has written _schema yet)
       // gets one from the compaction — the footer sweep this run already
       // paid is the last one any reader needs. The bucket column is
@@ -2218,6 +2208,20 @@ object StreamingOps {
     * moved with the dir. Underscore-hidden, so no parquet read sees it. */
   private def writeMaxSeq(epochDir: String, seq: Option[Long]): Unit =
     StateFs.writeAtomic(s"$epochDir/_maxseq", seq.fold("")(_.toString))
+
+  /** Publish a staged state epoch as `<state>/epoch=N`: write the stage's
+    * [[writeMaxSeq]] record, remove a crashed attempt's dir, rename. The
+    * stage is `stage` or its `table=` dir (escaped, as the partitioned
+    * writer names it); an epoch dir holds no DDL gate files. */
+  private[graft] def publishEpoch(stage: String, table: Option[String],
+      state: String, epoch: Long, seq: Option[Long]): Unit = {
+    val src = table.fold(stage)(t => s"$stage/table=" + org.apache.spark
+      .sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(t))
+    val dst = s"$state/epoch=$epoch"
+    writeMaxSeq(src, seq)
+    StateFs.deleteRecursive(dst)
+    StateFs.renameDir(src, dst)
+  }
 
   /** An epoch dir's [[writeMaxSeq]] record: None when the dir has none,
     * Some(None) when it records no rows. */
@@ -2478,11 +2482,7 @@ object StreamingOps {
           touched.foreach { t =>
             val epoch = math.min(-1L,
               StateFs.epochIds(stateDirs(t)).minOption.getOrElse(0L) - 1L)
-            val src = s"$stage/table=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(t)
-            writeMaxSeq(src, Some(repairSeq))
-            StateFs.moveDir(src, s"${stateDirs(t)}/epoch=$epoch")
+            publishEpoch(stage, Some(t), stateDirs(t), epoch, Some(repairSeq))
           }
         } finally StateFs.deleteRecursive(stage)
       }
@@ -3237,9 +3237,11 @@ object StreamingOps {
       keyCols)
     ensureKeyCols(state, keyCols) // published key, as in runCdcPass
     ensureStateSchema(state, envl.schema)
-    bucketed(envl, keyCols).write.mode("overwrite")
-      .parquet(s"$state/epoch=-1")
-    writeMaxSeq(s"$state/epoch=-1", Option.when(uniq.getLong(0) > 0L)(0L))
+    // staged as compactState's baseline: a crash never tears epoch=-1
+    val stage = s"$state/_seeding"
+    bucketed(envl, keyCols).write.mode("overwrite").parquet(stage)
+    publishEpoch(stage, None, state, -1L,
+      Option.when(uniq.getLong(0) > 0L)(0L))
   }
 
   /** Pointer map for the group-partitioned snapshot ([[runMvMinMaxPass]]):
@@ -3386,7 +3388,9 @@ object StreamingOps {
         // written, paying a scan per batch for nothing)
         val fresh = priorRows.fold(newA)(_.unionByName(newA)).persist()
         try {
-          fresh.write.mode("overwrite").partitionBy(groupCol)
+          // one task per group value: one file per group partition
+          fresh.repartition(col(groupCol))
+            .write.mode("overwrite").partitionBy(groupCol)
             .parquet(s"$snap/epoch=$epochId")
           val newPtr = ptr ++ dirty.map(_ -> epochId)
           StateFs.writeAtomic(s"$snap/_ptr/epoch=$epochId",

@@ -128,6 +128,23 @@ class MvSpec extends SparkTestBase {
     assert(servedMinMax(s"$base/mv") == Map("A" -> ((2L, 0.50, 1.00))))
   }
 
+  test("minmax MV: each dirty group's snapshot partition is one parquet file") {
+    val groups = Seq("A", "B", "C")
+    val e1 = (1 to 12).map(k => MvEv("I", k, k, k.toDouble, groups(k % 2)))
+    val e2 = (13 to 24).map(k => MvEv("I", k, k, k.toDouble, groups(k % 3))) :+
+      MvEv("U", 25, 1, 0.50, "A")
+    val base = tmp()
+    runMinMax(base, Seq(e1, e2))
+    val newest = s"$base/snap/epoch=${graft.streaming.StateFs.epochIds(s"$base/snap").max}"
+    val parts = graft.streaming.StateFs.childDirNames(newest, "status=")
+    assert(parts.sorted == groups.map("status=" + _))
+    parts.foreach { d =>
+      val files = new java.io.File(s"$newest/$d").list()
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(files.length == 1, s"$d holds ${files.mkString(", ")}")
+    }
+  }
+
   test("minmax MV: untouched group's snapshot partition is never rewritten") {
     val e1 = Seq(MvEv("I", 1, 1, 1.00, "A"), MvEv("I", 2, 2, 2.00, "B"))
     val e2 = Seq(MvEv("U", 3, 1, 3.00, "A")) // touches only A

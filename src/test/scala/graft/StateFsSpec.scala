@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StateFs
+import graft.streaming.{StateFs, StreamingOps}
 
 /** The local filesystem under a second scheme name — registered ONLY in
   * the test session's hadoop conf, so resolving it proves StateFs
@@ -111,5 +111,68 @@ class StateFsSpec extends SparkTestBase {
     StateFs.deleteRecursive(s"$base/a")
     assert(!StateFs.exists(s"$base/a"))
     StateFs.deleteRecursive(s"$base/a") // absent -> no-op
+  }
+
+  private def rows(dir: String): Set[(Long, String)] =
+    spark.read.parquet(dir).collect()
+      .map(r => r.getAs[Long]("okey") -> r.getAs[String]("v")).toSet
+
+  test("publishEpoch onto a crashed attempt's dir serves only the new rows and record") {
+    import spark.implicits._
+    val base = tmp()
+    val state = s"$base/state"
+    // the crashed attempt: stale rows plus a stale _maxseq at the target
+    Seq((1L, "stale"), (9L, "stale")).toDF("okey", "v")
+      .write.parquet(s"$state/epoch=5")
+    StateFs.writeAtomic(s"$state/epoch=5/_maxseq", "99")
+    // the replay's partitioned stage; the table name needs escaping
+    val stage = s"$base/ckpt/_staging/epoch=5"
+    Seq((1L, "new", "t:1"), (2L, "new", "t:1")).toDF("okey", "v", "table")
+      .write.partitionBy("table").parquet(stage)
+    StreamingOps.publishEpoch(stage, Some("t:1"), state, 5L, Some(7L))
+    assert(rows(s"$state/epoch=5") == Set(1L -> "new", 2L -> "new"))
+    assert(StreamingOps.readMaxSeq(s"$state/epoch=5") == Some(Some(7L)))
+    assert(!StateFs.exists(s"$stage/table=t%3A1"))
+  }
+
+  test("publishEpoch onto an absent destination creates the state dir") {
+    import spark.implicits._
+    val base = tmp()
+    val stage = s"$base/ckpt/_staging/epoch=-1"
+    Seq((3L, "a")).toDF("okey", "v").write.parquet(stage)
+    assert(!StateFs.exists(s"$base/state"))
+    StreamingOps.publishEpoch(stage, None, s"$base/state", -1L, None)
+    assert(rows(s"$base/state/epoch=-1") == Set(3L -> "a"))
+    assert(StreamingOps.readMaxSeq(s"$base/state/epoch=-1") == Some(None))
+    assert(!StateFs.exists(stage))
+    assert(StateFs.epochIds(s"$base/state") == Seq(-1L))
+  }
+
+  test("replaceDir heals every crash leftover and ends with only the new content live") {
+    // `served`: what live must hold when the write starts (the heal ran)
+    def swap(base: String, served: String): Unit = {
+      StateFs.replaceDir(s"$base/live", s"$base/stage", s"$base/trash") { st =>
+        assert(StateFs.readSmall(s"$base/live/f").contains(served))
+        StateFs.writeAtomic(s"$st/f", "new")
+      }
+      assert(StateFs.readSmall(s"$base/live/f").contains("new"))
+      assert(!StateFs.exists(s"$base/live/junk"))
+      assert(!StateFs.exists(s"$base/trash") && !StateFs.exists(s"$base/stage"))
+    }
+    // trash + live: a swap that crashed before its trash drop
+    val b1 = tmp()
+    StateFs.writeAtomic(s"$b1/live/f", "live")
+    StateFs.writeAtomic(s"$b1/trash/f", "old")
+    swap(b1, "live")
+    // trash, no live: a swap that crashed between its two moves
+    val b2 = tmp()
+    StateFs.writeAtomic(s"$b2/trash/f", "old")
+    swap(b2, "old")
+    // a stale stage from a crashed write
+    val b3 = tmp()
+    StateFs.writeAtomic(s"$b3/live/f", "live")
+    StateFs.writeAtomic(s"$b3/stage/f", "stale")
+    StateFs.writeAtomic(s"$b3/stage/junk", "stale")
+    swap(b3, "live")
   }
 }
